@@ -205,8 +205,9 @@ def bench_replay(
         point_lookup_ms = round(1000 * lat[len(lat) // 2], 1)
 
         # The DIRECT (zero-Spark-job) serving hatch on the same keys:
-        # manifest + bucket math + pyarrow row-group-pruned reads +
-        # pandas MOR resolve (read_conversation_direct).  One warmup
+        # manifest + bucket math + footer-cached, row-group-pruned
+        # pyarrow reads + MOR resolve in plain Python
+        # (read_conversation_direct).  One warmup
         # call first so the pyarrow import doesn't land in the median.
         table.read_conversation_direct(ids[0])
         lat_d = []

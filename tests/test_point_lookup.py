@@ -175,6 +175,123 @@ def test_direct_read_equals_spark_read(spark, lookup_table):
         assert _normalize(direct) == _normalize(via), cid
 
 
+def test_direct_read_matches_full_read_for_every_key(spark, lookup_table):
+    """Every conversation of the fixture (plus an absent key) reads back
+    through the direct path exactly as one full Spark read groups it —
+    with deltas live, after a fold, and after a rollback to the pre-fold
+    version.  The fold and rollback change which files are live without
+    changing the state, so a path-keyed footer cache that served a
+    stale footer would show up here."""
+    from aqueduct_core_spark.operators.compact import fold_deltas
+
+    def check():
+        full = lookup_table.read().toPandas()
+        groups = dict(tuple(full.groupby("conv_id")))
+        assert len(groups) > 100
+        for cid in [*groups, "conv-never-existed"]:
+            direct = lookup_table.read_conversation_direct(cid)
+            assert list(direct.columns) == list(full.columns)
+            assert _normalize(direct) == _normalize(groups.get(cid, full.iloc[:0])), cid
+
+    v = lookup_table.catalog.current_version()
+    assert any(lookup_table.catalog.current()["delta_files"].values())
+    check()
+    fold_deltas(lookup_table)
+    assert not any(lookup_table.catalog.current()["delta_files"].values())
+    check()
+    lookup_table.rollback(v)  # back to live deltas: the fixture is unchanged
+    assert any(lookup_table.catalog.current()["delta_files"].values())
+    check()
+
+
+def _table_with_live_deltas(spark, root):
+    """A 4-bucket table with folded base files and one live delta epoch."""
+    from aqueduct_core_spark.operators.compact import fold_deltas
+
+    table = ParquetTranscriptTable.create(spark, root, num_buckets=4)
+    cfg = EngineConfig(num_buckets=4)
+    log = generate_changes(spark, n_convs=40, seed=21)
+    replay(table, log, cfg)
+    fold_deltas(table)
+    hi = log.agg(F.max("lsn")).collect()[0][0]
+    more = generate_changes(spark, n_convs=40, seed=22).withColumn(
+        "lsn", F.col("lsn") + F.lit(hi)
+    )
+    replay(table, more, cfg)
+    return table
+
+
+def test_point_reads_pin_one_manifest_across_rebucket(spark, tmp_path, monkeypatch):
+    """A rebucket committed right after a point read loads its manifest
+    must not change what the read sees: the bucket count comes from the
+    same pinned manifest as the file map.  Taking it from a second
+    manifest read would hash the key with the new count into the old
+    layout and read an existing conversation as absent."""
+    from aqueduct_core_spark.operators.compact import rebucket
+
+    table = _table_with_live_deltas(spark, str(tmp_path / "t"))
+    counts = [4, 3, 5, 2]  # the count before and after each rebucket
+    cid = next(
+        r["conv_id"] for r in table.read().select("conv_id").distinct().collect()
+        if len({bucket_of(r["conv_id"], n) for n in counts}) == len(counts)
+    )
+    want = _normalize(table.read_conversation(cid).toPandas())
+    assert want
+
+    load = table.catalog.load
+
+    def rebucket_after_first_load(to):
+        fired = []
+
+        def hooked(v):
+            snap = load(v)
+            if not fired:
+                fired.append(v)
+                rebucket(table, to)
+            return snap
+
+        monkeypatch.setattr(table.catalog, "load", hooked)
+
+    reads = [
+        lambda: table.read_conversation_direct(cid),
+        lambda: table.read_conversation(cid).toPandas(),
+        lambda: table.read_conversations([cid]).toPandas(),
+    ]
+    for read, to in zip(reads, counts[1:]):
+        rebucket_after_first_load(to)
+        assert _normalize(read()) == want
+        assert table.num_buckets == to  # the rebucket did commit
+
+
+def test_point_reads_fail_loud_on_missing_live_file(spark, tmp_path):
+    """A file the pinned manifest references but that cannot be read
+    is an error for both point reads — never rows silently missing from
+    the answer (Spark's read does not ignore missing files)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    table = _table_with_live_deltas(spark, str(tmp_path / "t"))
+    # a live delta file and a visible conversation with rows in it
+    in_delta = {
+        c: rel
+        for rels in table.catalog.current()["delta_files"].values()
+        for rel in rels
+        for c in pq.read_table(os.path.join(table.root, rel), columns=["conv_id"])[
+            "conv_id"
+        ].to_pylist()
+    }
+    cid, rel = next(
+        (c, rel) for c, rel in sorted(in_delta.items())
+        if len(table.read_conversation_direct(c))  # caches the footers
+    )
+    os.remove(os.path.join(table.root, rel))
+    with pytest.raises(OSError):
+        table.read_conversation_direct(cid)
+    with pytest.raises(Exception):
+        table.read_conversation(cid).collect()
+
+
 def test_direct_read_respects_conversation_delete(spark, tmp_path):
     """A conversation-level tombstone in a live delta must kill every
     turn at-or-below its watermark in the direct read too."""
@@ -258,6 +375,13 @@ def test_direct_read_evolution_null_fill_and_columns(spark, tmp_path):
     assert got.iloc[0]["tool"] is None and got.iloc[1]["tool"] == "search"
     pruned = table.read_conversation_direct("c1", columns=["text"])
     assert list(pruned.columns) == ["conv_id", "turn_idx", "text"]
+    # the prune reaches the decode and matches the Spark read's prune,
+    # the evolved column included (null-filled from the older file)
+    for cols in (None, ["text"], ["tool"], ["role", "ts", "tool"]):
+        direct = table.read_conversation_direct("c1", columns=cols)
+        via = table.read_conversation("c1", columns=cols).toPandas()
+        assert list(direct.columns) == list(via.columns), cols
+        assert _normalize(direct) == _normalize(via), cols
     import pytest as _pt
 
     with _pt.raises(KeyError):
@@ -288,3 +412,10 @@ def test_direct_read_sees_renamed_columns_logically(spark, tmp_path):
     got = table.read_conversation_direct("c1")
     assert "content" in got.columns and "text" not in got.columns
     assert got.iloc[0]["content"] == "hi"
+    for cols in (None, ["content"], ["role", "content", "ts"]):
+        direct = table.read_conversation_direct("c1", columns=cols)
+        via = table.read_conversation("c1", columns=cols).toPandas()
+        assert list(direct.columns) == list(via.columns), cols
+        assert _normalize(direct) == _normalize(via), cols
+    with pytest.raises(KeyError):
+        table.read_conversation_direct("c1", columns=["text"])
