@@ -560,8 +560,7 @@ def _q_conv_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         "conv_id", F.col("conv_text").alias("text")
     )
     return gopher_quality_filter(
-        docs, bigram_method="array", id_col="conv_id",
-        min_input_partitions=spark.sparkContext.defaultParallelism,
+        docs, min_input_partitions=spark.sparkContext.defaultParallelism,
     ).select(
         "conv_id", "n_words", "mean_word_len", "dup_word_frac",
         "top_bigram_frac", "keep",
@@ -1232,15 +1231,14 @@ def _q_subword_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition/quality gates: word-count + mean-word-
     length bounds, duplicate-word fraction, top-bigram fraction → keep
-    flag.  Two oracle-identical formulations exist (unit-tested equal);
-    this benches ``array`` — the zero-shuffle per-row run-length fold,
-    measured fastest once the input is spread across the cores (0.63 s
-    vs 1.03 s explode at sf0.1 local[32]; the 1-task-era measurement
-    that favored explode is superseded — history in BENCH.md)."""
+    flag, computed with the zero-shuffle per-row run-length fold
+    (0.63 s at sf0.1 local[32] against 1.03 s for the retired explode
+    formulation once the input is spread across the cores — history in
+    BENCH.md)."""
     from aqueduct_core_spark.functions.text import gopher_quality_filter
 
     return gopher_quality_filter(
-        _docs(spark, sf_dir), bigram_method="array",
+        _docs(spark, sf_dir),
         min_input_partitions=spark.sparkContext.defaultParallelism,
     ).select(
         "doc_id", "n_words", "mean_word_len", "dup_word_frac",

@@ -335,13 +335,14 @@ class ParquetTranscriptTable:
                 cols.append(F.col(c))
         return df.select(*cols)
 
-    def to_physical(self, batch: DataFrame) -> DataFrame:
-        """logical → physical for an incoming change batch.  Columns not
+    def to_physical(self, batch: DataFrame, snap: dict | None = None) -> DataFrame:
+        """logical → physical for an incoming change batch, under
+        ``snap``'s mapping (default: the current snapshot).  Columns not
         known logically pass through (schema evolution adds them) —
         except a name that collides with a RETIRED physical (renamed
         away or dropped), which fails loud: silently merging new data
         into an old column's files would resurrect it."""
-        snap = self.catalog.current()
+        snap = snap or self.catalog.current()
         mapping = self.column_mapping(snap)
         # a physical payload name is writable under its own name only
         # while it is ALSO the logical name (identity); anything else —
@@ -1009,57 +1010,16 @@ class ParquetTranscriptTable:
         )
         return rel
 
-    # -- staging buffer (reference EVENTS_BUFFER analog) ----------------
-    def stage_path(self, label: str) -> str:
-        """Scratch location for a batch's resolved keys; never
-        referenced by a manifest, dropped after the commit."""
-        return os.path.join(self.root, "staging", f"{label}-{uuid.uuid4().hex[:8]}")
-
-    def drop_stage(self, path: str) -> None:
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
-
-    def data_files_lineage(self, files_by_bucket: dict[str, list[str]]) -> dict:
-        """Post-merge per-bucket lineage from the written data files'
-        parquet footers — driver-side, no Spark job.  The written state
-        holds exactly one row per live key, so the row count IS the key
-        count (uniform ``keys`` field across all merge strategies)."""
-        import pyarrow.parquet as pq
-
-        out: dict[str, dict] = {}
-        for b, files in files_by_bucket.items():
-            rows, lo, hi = 0, None, None
-            for rel in files:
-                md = pq.ParquetFile(os.path.join(self.root, rel)).metadata
-                lsn_ix = None
-                for i in range(md.num_columns):
-                    if md.num_row_groups and md.row_group(0).column(i).path_in_schema == LSN_COLUMN:
-                        lsn_ix = i
-                        break
-                for g in range(md.num_row_groups):
-                    rg = md.row_group(g)
-                    if rg.num_rows == 0:
-                        continue
-                    rows += rg.num_rows
-                    st = rg.column(lsn_ix).statistics if lsn_ix is not None else None
-                    if st is not None and st.has_min_max:
-                        lo = int(st.min) if lo is None else min(lo, int(st.min))
-                        hi = int(st.max) if hi is None else max(hi, int(st.max))
-            if rows:
-                out[str(b)] = {"keys": rows, "min_lsn": lo, "max_lsn": hi}
-        return out
-
     @staticmethod
     def stage_summary(stage_path: str) -> dict[int, dict]:
-        """Per-bucket bookkeeping from the staged files' parquet FOOTER
-        statistics — zero Spark jobs, pure driver-side metadata reads
+        """Per-bucket bookkeeping from an epoch's delta files' parquet
+        FOOTER statistics — zero Spark jobs, pure driver-side metadata reads
         (the Iceberg-manifest trick: min/max/null-count per column ride
         in every file footer).
 
-        Expects the stage laid out as ``_bucket=N/_isturn={0,1}/*.parquet``.
-        Returns ``{bucket: {turn_keys, min_lsn, max_lsn, any_max_lsn,
-        has_conv_del}}``.
+        Expects the delta dir laid out as
+        ``_bucket=N/_isturn={0,1}/*.parquet``.  Returns ``{bucket:
+        {turn_keys, min_lsn, max_lsn, any_max_lsn}}``.
         """
         import pyarrow.parquet as pq
 
@@ -1075,7 +1035,6 @@ class ParquetTranscriptTable:
                     "min_lsn": None,
                     "max_lsn": None,
                     "any_max_lsn": None,
-                    "has_conv_del": False,
                 },
             )
             for tdir in os.listdir(os.path.join(stage_path, bdir)):
@@ -1087,14 +1046,12 @@ class ParquetTranscriptTable:
                     if not fn.endswith(".parquet"):
                         continue
                     md = pq.ParquetFile(os.path.join(d, fn)).metadata
-                    # leaf-column indices by dotted path
-                    lsn_ix = dlsn_ix = None
+                    # leaf-column index by dotted path
+                    lsn_ix = None
                     for i in range(md.num_columns):
                         p = md.row_group(0).column(i).path_in_schema if md.num_row_groups else None
                         if p == "w.lsn":
                             lsn_ix = i
-                        elif p == "_dlsn":
-                            dlsn_ix = i
                     for g in range(md.num_row_groups):
                         rg = md.row_group(g)
                         n = rg.num_rows
@@ -1106,11 +1063,6 @@ class ParquetTranscriptTable:
                             s["turn_keys"] += n
                             s["min_lsn"] = lo if s["min_lsn"] is None else min(s["min_lsn"], lo)
                             s["max_lsn"] = hi if s["max_lsn"] is None else max(s["max_lsn"], hi)
-                        else:
-                            # pyarrow Statistics.num_values = non-null count
-                            dst = rg.column(dlsn_ix).statistics
-                            if dst is not None and (dst.num_values or 0) > 0:
-                                s["has_conv_del"] = True
                         s["any_max_lsn"] = (
                             hi if s["any_max_lsn"] is None else max(s["any_max_lsn"], hi)
                         )

@@ -15,35 +15,28 @@ from dataclasses import dataclass, field
 class EngineConfig:
     """Tunable knobs for the CDC apply pipeline.
 
-    At 100 TB / 10^10-event scale you would raise ``num_buckets`` to
-    O(4096) and ``max_events_per_trigger`` to O(10^8); the defaults are
-    sized for local[8..32] testing.  Every knob is a *declarative* input
-    to a DataFrame plan — none of them change operator semantics.
+    There is one apply path — merge-on-read fast-append with a
+    scheduled fold (:mod:`aqueduct_core_spark.operators.merge`) — so no
+    knob selects an algorithm.  At 100 TB / 10^10-event scale you would
+    raise ``num_buckets`` to O(4096) and ``max_events_per_trigger`` to
+    O(10^8); the defaults are sized for local[8..32] testing.  Every
+    knob is a *declarative* input to a DataFrame plan — none of them
+    change operator semantics.
     """
 
     # --- table layout -------------------------------------------------
     #: number of hash buckets on conv_id for the transcripts table
     #: (analog of Iceberg ``PARTITIONED BY (bucket(N, conv_id))``).
-    #: Co-locates all turns of a conversation; MERGE touches only the
-    #: buckets present in a batch.
+    #: Co-locates all turns of a conversation; an epoch writes deltas
+    #: only for the buckets present in its batch.
     num_buckets: int = 32
 
-    # --- merge strategy ----------------------------------------------
-    #: "inline": ONE Spark job per epoch — argmax, watermark and MERGE
-    #: in a single plan (shared shuffle via ReuseExchange), exact
-    #: bookkeeping from observe() metrics, full-layout commit.  The
-    #: throughput path for batches whose keys span most buckets (normal
-    #: CDC replay).
-    #: "staged": resolve to a staging buffer first (EVENTS_BUFFER
-    #: analog), prune the MERGE to affected buckets via footer stats.
-    #: Right for sparse batches touching few buckets.
-    #: "mor" (default): merge-on-read fast-append — resolve the batch
-    #: and append delta files only (epoch cost ∝ batch, not table);
-    #: reads resolve base ∪ deltas; deltas fold into the base every
-    #: ``mor_fold_every`` epochs.  This is the reference's own design
-    #: (append + scheduled compaction) and the only shape that survives
-    #: 10^10 events — copy-on-write rewrites the table every batch.
-    merge_strategy: str = "mor"
+    # --- merge-on-read apply -------------------------------------------
+    # every epoch resolves its batch and appends delta files only
+    # (epoch cost ∝ batch, not table); reads resolve base ∪ deltas.
+    # This is the reference's own design (append + scheduled
+    # compaction) and the only shape that survives 10^10 events —
+    # copy-on-write rewrites the table every batch.
     #: fold deltas into the base after this many MOR epochs (0 = never)
     mor_fold_every: int = 8
 
@@ -55,56 +48,6 @@ class EngineConfig:
     #: per-message fixed overhead added to the byte budget, reference
     #: MAX_OVERHEAD_SIZE — pipe-api/.../Message.java:27-31
     message_overhead_bytes: int = 89
-
-    # --- skew handling (north rule axes A+B) --------------------------
-    #: number of salt slices for the LWW aggregation; 0 (default)
-    #: disables salting.  The unsalted argmax collapses per-key events
-    #: in the map-side partial aggregation, so hot keys never reach
-    #: the shuffle concentrated — measured: 3.3× slower WITH salting
-    #: on an unskewed 1.4M-event batch, and still 1.6× slower with
-    #: salting on a flood batch carrying 90% of 8M events on ONE key
-    #: (the combine is per-partition salting, for free).  Explicit
-    #: salting only pays where pre-shuffle combining is impossible
-    #: (window formulations, joins); AQE skew-join splitting covers
-    #: the MERGE join side.
-    #: (no automatic hot-key detection knob: deciding per-batch would
-    #: need an extra counting pass over the batch, and the measurement
-    #: above shows the unsalted aggregate already absorbs ordinary
-    #: hotspots — salting is an explicit operator decision)
-    salt_buckets: int = 0
-
-    # --- plan stability ------------------------------------------------
-    #: express each replay epoch's lsn-range slice as a broadcast join
-    #: against a 1-row bounds relation instead of literal predicates.
-    #: Literals are inlined into whole-stage-codegen source, so every
-    #: epoch's distinct range misses the codegen cache — but the
-    #: measured recompile is only ~2 ms/unit (BENCH.md "Plan-stable
-    #: epoch filters": 4.4–5.3 compilations/epoch at ~2 ms vs 0.4–0.6
-    #: plan-stable), and warm steady-state throughput of the two modes
-    #: is equal within host noise (interleaved A/B at local[32]:
-    #: 6.8 s vs 6.8/5.2 s on a 5.7M-event epoch).  Default OFF: the
-    #: literal formulation keeps parquet pushdown (row-group skipping)
-    #: with the simpler plan and needs no bare-scan precondition.
-    #: Turn ON for plan-cache hygiene when a driver hosts thousands of
-    #: epochs or many concurrent streams (bounded codegen cache, no
-    #: compile storms); requires a bare-scan input for file pruning.
-    #: Manifest-based trigger planning and the footer file index run in
-    #: BOTH modes (streaming.pipeline.replay).
-    plan_stable_filters: bool = False
-
-    # --- replay pipelining --------------------------------------------
-    #: number of replay epochs in flight at once (MOR strategy only;
-    #: 1 = fully sequential).  A MOR epoch's delta WRITE reads nothing
-    #: from the table — only its COMMIT must be ordered — so epoch N+1's
-    #: plan/scan/aggregate/write can run while epoch N finishes, hiding
-    #: the per-epoch serial driver work (Catalyst planning + job
-    #: submission, ~0.3-0.7 s/epoch measured) and letting N+1's tasks
-    #: fill N's straggler-tail cores (FIFO scheduling keeps N's tasks
-    #: at priority).  Commits are awaited strictly in epoch order on the
-    #: driver thread, so exactly-once bookkeeping and fold cadence are
-    #: unchanged.  The inline/staged strategies read committed state per
-    #: epoch and always run sequentially regardless of this knob.
-    replay_pipeline_depth: int = 2
 
     # --- compaction / retention (reference: hourly cron, 30 d deletion
     # retention — application-prod.yml:36-40) --------------------------

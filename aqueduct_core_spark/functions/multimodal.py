@@ -455,7 +455,8 @@ def resize_images(media: DataFrame, out_w: int = 32, out_h: int = 32) -> DataFra
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 d = decode_png(payload)
-                if d is None:
+                # a zero-width or zero-height image has no pixel to sample
+                if d is None or not d["width"] or not d["height"]:
                     rows.append((mid, None, None, None, None, None, None))
                     continue
                 small = resize_pixels(d["pixels"], out_w, out_h)
@@ -510,7 +511,8 @@ def resample_audio(media: DataFrame, out_rate: int = 16000) -> DataFrame:
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 d = decode_wav(payload)
-                if d is None or not d["sample_rate"]:
+                # a WAV with zero samples has no sample to resample
+                if d is None or not d["sample_rate"] or not d["n_samples"]:
                     rows.append((mid, None, None, None, None, None))
                     continue
                 x = d["samples"]

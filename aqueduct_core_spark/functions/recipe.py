@@ -72,14 +72,12 @@ def prepare_corpus(
     w = Window.partitionBy(fingerprint(F.col(text_col)))
     out = out.withColumn("_keep_id", F.min(id_col).over(w))
 
-    # 2. quality flags inline: the array-method filter is a pure
+    # 2. quality flags inline: the quality filter is a pure
     # projection that preserves input columns, so the gates compute in
     # the SAME stage as the window output — no join, no shuffle (a
     # doc_id join here would be a big-big sort-merge join at corpus
     # scale, since the flag set is corpus-sized)
-    out = gopher_quality_filter(
-        out, col=text_col, id_col=id_col, **(quality_kwargs or {})
-    )
+    out = gopher_quality_filter(out, col=text_col, **(quality_kwargs or {}))
     out = out.withColumnRenamed("keep", "_q_keep").drop(
         "n_words", "mean_word_len", "dup_word_frac", "top_bigram_frac"
     )

@@ -141,8 +141,6 @@ def gopher_quality_filter(
     max_mean_word_len: float = 10.0,
     max_dup_word_frac: float = 0.60,
     max_top_bigram_frac: float = 0.05,
-    bigram_method: str = "array",
-    id_col: str = "doc_id",
     min_input_partitions: int | None = None,
 ) -> DataFrame:
     """Gopher-style repetition/quality gates (Rae et al. 2021, §A1.1):
@@ -155,29 +153,18 @@ def gopher_quality_filter(
       fraction" rule, count-based)
 
     Output: the input columns + the four signals (6-dp deterministic
-    rounding) + a ``keep`` boolean.  No Python UDF in either path.
+    rounding) + a ``keep`` boolean.  No Python UDF.
 
-    ``bigram_method`` picks the top-bigram mechanics (identical
-    results):
-
-    - ``"array"`` — zero-shuffle: per-row ``array_sort`` + run-length
-      ``aggregate``.  Caveat: Spark's higher-order functions are
-      CodegenFallback (interpreted Catalyst eval, JVM-side but outside
-      whole-stage codegen), so the per-row constant is high; the win is
-      a single scan pass with NO shuffle — right when documents are
-      long or the cluster is shuffle-bound.
-    - ``"explode"`` — classic explode → groupBy(id, bigram) →
-      groupBy(id): two hash aggregations with map-side combine, fully
-      whole-stage-codegen'd, plus a broadcast-back join keyed on
-      ``id_col``.  Right when per-row interpreted eval dominates
-      (short docs, CPU-bound cluster).  Requires ``id_col``.
+    The top bigram is found without a shuffle: per-row ``array_sort`` +
+    run-length ``aggregate``, so the whole filter is one projection
+    pass.  Spark's higher-order functions are CodegenFallback
+    (interpreted Catalyst eval, outside whole-stage codegen), so the
+    per-row constant is high; the win is the single scan pass.
 
     ``min_input_partitions`` spreads a small/single-split input across
     the cores first (see ``functions.dedup.spread_small_input``).  With
-    the scan parallelized, the measured ranking at sf0.1 local[32]
-    REVERSES the 1-task-era result: array 0.63 s beats explode 1.03 s
-    (vs 7.6 / 3.9 s unspread) — the zero-shuffle fold wins whenever the
-    map side actually uses the cores.
+    the scan parallelized this fold measured 0.63 s at sf0.1 local[32]
+    against 1.03 s for an explode → groupBy formulation (BENCH.md).
     """
     from aqueduct_core_spark.functions.dedup import spread_small_input
 
@@ -199,39 +186,16 @@ def gopher_quality_filter(
         ),
     ).otherwise(F.array().cast("array<string>"))
 
-    if bigram_method == "array":
-        tbf = F.when(F.size(bigrams) == 0, F.lit(0.0)).otherwise(
-            round6(_max_run_of_sorted(bigrams) / F.size(bigrams))
-        )
-        out = df.select(
-            "*",
-            n.alias("n_words"),
-            mwl.alias("mean_word_len"),
-            dwf.alias("dup_word_frac"),
-            tbf.alias("top_bigram_frac"),
-        )
-    elif bigram_method == "explode":
-        stats = df.select(
-            "*",
-            n.alias("n_words"),
-            mwl.alias("mean_word_len"),
-            dwf.alias("dup_word_frac"),
-        )
-        bg = df.select(F.col(id_col), F.explode(bigrams).alias("_bg"))
-        top = (
-            bg.groupBy(id_col, "_bg")
-            .agg(F.count(F.lit(1)).alias("_c"))
-            .groupBy(id_col)
-            .agg(F.max("_c").alias("_mx"), F.sum("_c").alias("_tot"))
-            .select(id_col, round6(F.col("_mx") / F.col("_tot")).alias("_tbf"))
-        )
-        out = (
-            stats.join(top, on=id_col, how="left")
-            .withColumn("top_bigram_frac", F.coalesce(F.col("_tbf"), F.lit(0.0)))
-            .drop("_tbf")
-        )
-    else:
-        raise ValueError(f"unknown bigram_method {bigram_method!r}")
+    tbf = F.when(F.size(bigrams) == 0, F.lit(0.0)).otherwise(
+        round6(_max_run_of_sorted(bigrams) / F.size(bigrams))
+    )
+    out = df.select(
+        "*",
+        n.alias("n_words"),
+        mwl.alias("mean_word_len"),
+        dwf.alias("dup_word_frac"),
+        tbf.alias("top_bigram_frac"),
+    )
 
     keep = (
         (F.col("n_words") >= min_words)

@@ -20,7 +20,7 @@ Generator rules (FIXTURES.md §2):
   ``U`` events; ~5% of keys end in a ``D`` tombstone; ~1% of
   conversations get a conversation-level ``D``.
 - hot conversations (default 1%) receive ~100× the event volume —
-  exercises salting/skew handling.
+  exercises skew handling (the LWW argmax's map-side combine).
 - a turn's first ``I`` always has a conversation-level metadata event
   (op ``I``, turn_idx NULL) at a lower lsn — hierarchical ordering.
 - the ``tool`` column only appears from epoch 1 onward (additive

@@ -433,21 +433,12 @@ def _is_marker(fn: str) -> bool:
     return fn == "_SUCCESS" or fn.endswith(".crc") or fn.startswith(".")
 
 
-def _staged_epoch(dirname: str) -> int | None:
-    """Epoch number from a staging-dir name (``epoch-<n>-<hex>``);
-    None for non-epoch labels."""
-    import re
-
-    m = re.match(r"epoch-(\d+)-", dirname)
-    return int(m.group(1)) if m else None
-
-
 def remove_orphan_files(table: ParquetTranscriptTable, older_than_s: float = 3600) -> int:
     """Delete files under the table root that NO snapshot references —
     the debris a crash leaves between the data write and the manifest
     commit (Iceberg ``remove_orphan_files`` analog; the write protocol
     makes such files invisible to readers, so deleting them is safe).
-    Also drops leftover staging dirs.  Returns data files removed
+    Returns data files removed
     (markers like ``_SUCCESS`` are cleaned with their directory but
     never counted).
 
@@ -457,23 +448,15 @@ def remove_orphan_files(table: ParquetTranscriptTable, older_than_s: float = 360
 
     ``older_than_s`` guards in-flight DATA writes: a file younger than
     this may belong to an epoch whose commit hasn't landed yet
-    (Iceberg's action has the same knob for the same race).  Staging
-    dirs get a stronger structural guard: their names carry the owning
-    epoch, and any stage with epoch > the table's last committed epoch
-    is ALWAYS skipped regardless of age — a live epoch keeps reading
-    its stage without touching mtimes, so age alone cannot prove it
-    dead.  Stages at-or-below the committed epoch are finished (commit
-    landed or the epoch was superseded) and are removed once older than
-    the cutoff.  Walks only table-owned directories (``data``/``delta``/
-    ``offsets``/``staging``) driver-side; at production scale this is
-    an O(files) listing exactly like Iceberg's own action.
+    (Iceberg's action has the same knob for the same race).  Walks only
+    table-owned directories (``data``/``delta``/``offsets``)
+    driver-side; at production scale this is an O(files) listing
+    exactly like Iceberg's own action.
     """
     import os
-    import shutil
     import time
 
     referenced = table.catalog.referenced_files()
-    last_epoch = table.last_committed_epoch()
 
     cutoff = time.time() - older_than_s
     removed = 0
@@ -519,29 +502,6 @@ def remove_orphan_files(table: ParquetTranscriptTable, older_than_s: float = 360
                     os.rmdir(dirpath)
             except (FileNotFoundError, OSError):
                 pass
-    # staging dirs are never referenced by a manifest — a crash mid-
-    # epoch leaves them whole.
-    staging = os.path.join(table.root, "staging")
-    if os.path.isdir(staging):
-        for entry in os.listdir(staging):
-            ep = _staged_epoch(entry)
-            if ep is not None and ep > last_epoch:
-                continue  # possibly in-flight: structurally protected
-            p = os.path.join(staging, entry)
-            try:
-                newest = max(
-                    (
-                        os.path.getmtime(os.path.join(dp, f))
-                        for dp, _dn, fns in os.walk(p)
-                        for f in fns
-                    ),
-                    default=os.path.getmtime(p),
-                )
-            except FileNotFoundError:
-                continue
-            if newest <= cutoff:
-                shutil.rmtree(p, ignore_errors=True)
-                removed += 1
     return removed
 
 

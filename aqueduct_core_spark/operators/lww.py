@@ -15,11 +15,9 @@ Spark-first design: the argmax is a **hash aggregation on
 ``max(struct(lsn, …))``**, not a window — partial (map-side) combine
 makes it skew-resilient (a hot conversation's events collapse to one
 row per key on the map side before the shuffle), and there is no
-per-partition sort.  With ``salt_buckets > 0`` the aggregation runs in
-two explicitly salted phases (see :mod:`aqueduct_core_spark.operators.skew`).
-Tie-breaking is deterministic because ``lsn`` is unique; the struct
-comparison falls back to ``ts`` then ``op`` if a malformed log ever
-duplicated an lsn.
+per-partition sort.  Tie-breaking is deterministic because ``lsn`` is
+unique; the struct comparison falls back to ``ts`` then ``op`` if a
+malformed log ever duplicated an lsn.
 """
 
 from __future__ import annotations
@@ -54,32 +52,15 @@ def conv_delete_watermarks(conv_events: DataFrame) -> DataFrame:
     )
 
 
-def argmax_winners(
-    turn_events: DataFrame,
-    payload_cols: list[str],
-    salt_buckets: int = 0,
-) -> DataFrame:
+def argmax_winners(turn_events: DataFrame, payload_cols: list[str]) -> DataFrame:
     """One row per (conv_id, turn_idx): the max-lsn event.
 
     ``payload_cols`` are the non-key payload columns to carry (dynamic —
-    grows under schema evolution).  ``salt_buckets > 0`` switches to the
-    two-phase salted aggregation; ``max(struct(lsn, …))`` is associative
-    and ``lsn`` unique, so the salted result is identical.
+    grows under schema evolution).
     """
     fields = ["lsn", "op"] + [c for c in payload_cols if c not in ("lsn", "op")]
     winner = F.max(F.struct(*[F.col(c) for c in fields])).alias("w")
-
-    if salt_buckets > 0:
-        from aqueduct_core_spark.operators.skew import SALT_COLUMN, with_salt
-
-        partial = (
-            with_salt(turn_events, salt_buckets)
-            .groupBy(*KEY_COLUMNS, SALT_COLUMN)
-            .agg(winner)
-        )
-        agged = partial.groupBy(*KEY_COLUMNS).agg(F.max("w").alias("w"))
-    else:
-        agged = turn_events.groupBy(*KEY_COLUMNS).agg(winner)
+    agged = turn_events.groupBy(*KEY_COLUMNS).agg(winner)
 
     out_cols = [F.col(c) for c in KEY_COLUMNS]
     out_cols += [F.col(f"w.{c}").alias(c) for c in payload_cols]
@@ -87,9 +68,7 @@ def argmax_winners(
     return agged.select(*out_cols)
 
 
-def unified_argmax(
-    changes: DataFrame, payload_cols: list[str], salt_buckets: int = 0
-) -> DataFrame:
+def unified_argmax(changes: DataFrame, payload_cols: list[str]) -> DataFrame:
     """Single-pass resolution aggregate over the WHOLE batch — turn and
     conversation-level events together, keyed by
     ``(conv_id, coalesce(turn_idx, -1))``.
@@ -115,18 +94,6 @@ def unified_argmax(
             (F.col("op") == OP_DELETE) & F.col("turn_idx").isNull(), F.col("lsn")
         )
     ).alias("_dlsn")
-
-    if salt_buckets > 0:
-        from aqueduct_core_spark.operators.skew import SALT_COLUMN, with_salt
-
-        partial = (
-            with_salt(changes, salt_buckets)
-            .groupBy("conv_id", tkey, SALT_COLUMN)
-            .agg(winner, dmax)
-        )
-        return partial.groupBy("conv_id", "_tkey").agg(
-            F.max("w").alias("w"), F.max("_dlsn").alias("_dlsn")
-        )
     return changes.groupBy("conv_id", tkey).agg(winner, dmax)
 
 
@@ -165,7 +132,7 @@ def staged_winners(staged: DataFrame, payload_cols: list[str]) -> DataFrame:
 
 
 def resolve_batch(
-    changes: DataFrame, payload_cols: list[str], salt_buckets: int = 0
+    changes: DataFrame, payload_cols: list[str]
 ) -> tuple[DataFrame, DataFrame]:
     """Resolve a micro-batch of change events to:
 
@@ -177,7 +144,7 @@ def resolve_batch(
     - ``conv_del``: per-conversation delete watermarks, still to be
       applied against pre-existing table state during MERGE.
     """
-    staged = unified_argmax(changes, payload_cols, salt_buckets)
+    staged = unified_argmax(changes, payload_cols)
     return staged_winners(staged, payload_cols), staged_conv_del(staged)
 
 

@@ -1,17 +1,21 @@
-"""Batch apply: LWW-resolve a micro-batch and MERGE it into the
-transcripts table — the engine's core operator.
+"""Batch apply: LWW-resolve a micro-batch and append it to the
+transcripts table as merge-on-read deltas — the engine's core operator.
 
 This is the Spark re-expression of the reference's store-node apply
 path (``SQLiteStorage.write(PipeEntity)`` — one transaction writing
 messages + offsets + pipe state, rollback on failure,
-``/root/reference/pipe-storage-sqlite/.../SQLiteStorage.java:199-241``):
+``pipe-storage-sqlite/.../SQLiteStorage.java:199-241``),
+which appends each batch and compacts on a schedule
+(``CompactionTask.java:40-47``):
 
 1. additive schema evolution (align batch ↔ table schema);
-2. LWW resolution (salted argmax + tombstones + conversation-level
+2. LWW resolution (one hash argmax + tombstones + conversation-level
    deletes) → exactly one row per key (Iceberg MERGE cardinality rule);
-3. key-partitioned MERGE: only the hash buckets present in the batch
-   are read and rewritten (partition pruning analog of cluster routing,
-   ``PostgresqlStorage.java:469-473``);
+3. fast-append: the resolved keys are written as delta files
+   partitioned by hash bucket — no join against table state, so epoch
+   cost is proportional to the batch; reads resolve base ∪ deltas and
+   :func:`aqueduct_core_spark.operators.compact.fold_deltas` folds the
+   deltas into the base on a schedule;
 4. exactly-once: the epoch/max-lsn stamp and the ``_offsets`` metrics
    row ride in the same atomic snapshot commit as the data; a replayed
    epoch (``epoch <= last committed``) is skipped idempotently
@@ -26,19 +30,16 @@ import json
 
 from pyspark.sql import DataFrame, functions as F
 
+from aqueduct_core_spark.catalog.snapshot import CommitConflict
 from aqueduct_core_spark.catalog.table import (
     BUCKET_COLUMN,
     ParquetTranscriptTable,
+    _bucket_count,
     bucket_expr,
 )
 from aqueduct_core_spark.config import EngineConfig
 from aqueduct_core_spark.operators import evolve, lww
-from aqueduct_core_spark.schema import (
-    KEY_COLUMNS,
-    LSN_COLUMN,
-    OP_DELETE,
-    PIPE_UP_TO_DATE,
-)
+from aqueduct_core_spark.schema import KEY_COLUMNS, LSN_COLUMN, PIPE_UP_TO_DATE
 
 
 class EpochCollision(RuntimeError):
@@ -50,57 +51,13 @@ class EpochCollision(RuntimeError):
     checkpoint, or continue the epoch sequence explicitly."""
 
 
-def merge_state(
-    existing: DataFrame,
-    winners: DataFrame,
-    conv_del: DataFrame,
-    payload_cols: list[str],
-) -> DataFrame:
-    """Pure-DataFrame MERGE semantics (the plan Iceberg's MERGE INTO
-    would produce, expressed directly):
-
-    - matched & src newer & src op!='D'  → src row (UPDATE)
-    - matched & src newer & src op=='D'  → drop (DELETE)
-    - matched & src older                → existing row (idempotent replay)
-    - not matched & src op!='D'          → src row (INSERT)
-    - existing-only                      → keep, unless killed by a
-      conversation-level delete watermark (lsn ≤ conv_del_lsn).
-    """
-    t = existing.alias("t")
-    s = winners.alias("s")
-    joined = t.join(s, on=KEY_COLUMNS, how="full_outer")
-
-    s_lsn, t_lsn = F.col(f"s.{LSN_COLUMN}"), F.col(f"t.{LSN_COLUMN}")
-    take_src = s_lsn.isNotNull() & (t_lsn.isNull() | (s_lsn >= t_lsn))
-
-    cols = [F.col(c) for c in KEY_COLUMNS]
-    for c in payload_cols:
-        cols.append(F.when(take_src, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c))
-    cols.append(F.when(take_src, s_lsn).otherwise(t_lsn).alias(LSN_COLUMN))
-    cols.append(F.when(take_src, F.col("s.op")).otherwise(F.lit(None)).alias("_op"))
-
-    merged = joined.select(*cols).where(
-        F.col("_op").isNull() | (F.col("_op") != OP_DELETE)
-    ).drop("_op")
-
-    # conversation-level deletes against surviving state
-    merged = (
-        merged.join(F.broadcast(conv_del), on="conv_id", how="left")
-        .where(
-            F.col("conv_del_lsn").isNull() | (F.col(LSN_COLUMN) > F.col("conv_del_lsn"))
-        )
-        .drop("conv_del_lsn")
-    )
-    return merged
-
-
-def _lineage_json(scope: str, buckets: dict) -> str:
-    """Uniform ``partition_lineage`` payload for every merge strategy:
-    ``{"scope": "batch"|"table", "buckets": {b: {keys, min_lsn,
-    max_lsn}}}``.  ``batch`` = only buckets the batch touched, counts
-    are batch-scoped; ``table`` = the full rewritten layout (inline
-    copy-on-write), counts are live keys per bucket."""
-    return json.dumps({"scope": scope, "buckets": buckets}, sort_keys=True)
+def _lineage_json(buckets: dict) -> str:
+    """``partition_lineage`` payload: ``{"scope": "batch", "buckets":
+    {b: {keys, min_lsn, max_lsn}}}`` — only the buckets the batch
+    touched, with batch-scoped counts.  (Tables written by the retired
+    copy-on-write apply also hold ``"scope": "table"`` rows; readers
+    keep the field to tell them apart.)"""
+    return json.dumps({"scope": "batch", "buckets": buckets}, sort_keys=True)
 
 
 def mor_prepare(
@@ -109,35 +66,42 @@ def mor_prepare(
     epoch: int,
     cfg: EngineConfig,
 ) -> dict:
-    """Phase A of a (possibly pipelined) MOR epoch: schema-align,
-    LWW-resolve and WRITE the delta files — everything except the
-    ordered commit.  Reads nothing from table state but the schema
-    (stable within a replay: every batch is a slice of one source
-    DataFrame), so epoch N+1's phase A may run concurrently with epoch
-    N's tail (``EngineConfig.replay_pipeline_depth``).  The files it
-    writes are invisible until :func:`apply_batch` commits them; on a
-    crash they are unreferenced orphans (``remove_orphan_files``)."""
+    """Phase A of an epoch: schema-align, LWW-resolve and WRITE the
+    delta files — everything except the ordered commit.  Reads nothing
+    from table state but one manifest's schema and bucket count (stable
+    within a replay: every batch is a slice of one source DataFrame),
+    so epoch N+1's phase A may run concurrently with epoch N's tail
+    (pipelined :func:`aqueduct_core_spark.streaming.pipeline.replay`).
+    The bucket count the rows were hashed with is returned: the commit
+    refuses a layout that changed underneath (a concurrent
+    ``rebucket``).  The files it writes are invisible until
+    :func:`apply_batch` commits them; on a crash or a refused commit
+    they are unreferenced orphans (``remove_orphan_files``).  ``cfg``
+    carries no phase-A knob; it is accepted for call symmetry with
+    :func:`apply_batch`."""
     import time as _time
 
     t0 = _time.time()
-    batch = table.to_physical(batch)  # logical → physical column names
-    table_fields = table.schema().fields
+    snap = table.catalog.current()
+    num_buckets = _bucket_count(snap)
+    batch = table.to_physical(batch, snap)  # logical → physical column names
     new_fields, added_cols, widened_cols = evolve.evolve_table_fields(
-        table_fields, batch
+        table.schema(snap).fields, batch
     )
     batch = evolve.align_batch(batch, new_fields)
     payload_cols = [
         f.name for f in new_fields if f.name not in (*KEY_COLUMNS, LSN_COLUMN)
     ]
     staged_df = (
-        lww.unified_argmax(batch, payload_cols, cfg.salt_buckets)
-        .withColumn(BUCKET_COLUMN, bucket_expr(table.num_buckets))
+        lww.unified_argmax(batch, payload_cols)
+        .withColumn(BUCKET_COLUMN, bucket_expr(num_buckets))
         .withColumn("_isturn", (F.col("_tkey") >= 0).cast("int"))
     )
     by_bucket, out_dir = table.write_delta_data(staged_df, f"epoch-{epoch}")
     return {
         "by_bucket": by_bucket,
         "out_dir": out_dir,
+        "num_buckets": num_buckets,
         "new_fields": new_fields,
         "added_cols": added_cols,
         "widened_cols": widened_cols,
@@ -157,12 +121,14 @@ def apply_batch(
 ) -> dict:
     """Apply one micro-batch; returns the metrics/offsets row.
 
-    ``batch_max_lsn``: the batch's known max lsn (trigger planning has
-    it for free); when None the inline path computes it with one tiny
-    aggregate (parquet aggregate pushdown makes it metadata-only).
+    Every epoch runs the same two phases: :func:`mor_prepare` (resolve
+    + delta write) and the ordered commit.  ``batch_max_lsn``: the
+    batch's known max lsn (trigger planning has it for free); when None
+    the batch may be a streaming idle trigger, probed with one tiny
+    ``isEmpty`` job and skipped without a commit when empty.
     ``prewritten``: a :func:`mor_prepare` result — the delta files are
     already on disk, only bookkeeping + the ordered commit remain
-    (``batch`` may be None then; MOR strategy only).
+    (``batch`` may be None then).
     ``extra_summary``: caller-owned snapshot-summary keys committed
     atomically with the epoch (e.g. per-source resume watermarks —
     :func:`aqueduct_core_spark.streaming.pipeline.replay_multi_source`);
@@ -173,7 +139,6 @@ def apply_batch(
     the auto-fold is deferred too (folding would race the staged
     manifest for the next version id)."""
     cfg = cfg or EngineConfig()
-    spark = table.spark
 
     # ---- exactly-once guard (T5): replayed epoch is a no-op ----------
     last_epoch = table.last_committed_epoch()
@@ -219,48 +184,26 @@ def apply_batch(
             "state": "SKIPPED_DUPLICATE_EPOCH",
         }
 
-    # ---- schema evolution (additive, metadata-only) ------------------
-    if prewritten is not None:
-        if cfg.merge_strategy != "mor":
-            raise ValueError("prewritten phase-A results are MOR-only")
-        new_fields, added_cols = prewritten["new_fields"], prewritten["added_cols"]
-        widened_cols = prewritten.get("widened_cols", [])
-        payload_cols = [
-            f.name for f in new_fields if f.name not in (*KEY_COLUMNS, LSN_COLUMN)
-        ]
-        return _apply_mor(
-            table, batch, epoch, cfg, new_fields, payload_cols, added_cols,
-            batch_max_lsn, prewritten=prewritten, widened_cols=widened_cols,
-            extra_summary=extra_summary, publish=publish,
-        )
-    batch = table.to_physical(batch)  # logical → physical column names
-    table_fields = table.schema().fields
-    new_fields, added_cols, widened_cols = evolve.evolve_table_fields(
-        table_fields, batch
-    )
-    batch = evolve.align_batch(batch, new_fields)
-    payload_cols = [
-        f.name
-        for f in new_fields
-        if f.name not in (*KEY_COLUMNS, LSN_COLUMN)
-    ]
-
-    if cfg.merge_strategy == "mor":
-        return _apply_mor(
-            table, batch, epoch, cfg, new_fields, payload_cols, added_cols,
-            batch_max_lsn, widened_cols=widened_cols, extra_summary=extra_summary,
-            publish=publish,
-        )
-    if cfg.merge_strategy == "inline":
-        return _apply_inline(
-            table, batch, epoch, cfg, new_fields, payload_cols, added_cols,
-            batch_max_lsn, widened_cols=widened_cols, extra_summary=extra_summary,
-            publish=publish,
-        )
-    return _apply_staged(
-        table, batch, epoch, cfg, new_fields, payload_cols, added_cols,
-        batch_max_lsn, widened_cols=widened_cols, extra_summary=extra_summary,
-        publish=publish,
+    if prewritten is None:
+        # streaming idle triggers (hint is None ⇔ not replay-planned)
+        # must not commit a snapshot or advance the fold counter —
+        # otherwise an idle stream churns snapshots and forces premature
+        # folds.  Replay triggers are planned from data and carry a hint.
+        if batch_max_lsn is None and batch.isEmpty():
+            return {
+                "epoch": int(epoch),
+                "last_lsn": table.last_committed_lsn(),
+                "applied": 0,
+                "skipped": 0,
+                "partition_lineage": _lineage_json({}),
+                "committed_at": _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None),
+                "state": PIPE_UP_TO_DATE,
+                "added_columns": [],
+            }
+        prewritten = mor_prepare(table, batch, epoch, cfg)
+    return _apply_mor(
+        table, epoch, cfg, prewritten, batch_max_lsn,
+        extra_summary=extra_summary, publish=publish,
     )
 
 
@@ -301,8 +244,6 @@ def apply_audited(
     a DIFFERENT epoch is someone else's in-flight audit: fail loud
     rather than destroy their work (WAP is single-writer per table,
     like compaction)."""
-    from aqueduct_core_spark.catalog.snapshot import CommitConflict
-
     leftover = table.catalog.staged_version()
     if leftover is not None:
         staged_epoch = int(
@@ -331,11 +272,10 @@ def apply_audited(
         return m
     v = table.catalog.staged_version()
     if v is None:
-        # nothing was staged: an idle/empty trigger, an all-quarantined
-        # envelope batch, or a no-effect slice that took the
-        # bookkeeping-only path — there is no snapshot to audit or
-        # publish, and publish(None)/abandon(None) would crash the
-        # stream on a harmless batch
+        # nothing was staged: an idle/empty trigger or an
+        # all-quarantined envelope batch — there is no snapshot to
+        # audit or publish, and publish(None)/abandon(None) would crash
+        # the stream on a harmless batch
         m["published"] = False
         m["audit_failures"] = []
         return m
@@ -353,56 +293,34 @@ def apply_audited(
 
 def _apply_mor(
     table: ParquetTranscriptTable,
-    batch: DataFrame,
     epoch: int,
     cfg: EngineConfig,
-    new_fields,
-    payload_cols: list[str],
-    added_cols: list[str],
+    prep: dict,
     batch_max_hint: int | None = None,
-    prewritten: dict | None = None,
-    widened_cols: list[str] | tuple = (),
     extra_summary: dict | None = None,
     publish: bool = True,
 ) -> dict:
-    """Merge-on-read fast-append — the sustained-ingest default.
-
-    This is the reference's own shape: the replica *appends* events in
-    one transaction and compacts on a schedule
-    (SQLiteStorage.java:188-241 + CompactionTask.java:40-47); Iceberg
-    calls it merge-on-read.  Per epoch: ONE Spark job — unified argmax
-    (one shuffle, map-side combine) → resolved keys written as delta
-    files partitioned by bucket.  No join against existing state, so
-    epoch cost is proportional to the batch, not the table.  Reads
-    resolve base ∪ deltas with identical LWW semantics
-    (``table.read_internal``); :func:`aqueduct_core_spark.operators.compact.fold_deltas`
-    folds deltas into the base every ``cfg.mor_fold_every`` epochs.
-    Bookkeeping is footer-statistics only — no extra jobs.
-    """
-    # streaming idle triggers (hint is None ⇔ not replay-planned) must
-    # not commit a snapshot or advance the fold counter — otherwise an
-    # idle stream churns snapshots and forces premature folds
-    if prewritten is None and batch_max_hint is None and batch.isEmpty():
-        return {
-            "epoch": int(epoch),
-            "last_lsn": table.last_committed_lsn(),
-            "applied": 0,
-            "skipped": 0,
-            "partition_lineage": _lineage_json("batch", {}),
-            "committed_at": _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None),
-            "state": PIPE_UP_TO_DATE,
-            "added_columns": added_cols,
-        }
-    if prewritten is not None:
-        by_bucket, out_dir = prewritten["by_bucket"], prewritten["out_dir"]
-    else:
-        staged_df = (
-            lww.unified_argmax(batch, payload_cols, cfg.salt_buckets)
-            .withColumn(BUCKET_COLUMN, bucket_expr(table.num_buckets))
-            .withColumn("_isturn", (F.col("_tkey") >= 0).cast("int"))
+    """Phase B of an epoch: footer-statistics bookkeeping over the
+    delta files :func:`mor_prepare` wrote, then ONE atomic commit that
+    appends them with the offsets row and the exactly-once stamp.  No
+    extra Spark jobs.  Reads the head manifest once and commits on
+    exactly that base, so a concurrent commit fails the version CAS
+    (``CommitConflict``) instead of being overwritten; a head whose
+    bucket count differs from the one the deltas were hashed with (a
+    ``rebucket`` landed after phase A) is refused the same way —
+    nothing is committed and a rerun re-prepares the epoch.  Deltas
+    fold into the base every ``cfg.mor_fold_every`` epochs."""
+    base = table.catalog.current()
+    if _bucket_count(base) != prep["num_buckets"]:
+        raise CommitConflict(
+            f"epoch {epoch}'s deltas were hashed for {prep['num_buckets']} "
+            f"buckets but the table now has {_bucket_count(base)} (a "
+            "rebucket committed after the delta write); nothing was "
+            "committed — rerun the epoch"
         )
-        by_bucket, out_dir = table.write_delta_data(staged_df, f"epoch-{epoch}")
-    summary = table.stage_summary(out_dir)
+    new_fields, added_cols = prep["new_fields"], prep["added_cols"]
+    widened_cols = prep["widened_cols"]
+    summary = table.stage_summary(prep["out_dir"])
     lineage = {
         str(b): {
             "min_lsn": int(s["min_lsn"]),
@@ -414,24 +332,27 @@ def _apply_mor(
     }
     applied = sum(v["keys"] for v in lineage.values())
     batch_max_lsn = max(
-        [table.last_committed_lsn(), int(batch_max_hint if batch_max_hint is not None else -1)]
+        [
+            int(base["summary"].get("aqueduct.max-lsn", -1)),
+            int(batch_max_hint if batch_max_hint is not None else -1),
+        ]
         + [int(s["any_max_lsn"]) for s in summary.values() if s["any_max_lsn"] is not None]
     )
-    delta_epochs = int(table.catalog.current()["summary"].get("aqueduct.delta-epochs", 0)) + 1
+    delta_epochs = int(base["summary"].get("aqueduct.delta-epochs", 0)) + 1
 
     offsets_row = {
         "epoch": int(epoch),
         "last_lsn": int(batch_max_lsn),
         "applied": int(applied),
         "skipped": 0,
-        "partition_lineage": _lineage_json("batch", lineage),
+        "partition_lineage": _lineage_json(lineage),
         "committed_at": _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None),
         "state": PIPE_UP_TO_DATE,
     }
     offsets_rel = table.write_offsets_row(offsets_row, label=f"epoch-{epoch}")
     table.catalog.commit(
-        table.catalog.current(),
-        added_delta_buckets=by_bucket,
+        base,
+        added_delta_buckets=prep["by_bucket"],
         added_offsets_files=[offsets_rel],
         summary_updates={
             cfg.prop_epoch: int(epoch),
@@ -461,323 +382,3 @@ def _apply_mor(
         fold_deltas(table)
         offsets_row["folded"] = True
     return offsets_row
-
-
-def _apply_inline(
-    table: ParquetTranscriptTable,
-    batch: DataFrame,
-    epoch: int,
-    cfg: EngineConfig,
-    new_fields,
-    payload_cols: list[str],
-    added_cols: list[str],
-    batch_max_hint: int | None = None,
-    widened_cols: list[str] | tuple = (),
-    extra_summary: dict | None = None,
-    publish: bool = True,
-) -> dict:
-    """One Spark job per epoch — the throughput path for batches whose
-    keys span most buckets (the common case for CDC replay).
-
-    The unified-argmax, the conversation-delete watermark and the MERGE
-    all live in ONE plan: the argmax's shuffle Exchange is shared
-    between the winners branch and the broadcast watermark branch
-    (Catalyst ReuseExchange), so the raw batch is scanned and shuffled
-    exactly once.  Exact applied/max-lsn bookkeeping comes from
-    ``observe()`` metrics (accumulator-based, collected during the same
-    job — no extra pass); per-bucket lineage comes from the written
-    files' parquet footers, driver-side.  The whole live state is
-    re-committed as a full layout (copy-on-write), which is what a
-    broad batch rewrites anyway; sparse batches should use the
-    ``staged`` strategy, which prunes to affected buckets.
-    """
-    import pyspark.sql.types as T
-    from pyspark.sql import Observation
-
-    spark = table.spark
-    # the empty-batch probe is a real (tiny) job — only worth it on the
-    # streaming path, where idle triggers happen; replay triggers are
-    # planned from data and never empty (their max lsn rides in the hint)
-    if batch_max_hint is None and batch.isEmpty():
-        return {
-            "epoch": int(epoch),
-            "last_lsn": table.last_committed_lsn(),
-            "applied": 0,
-            "skipped": 0,
-            "partition_lineage": _lineage_json("batch", {}),
-            "committed_at": _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None),
-            "state": PIPE_UP_TO_DATE,
-            "added_columns": added_cols,
-        }
-
-    staged = lww.unified_argmax(batch, payload_cols, cfg.salt_buckets)
-    is_turn = F.col("_tkey") >= 0
-
-    obs_turn = Observation(f"epoch-{epoch}-turn")
-    turn_branch = staged.where(is_turn).observe(
-        obs_turn,
-        F.count(F.lit(1)).alias("keys"),
-        F.min("w.lsn").alias("min_lsn"),
-        F.max("w.lsn").alias("max_lsn"),
-    )
-    winners = turn_branch.select(
-        "conv_id",
-        F.col("_tkey").cast("int").alias("turn_idx"),
-        *[F.col(f"w.{c}").alias(c) for c in payload_cols],
-        F.col("w.op").alias("op"),
-        F.col("w.lsn").alias(LSN_COLUMN),
-    )
-
-    # (no Observation here: this branch is consumed by two broadcast
-    # joins, and CollectMetrics only supports single-consumer plans)
-    conv_del = staged.where(~is_turn).where(F.col("_dlsn").isNotNull()).select(
-        "conv_id", F.col("_dlsn").alias("conv_del_lsn")
-    )
-
-    if batch_max_hint is None:
-        # metadata-only with spark.sql.parquet.aggregatePushdown
-        row = batch.agg(F.max("lsn").alias("m")).collect()[0]
-        batch_max_hint = int(row["m"]) if row["m"] is not None else -1
-
-    # winners' op rewritten by the watermark (hierarchical delete)
-    winners = (
-        winners.join(F.broadcast(conv_del), on="conv_id", how="left")
-        .withColumn(
-            "op",
-            F.when(
-                F.col("conv_del_lsn").isNotNull()
-                & (F.col(LSN_COLUMN) <= F.col("conv_del_lsn")),
-                F.lit(OP_DELETE),
-            ).otherwise(F.col("op")),
-        )
-        .drop("conv_del_lsn")
-    )
-
-    existing = table.read_internal(None, schema=T.StructType(new_fields))
-    merged = merge_state(
-        existing.drop(BUCKET_COLUMN) if BUCKET_COLUMN in existing.columns else existing,
-        winners,
-        conv_del,
-        payload_cols,
-    ).withColumn(BUCKET_COLUMN, bucket_expr(table.num_buckets))
-
-    new_files = table.write_bucket_data(merged, label=f"epoch-{epoch}")
-
-    t_stats = obs_turn.get
-    applied = int(t_stats["keys"] or 0)
-    batch_max_lsn = max(
-        [table.last_committed_lsn(), int(batch_max_hint)]
-        + ([int(t_stats["max_lsn"])] if t_stats["max_lsn"] is not None else [])
-    )
-    lineage = table.data_files_lineage(new_files)
-
-    offsets_row = {
-        "epoch": int(epoch),
-        "last_lsn": int(batch_max_lsn),
-        "applied": applied,
-        "skipped": 0,
-        "partition_lineage": _lineage_json("table", lineage),
-        "committed_at": _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None),
-        "state": PIPE_UP_TO_DATE,
-    }
-    offsets_rel = table.write_offsets_row(offsets_row, label=f"epoch-{epoch}")
-    table.catalog.commit(
-        table.catalog.current(),
-        full_files=new_files,
-        added_offsets_files=[offsets_rel],
-        # the full layout is fully delta-resolved (``existing`` read
-        # base ∪ deltas), so any MOR deltas left by a strategy switch
-        # are folded in here and must stop being referenced — else
-        # every future read re-resolves them and a stale conv-delete
-        # watermark could kill late rows it no longer should
-        clear_deltas=True,
-        summary_updates={
-            cfg.prop_epoch: int(epoch),
-            cfg.prop_max_lsn: int(batch_max_lsn),
-            "aqueduct.delta-epochs": 0,
-            **({"aqueduct.added-columns": ",".join(added_cols)} if added_cols else {}),
-            **(
-                {"aqueduct.widened-columns": ",".join(widened_cols)}
-                if widened_cols
-                else {}
-            ),
-            **(extra_summary or {}),
-        },
-        schema_fields=(
-            [f.jsonValue() for f in new_fields]
-            if (added_cols or widened_cols)
-            else None
-        ),
-        publish=publish,
-    )
-    offsets_row["added_columns"] = added_cols
-    offsets_row["widened_columns"] = list(widened_cols)
-    return offsets_row
-
-
-def _apply_staged(
-    table: ParquetTranscriptTable,
-    batch: DataFrame,
-    epoch: int,
-    cfg: EngineConfig,
-    new_fields,
-    payload_cols: list[str],
-    added_cols: list[str],
-    batch_max_hint: int | None = None,
-    widened_cols: list[str] | tuple = (),
-    extra_summary: dict | None = None,
-    publish: bool = True,
-) -> dict:
-    """Bucket-pruned MERGE via a staging buffer — reads and rewrites
-    only the buckets the batch touches; right for sparse batches.
-
-    ``batch_max_hint``: the SLICE's max lsn when the caller planned the
-    range (replay/demux) — the committed watermark must cover the whole
-    slice, not just the rows this table's route kept, or a resume
-    re-selects already-covered ranges forever (the mor/inline variants
-    honor the same hint)."""
-    spark = table.spark
-
-    # ---- single-pass resolution → staging buffer ---------------------
-    # The unified argmax (turn + conversation keys in one aggregation)
-    # is the ONLY scan of the incoming batch.  Its small result is
-    # staged to parquet (analog of the reference EVENTS_BUFFER table,
-    # PostgresqlStorageIntegrationSpec.groovy:76-86) so winners,
-    # watermarks, lineage and the MERGE all read the collapsed keys —
-    # never the raw 10^10-event log again.
-    staged_path = table.stage_path(f"epoch-{epoch}")
-    (
-        lww.unified_argmax(batch, payload_cols, cfg.salt_buckets)
-        .withColumn(BUCKET_COLUMN, bucket_expr(table.num_buckets))
-        .withColumn("_isturn", (F.col("_tkey") >= 0).cast("int"))
-        # one file per (bucket, isturn) at any parallelism: footer-stat
-        # reads stay O(num_buckets), independent of core count
-        .repartition(table.num_buckets, F.col(BUCKET_COLUMN))
-        .write.partitionBy(BUCKET_COLUMN, "_isturn")
-        .parquet(staged_path)
-    )
-    try:
-        # ---- lineage + watermark + max-lsn bookkeeping: ZERO jobs -----
-        # derived from the staged files' parquet footer statistics,
-        # driver-side (the Iceberg-manifest trick) — the only Spark jobs
-        # per epoch are the stage write and the MERGE write.
-        summary = table.stage_summary(staged_path)
-        affected = sorted(
-            b for b, s in summary.items() if s["turn_keys"] > 0 or s["has_conv_del"]
-        )
-        lineage = {
-            str(b): {
-                "min_lsn": int(s["min_lsn"]),
-                "max_lsn": int(s["max_lsn"]),
-                "keys": int(s["turn_keys"]),
-            }
-            for b, s in summary.items()
-            if s["turn_keys"] > 0
-        }
-        applied = sum(v["keys"] for v in lineage.values())
-        batch_max_lsn = max(
-            [int(s["any_max_lsn"]) for s in summary.values() if s["any_max_lsn"] is not None]
-            + [table.last_committed_lsn()]
-            + [int(batch_max_hint if batch_max_hint is not None else -1)]
-        )
-
-        if not affected:
-            offsets_row = {
-                "epoch": int(epoch),
-                "last_lsn": int(batch_max_lsn),
-                "applied": 0,
-                "skipped": 0,
-                "partition_lineage": _lineage_json("batch", {}),
-                "committed_at": _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None),
-                "state": PIPE_UP_TO_DATE,
-            }
-            if batch_max_hint is not None:
-                # replay-planned slice with no matching rows for this
-                # table (e.g. a routed demux): the watermark must still
-                # advance past the slice or every resume re-selects it —
-                # commit the bookkeeping only (mor does the same)
-                offsets_rel = table.write_offsets_row(
-                    offsets_row, label=f"epoch-{epoch}"
-                )
-                table.catalog.commit(
-                    table.catalog.current(),
-                    added_offsets_files=[offsets_rel],
-                    summary_updates={
-                        cfg.prop_epoch: int(epoch),
-                        cfg.prop_max_lsn: int(batch_max_lsn),
-                        **(extra_summary or {}),
-                    },
-                    publish=publish,
-                )
-            # streaming idle trigger (no hint): nothing to merge and no
-            # snapshot churn
-            offsets_row["added_columns"] = added_cols
-            return offsets_row
-
-        staged = spark.read.parquet(staged_path)
-        winners = lww.staged_winners(staged, payload_cols)
-        conv_del = lww.staged_conv_del(staged)
-
-        # ---- MERGE: read only affected buckets, rewrite only them ----
-        import pyspark.sql.types as T
-
-        existing = table.read_internal(
-            affected, schema=T.StructType(new_fields)
-        )
-        merged = merge_state(
-            existing.drop(BUCKET_COLUMN) if BUCKET_COLUMN in existing.columns else existing,
-            winners,
-            conv_del,
-            payload_cols,
-        ).withColumn(BUCKET_COLUMN, bucket_expr(table.num_buckets))
-
-        new_files = table.write_bucket_data(merged, label=f"epoch-{epoch}")
-        replaced = {str(b): new_files.get(str(b), []) for b in affected}
-
-        # ---- offsets row + atomic commit ------------------------------
-        offsets_row = {
-            "epoch": int(epoch),
-            "last_lsn": int(batch_max_lsn),
-            "applied": int(applied),
-            "skipped": 0,
-            "partition_lineage": _lineage_json("batch", lineage),
-            "committed_at": _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None),
-            "state": PIPE_UP_TO_DATE,
-        }
-        offsets_rel = table.write_offsets_row(offsets_row, label=f"epoch-{epoch}")
-        table.catalog.commit(
-            table.catalog.current(),
-            replaced_buckets=replaced,
-            # the rewritten buckets are fully delta-resolved (the read
-            # above resolved base ∪ deltas) — drop their stale deltas
-            # in the same commit (mor → staged strategy-switch hygiene)
-            clear_delta_buckets=[str(b) for b in affected],
-            added_offsets_files=[offsets_rel],
-            summary_updates={
-                cfg.prop_epoch: int(epoch),
-                cfg.prop_max_lsn: int(batch_max_lsn),
-                **(
-                    {"aqueduct.added-columns": ",".join(added_cols)}
-                    if added_cols
-                    else {}
-                ),
-                **(
-                    {"aqueduct.widened-columns": ",".join(widened_cols)}
-                    if widened_cols
-                    else {}
-                ),
-                **(extra_summary or {}),
-            },
-            schema_fields=(
-                [f.jsonValue() for f in new_fields]
-                if (added_cols or widened_cols)
-                else None
-            ),
-            publish=publish,
-        )
-        offsets_row["state"] = PIPE_UP_TO_DATE
-        offsets_row["added_columns"] = added_cols
-        offsets_row["widened_columns"] = list(widened_cols)
-        return offsets_row
-    finally:
-        table.drop_stage(staged_path)

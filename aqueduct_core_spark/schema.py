@@ -99,11 +99,11 @@ OFFSETS_SCHEMA = T.StructType(
         # replay (the batch is not scanned to count it — the condition
         # rides in ``state`` = SKIPPED_DUPLICATE_EPOCH)
         T.StructField("skipped", T.LongType(), nullable=False),
-        # JSON, uniform across merge strategies:
-        # {"scope": "batch"|"table",
+        # JSON: {"scope": "batch",
         #  "buckets": {bucket: {keys, min_lsn, max_lsn}}}
-        # "batch" = buckets the batch touched (mor/staged);
-        # "table" = the full rewritten layout (inline copy-on-write)
+        # — the buckets the batch touched.  Tables written by the
+        # retired copy-on-write apply also hold "table"-scope rows
+        # (the full rewritten layout).
         T.StructField("partition_lineage", T.StringType(), nullable=True),
         T.StructField("committed_at", T.TimestampType(), nullable=True),
         # UP_TO_DATE / OUT_OF_DATE / UNKNOWN

@@ -300,8 +300,9 @@ def epoch_lineage_audit(table_or_offsets) -> "DataFrame":
       ``min_lsn`` is at or below the PREVIOUS epoch's watermark: the
       epoch re-applied events an earlier epoch already owned
       (exactly-once double-apply evidence).  Table-scope lineage
-      (inline copy-on-write rewrites the full layout) legitimately
-      spans old lsns and is exempt from the two range rules.
+      (rows of the retired copy-on-write apply, which rewrote the full
+      layout) legitimately spans old lsns and is exempt from the two
+      range rules.
 
     Accepts a table (anything with ``read_offsets``) or an offsets
     DataFrame directly.  The offsets table is bounded — one row per

@@ -32,6 +32,18 @@ from aqueduct_core_spark.operators.merge import apply_batch
 from aqueduct_core_spark.schema import CHANGES_SCHEMA
 
 
+#: replay epochs in flight at once.  An epoch's delta WRITE reads
+#: nothing from the table — only its COMMIT must be ordered — so epoch
+#: N+1's plan/scan/aggregate/write runs while epoch N finishes, hiding
+#: the per-epoch serial driver work (Catalyst planning + job
+#: submission, ~0.3-0.7 s/epoch measured) and letting N+1's tasks fill
+#: N's straggler-tail cores (FIFO scheduling keeps N's tasks at
+#: priority).  Commits are awaited strictly in epoch order on the
+#: driver thread, so exactly-once bookkeeping and fold cadence are
+#: unchanged.
+PIPELINE_DEPTH = 2
+
+
 class IncompleteBootstrap(RuntimeError):
     """The table is mid-way through a chunked snapshot bootstrap
     (:func:`bootstrap_chunked`): its lsn watermark only covers the
@@ -109,44 +121,6 @@ def _lsn_file_index(changes: DataFrame) -> list[tuple[str, int, int, int | None,
         return None
 
 
-def _epoch_batch(
-    changes: DataFrame,
-    start_lsn: int,
-    end_lsn: int,
-    file_index: list[tuple[str, int, int, int | None, int | None]] | None,
-) -> DataFrame:
-    """Plan-stable epoch slice: ``lsn BETWEEN lo AND hi`` expressed as a
-    broadcast join against a 1-row bounds relation instead of literal
-    predicates.
-
-    Literal range filters generate new whole-stage-codegen source every
-    epoch (the literals are inlined as Java constants), so each epoch
-    paid a serial Janino recompile (~1-2 s, measured in BENCH.md's cost
-    anatomy) at every parallelism level — the residual that held the
-    N→4N scaling median below 0.8.  With the bounds riding in a
-    broadcast row, every epoch reuses one compiled plan.  The scan
-    pruning the literal pushdown used to give is restored driver-side:
-    when the log is a bare file scan, only files whose footer lsn range
-    intersects the epoch (``file_index``) are read — the file list is
-    not part of the generated code, so the codegen cache still hits.
-    """
-    spark = changes.sparkSession
-    src = changes
-    if file_index is not None:
-        paths = [f[0] for f in file_index
-                 if f[2] >= start_lsn and f[1] <= end_lsn]
-        if not paths:
-            return changes.where(F.lit(False))
-        src = spark.read.schema(changes.schema).parquet(*paths)
-    bounds = spark.createDataFrame([(int(start_lsn), int(end_lsn))],
-                                   "_lo bigint, _hi bigint")
-    return src.join(
-        F.broadcast(bounds),
-        (F.col("lsn") >= F.col("_lo")) & (F.col("lsn") <= F.col("_hi")),
-        "inner",
-    ).drop("_lo", "_hi")
-
-
 def replay(
     table: ParquetTranscriptTable,
     changes: DataFrame,
@@ -159,12 +133,13 @@ def replay(
 ) -> list[dict]:
     """Batch-mode ordered replay honoring row+byte trigger budgets.
 
-    Each micro-batch reads only its lsn slice of the log: file-level
-    pruning comes from the driver-side footer index, the residual range
-    predicate from a plan-stable broadcast-bounds join (see
-    :func:`_epoch_batch`).  ``start_lsn``/``end_lsn`` bound the replay
-    window (inclusive; pass the *bare* log plus these bounds rather than
-    a pre-filtered DataFrame so file pruning stays available).
+    Each micro-batch reads only its lsn slice of the log through a
+    literal ``lsn`` range predicate, which pushes into the parquet scan
+    (row-group skipping).  Trigger ranges are planned from the
+    driver-side footer index when the log is a bare scan.
+    ``start_lsn``/``end_lsn`` bound the replay window (inclusive; pass
+    the *bare* log plus these bounds rather than a pre-filtered
+    DataFrame so manifest planning stays available).
     ``lsn_bounds``: the pending log's (min, max) lsn when the caller
     already knows it (source snapshot metadata / resume watermark) —
     skips the planner's bounds job.  ``source_id``: multi-log mode —
@@ -179,22 +154,9 @@ def replay(
 
     # footer index over the caller's (unfiltered) scan, BEFORE the
     # window filters are applied — they would make the plan non-leaf.
-    # Built for EVERY replay over a bare scan: it powers zero-job
-    # manifest trigger planning and per-epoch file pruning regardless
-    # of the residual-predicate mode below.
+    # It powers zero-job manifest trigger planning; each epoch's scan
+    # is pruned by its literal lsn predicate (parquet pushdown).
     file_index = _lsn_file_index(changes)
-    # Residual epoch predicate: literal `lsn BETWEEN` by default — it
-    # pushes into the parquet scan (row-group skipping, whole-stage
-    # codegen) and the per-epoch Janino recompile it causes measures
-    # ~2 ms/unit; warm steady-state throughput of both modes is equal
-    # within noise (BENCH.md "Plan-stable epoch filters").  The
-    # broadcast-bounds join (`cfg.plan_stable_filters`) trades that
-    # pushdown for a codegen-cache-stable plan — plan-cache hygiene for
-    # drivers hosting thousands of epochs / many concurrent streams —
-    # and requires the file index (a non-leaf input would re-scan the
-    # whole source every epoch — measured 4× slower on the full apply
-    # path, which is why it auto-falls-back to literals there).
-    plan_stable = cfg.plan_stable_filters and file_index is not None
 
     pending = changes.where(F.col("lsn") >= start_lsn)
     if end_lsn is not None:
@@ -223,16 +185,6 @@ def replay(
             lsn_bounds=lsn_bounds,
         )
     def _batch_for(r):
-        if plan_stable:
-            # trigger ranges are planned from the windowed rows, so the
-            # [start, end] interval intersected with the window bounds
-            # selects exactly the planned rows even from the raw files
-            return _epoch_batch(
-                changes,
-                max(r.start_lsn, start_lsn),
-                r.end_lsn if end_lsn is None else min(r.end_lsn, end_lsn),
-                file_index,
-            )
         return pending.where(
             (F.col("lsn") >= r.start_lsn) & (F.col("lsn") <= r.end_lsn)
         )
@@ -244,22 +196,22 @@ def replay(
             return None
         return {f"aqueduct.max-lsn-src-{source_id}": int(r.end_lsn)}
 
-    depth = max(1, int(cfg.replay_pipeline_depth)) if cfg.merge_strategy == "mor" else 1
     metrics = []
-    if depth > 1 and len(ranges) > 1:
-        # Pipelined MOR replay: phase A (plan + scan + argmax + delta
-        # write — reads nothing from table state) runs up to `depth`
-        # epochs ahead on pool threads; phase B (footer bookkeeping +
-        # the atomic commit) stays on this thread, strictly in epoch
-        # order.  Hides per-epoch driver latency and lets the next
-        # epoch's tasks fill the current epoch's straggler tail (FIFO
-        # scheduling keeps the older job's tasks at priority).
+    if len(ranges) > 1:
+        # Pipelined replay: phase A (plan + scan + argmax + delta
+        # write — reads nothing from table state) runs up to
+        # PIPELINE_DEPTH epochs ahead on pool threads; phase B (footer
+        # bookkeeping + the atomic commit) stays on this thread,
+        # strictly in epoch order.  Hides per-epoch driver latency and
+        # lets the next epoch's tasks fill the current epoch's
+        # straggler tail (FIFO scheduling keeps the older job's tasks
+        # at priority).
         from collections import deque
         from concurrent.futures import ThreadPoolExecutor
 
         from aqueduct_core_spark.operators.merge import mor_prepare
 
-        pool = ThreadPoolExecutor(max_workers=depth)
+        pool = ThreadPoolExecutor(max_workers=PIPELINE_DEPTH)
         futs: deque = deque()
         try:
             def _commit_oldest():
@@ -277,7 +229,7 @@ def replay(
                 metrics.append(m)
 
             for r in ranges:
-                while len(futs) >= depth:
+                while len(futs) >= PIPELINE_DEPTH:
                     _commit_oldest()
                 batch = _batch_for(r)
                 futs.append(
@@ -297,8 +249,6 @@ def replay(
         t0 = _time.time()
         m = apply_batch(table, batch, epoch=epoch, cfg=cfg, batch_max_lsn=r.end_lsn,
                         extra_summary=_extra(r))
-        # per-epoch wall time: with plan-stable filters, steady-state
-        # epochs should be flat (no per-epoch codegen recompile)
         m["epoch_sec"] = round(_time.time() - t0, 3)
         metrics.append(m)
         epoch += 1

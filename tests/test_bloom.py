@@ -82,7 +82,7 @@ def parquet_files(root: str, sub: str) -> list[str]:
 
 
 def test_delta_and_base_files_carry_conv_bloom(spark, tmp_table_dir):
-    cfg = EngineConfig(num_buckets=2, merge_strategy="mor", mor_fold_every=0)
+    cfg = EngineConfig(num_buckets=2, mor_fold_every=0)
     table = ParquetTranscriptTable.create(spark, tmp_table_dir, num_buckets=2)
     assert table.bloom_columns == ("conv_id",)
 
@@ -130,7 +130,7 @@ def test_dictionary_encoded_small_table_skips_bloom(spark, tmp_table_dir):
     dictionary-encoded, and parquet-mr correctly writes NO bloom filter
     (the dictionary is already an exact membership test) — i.e. small
     tables pay zero bytes for the feature."""
-    cfg = EngineConfig(num_buckets=2, merge_strategy="mor", mor_fold_every=0)
+    cfg = EngineConfig(num_buckets=2, mor_fold_every=0)
     table = ParquetTranscriptTable.create(spark, tmp_table_dir, num_buckets=2)
     # 40 conversations × 50 turns: heavy value reuse keeps the conv
     # chunk dictionary-encoded, so no bloom bytes are written

@@ -229,14 +229,13 @@ def test_demux_resume_survives_trigger_renumbering(spark, log, tmp_path):
     assert a.last_committed_lsn() == b.last_committed_lsn()
 
 
-def test_demux_staged_strategy_resume_noops(spark, log, tmp_path):
-    """Watermark coverage under merge_strategy='staged': the committed
-    lsn stamp must cover the whole SLICE (not just the rows a route
-    kept), so a rerun of a caught-up demux plans zero applies and
-    commits nothing — including for a route that matches nothing."""
+def test_demux_unmatched_route_resume_noops(spark, log, tmp_path):
+    """Watermark coverage: the committed lsn stamp must cover the whole
+    SLICE (not just the rows a route kept), so a rerun of a caught-up
+    demux plans zero applies and commits nothing — including for a
+    route that matches nothing, whose watermark must still advance."""
     cfg = EngineConfig(
         num_buckets=4, max_events_per_trigger=1500, mor_fold_every=10**9,
-        merge_strategy="staged",
     )
     tables = {
         "even": ParquetTranscriptTable.create(

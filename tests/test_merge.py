@@ -46,7 +46,7 @@ def changes_pdf():
 
 
 def test_single_batch_replay(spark, tmp_table_dir, changes_pdf):
-    cfg = EngineConfig(num_buckets=8, salt_buckets=4)
+    cfg = EngineConfig(num_buckets=8)
     table = ParquetTranscriptTable.create(spark, tmp_table_dir, num_buckets=8)
     m = apply_batch(table, to_spark(spark, changes_pdf), epoch=0, cfg=cfg)
     assert m["state"] == "UP_TO_DATE"
@@ -55,7 +55,7 @@ def test_single_batch_replay(spark, tmp_table_dir, changes_pdf):
 
 
 def test_multi_batch_replay_matches_oracle(spark, tmp_table_dir, changes_pdf):
-    cfg = EngineConfig(num_buckets=8, salt_buckets=4)
+    cfg = EngineConfig(num_buckets=8)
     table = ParquetTranscriptTable.create(spark, tmp_table_dir, num_buckets=8)
     # cut at arbitrary row positions so conversations straddle batches
     n = len(changes_pdf)
@@ -70,7 +70,7 @@ def test_multi_batch_replay_matches_oracle(spark, tmp_table_dir, changes_pdf):
 
 
 def test_duplicate_epoch_is_idempotent(spark, tmp_table_dir, changes_pdf):
-    cfg = EngineConfig(num_buckets=8, salt_buckets=0)
+    cfg = EngineConfig(num_buckets=8)
     table = ParquetTranscriptTable.create(spark, tmp_table_dir, num_buckets=8)
     n = len(changes_pdf)
     first, second = changes_pdf.iloc[: n // 2], changes_pdf.iloc[n // 2 :]
@@ -85,13 +85,17 @@ def test_duplicate_epoch_is_idempotent(spark, tmp_table_dir, changes_pdf):
 
 
 def test_merge_prunes_buckets(spark, tmp_table_dir, changes_pdf):
-    """Staged strategy: a batch touching one conversation must not
-    rewrite unrelated buckets (inline trades pruning for one-job
-    epochs and rewrites the full layout)."""
-    cfg = EngineConfig(num_buckets=8, merge_strategy="staged")
+    """A batch touching one conversation appends deltas to exactly that
+    conversation's bucket and leaves every base file list unchanged."""
+    from aqueduct_core_spark.catalog.table import bucket_of
+    from aqueduct_core_spark.operators.compact import fold_deltas
+
+    cfg = EngineConfig(num_buckets=8, mor_fold_every=0)
     table = ParquetTranscriptTable.create(spark, tmp_table_dir, num_buckets=8)
     apply_batch(table, to_spark(spark, changes_pdf), epoch=0, cfg=cfg)
+    assert fold_deltas(table)["folded"]
     snap0 = table.catalog.current()
+    assert not any(snap0["delta_files"].values())
 
     one_conv = changes_pdf[changes_pdf["conv_id"] == "conv-00000003"].copy()
     one_conv["lsn"] = one_conv["lsn"] + 10_000_000
@@ -100,8 +104,9 @@ def test_merge_prunes_buckets(spark, tmp_table_dir, changes_pdf):
     apply_batch(table, to_spark(spark, one_conv), epoch=1, cfg=cfg)
     snap1 = table.catalog.current()
 
-    changed = [b for b in snap0["files"] if snap0["files"][b] != snap1["files"].get(b)]
-    assert len(changed) == 1  # exactly the conversation's bucket
+    assert snap1["files"] == snap0["files"]  # no base file rewritten
+    touched = [b for b, fl in snap1["delta_files"].items() if fl]
+    assert touched == [str(bucket_of("conv-00000003", 8))]
 
 
 def test_window_vs_agg_lww_parity(spark, changes_pdf):
@@ -116,32 +121,37 @@ def test_window_vs_agg_lww_parity(spark, changes_pdf):
     assert a.join(b, (a.conv_id == b.conv_id) & (a.turn_idx == b.turn_idx) & (a[LSN_COLUMN] == b.lsn)).count() == a.count()
 
 
-def test_inline_vs_staged_equivalence(spark, tmp_path, changes_pdf):
-    """Both merge strategies must converge to the identical final state
-    (inline = one-job full-layout commit; staged = bucket-pruned)."""
-    states = {}
-    for strategy in ("mor", "inline", "staged"):
-        cfg = EngineConfig(num_buckets=8, merge_strategy=strategy)
-        table = ParquetTranscriptTable.create(
-            spark, str(tmp_path / strategy), num_buckets=8
-        )
-        df = to_spark(spark, changes_pdf)
-        n = len(changes_pdf)
-        cut = int(changes_pdf["lsn"].iloc[n // 2])
-        from pyspark.sql import functions as F
+def test_mor_live_and_folded_deltas_match_oracle(spark, tmp_path, changes_pdf):
+    """Two epochs converge to the oracle whether the first epoch's
+    deltas are still live when the second lands or were folded into the
+    base in between — reads resolve base ∪ deltas with the same LWW
+    rules a fold applies."""
+    from pyspark.sql import functions as F
 
+    from aqueduct_core_spark.operators.compact import fold_deltas
+
+    df = to_spark(spark, changes_pdf)
+    cut = int(changes_pdf["lsn"].iloc[len(changes_pdf) // 2])
+    expected = expected_state_pdf(changes_pdf)
+    cfg = EngineConfig(num_buckets=8, mor_fold_every=0)
+    for fold_between in (False, True):
+        table = ParquetTranscriptTable.create(
+            spark, str(tmp_path / f"fold-{fold_between}"), num_buckets=8
+        )
         apply_batch(table, df.where(F.col("lsn") <= cut), epoch=0, cfg=cfg)
+        if fold_between:
+            assert fold_deltas(table)["folded"]
         apply_batch(table, df.where(F.col("lsn") > cut), epoch=1, cfg=cfg)
-        states[strategy] = final_state_pdf(table)
-    assert_state_equal(states["inline"], states["staged"])
-    assert_state_equal(states["inline"], states["mor"])
-    assert_state_equal(states["inline"], expected_state_pdf(changes_pdf))
+        assert any(table.catalog.current()["delta_files"].values())
+        assert_state_equal(final_state_pdf(table), expected)
+        assert fold_deltas(table)["folded"]  # and once everything is folded
+        assert_state_equal(final_state_pdf(table), expected)
 
 
 def test_mor_fold(spark, tmp_table_dir, changes_pdf):
     """MOR deltas fold into the base after mor_fold_every epochs; the
     resolved state is identical before and after the fold."""
-    cfg = EngineConfig(num_buckets=8, merge_strategy="mor", mor_fold_every=2)
+    cfg = EngineConfig(num_buckets=8, mor_fold_every=2)
     table = ParquetTranscriptTable.create(spark, tmp_table_dir, num_buckets=8)
     df = to_spark(spark, changes_pdf)
     cut = int(changes_pdf["lsn"].iloc[len(changes_pdf) // 2])

@@ -281,6 +281,24 @@ def test_resize_images_kernel_real_png_and_honest_nulls(spark):
     assert bad["pixels"] is None and bad["width"] is None
 
 
+def test_resize_images_zero_width_or_height_png_is_null_row(spark):
+    """A PNG whose IHDR declares zero width or zero height decodes to
+    an empty pixel array; the kernel must emit the NULL row (no pixel
+    to sample), never raise."""
+    from aqueduct_core_spark.functions.multimodal import MEDIA_SCHEMA, resize_images
+
+    rows = [
+        (1, "image", bytearray(_png_from_raw(0, 3, b"\x00" * 3)), None),
+        (2, "image", bytearray(_png_from_raw(3, 0, b"")), None),
+        (3, "image", bytearray(make_png(2, 2, (1, 2, 3))), None),
+    ]
+    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
+    out = {r["media_id"]: r for r in resize_images(media, 4, 2).collect()}
+    for mid in (1, 2):
+        assert out[mid]["pixels"] is None and out[mid]["width"] is None, mid
+    assert out[3]["pixels"] is not None and out[3]["width"] == 2
+
+
 def test_resample_audio_kernel_square_wave_and_nulls(spark):
     import numpy as np
 
@@ -313,3 +331,22 @@ def test_resample_audio_kernel_square_wave_and_nulls(spark):
     # alternation every half_period/2 = 2 output samples
     assert (pcm[:4] == np.array([pcm[0], pcm[0], -pcm[0], -pcm[0]])).all()
     assert out[2]["pcm"] is None and out[2]["sample_rate"] is None
+
+
+def test_resample_audio_zero_sample_wav_is_null_row(spark):
+    """A well-formed WAV carrying zero samples must become a NULL row
+    (nothing to resample), never an exception."""
+    from aqueduct_core_spark.functions.multimodal import MEDIA_SCHEMA, resample_audio
+
+    rows = [
+        (1, "audio", bytearray(make_wav(8000, 0, amplitude=16384, half_period=4)), None),
+        (2, "audio", bytearray(make_wav(8000, 8, amplitude=16384, half_period=4)), None),
+    ]
+    out = {
+        r["media_id"]: r
+        for r in resample_audio(
+            spark.createDataFrame(rows, MEDIA_SCHEMA), out_rate=4000
+        ).collect()
+    }
+    assert out[1]["pcm"] is None and out[1]["sample_rate"] is None
+    assert out[2]["out_n"] == 4 and out[2]["pcm"] is not None

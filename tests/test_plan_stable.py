@@ -1,9 +1,6 @@
-"""Plan-stable replay epoch filters (scaling-median fix).
-
-Each replay epoch's lsn-range slice must NOT embed per-epoch literals
-in whole-stage-codegen source (the serial Janino recompile measured in
-BENCH.md); it rides in a broadcast 1-row bounds relation instead, with
-file-level scan pruning restored via a driver-side footer index.
+"""Replay epoch planning: the driver-side footer index over a bare log
+scan, zero-job manifest trigger planning, replay windows, and
+literal ``lsn``-range epoch slices (which push into the parquet scan).
 """
 
 import pytest
@@ -13,11 +10,7 @@ from aqueduct_core_spark.catalog.table import ParquetTranscriptTable
 from aqueduct_core_spark.config import EngineConfig
 from aqueduct_core_spark.generator import generate_changes_pdf, expected_state_pdf
 from aqueduct_core_spark.schema import CHANGES_SCHEMA
-from aqueduct_core_spark.streaming.pipeline import (
-    _epoch_batch,
-    _lsn_file_index,
-    replay,
-)
+from aqueduct_core_spark.streaming.pipeline import _lsn_file_index, replay
 
 
 @pytest.fixture(scope="module")
@@ -26,20 +19,6 @@ def log_dir(spark, tmp_path_factory):
     pdf = generate_changes_pdf(n_convs=120, seed=7)
     spark.createDataFrame(pdf, schema=CHANGES_SCHEMA).repartition(6).write.parquet(d)
     return d
-
-
-def test_epoch_batch_matches_literal_filter(spark, log_dir):
-    log = spark.read.schema(CHANGES_SCHEMA).parquet(log_dir)
-    b = log.agg(F.min("lsn").alias("lo"), F.max("lsn").alias("hi")).collect()[0]
-    lo, hi = int(b["lo"]), int(b["hi"])
-    mid1, mid2 = lo + (hi - lo) // 3, lo + 2 * (hi - lo) // 3
-    idx = _lsn_file_index(log)
-    assert idx is not None and len(idx) > 0
-    for s, e in [(lo, mid1), (mid1 + 1, mid2), (mid2 + 1, hi), (hi + 10, hi + 20)]:
-        expect = log.where((F.col("lsn") >= s) & (F.col("lsn") <= e)).count()
-        got = _epoch_batch(log, s, e, idx).count()
-        got_noidx = _epoch_batch(log, s, e, None).count()
-        assert got == expect == got_noidx
 
 
 def test_file_index_refuses_non_leaf_plans(spark, log_dir):
@@ -52,56 +31,15 @@ def test_file_index_refuses_non_leaf_plans(spark, log_dir):
     assert _lsn_file_index(local) is None  # no input files
 
 
-def test_file_index_prunes_scan(spark, log_dir):
-    """An epoch touching one file's lsn range must read only the
-    intersecting files (the pushdown-pruning replacement)."""
-    log = spark.read.schema(CHANGES_SCHEMA).parquet(log_dir)
-    idx = _lsn_file_index(log)
-    path0, lo0, hi0 = sorted(idx, key=lambda t: t[1])[0][:3]
-    batch = _epoch_batch(log, lo0, hi0, idx)
-    touched = {f.replace("file:", "") for f in batch.inputFiles()}
-    assert path0 in touched
-    # only files overlapping [lo0, hi0] may be read
-    for p, flo, fhi, _rows, _bytes in idx:
-        if fhi < lo0 or flo > hi0:
-            assert p not in touched
-
-
-def test_epoch_plans_are_literal_free(spark, log_dir):
-    """Two epochs with different ranges must produce identical codegen:
-    no range literal may appear in the executed plan."""
-    log = spark.read.schema(CHANGES_SCHEMA).parquet(log_dir)
-    idx = _lsn_file_index(log)
-    lo = min(t[1] for t in idx)
-    hi = max(t[2] for t in idx)
-    s1, e1 = lo + 1000, lo + 999_999
-    s2, e2 = hi - 999_999, hi - 1000
-    p1 = _epoch_batch(log, s1, e1, idx)._jdf.queryExecution().executedPlan().toString()
-    p2 = _epoch_batch(log, s2, e2, idx)._jdf.queryExecution().executedPlan().toString()
-    for plan, bounds in ((p1, (s1, e1)), (p2, (s2, e2))):
-        for v in bounds:
-            assert str(v) not in plan, f"literal {v} leaked into the epoch plan"
-
-
 def test_replay_state_identical_both_modes(spark, log_dir, tmp_path):
-    """End-to-end: plan-stable replay and literal-filter replay produce
-    the same final table state as the pandas oracle."""
+    """End-to-end: a pipelined multi-epoch replay and a replay applied
+    one epoch per call (the sequential apply path, as a tailing replica
+    runs it) produce the same final table state as the pandas oracle."""
     log = spark.read.schema(CHANGES_SCHEMA).parquet(log_dir)
     pdf = log.toPandas()
     expected = expected_state_pdf(pdf)
 
-    for stable in (True, False):
-        cfg = EngineConfig(
-            num_buckets=4,
-            max_events_per_trigger=600,
-            max_bytes_per_trigger=1 << 30,
-            plan_stable_filters=stable,
-        )
-        t = ParquetTranscriptTable.create(
-            spark, str(tmp_path / f"t-{stable}"), num_buckets=4
-        )
-        metrics = replay(t, log, cfg, start_epoch=0, start_lsn=0)
-        assert len(metrics) > 3  # genuinely multi-epoch
+    def check(t):
         got = (
             t.read_internal()
             .orderBy("conv_id", "turn_idx")
@@ -111,6 +49,24 @@ def test_replay_state_identical_both_modes(spark, log_dir, tmp_path):
         assert len(got) == len(expected)
         assert (got["text"].fillna("") == expected["text"].fillna("")).all()
         assert (got["_lsn"] == expected["_lsn"]).all()
+
+    cfg = EngineConfig(
+        num_buckets=4, max_events_per_trigger=600, max_bytes_per_trigger=1 << 30
+    )
+    t = ParquetTranscriptTable.create(spark, str(tmp_path / "pipelined"), num_buckets=4)
+    metrics = replay(t, log, cfg, start_epoch=0, start_lsn=0)
+    assert len(metrics) > 3  # genuinely multi-epoch
+    assert all(m.get("pipelined") for m in metrics)
+    check(t)
+
+    one = EngineConfig(
+        num_buckets=4, max_events_per_trigger=1 << 40, max_bytes_per_trigger=1 << 40
+    )
+    t = ParquetTranscriptTable.create(spark, str(tmp_path / "per-call"), num_buckets=4)
+    for m in metrics:
+        (got,) = replay(t, log, one, end_lsn=m["last_lsn"])
+        assert not got.get("pipelined") and got["last_lsn"] == m["last_lsn"]
+    check(t)
 
 
 def test_plan_triggers_from_files_unit():

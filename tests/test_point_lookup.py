@@ -263,6 +263,49 @@ def test_point_reads_pin_one_manifest_across_rebucket(spark, tmp_path, monkeypat
         assert table.num_buckets == to  # the rebucket did commit
 
 
+def test_epoch_commit_refuses_deltas_hashed_before_rebucket(spark, tmp_path):
+    """An epoch prepared (deltas hashed and written) under one bucket
+    count must not commit after a rebucket changed the count: the
+    commit raises ``CommitConflict`` and leaves the rebucketed state
+    untouched, and a resumed replay converges to the oracle with every
+    key readable through the direct point read.  Attaching the old
+    count's delta files to the new layout would put rows in buckets a
+    point read never opens."""
+    from aqueduct_core_spark.catalog.snapshot import CommitConflict
+    from aqueduct_core_spark.generator import expected_state_pdf
+    from aqueduct_core_spark.operators.compact import rebucket
+    from aqueduct_core_spark.operators.merge import apply_batch, mor_prepare
+    from aqueduct_core_spark.verify import state_digest
+
+    log = generate_changes(spark, n_convs=60, seed=23).cache()
+    lsns = sorted(r["lsn"] for r in log.select("lsn").collect())
+    half = lsns[len(lsns) // 2]
+    cfg = EngineConfig(num_buckets=4, mor_fold_every=0)
+    table = ParquetTranscriptTable.create(spark, str(tmp_path / "t"), num_buckets=4)
+    replay(table, log, cfg, end_lsn=half)
+    epoch = table.last_committed_epoch() + 1
+
+    prep = mor_prepare(table, log.where(F.col("lsn") > half), epoch, cfg)
+    rebucket(table, 8)
+    after_rebucket = state_digest(table.read_internal())
+    with pytest.raises(CommitConflict):
+        apply_batch(
+            table, None, epoch=epoch, cfg=cfg,
+            batch_max_lsn=lsns[-1], prewritten=prep,
+        )
+    assert table.num_buckets == 8 and table.last_committed_lsn() == half
+    assert state_digest(table.read_internal()) == after_rebucket
+
+    replay(table, log, cfg)  # resumes after the refused epoch
+    expected = expected_state_pdf(log.toPandas())
+    got = table.read_internal().orderBy("conv_id", "turn_idx").toPandas()
+    assert len(got) == len(expected)
+    assert (got["_lsn"].to_numpy() == expected["_lsn"].to_numpy()).all()
+    full = table.read().toPandas()
+    for cid, rows in full.groupby("conv_id"):
+        assert _normalize(table.read_conversation_direct(cid)) == _normalize(rows), cid
+
+
 def test_point_reads_fail_loud_on_missing_live_file(spark, tmp_path):
     """A file the pinned manifest references but that cannot be read
     is an error for both point reads — never rows silently missing from

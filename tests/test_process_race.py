@@ -141,45 +141,6 @@ def test_commit_race_cross_process(tmp_path):
         assert cat.load(v)["parent_id"] == v - 1
 
 
-def test_orphan_cleanup_protects_inflight_epoch_stage(spark, tmp_path):
-    """Item: enforce the orphan-cleanup contract structurally — a stage
-    belonging to an epoch NEWER than the last committed one survives
-    cleanup even with older_than_s=0 (age alone cannot prove a live
-    epoch's stage dead)."""
-    from aqueduct_core_spark.catalog.table import ParquetTranscriptTable
-    from aqueduct_core_spark.config import EngineConfig
-    from aqueduct_core_spark.generator import generate_changes_pdf
-    from aqueduct_core_spark.operators.compact import remove_orphan_files
-    from aqueduct_core_spark.operators.merge import apply_batch
-    from aqueduct_core_spark.schema import CHANGES_SCHEMA
-
-    pdf = generate_changes_pdf(n_convs=20, seed=5)
-    changes = spark.createDataFrame(pdf, schema=CHANGES_SCHEMA)
-    t = ParquetTranscriptTable.create(spark, str(tmp_path / "t"), num_buckets=4)
-    cfg = EngineConfig(num_buckets=4, merge_strategy="staged")
-    apply_batch(t, changes, epoch=0, cfg=cfg)  # last committed epoch = 0
-
-    # simulate an IN-FLIGHT epoch 1: its stage exists, commit not landed
-    live = t.stage_path("epoch-1")
-    os.makedirs(live)
-    with open(os.path.join(live, "part-0.parquet"), "wb") as f:
-        f.write(b"x")
-    # and a DEAD stage from the already-committed epoch 0 (crash debris)
-    dead = t.stage_path("epoch-0")
-    os.makedirs(dead)
-    with open(os.path.join(dead, "leftover.parquet"), "wb") as f:
-        f.write(b"x")
-    old = time.time() - 10
-    for p in (dead, os.path.join(dead, "leftover.parquet"),
-              live, os.path.join(live, "part-0.parquet")):
-        os.utime(p, (old, old))
-
-    removed = remove_orphan_files(t, older_than_s=0)
-    assert os.path.exists(live), "in-flight epoch stage must survive"
-    assert not os.path.exists(dead), "committed epoch's stage debris must go"
-    assert removed >= 1
-
-
 def test_orphan_cleanup_tolerates_racing_deleter(spark, tmp_path, monkeypatch):
     """A concurrent fold/cleanup deleting files mid-walk must not abort
     the pass (ADVICE: unhandled FileNotFoundError)."""

@@ -5,10 +5,10 @@ in order (``pipe-api/.../Writer.java:5-11`` — "Any missing offset
 should never arrive later"); duplication and re-delivery are the
 failure modes the engine must absorb (T4/T5).  So the property is:
 
-  for ANY in-order segmentation of the log, ANY merge strategy chosen
-  per epoch (mor / staged / inline — including mid-stream switches),
-  and ANY duplicate re-delivery of an already-applied prefix, the
-  final transcripts state equals the straight-line pandas oracle.
+  for ANY in-order segmentation of the log, ANY fold schedule (base
+  rewrites interleaved with live deltas), and ANY duplicate
+  re-delivery of an already-applied prefix, the final transcripts
+  state equals the straight-line pandas oracle.
 """
 
 from __future__ import annotations
@@ -26,8 +26,6 @@ from tests.test_merge import assert_state_equal, final_state_pdf, to_spark
 
 _PDF = generate_changes_pdf(40, seed=42)
 _EXPECTED = expected_state_pdf(_PDF)
-
-STRATEGIES = ["mor", "staged", "inline"]
 
 
 @settings(
@@ -77,12 +75,18 @@ def test_compaction_threshold_preserves_state(spark, frac, purge):
 )
 @given(
     cuts=st.lists(st.floats(0.05, 0.95), min_size=0, max_size=3, unique=True),
-    strat_seed=st.integers(0, 2**16),
+    fold_after=st.lists(st.booleans(), min_size=5, max_size=5),
     redeliver=st.booleans(),
 )
 def test_any_segmentation_any_strategy_converges(
-    spark, tmp_path_factory, cuts, strat_seed, redeliver
+    spark, tmp_path_factory, cuts, fold_after, redeliver
 ):
+    """Hypothesis picks the segmentation and after which epochs the
+    deltas fold into the base (``fold_after[i]``), so later epochs land
+    on a freshly rewritten base, on live deltas, or on both."""
+    from aqueduct_core_spark.operators.compact import fold_deltas
+
+    cfg = EngineConfig(num_buckets=4, mor_fold_every=0)
     lsns = sorted(_PDF["lsn"])
     cut_lsns = sorted({lsns[int(f * (len(lsns) - 1))] for f in cuts})
     bounds = [None, *cut_lsns, None]
@@ -100,9 +104,9 @@ def test_any_segmentation_any_strategy_converges(
             seg = seg[seg.lsn <= hi]
         if seg.empty:
             continue
-        strategy = STRATEGIES[(strat_seed + i) % len(STRATEGIES)]
-        cfg = EngineConfig(num_buckets=4, merge_strategy=strategy, mor_fold_every=0)
         apply_batch(table, to_spark(spark, seg), epoch=epoch, cfg=cfg)
+        if fold_after[epoch]:
+            fold_deltas(table)
         epoch += 1
 
     if redeliver:
@@ -110,11 +114,6 @@ def test_any_segmentation_any_strategy_converges(
         # epoch: LWW keeps the newer table rows → digest unchanged
         d0 = state_digest(table.read_internal())
         prefix = _PDF[_PDF.lsn <= lsns[len(lsns) // 2]]
-        cfg = EngineConfig(
-            num_buckets=4,
-            merge_strategy=STRATEGIES[strat_seed % len(STRATEGIES)],
-            mor_fold_every=0,
-        )
         apply_batch(table, to_spark(spark, prefix), epoch=epoch, cfg=cfg)
         assert state_digest(table.read_internal()) == d0
 

@@ -78,7 +78,7 @@ def test_plan_triggers_empty_log(spark):
 
 def test_fold_is_incremental(spark, tmp_path):
     pdf = generate_changes_pdf(30, seed=42)
-    cfg = EngineConfig(num_buckets=8, merge_strategy="mor", mor_fold_every=0)
+    cfg = EngineConfig(num_buckets=8, mor_fold_every=0)
     table = ParquetTranscriptTable.create(spark, str(tmp_path / "t"), num_buckets=8)
 
     apply_batch(table, to_spark(spark, pdf), epoch=0, cfg=cfg)
@@ -203,7 +203,7 @@ def test_stream_records_metrics(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# strategy-switch hygiene + lineage shape
+# idle triggers, duplicate epochs, lineage shape
 # ---------------------------------------------------------------------------
 
 def _lineage(row):
@@ -214,53 +214,11 @@ def _lineage(row):
     return out
 
 
-def test_inline_after_mor_clears_deltas(spark, tmp_path):
-    pdf = generate_changes_pdf(12, seed=42)
-    table = ParquetTranscriptTable.create(spark, str(tmp_path / "t"), num_buckets=4)
-    half = int(pdf["lsn"].quantile(0.5))
-
-    mor_cfg = EngineConfig(num_buckets=4, merge_strategy="mor", mor_fold_every=0)
-    r0 = apply_batch(
-        table, to_spark(spark, pdf[pdf.lsn <= half]), epoch=0, cfg=mor_cfg
-    )
-    assert _lineage(r0)["scope"] == "batch"
-    assert any(table.catalog.current()["delta_files"].values())
-
-    inline_cfg = EngineConfig(num_buckets=4, merge_strategy="inline")
-    r1 = apply_batch(
-        table, to_spark(spark, pdf[pdf.lsn > half]), epoch=1, cfg=inline_cfg
-    )
-    assert _lineage(r1)["scope"] == "table"
-    snap = table.catalog.current()
-    assert not any(snap["delta_files"].values()), "stale deltas survived inline"
-    assert int(snap["summary"]["aqueduct.delta-epochs"]) == 0
-    assert_state_equal(final_state_pdf(table), expected_state_pdf(pdf))
-
-
-def test_staged_after_mor_clears_affected_deltas(spark, tmp_path):
-    pdf = generate_changes_pdf(12, seed=42)
-    table = ParquetTranscriptTable.create(spark, str(tmp_path / "t"), num_buckets=4)
-    half = int(pdf["lsn"].quantile(0.5))
-    mor_cfg = EngineConfig(num_buckets=4, merge_strategy="mor", mor_fold_every=0)
-    apply_batch(table, to_spark(spark, pdf[pdf.lsn <= half]), epoch=0, cfg=mor_cfg)
-
-    staged_cfg = EngineConfig(num_buckets=4, merge_strategy="staged")
-    r1 = apply_batch(
-        table, to_spark(spark, pdf[pdf.lsn > half]), epoch=1, cfg=staged_cfg
-    )
-    lin = _lineage(r1)
-    assert lin["scope"] == "batch"
-    snap = table.catalog.current()
-    for b in lin["buckets"]:
-        assert not snap["delta_files"].get(b), f"bucket {b} kept stale deltas"
-    assert_state_equal(final_state_pdf(table), expected_state_pdf(pdf))
-
-
 def test_mor_empty_batch_no_commit(spark, tmp_path):
     from aqueduct_core_spark.schema import CHANGES_SCHEMA
 
     table = ParquetTranscriptTable.create(spark, str(tmp_path / "t"), num_buckets=4)
-    cfg = EngineConfig(num_buckets=4, merge_strategy="mor", mor_fold_every=2)
+    cfg = EngineConfig(num_buckets=4, mor_fold_every=2)
     before = table.catalog.current()["snapshot_id"]
     empty = spark.createDataFrame([], CHANGES_SCHEMA)
     row = apply_batch(table, empty, epoch=0, cfg=cfg)
@@ -274,7 +232,10 @@ def test_skipped_duplicate_epoch_is_honest(spark, tmp_path):
     pdf = generate_changes_pdf(6, seed=42)
     table = ParquetTranscriptTable.create(spark, str(tmp_path / "t"), num_buckets=4)
     cfg = EngineConfig(num_buckets=4)
-    apply_batch(table, to_spark(spark, pdf), epoch=0, cfg=cfg)
+    first = apply_batch(table, to_spark(spark, pdf), epoch=0, cfg=cfg)
+    lin = _lineage(first)
+    assert lin["scope"] == "batch" and lin["buckets"]
+    assert sum(b["keys"] for b in lin["buckets"].values()) == first["applied"]
     row = apply_batch(table, to_spark(spark, pdf), epoch=0, cfg=cfg)
     assert row["state"] == "SKIPPED_DUPLICATE_EPOCH"
     assert row["applied"] == 0 and row["skipped"] == 0  # no magic sentinel
@@ -297,14 +258,14 @@ def test_crash_orphans_invisible_and_removable(spark, tmp_path):
 
     pdf = generate_changes_pdf(15, seed=42)
     table = ParquetTranscriptTable.create(spark, str(tmp_path / "t"), num_buckets=4)
-    cfg = EngineConfig(num_buckets=4, merge_strategy="mor", mor_fold_every=0)
+    cfg = EngineConfig(num_buckets=4, mor_fold_every=0)
     half = int(pdf["lsn"].quantile(0.5))
     apply_batch(table, to_spark(spark, pdf[pdf.lsn <= half]), epoch=0, cfg=cfg)
 
     # simulate the crash: write epoch-1 delta files, never commit
     batch = to_spark(spark, pdf[pdf.lsn > half])
     staged = (
-        lww.unified_argmax(batch, ["role", "text", "tool", "ts"], 0)
+        lww.unified_argmax(batch, ["role", "text", "tool", "ts"])
         .withColumn(BUCKET_COLUMN, bucket_expr(4))
         .withColumn("_isturn", (F.col("_tkey") >= 0).cast("int"))
     )

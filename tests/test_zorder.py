@@ -81,7 +81,7 @@ def state_pdf(table):
 
 
 def test_zorder_prunes_time_slices_and_preserves_state(spark, tmp_table_dir):
-    cfg = EngineConfig(num_buckets=2, merge_strategy="mor", mor_fold_every=0)
+    cfg = EngineConfig(num_buckets=2, mor_fold_every=0)
     table = ParquetTranscriptTable.create(spark, tmp_table_dir, num_buckets=2)
     apply_batch(table, synth_changes(spark), epoch=0, cfg=cfg)
 
