@@ -49,8 +49,6 @@ emb_ivfpq_topk              COMPOSED IVF-PQ: forest pruning → ADC cut
 emb_knn_join                broadcast k-NN join (probe set × base)
 doc_minhash_pairs           MinHash+LSH near-dup pairs (md5 hash variant)
 doc_simhash_candidates      SimHash banded candidates (md5 hash variant)
-emb_lsh_topk                hyperplane-LSH approximate top-k (inlined
-                            hyperplane literals in the oracle)
 media_features              multimodal mapInPandas plumbing (scalar view)
 cdc_routing_groups          F3 full cluster+location-group routing (J5 dim)
 cdc_cluster_lookup          J4 cluster uuid→id broadcast lookup
@@ -80,7 +78,6 @@ cdc_normalize_payload       Arrow-vectorized payload normalization (NFC
                             Unicode/RE2 stack
 emb_decontaminate           embedding-similarity test-set decontamination
                             (broadcast benchmark, per-vector attribution)
-emb_lsh_indexed             precomputed-bucket LSH index scan path
 emb_sketch_topk             Hamming-sketch scan + exact rerank (the
                             recall-engineered ANN path)
 media_real_decode           REAL WAV (RIFF/PCM) + PNG (inflate/unfilter)
@@ -177,10 +174,6 @@ doc_dup_clusters            connected-components duplicate clustering
                             (recursive-CTE oracle)
 doc_dedup_keep_best         quality-aware cluster resolution: keep the
                             highest-quality member, smallest-id ties
-emb_ivf_topk                IVF ANN: coarse-quantizer cells, cell-pruned
-                            probe, exact rerank
-emb_ivf_trained             IVF over a TRAINED spherical-k-means codebook
-                            (Lloyd step replayed bit-identically in SQL)
 emb_ivf_forest              trained IVF FOREST (18 tables × 128 cells,
                             global top-36 best-bin-first probe): the
                             structurally-pruned ANN path at mean recall
@@ -1480,32 +1473,12 @@ def _q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from aqueduct_core_spark.functions.similarity import lsh_topk
-
-    return lsh_topk(_embs(spark, sf_dir), _query_vec(spark, sf_dir), k=20)
-
-
-def _q_lsh_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The precomputed-bucket-index variant of emb_lsh_topk — same
-    candidates and scores (same oracle), but the scan path a clustered
-    100 TB index would use."""
-    from aqueduct_core_spark.functions.dedup import spread_small_input
-    from aqueduct_core_spark.functions.similarity import lsh_index, lsh_topk_indexed
-
-    qv = _query_vec(spark, sf_dir)
-    embs = spread_small_input(
-        _embs(spark, sf_dir), spark.sparkContext.defaultParallelism
-    )
-    idx = lsh_index(embs, dim=len(qv))
-    return lsh_topk_indexed(idx, qv, k=20)
-
-
 def _q_sketch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage ANN: 256-bit Hamming-sketch scan keeps the 15% closest
     signatures, exact cosine reranks only those — the path that meets
-    recall ≥ 0.8 at ≤ 25% of vectors scored (bucket-LSH tops out at
-    ~0.79 on these near-isotropic embeddings; curve in BENCH.md)."""
+    recall ≥ 0.8 at ≤ 25% of vectors scored (a bucket-LSH sweep topped
+    out at recall 0.79 @ 23% scanned on these near-isotropic
+    embeddings; curve in BENCH.md)."""
     from aqueduct_core_spark.functions.dedup import spread_small_input
     from aqueduct_core_spark.functions.similarity import sketch_topk
 
@@ -1514,46 +1487,6 @@ def _q_sketch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return sketch_topk(embs, _query_vec(spark, sf_dir),
                        k=20, rerank_fraction=0.15)
-
-
-def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN: deterministic coarse-quantizer cells (16), query probes
-    its 4 nearest cells (~25% of an evenly-split corpus), exact cosine
-    rerank on survivors.  The standard inverted-file scale path next to
-    the LSH and Hamming-sketch variants."""
-    from aqueduct_core_spark.functions.dedup import spread_small_input
-    from aqueduct_core_spark.functions.similarity import ivf_index, ivf_topk
-
-    qv = _query_vec(spark, sf_dir)
-    embs = spread_small_input(
-        _embs(spark, sf_dir), spark.sparkContext.defaultParallelism
-    )
-    idx = ivf_index(embs, dim=len(qv))
-    return ivf_topk(idx, qv, k=20)
-
-
-def _q_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF with a TRAINED coarse quantizer: one Lloyd iteration of
-    k-means run as DataFrame aggregations (assign → per-cell elementwise
-    mean, map-side combined; the driver collects only n_cells × dim
-    scalars), then the same cell-pruned probe as ``emb_ivf_topk`` over
-    the refined Voronoi diagram.  The oracle replays the identical
-    training step in SQL — shared floor-round-6dp means make the
-    codebooks bit-identical across engines."""
-    from aqueduct_core_spark.functions.dedup import spread_small_input
-    from aqueduct_core_spark.functions.similarity import (
-        ivf_index,
-        ivf_topk,
-        ivf_train,
-    )
-
-    qv = _query_vec(spark, sf_dir)
-    embs = spread_small_input(
-        _embs(spark, sf_dir), spark.sparkContext.defaultParallelism
-    )
-    cents = ivf_train(embs, dim=len(qv), iters=1)
-    idx = ivf_index(embs, dim=len(qv), centroids=cents)
-    return ivf_topk(idx, qv, k=20, centroids=cents)
 
 
 def _q_ivf_forest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2305,48 +2238,14 @@ SELECT id_a, id_b, CAST(bit_count(xor(sh_a, sh_b)) AS INTEGER) AS hamming FROM c
 """
 
 
-def _lsh_topk_oracle(dim: int = 64, n_planes: int = 6, n_tables: int = 8,
-                     kk: int = 20) -> str:
-    """Hyperplane constants inlined as SQL literals — same RandomState
-    stream as functions.similarity._hyperplanes."""
-    from aqueduct_core_spark.functions.similarity import _hyperplanes
-
-    table_preds = []
-    for t in range(n_tables):
-        planes = _hyperplanes(dim, n_planes, seed=7 + t)
-        plane_eqs = []
-        for p in planes:
-            lit = "[" + ", ".join(repr(float(x)) for x in p) + "]"
-            plane_eqs.append(
-                f"((list_inner_product(v, {lit}) >= 0) = (list_inner_product(qv, {lit}) >= 0))"
-            )
-        table_preds.append("(" + " AND ".join(plane_eqs) + ")")
-    cand = "\n     OR ".join(table_preds)
-    return f"""
-WITH q AS (
-  SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0
-),
-s AS (
-  SELECT e.vec_id, CAST(e.embedding AS DOUBLE[]) AS v, q.qv AS qv
-  FROM embeddings e, q
-),
-flt AS (
-  SELECT vec_id, v, qv FROM s
-  WHERE {cand}
-)
-SELECT vec_id,
-  floor((list_inner_product(v, qv)
-         / (sqrt(list_inner_product(v, v)) * sqrt(list_inner_product(qv, qv))))
-        * 1000000 + 0.5) / 1000000 AS sim
-FROM flt ORDER BY sim DESC, vec_id LIMIT {kk}
-"""
-
-
 def _semantic_dedup_oracle(dim: int = 64, n_cells: int = 16,
                            threshold: float = 0.4) -> str:
-    """Same centroid literals and first-max assignment as
-    `_ivf_topk_oracle`; within-cell smaller-id neighbor at rounded
-    cosine >= threshold marks a drop (dup_of = min such neighbor)."""
+    """Centroid literals inlined (similarity.ivf_centroids, rounded to
+    6 dp so they are exact); assignment = first-max inner product
+    (list_position/list_max, the same tie rule as Spark's
+    array_position/array_max); within-cell smaller-id neighbor at
+    rounded cosine >= threshold marks a drop (dup_of = min such
+    neighbor)."""
     from aqueduct_core_spark.functions.similarity import ivf_centroids
 
     cents = ivf_centroids(dim, n_cells)
@@ -2371,148 +2270,6 @@ dup AS (
 SELECT a.vec_id, CAST(a.cell AS INTEGER) AS cell, d.dup_of,
        d.dup_of IS NULL AS keep
 FROM asg a LEFT JOIN dup d USING (vec_id)
-"""
-
-
-def _ivf_topk_oracle(dim: int = 64, n_cells: int = 16, n_probes: int = 4,
-                     kk: int = 20) -> str:
-    """Centroid literals inlined (similarity.ivf_centroids, rounded to
-    6 dp so they are exact); assignment = first-max inner product
-    (list_position/list_max, the same tie rule as Spark's
-    array_position/array_max); query probes = top n_probes cells by
-    (dot desc, cell)."""
-    from aqueduct_core_spark.functions.similarity import ivf_centroids
-
-    cents = ivf_centroids(dim, n_cells)
-    lits = [
-        "[" + ", ".join(repr(float(x)) for x in c) + "]" for c in cents
-    ]
-    vec_dots = ", ".join(f"list_inner_product(v, {c})" for c in lits)
-    q_dots = ", ".join(f"list_inner_product(qv, {c})" for c in lits)
-    return f"""
-WITH s AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-),
-q AS (
-  SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0
-),
-asg AS (
-  SELECT vec_id, v, list_position(l, list_max(l)) AS cell
-  FROM (SELECT vec_id, v, [{vec_dots}] AS l FROM s)
-),
-qcells AS (
-  SELECT cell FROM (
-    SELECT unnest(range(1, {n_cells + 1})) AS cell,
-           unnest([{q_dots}]) AS d
-    FROM q
-  ) ORDER BY d DESC, cell LIMIT {n_probes}
-)
-SELECT a.vec_id,
-  floor((list_inner_product(a.v, q.qv)
-         / (sqrt(list_inner_product(a.v, a.v)) * sqrt(list_inner_product(q.qv, q.qv))))
-        * 1000000 + 0.5) / 1000000 AS sim
-FROM asg a JOIN qcells c ON a.cell = c.cell, q
-ORDER BY sim DESC, a.vec_id LIMIT {kk}
-"""
-
-
-def _ivf_trained_oracle(dim: int = 64, n_cells: int = 16, n_probes: int = 4,
-                        kk: int = 20) -> str:
-    """One spherical-k-means iteration replayed in SQL: assign to the
-    inlined init centroids (first-max inner product, as
-    `_ivf_topk_oracle`), recompute per-cell elementwise means,
-    L2-normalize, round each component with the shared
-    floor(x·10⁶+0.5)/10⁶ rule (bit-identical to the engine's
-    `ivf_train` — sequential-fold norms on identical inputs), empty
-    cells fall back to their NORMALIZED init centroid (inlined, computed
-    with the same Python fold), then probe/rerank against the trained
-    codebook (argmax via row_number ORDER BY dot DESC, cell — the same
-    smallest-cell-wins tie rule as array_position(l, array_max(l)))."""
-    import math
-
-    from aqueduct_core_spark.functions.similarity import ivf_centroids
-
-    cents = ivf_centroids(dim, n_cells)
-    lits = [
-        "[" + ", ".join(repr(float(x)) for x in c) + "]" for c in cents
-    ]
-    vec_dots = ", ".join(f"list_inner_product(v, {c})" for c in lits)
-
-    def _unit(c):
-        n2 = 0.0
-        for x in c:
-            n2 += float(x) * float(x)
-        n = math.sqrt(n2)
-        if n == 0:
-            return [float(x) for x in c]
-        return [
-            math.floor((float(x) / n) * 1_000_000 + 0.5) / 1_000_000 for x in c
-        ]
-
-    init_vals = ",\n    ".join(
-        "({}, [{}]::DOUBLE[])".format(
-            i + 1, ", ".join(repr(x) for x in _unit(cents[i]))
-        )
-        for i in range(n_cells)
-    )
-    return f"""
-WITH s AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-),
-q AS (
-  SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0
-),
-asg0 AS (
-  SELECT vec_id, v, list_position(l, list_max(l)) AS cell
-  FROM (SELECT vec_id, v, [{vec_dots}] AS l FROM s)
-),
-mexp AS (
-  SELECT cell, generate_subscripts(v, 1) AS pos, unnest(v) AS x FROM asg0
-),
-mu AS (
-  SELECT cell, pos, avg(x) AS m
-  FROM mexp GROUP BY cell, pos
-),
-traw AS (
-  SELECT cell, list(m ORDER BY pos) AS craw FROM mu GROUP BY cell
-),
-trained AS (
-  SELECT cell,
-         CASE WHEN sqrt(list_inner_product(craw, craw)) = 0 THEN craw
-              ELSE list_transform(craw,
-                x -> floor((x / sqrt(list_inner_product(craw, craw)))
-                     * 1000000 + 0.5) / 1000000)
-         END AS c
-  FROM traw
-),
-init(cell, c) AS (VALUES
-    {init_vals}
-),
-cents AS (
-  SELECT i.cell, COALESCE(t.c, i.c) AS c
-  FROM init i LEFT JOIN trained t ON i.cell = t.cell
-),
-asg1 AS (
-  SELECT vec_id, v, cell FROM (
-    SELECT s.vec_id, s.v, c.cell,
-           row_number() OVER (
-             PARTITION BY s.vec_id
-             ORDER BY list_inner_product(s.v, c.c) DESC, c.cell
-           ) AS rn
-    FROM s, cents c
-  ) WHERE rn = 1
-),
-qcells AS (
-  SELECT c.cell FROM cents c, q
-  ORDER BY list_inner_product(q.qv, c.c) DESC, c.cell
-  LIMIT {n_probes}
-)
-SELECT a.vec_id,
-  floor((list_inner_product(a.v, q.qv)
-         / (sqrt(list_inner_product(a.v, a.v)) * sqrt(list_inner_product(q.qv, q.qv))))
-        * 1000000 + 0.5) / 1000000 AS sim
-FROM asg1 a JOIN qcells c ON a.cell = c.cell, q
-ORDER BY sim DESC, a.vec_id LIMIT {kk}
 """
 
 
@@ -2787,9 +2544,9 @@ def _near_dup_oracle(dim: int = 64, n_planes: int = 6, n_tables: int = 8,
                      threshold: float = 0.4) -> str:
     """All-pairs reformulation of the LSH-blocked near-dup: a pair is a
     candidate iff some table's planes all agree in sign between the two
-    vectors (identical predicate shape to _lsh_topk_oracle, with the
-    query vector replaced by the pair's second vector); exact cosine
-    verify ≥ threshold with the shared round6 rounding."""
+    vectors (hyperplane constants inlined as SQL literals — same
+    RandomState stream as functions.similarity._hyperplanes); exact
+    cosine verify ≥ threshold with the shared round6 rounding."""
     from aqueduct_core_spark.functions.similarity import _hyperplanes
 
     table_preds = []
@@ -3215,19 +2972,26 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Driver contract registry.
+    """Driver contract registry: 89 queries, each with an oracle in
+    :func:`oracle_sql` (same key set; tests/test_contract_registry.py).
+
+    The contract had 93 entries through round 5.  Round 6 retired the
+    four ANN top-k rows below the engine's own 0.8 mean recall@20 bar,
+    with their oracles: bucket LSH, scanned or indexed (0.55), IVF over
+    random centroids (0.60) and IVF over a one-iteration trained
+    codebook (0.70) (BENCH.md "ANN recall vs cost").
 
     ORDER MATTERS: the correctness driver verifies a 50-entry prefix
     of this dict (CORRECTNESS_r01..r04 are provably prefixes of the
-    then-current insertion order).  Entries 1-26 are the queries with
+    then-current insertion order).  Entries 1-24 are the queries with
     no driver row through round 4 (all pass the local oracle via
-    tools/check_contract.py); entries 27-49 rotate in ever-green core
+    tools/check_contract.py); entries 25-45 rotate in ever-green core
     flagships so the fresh artifact still covers the CDC heart of the
-    engine; slots 48-50 are the round-5-new emb_ivfpq_topk,
-    emb_pq_topk and doc_bm25_topk (new queries go INSIDE the window,
-    not behind it — doc_simhash_candidates and emb_cosine_topk,
-    ever-green since r2, rotate just behind to make room); everything
-    after slot 50 stays covered by the r1-r4 ever-green union.
+    engine; slots 46-48 are the round-5-new emb_ivfpq_topk,
+    emb_pq_topk and doc_bm25_topk, and slots 49-50 hold
+    doc_simhash_candidates and emb_cosine_topk (ever-green since r2);
+    everything after slot 50 stays covered by the r1-r4 ever-green
+    union.
     """
     return {
         "doc_subword_tokens": _q_subword_tokens,
@@ -3242,8 +3006,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "emb_sketch_topk": _q_sketch_topk,
         "emb_near_dup": _q_near_dup,
         "emb_semantic_dedup": _q_semantic_dedup,
-        "emb_ivf_topk": _q_ivf_topk,
-        "emb_ivf_trained": _q_ivf_trained,
         "emb_ivf_forest": _q_ivf_forest,
         "emb_forest_index_inc": _q_forest_index_inc,
         "media_real_decode": _q_media_real_decode,
@@ -3315,8 +3077,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_lm_score": _q_lm_score,
         "doc_text_stats": _q_text_stats,
         "emb_knn_join": _q_knn_join,
-        "emb_lsh_topk": _q_lsh_topk,
-        "emb_lsh_indexed": _q_lsh_indexed,
         "media_features": _q_media_features,
         "cdc_routing_groups": _q_routing_groups,
         "cdc_cluster_lookup": _q_cluster_lookup,
@@ -4206,14 +3966,9 @@ FROM t
         "doc_dup_clusters": _dup_clusters_oracle(),
         "doc_dedup_keep_best": _dedup_keep_best_oracle(),
         "doc_simhash_candidates": _simhash_oracle(),
-        "emb_lsh_topk": _lsh_topk_oracle(),
-        # the indexed variant returns the identical result set
-        "emb_lsh_indexed": _lsh_topk_oracle(),
         "emb_sketch_topk": _sketch_topk_oracle(),
         "emb_near_dup": _near_dup_oracle(),
         "emb_semantic_dedup": _semantic_dedup_oracle(),
-        "emb_ivf_topk": _ivf_topk_oracle(),
-        "emb_ivf_trained": _ivf_trained_oracle(),
         "emb_ivf_forest": _ivf_forest_oracle(),
         "emb_pq_topk": _pq_topk_oracle(),
         "emb_ivfpq_topk": _ivfpq_oracle(),

@@ -9,9 +9,10 @@
   a per-partition heap + driver merge, not a global sort).
 - :func:`knn_join_bruteforce` — all-pairs k-NN for a (small,
   broadcastable) probe set.
-- :func:`lsh_topk` — the 100-TB scale path: random-hyperplane LSH
-  bucketing; only vectors sharing ≥1 band with the query are scored.
-  Recall < 1.0 by design; the benchmark measures the recall/cost trade.
+- :func:`sketch_topk`, :func:`forest_topk`, :func:`pq_search` and
+  :func:`ivfpq_topk` — the approximate paths: each scores a fraction
+  of the corpus at full precision.  Recall < 1.0 by design; the
+  benchmark measures the recall/cost trade.
 """
 
 from __future__ import annotations
@@ -169,24 +170,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
-def query_bits(query_vec: list[float], n_planes: int, n_tables: int) -> list[int]:
-    """Driver-side bucket id of the query vector per LSH table — the
-    single definition of the seed/sign convention shared by
-    :func:`lsh_topk` and :func:`lsh_topk_indexed` (the SQL oracle
-    inlines the same ``_hyperplanes`` constants)."""
-    import numpy as np
-
-    out = []
-    for t in range(n_tables):
-        planes = _hyperplanes(len(query_vec), n_planes, seed=7 + t)
-        bits = 0
-        for i, p in enumerate(planes):
-            if float(np.dot(query_vec, p)) >= 0:
-                bits |= 1 << i
-        out.append(bits)
-    return out
-
-
 def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
     """Sign-bit bucket id from random hyperplanes (long).
 
@@ -207,140 +190,14 @@ def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
     return acc
 
 
-def lsh_index(
-    df: DataFrame,
-    dim: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_planes: int = 6,
-    n_tables: int = 8,
-) -> DataFrame:
-    """The 100 TB shape of :func:`lsh_topk`: PRECOMPUTE the per-table
-    bucket ids as columns — ``(id, table, bucket, vec)`` — and persist
-    clustered by ``(table, bucket)``.  A query then prunes to a few
-    (table, bucket) groups via partition/file pruning instead of
-    scanning every vector; index build is one pass, amortized over all
-    queries.  The build parameters are stamped into every row
-    (``n_planes``/``n_tables`` columns) so a query with mismatched
-    parameters fails loudly instead of silently probing wrong buckets."""
-    rows = []
-    for t in range(n_tables):
-        planes = _hyperplanes(dim, n_planes, seed=7 + t)
-        rows.append(
-            F.struct(
-                F.lit(t).alias("table"),
-                lsh_bucket(vec_col, planes).alias("bucket"),
-            )
-        )
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        F.explode(F.array(*rows)).alias("tb"),
-    ).select(
-        "id",
-        "vec",
-        "tb.table",
-        "tb.bucket",
-        F.lit(int(n_planes)).alias("n_planes"),
-        F.lit(int(n_tables)).alias("n_tables"),
-    )
-
-
-def _check_index_params(index: DataFrame, n_planes: int, n_tables: int) -> None:
-    """Fail loudly when the query parameters don't match the stamped
-    build parameters (ADVICE: a silent mismatch yields wrong/empty
-    candidates).  One tiny first()-row check; indexes built before the
-    stamp (no columns) are accepted for compatibility."""
-    if "n_planes" not in index.columns:
-        return
-    row = index.select("n_planes", "n_tables").first()
-    if row is None:
-        return
-    if int(row["n_planes"]) != int(n_planes) or int(row["n_tables"]) != int(n_tables):
-        raise ValueError(
-            f"lsh index was built with n_planes={row['n_planes']}, "
-            f"n_tables={row['n_tables']}; query asked for n_planes={n_planes}, "
-            f"n_tables={n_tables}"
-        )
-
-
-def multiprobe_bits(
-    query_vec: list[float], n_planes: int, n_tables: int, n_probes: int = 1
-) -> list[list[int]]:
-    """Per-table probe sequence for multi-probe LSH (Lv et al., VLDB'07):
-    the query's own bucket first, then buckets reached by flipping the
-    lowest-|margin| sign bits — the most likely near-miss buckets —
-    ordered by total flipped margin.  Driver-side enumeration; the
-    result feeds the same IN-filter the single-probe query uses."""
-    import itertools
-    import numpy as np
-
-    out = []
-    for t in range(n_tables):
-        planes = np.asarray(_hyperplanes(len(query_vec), n_planes, seed=7 + t))
-        proj = planes @ np.asarray(query_vec, dtype=np.float64)
-        qbits = 0
-        for i in range(n_planes):
-            if proj[i] >= 0:
-                qbits |= 1 << i
-        margins = np.abs(proj)
-        pool = list(np.argsort(margins)[: min(n_planes, 12)])
-        cands = [(0.0, 0)]
-        for r in range(1, min(3, len(pool)) + 1):
-            for combo in itertools.combinations(pool, r):
-                cands.append(
-                    (float(sum(margins[list(combo)])), sum(1 << int(c) for c in combo))
-                )
-        cands.sort()
-        out.append([qbits ^ m for _, m in cands[:n_probes]])
-    return out
-
-
-def lsh_topk_indexed(
-    index: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_planes: int = 6,
-    n_tables: int = 8,
-    n_probes: int = 1,
-) -> DataFrame:
-    """Query the precomputed index: compute the query's probe buckets
-    per table driver-side (``n_probes`` > 1 = multi-probe: also probe
-    the buckets behind the query's lowest-margin sign bits), keep index
-    rows whose (table, bucket) matches — an IN-filter that
-    partition-prunes on a clustered index — then exact-score the
-    deduplicated candidates.  With ``n_probes=1`` this is
-    result-identical to :func:`lsh_topk` on the same parameters."""
-    _check_index_params(index, n_planes, n_tables)
-    probes = multiprobe_bits(query_vec, n_planes, n_tables, n_probes)
-    hits = [
-        (F.col("table") == t) & F.col("bucket").isin([int(b) for b in tbl_probes])
-        for t, tbl_probes in enumerate(probes)
-    ]
-    pred = hits[0]
-    for h in hits[1:]:
-        pred = pred | h
-
-    cand = (
-        index.where(pred)
-        .groupBy("id")
-        .agg(F.first("vec").alias("vec"))
-    )
-    sim = round6(cosine_sim("vec", list(query_vec), dim=len(query_vec)))
-    return (
-        cand.select(F.col("id").alias("vec_id"), sim.alias("sim"))
-        .orderBy(F.col("sim").desc(), F.col("vec_id"))
-        .limit(k)
-    )
-
-
 # --------------------------------------------------------------------------
 # Hamming-sketch rerank: the ANN path that actually meets the recall
 # target on near-isotropic embeddings.
 #
-# Bucket-membership LSH (above) was parameter-swept (planes 6-16 ×
-# tables 4-16 × margin-ordered multi-probe 1-32) and tops out around
-# recall 0.79 at 23% scanned on the synthetic embeddings — the top-20
+# Bucket-membership LSH (score only vectors that share a hyperplane
+# bucket with the query) was parameter-swept (planes 6-16 × tables
+# 4-16 × margin-ordered multi-probe 1-32) and topped out around recall
+# 0.79 at 23% scanned on the synthetic embeddings — the top-20
 # neighbors sit at cos ≈ 0.3 while the background 99th percentile is
 # 0.285, so sign-agreement per plane is 0.59 vs 0.50: too little
 # selectivity for bucket equality (the full curve is in BENCH.md).
@@ -478,42 +335,6 @@ def sketch_topk(
     )
 
 
-def lsh_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_planes: int = 6,
-    n_tables: int = 8,
-) -> DataFrame:
-    """Approximate top-k: score only vectors that collide with the query
-    in ≥1 of ``n_tables`` hyperplane-LSH tables.
-
-    Defaults (6 planes × 8 tables) measured recall@20 ≈ 0.5 at ~9% of
-    vectors scored on the near-orthogonal synthetic embeddings — the
-    hard case for sign-LSH; clustered real embeddings fare much better.
-    ``bench.py`` reports ``lsh_recall`` against the exact top-k every
-    run.  At scale the bucket columns are precomputed and the table is
-    clustered by them, so a query prunes to a few file groups; here the
-    pruning is a filter in the same scan.
-    """
-    dim = len(query_vec)
-    cand = None
-    for t, qbits in enumerate(query_bits(query_vec, n_planes, n_tables)):
-        planes = _hyperplanes(dim, n_planes, seed=7 + t)
-        hit = lsh_bucket(vec_col, planes) == qbits
-        cand = hit if cand is None else (cand | hit)
-
-    sim = round6(cosine_sim(vec_col, list(query_vec), dim=len(query_vec)))
-    return (
-        df.where(cand)
-        .select(F.col(id_col), sim.alias("sim"))
-        .orderBy(F.col("sim").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
 IVF_CELLS = 16
 
 
@@ -531,79 +352,6 @@ def ivf_centroids(dim: int, n_cells: int = IVF_CELLS, seed: int = 11) -> list[li
     return np.round(
         np.random.RandomState(seed).standard_normal((n_cells, dim)), 6
     ).tolist()
-
-
-def ivf_train(
-    df: DataFrame,
-    dim: int,
-    n_cells: int = IVF_CELLS,
-    iters: int = 1,
-    vec_col: str = "embedding",
-    seed: int = 11,
-) -> list[list[float]]:
-    """SPHERICAL k-means refinement of the IVF coarse quantizer, run
-    as DataFrame aggregations (k-means in the engine, not the driver).
-
-    Each iteration assigns every vector to its argmax-inner-product
-    centroid (first-max tie — :func:`ivf_assign`'s exact rule) and
-    recomputes each cell's element-wise mean via
-    ``posexplode → (cell, pos) hash aggregate``: the shuffle carries at
-    most ``n_cells × dim`` rows per map partition (map-side combine),
-    and the driver collects ``n_cells × dim`` scalars per iteration —
-    bounded regardless of corpus size.  A cell that loses all members
-    keeps its previous centroid (the standard empty-cluster rule).
-    Every updated centroid is then L2-NORMALIZED — spherical k-means,
-    the right quantizer for cosine retrieval: with unit centroids the
-    dot-product argmax IS the cosine argmax, so a merged-mean centroid
-    can't capture extra cells on norm alone (plain means measurably
-    collapse clusters under inner-product assignment).
-
-    Normalized components are rounded with the shared
-    ``floor(x·10⁶+0.5)/10⁶`` convention
-    (:func:`aqueduct_core_spark.functions.text.round6`) so the trained
-    codebook is exactly reproducible by the SQL oracle and stable
-    across partial-aggregation orders.
-
-    At 100 TB train on a bounded sample (``df.sample(...)`` — a
-    quantizer needs ~1000× n_cells vectors, not the corpus); the
-    returned codebook is then inlined into index build and queries
-    exactly like the untrained :func:`ivf_centroids`.
-    """
-    import math
-
-    cents = ivf_centroids(dim, n_cells, seed)
-    for _ in range(int(iters)):
-        asg = df.select(
-            ivf_assign(F.col(vec_col), cents).alias("cell"),
-            F.posexplode(vec_col).alias("pos", "x"),
-        )
-        rows = (
-            asg.groupBy("cell", "pos")
-            .agg(F.avg(F.col("x").cast("double")).alias("mu"))
-            .collect()
-        )
-        means: dict[int, list[float]] = {}
-        for r in rows:
-            means.setdefault(int(r["cell"]) - 1, [0.0] * dim)[int(r["pos"])] = (
-                float(r["mu"])
-            )
-        nxt: list[list[float]] = []
-        for i in range(n_cells):
-            c = means.get(i, cents[i])
-            # sequential left-fold sum of squares — the same association
-            # order as the oracle's list_inner_product(c, c)
-            n2 = 0.0
-            for x in c:
-                n2 += float(x) * float(x)
-            n = math.sqrt(n2)
-            if n > 0:
-                c = [
-                    math.floor((float(x) / n) * 1_000_000 + 0.5) / 1_000_000
-                    for x in c
-                ]
-            nxt.append(c)
-        cents = nxt
-    return cents
 
 
 def ivf_assign(vec: Column | str, centroids: list[list[float]]) -> Column:
@@ -625,73 +373,6 @@ def ivf_assign(vec: Column | str, centroids: list[list[float]]) -> Column:
     return F.array_position(dots, F.array_max(dots)).cast("int")
 
 
-def ivf_index(
-    df: DataFrame,
-    dim: int,
-    n_cells: int = IVF_CELLS,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 11,
-    centroids: list[list[float]] | None = None,
-) -> DataFrame:
-    """Precompute ``(id, vec, cell)`` — the IVF inverted-list table.
-    At 100 TB this is written once, clustered/partitioned by ``cell``,
-    so a query's probe turns into partition pruning over ~n_probes/
-    n_cells of the data instead of a full scan.  ``centroids``: an
-    explicit codebook (e.g. from :func:`ivf_train`) instead of the
-    deterministic untrained one — pass the SAME codebook to
-    :func:`ivf_topk` or the probe targets the wrong Voronoi diagram."""
-    cents = centroids if centroids is not None else ivf_centroids(dim, n_cells, seed)
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        ivf_assign(F.col(vec_col), cents).alias("cell"),
-    )
-
-
-def ivf_probe_cells(
-    query_vec: list[float], n_cells: int = IVF_CELLS, n_probes: int = 4,
-    seed: int = 11, centroids: list[list[float]] | None = None,
-) -> list[int]:
-    """Driver-side: the ``n_probes`` cells nearest the query (by inner
-    product, desc, cell-id tiebreak).  Left-fold float arithmetic to
-    mirror the engines' sequential inner product."""
-    cents = centroids if centroids is not None else ivf_centroids(
-        len(query_vec), n_cells, seed
-    )
-    scored = []
-    for i, c in enumerate(cents):
-        s = 0.0
-        for x, y in zip(query_vec, c):
-            s += float(x) * float(y)
-        scored.append((-s, i + 1))
-    return [cell for _, cell in sorted(scored)[:n_probes]]
-
-
-def ivf_topk(
-    index: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_cells: int = IVF_CELLS,
-    n_probes: int = 4,
-    seed: int = 11,
-    centroids: list[list[float]] | None = None,
-) -> DataFrame:
-    """IVF ANN top-k over a precomputed :func:`ivf_index`: prune to the
-    query's ``n_probes`` nearest cells (a literal IN over the cell
-    column — partition pruning on a cell-clustered table), exact cosine
-    rerank on the survivors only.  ``centroids`` must match the codebook
-    the index was built with (see :func:`ivf_index`)."""
-    cells = ivf_probe_cells(query_vec, n_cells, n_probes, seed, centroids)
-    sim = round6(cosine_sim("vec", list(query_vec), dim=len(query_vec)))
-    return (
-        index.where(F.col("cell").isin(cells))
-        .select(F.col("id").alias("vec_id"), sim.alias("sim"))
-        .orderBy(F.col("sim").desc(), F.col("vec_id"))
-        .limit(k)
-    )
-
-
 def near_dup_pairs(
     df: DataFrame,
     threshold: float = 0.4,
@@ -706,20 +387,20 @@ def near_dup_pairs(
     """Embedding-cosine near-duplicate pairs, LSH-blocked.
 
     Candidates are pairs of vectors sharing a bucket in ≥1 of
-    ``n_tables`` hyperplane-LSH tables (identical plane/seed convention
-    to :func:`lsh_topk`); each candidate is then exact-verified with
+    ``n_tables`` hyperplane-LSH tables (:func:`_hyperplanes` with seed
+    ``7 + table``); each candidate is then exact-verified with
     cosine ≥ ``threshold``.  The self-join runs within (table, bucket)
     only — never all-pairs — so cost stays near-linear on isotropic
     data, and a true duplicate (cosine → 1) agrees with its twin on
     every plane's sign, so it collides in *every* table: recall on real
     duplicates approaches 1 while moderate-similarity pairs are traded
-    for scan cost exactly as in ``lsh_topk``.
+    for scan cost.
 
     At 100 TB the bucket projection is one narrow shuffle key
     (table, bucket) and the verify join moves only candidate ids plus
-    two vectors per surviving pair.  Reference semantics: the dedup
-    companion to ``emb_lsh_topk`` (exact-verify-after-LSH, same shape
-    as ``functions.dedup.minhash_dedup`` for text).
+    two vectors per surviving pair.  Reference semantics:
+    exact-verify-after-LSH, the same shape as
+    ``functions.dedup.minhash_dedup`` for text.
     ``min_input_partitions``: spread a small/single-split input across
     the cores before the bucket projection (n_planes × n_tables dots
     per vector — the dominant map cost); see
@@ -809,7 +490,8 @@ def semantic_dedup(
     pairs instead of ``n²``, and at 100 TB ``n_cells`` scales with the
     corpus (SemDeDup used 110k clusters for LAION) so per-cell
     membership stays bounded.  Pass a TRAINED codebook
-    (:func:`ivf_train`) for balanced cells; a pathologically hot cell
+    (``centroids``, e.g. k-means trained offline on a sample) for
+    balanced cells; a pathologically hot cell
     has the same remedy as the LSH giant bucket
     (``functions.dedup.lsh_candidate_pairs``'s cap) — split it by
     training more centroids.
@@ -831,14 +513,14 @@ def semantic_dedup(
     identical-vector pileups.  The trade, identical to
     ``functions.dedup.lsh_candidate_pairs``'s ``max_bucket``: inside an
     over-cap cell, two vectors similar to each other but NOT to the rep
-    are missed.  A trained codebook (:func:`ivf_train`) is the
+    are missed.  A trained codebook (``centroids``) is the
     preventive fix; the cap is the guarantee.
 
     ``persist_assign`` caches the (id, vec, cell) projection so the
     self-join's two scans don't each recompute the ``n_cells`` dot
     products per vector (same rationale as ``near_dup_pairs``'s blocking
-    cache).  At 100 TB you would write the assignment once, clustered by
-    ``cell`` (:func:`ivf_index`), and run the join off that table.
+    cache).  At 100 TB you would write the (id, vec, cell) assignment
+    once, clustered by ``cell``, and run the join off that table.
     """
     from aqueduct_core_spark.functions.dedup import spread_small_input
 
@@ -1364,30 +1046,6 @@ PQ_K = 64
 PQ_ITERS = 3
 
 
-def pq_init_codebooks(
-    dim: int,
-    n_sub: int = PQ_M,
-    n_codes: int = PQ_K,
-    seed: int = 13,
-) -> list[list[list[int]]]:
-    """Quantized (×10⁶ int) RANDOM codebooks, subspace m drawn from
-    ``seed + m`` — only used to FILL codes beyond the corpus size when
-    a corpus smaller than n_codes can't seed every code (the sample
-    init in :func:`pq_sample_init` is the production rule: measured
-    recall 0.49 → 0.87 at equal budget vs random init on sf0.1, see
-    BENCH.md)."""
-    if dim % n_sub:
-        raise ValueError(f"dim {dim} not divisible into {n_sub} subspaces")
-    d = dim // n_sub
-    return [
-        [
-            [_quant_int(x) for x in c]
-            for c in ivf_centroids(d, n_codes, seed=seed + m)
-        ]
-        for m in range(n_sub)
-    ]
-
-
 def pq_sample_init(
     df: DataFrame,
     dim: int,
@@ -1403,10 +1061,11 @@ def pq_sample_init(
     Seeding from the data distribution instead of N(0,1) literals is
     what makes one-to-three Lloyd iterations enough (random centroids
     live nowhere near the data, so most codes never attract members
-    and the quantization error stays huge).  If the corpus has fewer
-    than n_codes vectors the remaining codes fall back to the random
-    literals — a tiny-corpus convenience outside the oracle contract
-    (driver corpora always have ≥ n_codes vectors)."""
+    and the quantization error stays huge; measured recall 0.49 → 0.87
+    at equal budget vs random init on sf0.1, see BENCH.md).  A corpus
+    with fewer than ``n_codes`` vectors cannot seed every code and
+    raises ``ValueError``.  ``seed`` is unused: the sample init draws
+    no random numbers."""
     if dim % n_sub:
         raise ValueError(f"dim {dim} not divisible into {n_sub} subspaces")
     d = dim // n_sub
@@ -1424,18 +1083,15 @@ def pq_sample_init(
         .limit(int(n_codes))
         .collect()
     )
-    fill = pq_init_codebooks(dim, n_sub, n_codes, seed)
-    cbs: list[list[list[int]]] = []
-    for m in range(n_sub):
-        cb = []
-        for k in range(n_codes):
-            if k < len(rows):
-                vq = rows[k]["vq"]
-                cb.append([int(x) for x in vq[m * d:(m + 1) * d]])
-            else:
-                cb.append(list(fill[m][k]))
-        cbs.append(cb)
-    return cbs
+    if len(rows) < n_codes:
+        raise ValueError(
+            f"pq_sample_init needs at least n_codes={n_codes} vectors to "
+            f"seed every code; the corpus has {len(rows)}"
+        )
+    return [
+        [[int(x) for x in r["vq"][m * d:(m + 1) * d]] for r in rows]
+        for m in range(n_sub)
+    ]
 
 
 def _pq_assign_udf(codebooks: list[list[list[int]]]):
@@ -1662,8 +1318,7 @@ def ivfpq_topk(
     """IVF-PQ: the composed 100 TB plan — the forest PRUNES which rows
     are read (partition pruning to ``n_probes × T`` of the T·K cell
     partitions), PQ's integer ADC scores the surviving candidates from
-    their 23×-compressed codes (broadcast hash join on id — only
-    candidate ids and 16-int code rows move), and ONLY the top
+    their 23×-compressed codes, and ONLY the top
     ``rerank`` of those touch full vectors for the exact cosine
     rerank.  Against a corpus of N vectors a query therefore reads
     ~0.22·N code rows (compressed) and `rerank` vectors — the
@@ -1681,6 +1336,12 @@ def ivfpq_topk(
     PQ-alone 0.870 — each stage's loss priced separately in BENCH.md).
     With ``rerank`` ≥ the candidate count this is tuple-identical to
     :func:`forest_topk` (pytest-asserted).
+
+    The candidate join BROADCASTS the distinct candidate ids, so the
+    codes table is scanned in place and never shuffled.  That assumes
+    the id set fits a broadcast: about 0.22·N ids at 8 B each, i.e.
+    ~1.8 MB per 10⁶ vectors.  Without the hint Spark plans a sort-merge
+    join that hash-shuffles the whole codes table on id.
     """
     pairs = forest_probe_cells(
         query_vec, forest_cbs, n_cells=n_probes * len(forest_cbs)
@@ -1694,7 +1355,7 @@ def ivfpq_topk(
         pred = h if pred is None else (pred | h)
     cand_ids = index.where(pred).select("id").distinct()
     cand = (
-        codes.join(cand_ids, on="id")
+        codes.join(F.broadcast(cand_ids), on="id")
         .select("id", pq_adc_score(query_vec, pq_cbs).alias("adc"))
         .orderBy(F.col("adc").desc(), F.col("id"))
         .limit(int(rerank))

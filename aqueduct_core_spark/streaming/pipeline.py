@@ -303,7 +303,6 @@ def replay_demux(
     changes: DataFrame,
     routes: dict,
     cfg: EngineConfig | None = None,
-    cache_epoch_slices: bool = True,
 ) -> dict:
     """Fan one central ordered log out to MANY routed replica tables —
     the reference's central-pipe → store-node distribution topology
@@ -327,9 +326,9 @@ def replay_demux(
     the i-th trigger slice from lsn 0; footer-index planning is
     prefix-stable for an append-only log, and resume correctness never
     depends on it — slices are skipped by each table's committed LSN
-    watermark, which survives any renumbering), and each
-    epoch's slice is cached once (``cache_epoch_slices``; bounded by
-    the trigger's byte budget) so N route applies read the scan once
+    watermark, which survives any renumbering), and an epoch's slice is
+    persisted whenever more than one route applies it (bounded by the
+    trigger's byte budget) so N route applies read the scan once
     instead of N times.  Exactly-once is PER TABLE: every table commits
     its own epoch stamp + lsn watermark atomically, so a crash between
     route applies leaves some tables one epoch ahead — on rerun the
@@ -386,7 +385,7 @@ def replay_demux(
         batch = changes.where(
             (F.col("lsn") >= r.start_lsn) & (F.col("lsn") <= r.end_lsn)
         )
-        cached = cache_epoch_slices and len(todo) > 1
+        cached = len(todo) > 1
         if cached:
             batch = batch.persist()
         try:
@@ -419,7 +418,6 @@ def start_stream_demux(
     max_files_per_trigger: int | None = None,
     processing_time: str | None = None,
     available_now: bool = False,
-    cache_epoch_slices: bool = True,
 ):
     """Streaming twin of :func:`replay_demux`: ONE Structured Streaming
     tail of the log directory whose ``foreachBatch`` fans each
@@ -432,9 +430,9 @@ def start_stream_demux(
     id, tables that committed it skip via the epoch guard and the rest
     apply it — the same recovery contract as :func:`start_stream`, N
     ways.  Same soundness requirement as the batch demux: route
-    predicates must be conversation-consistent.  The batch is cached
-    once per trigger (bounded by the trigger size) so N route applies
-    don't rescan the source.  One checkpoint owns the epoch numbering
+    predicates must be conversation-consistent.  The batch is persisted
+    whenever more than one route applies it (bounded by the trigger
+    size) so N route applies don't rescan the source.  One checkpoint owns the epoch numbering
     for its table set — don't mix tables across checkpoints.
     """
     cfg = cfg or EngineConfig()
@@ -453,7 +451,7 @@ def start_stream_demux(
         todo = sorted(k for k in tables if tables[k].last_committed_epoch() < batch_id)
         if not todo:
             return
-        cached = cache_epoch_slices and len(todo) > 1
+        cached = len(todo) > 1
         b = batch_df.persist() if cached else batch_df
         try:
             # every route commits the BATCH's max lsn, not its own

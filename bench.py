@@ -53,7 +53,6 @@ HEADLINE = [
     "emb_cosine_topk",
     "emb_knn_join",
     "emb_sketch_topk",
-    "emb_ivf_topk",
     "emb_near_dup",
     "emb_semantic_dedup",
     "cdc_preference_pairs",
@@ -392,12 +391,12 @@ def bench_dedup_index(
 def bench_ann_recall(spark, sf_dir: str, k: int = 20) -> dict:
     """recall@k of the ANN paths against the exact cosine top-k.
 
-    ``lsh_recall`` is the engine's default ANN path (Hamming-sketch
-    scan + 15% exact rerank — the one that meets recall ≥ 0.8 at ≤ 25%
-    scored); ``lsh_scanned_fraction`` is the fraction of vectors
-    exactly scored by that path.  ``lsh_bucket_recall`` is the plain
-    bucket-membership LSH (emb_lsh_topk), kept honest for the
-    recall-vs-cost curve in BENCH.md."""
+    ``lsh_recall`` is the recall of the Hamming-sketch path
+    (emb_sketch_topk: 256-bit SimHash scan + 15% exact rerank — the one
+    that meets recall ≥ 0.8 at ≤ 25% scored); ``lsh_scanned_fraction``
+    is the fraction of vectors exactly scored by that path.  The key
+    names predate the sketch and are kept so runs stay comparable with
+    BENCH_r01–r05."""
     import __spark_entry__ as entry
 
     qs = entry.queries()
@@ -405,20 +404,9 @@ def bench_ann_recall(spark, sf_dir: str, k: int = 20) -> dict:
     if not exact:
         return {}
     sketch = {r["vec_id"] for r in qs["emb_sketch_topk"](spark, sf_dir).collect()}
-    bucket = {r["vec_id"] for r in qs["emb_lsh_topk"](spark, sf_dir).collect()}
-    ivf = {r["vec_id"] for r in qs["emb_ivf_topk"](spark, sf_dir).collect()}
-    trained = {
-        r["vec_id"] for r in qs["emb_ivf_trained"](spark, sf_dir).collect()
-    }
     out = {
         "lsh_recall": round(len(exact & sketch) / len(exact), 3),
         "lsh_scanned_fraction": 0.15,
-        "lsh_bucket_recall": round(len(exact & bucket) / len(exact), 3),
-        # 4 of 16 cells probed → ~25% of an evenly-split corpus scored
-        "ivf_recall": round(len(exact & ivf) / len(exact), 3),
-        # same probe budget over the spherical-k-means codebook (one
-        # Lloyd iteration trained in-engine)
-        "ivf_trained_recall": round(len(exact & trained) / len(exact), 3),
     }
     out.update(bench_forest_recall(spark, sf_dir, k=k))
     out.update(bench_pq_recall(spark, sf_dir, k=k))

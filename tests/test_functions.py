@@ -179,7 +179,6 @@ def test_cosine_topk_and_knn(spark):
     from aqueduct_core_spark.functions.similarity import (
         cosine_topk,
         knn_join_bruteforce,
-        lsh_topk,
     )
 
     vecs = [
@@ -197,10 +196,6 @@ def test_cosine_topk_and_knn(spark):
     knn = knn_join_bruteforce(df, df.where(F.col("vec_id") == 0), k=2)
     got = [(r["neighbor_id"], r["rank"]) for r in knn.collect()]
     assert got == [(1, 1), (4, 2)]
-
-    # exhaustive LSH (n_planes small) must contain the true top-1
-    approx = lsh_topk(df, [1.0, 0.0, 0.0], k=3, n_planes=2, n_tables=4).collect()
-    assert approx and approx[0]["vec_id"] == 0
 
 
 def test_near_dup_pairs(spark):
@@ -239,142 +234,6 @@ def test_near_dup_pairs(spark):
     assert pairs <= brute
     sims = {(r["id_a"], r["id_b"]): r["sim"] for r in got}
     assert sims[(0, 12)] == 1.0
-
-
-def test_ivf_topk(spark):
-    """IVF: every vector lands in exactly one cell; the query's own
-    cell is probed so the query vector itself is always recalled with
-    sim 1.0; output ⊆ probed cells; ordered by sim desc."""
-    import numpy as np
-
-    from aqueduct_core_spark.functions.similarity import (
-        ivf_index,
-        ivf_probe_cells,
-        ivf_topk,
-    )
-
-    rng = np.random.RandomState(4)
-    vecs = [(i, rng.standard_normal(8).tolist()) for i in range(40)]
-    df = spark.createDataFrame(vecs, ["vec_id", "embedding"])
-    idx = ivf_index(df, dim=8, n_cells=4)
-    cells = {r["id"]: r["cell"] for r in idx.collect()}
-    assert set(cells.values()) <= {1, 2, 3, 4}
-    assert len(cells) == 40
-
-    q = vecs[7][1]
-    got = ivf_topk(idx, q, k=5, n_cells=4, n_probes=2).collect()
-    assert got[0]["vec_id"] == 7 and got[0]["sim"] == 1.0
-    probed = set(ivf_probe_cells(q, n_cells=4, n_probes=2))
-    for r in got:
-        assert cells[r["vec_id"]] in probed
-    sims = [r["sim"] for r in got]
-    assert sims == sorted(sims, reverse=True)
-
-    # n_probes = n_cells degenerates to exact brute force
-    full = ivf_topk(idx, q, k=40, n_cells=4, n_probes=4)
-    assert full.count() == 40
-
-
-def test_ivf_train_clustered(spark):
-    """On clustered data Lloyd iterations move the codebook onto the
-    clusters: trained assignment is cluster-pure and a trained 1-probe
-    query recalls its whole cluster, where the untrained random
-    codebook splits clusters across cells."""
-    import numpy as np
-
-    from aqueduct_core_spark.functions.similarity import (
-        ivf_index,
-        ivf_topk,
-        ivf_train,
-    )
-
-    rng = np.random.RandomState(9)
-    centers = rng.standard_normal((4, 8)) * 4.0
-    vecs = [
-        (c * 10 + i, (centers[c] + rng.standard_normal(8) * 0.05).tolist())
-        for c in range(4)
-        for i in range(10)
-    ]
-    df = spark.createDataFrame(vecs, ["vec_id", "embedding"])
-
-    cents = ivf_train(df, dim=8, n_cells=4, iters=2)
-    # spherical centroids are unit vectors (rounded to 6 dp)
-    for c in cents:
-        assert abs(sum(x * x for x in c) - 1.0) < 1e-4
-
-    idx = ivf_index(df, dim=8, n_cells=4, centroids=cents)
-    cell_of = {r["id"]: r["cell"] for r in idx.collect()}
-    # a tight cluster is atomic: all members share one cell
-    for c in range(4):
-        assert len({cell_of[c * 10 + i] for i in range(10)}) == 1
-
-    # training improves the quantizer: mean cosine(vector, assigned
-    # centroid) rises clearly over the untrained random codebook
-    def mean_cos(codebook):
-        s = 0.0
-        for vid, v in vecs:
-            nv = np.asarray(v)
-            c = np.asarray(
-                codebook[
-                    int(
-                        np.argmax([np.dot(nv, np.asarray(cc)) for cc in codebook])
-                    )
-                ]
-            )
-            s += float(np.dot(nv, c) / (np.linalg.norm(nv) * np.linalg.norm(c)))
-        return s / len(vecs)
-
-    from aqueduct_core_spark.functions.similarity import ivf_centroids
-
-    assert mean_cos(cents) > mean_cos(ivf_centroids(8, 4)) + 0.2
-
-    # 1-probe query over the trained diagram recalls its full cluster
-    # (exact rerank inside the probed cell keeps only the true members)
-    q = vecs[13][1]  # cluster 1
-    got = ivf_topk(idx, q, k=10, n_cells=4, n_probes=1, centroids=cents)
-    rows = got.collect()
-    assert len(rows) == 10
-    assert {r["vec_id"] // 10 for r in rows} == {1}
-
-
-def test_ivf_train_empty_cell_keeps_init(spark):
-    """A cell that attracts no members keeps its previous centroid's
-    DIRECTION (normalized — spherical k-means renormalizes the whole
-    codebook each iteration), so the codebook never collapses."""
-    import numpy as np
-
-    from aqueduct_core_spark.functions.similarity import (
-        ivf_assign,
-        ivf_centroids,
-        ivf_train,
-    )
-
-    init = ivf_centroids(4, 8)
-    # two tight points: at most 2 of 8 cells can be occupied
-    df = spark.createDataFrame(
-        [(0, [5.0, 5.0, 5.0, 5.0]), (1, [5.0, 5.0, 5.0, 5.1])],
-        ["vec_id", "embedding"],
-    )
-    occupied = {
-        r[0]
-        for r in df.select(
-            ivf_assign(F.col("embedding"), init)
-        ).collect()
-    }
-    trained = ivf_train(df, dim=4, n_cells=8, iters=1)
-
-    def cos(a, b):
-        a, b = np.asarray(a), np.asarray(b)
-        return float(np.dot(a, b) / (np.linalg.norm(a) * np.linalg.norm(b)))
-
-    for i in range(8):
-        assert abs(sum(x * x for x in trained[i]) - 1.0) < 1e-4  # unit
-        if (i + 1) in occupied:
-            # moved onto the data direction [~1,1,1,1]/2
-            assert cos(trained[i], [1.0, 1.0, 1.0, 1.0]) > 0.99
-        else:
-            # direction preserved exactly (only renormalized)
-            assert cos(trained[i], init[i]) > 0.999999
 
 
 def test_media_features(spark):

@@ -124,29 +124,6 @@ def test_simhash_md5_band_bits(spark):
     assert {(c.id_a, c.id_b, c.hamming) for c in cands} >= {(0, 1, 0)}
 
 
-def test_lsh_index_matches_filter_variant(spark):
-    """The precomputed-bucket index path returns the identical result
-    set as the filter-in-scan lsh_topk (same planes, same scoring)."""
-    import numpy as np
-
-    from aqueduct_core_spark.functions.similarity import (
-        lsh_index,
-        lsh_topk,
-        lsh_topk_indexed,
-    )
-
-    rng = np.random.RandomState(3)
-    vecs = [(i, rng.standard_normal(16).astype(float).tolist()) for i in range(200)]
-    embs = spark.createDataFrame(vecs, ["vec_id", "embedding"])
-    q = vecs[0][1]
-    a = lsh_topk(embs, q, k=10).collect()
-    idx = lsh_index(embs, dim=16)
-    b = lsh_topk_indexed(idx, q, k=10).collect()
-    assert [(r.vec_id, r.sim) for r in a] == [(r.vec_id, r.sim) for r in b]
-    # the index prunes: candidate rows ≪ index rows
-    assert idx.count() == 200 * 8  # one row per (vector, table)
-
-
 def test_streaming_windowed_throughput(spark, tmp_path):
     """T3: watermarked tumbling-window aggregation over the stream
     equals the batch groupBy — late data inside the watermark lands in

@@ -1,4 +1,5 @@
-"""ANN recall engineering: Hamming-sketch rerank + multi-probe LSH."""
+"""ANN recall engineering: Hamming-sketch rerank, semantic dedup,
+product quantization (PQ) and the composed IVF-PQ path."""
 
 import numpy as np
 import pytest
@@ -6,10 +7,6 @@ from pyspark.sql import functions as F
 
 from aqueduct_core_spark.functions.similarity import (
     cosine_topk,
-    lsh_index,
-    lsh_topk,
-    lsh_topk_indexed,
-    multiprobe_bits,
     sketch_index,
     sketch_signature_py,
     sketch_topk,
@@ -63,36 +60,6 @@ def test_sketch_accepts_prebuilt_index(spark, embs):
     assert [(r.vec_id, r.sim) for r in a.collect()] == [
         (r.vec_id, r.sim) for r in b.collect()
     ]
-
-
-def test_multiprobe_supersets_single_probe(spark, embs):
-    """Probe 1 is always the query's own bucket; more probes only add
-    candidates, so recall is monotone in n_probes."""
-    q = list(embs.where("vec_id = 0").first()["embedding"])
-    probes = multiprobe_bits(q, n_planes=8, n_tables=4, n_probes=6)
-    assert all(len(p) == 6 for p in probes)
-    single = multiprobe_bits(q, n_planes=8, n_tables=4, n_probes=1)
-    for t in range(4):
-        assert probes[t][0] == single[t][0]  # own bucket first
-        assert len(set(probes[t])) == len(probes[t])  # distinct buckets
-
-    idx = lsh_index(embs, dim=32, n_planes=8, n_tables=4)
-    r1 = {r.vec_id for r in lsh_topk_indexed(idx, q, k=50, n_planes=8,
-                                             n_tables=4, n_probes=1).collect()}
-    r6 = {r.vec_id for r in lsh_topk_indexed(idx, q, k=50, n_planes=8,
-                                             n_tables=4, n_probes=6).collect()}
-    assert len(r6) >= len(r1)
-
-
-def test_index_param_stamp_validates(spark, embs):
-    idx = lsh_index(embs, dim=32, n_planes=6, n_tables=4)
-    q = list(embs.where("vec_id = 0").first()["embedding"])
-    with pytest.raises(ValueError, match="n_planes"):
-        lsh_topk_indexed(idx, q, n_planes=8, n_tables=4)
-    with pytest.raises(ValueError, match="n_tables"):
-        lsh_topk_indexed(idx, q, n_planes=6, n_tables=8)
-    # matching params pass
-    lsh_topk_indexed(idx, q, k=5, n_planes=6, n_tables=4).collect()
 
 
 # ---------------------------------------------------------------------------
@@ -452,28 +419,44 @@ def test_pq_deterministic_across_parallelism(spark, embs):
 
 def test_pq_train_empty_code_keeps_init(spark):
     """A code that attracts no members survives training verbatim (the
-    oracle's COALESCE rule; PQ never normalizes centroids).  With a
-    corpus smaller than n_codes, the sample init seeds the first n
-    codes from data and the remainder from the random-literal fill —
-    the fill codes sit far from the data, never attract members, and
-    must come out of training unchanged."""
+    oracle's COALESCE rule; PQ never normalizes centroids).  The corpus
+    opens with duplicates, so the sample init seeds several identical
+    codes; ``argmin``'s first-index tie rule always prefers an earlier
+    copy, so the last copies never get a member."""
     from aqueduct_core_spark.functions.similarity import (
-        pq_init_codebooks, pq_sample_init, pq_train,
+        pq_sample_init, pq_train,
     )
+
+    # ids 0-3 share one vector, so init codes 0-3 are identical; ids
+    # 8-11 sit next to it and pull code 0 away during training
+    rows = [(i, [1.0] * 8) for i in range(4)]
+    rows += [(4 + j, [10.0 * (j + 1)] * 8) for j in range(4)]
+    rows += [(i, [2.0] * 8) for i in range(8, 12)]
+    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    smp = pq_sample_init(df, dim=8, n_sub=2, n_codes=8)
+    cbs = pq_train(df, dim=8, n_sub=2, n_codes=8)
+    for m in range(2):
+        assert smp[m][0] == smp[m][1] == smp[m][2] == smp[m][3]
+        # training did move the first copy ...
+        assert cbs[m][0] != smp[m][0], m
+        # ... while codes 2 and 3 lose every tie to an earlier copy,
+        # never get a member and come out verbatim
+        for k in (2, 3):
+            assert cbs[m][k] == smp[m][k], (m, k)
+
+
+def test_pq_sample_init_rejects_corpus_smaller_than_n_codes(spark):
+    """Fewer vectors than codes cannot seed every code from data; the
+    oracle's ``row_number() <= K`` seeding has no fallback either."""
+    from aqueduct_core_spark.functions.similarity import pq_sample_init, pq_train
 
     tiny = spark.createDataFrame(
         [(i, [float(i)] * 8) for i in range(3)], ["vec_id", "embedding"]
     )
-    cbs = pq_train(tiny, dim=8, n_sub=2, n_codes=8)
-    fill = pq_init_codebooks(8, n_sub=2, n_codes=8)
-    smp = pq_sample_init(tiny, dim=8, n_sub=2, n_codes=8)
-    # codes 4..8 are random fill (only 3 data vectors): at least some
-    # of them must survive verbatim; the sample codes 1..3 seed the
-    # data region
-    for m in range(2):
-        assert smp[m][:3] != fill[m][:3]
-        kept = sum(1 for k in range(3, 8) if cbs[m][k] == fill[m][k])
-        assert kept >= 4, (m, kept)
+    with pytest.raises(ValueError, match="n_codes=8"):
+        pq_sample_init(tiny, dim=8, n_sub=2, n_codes=8)
+    with pytest.raises(ValueError, match="n_codes=8"):
+        pq_train(tiny, dim=8, n_sub=2, n_codes=8)
 
 
 def test_pq_adc_scan_plan_has_no_exchange(spark, embs):
@@ -527,6 +510,49 @@ def test_ivfpq_equals_forest_when_rerank_covers_candidates(spark, embs):
         ).collect()
     ]
     assert got == want
+
+
+def _ops_above_leaf(plan, column):
+    """Operator names from the first leaf whose output has ``column`` up
+    to the plan root (leaf first); None when no leaf has it."""
+    kids = plan.children()
+    if kids.size() == 0:
+        out = plan.output()
+        names = {out.apply(i).name() for i in range(out.size())}
+        return [plan.nodeName()] if column in names else None
+    for i in range(kids.size()):
+        path = _ops_above_leaf(kids.apply(i), column)
+        if path is not None:
+            return path + [plan.nodeName()]
+    return None
+
+
+def test_ivfpq_codes_scan_is_not_shuffled(spark, embs):
+    """The candidate join broadcasts the candidate ids, so nothing
+    between the codes scan and the ADC cut moves the codes table: in
+    the plan before execution no Exchange sits above the codes scan
+    below the TakeOrderedAndProject, and the join is a broadcast hash
+    join.  (Without the hint the initial plan is a sort-merge join that
+    hash-shuffles the whole codes scan on id.)"""
+    from aqueduct_core_spark.functions.similarity import (
+        forest_index, forest_train, ivfpq_topk, pq_encode, pq_train,
+    )
+
+    q = list(embs.where("vec_id = 0").first()["embedding"])
+    fcbs = forest_train(embs, dim=32)
+    idx = forest_index(embs, fcbs).localCheckpoint()
+    pcbs = pq_train(embs, dim=32)
+    codes = pq_encode(embs, pcbs).localCheckpoint()
+    df = ivfpq_topk(idx, codes, q, fcbs, pcbs, embs, k=20, rerank=64)
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.initialPlan()
+    path = _ops_above_leaf(plan, "codes")
+    assert path is not None, plan.toString()
+    cut = path.index("TakeOrderedAndProject")
+    below_cut = path[:cut]
+    assert not [op for op in below_cut if "Exchange" in op], path
+    assert "BroadcastHashJoin" in below_cut, path
 
 
 def test_ivfpq_tight_rerank_recall_and_determinism(spark, embs):
