@@ -10,7 +10,7 @@ streaming apply loop, a ``remove`` racing an ``add``) each publish a
 meta derived from N, and the second blindly erases the first's commit —
 regressing watermarks and reverting other buckets' generation dirs, so
 the lost commit's rows vanish.  The table catalog solves exactly this
-with O_EXCL manifest claims (``catalog/snapshot.py``); this module is
+with link-claimed manifests (``catalog/snapshot.py``); this module is
 the same single-winner protocol for the satellite surfaces' meta:
 
 - the claim is an ``os.link`` of a fully-written temp file onto

@@ -1,9 +1,10 @@
 """Snapshot-manifest catalog: atomic commits over plain Parquet.
 
-On a real cluster the transcripts table is Apache Iceberg and this
-module is unused (see ``catalog.table.TranscriptTable`` which prefers
-Iceberg when the runtime jars are present).  In jar-less environments
-we need the same three guarantees Iceberg gives the engine:
+Every transcript table the engine applies to is a
+:class:`~aqueduct_core_spark.catalog.table.ParquetTranscriptTable`
+tracked by this catalog (the Iceberg class in ``catalog.table`` is not
+an alternative backend: no apply path accepts it).  The catalog gives
+the engine the three guarantees an Iceberg table would:
 
 1. **Atomic commit** — readers see the old or the new table state,
    never a half-written one (reference analog: one SQLite transaction
@@ -18,10 +19,11 @@ we need the same three guarantees Iceberg gives the engine:
 Implementation: a tiny JSON manifest per snapshot listing data files
 per bucket, plus a ``VERSION`` pointer file swapped with ``os.replace``
 (POSIX-atomic).  Manifests are metadata-only and O(files); the data
-plane never touches the driver.  Concurrent committers race on
-exclusive creation of the next manifest — optimistic concurrency, the
-loser retries/skips (reference analog: compaction advisory lock
-``SELECT … FOR UPDATE NOWAIT``, ``PostgresqlStorage.java:410-421``).
+plane never touches the driver.  Concurrent committers race to link a
+fully-written manifest onto the next version's name — optimistic
+concurrency with claims that are never torn; the loser retries/skips
+(reference analog: compaction advisory lock ``SELECT … FOR UPDATE
+NOWAIT``, ``PostgresqlStorage.java:410-421``).
 """
 
 from __future__ import annotations
@@ -335,7 +337,7 @@ class SnapshotCatalog:
         the Iceberg ``rollback_to_snapshot`` analog for undoing a bad
         epoch.  History is preserved (the undone snapshots stay
         readable until expired), the commit races through the same
-        O_EXCL manifest claim as any writer, and the exactly-once
+        manifest claim as any writer, and the exactly-once
         stamp (``aqueduct.epoch``/``aqueduct.max-lsn`` in the summary)
         and ``offsets_files`` revert with the target's content — so a
         subsequent replay resumes from the rolled-back watermark and
@@ -367,16 +369,24 @@ class SnapshotCatalog:
 
     # -- internals -----------------------------------------------------
     def _write_manifest(self, snap: dict) -> None:
+        """Claim ``v{N}.json`` with the whole manifest.  The manifest is
+        written and fsync'd under a temp name, then linked onto the
+        claim name; the link fails when the name exists (optimistic
+        concurrency control).  So a claim is never torn: a dump that
+        fails midway claims nothing."""
         path = os.path.join(self._snap_dir, f"v{snap['snapshot_id']}.json")
-        # exclusive create = optimistic concurrency control
+        tmp = os.path.join(self._snap_dir, f".v{snap['snapshot_id']}.{uuid.uuid4().hex}.tmp")
         try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            with open(tmp, "w") as f:
+                json.dump(snap, f)
+                f.flush()
+                os.fsync(f.fileno())
+            os.link(tmp, path)
         except FileExistsError as e:
             raise CommitConflict(f"snapshot v{snap['snapshot_id']} already exists") from e
-        with os.fdopen(fd, "w") as f:
-            json.dump(snap, f)
-            f.flush()
-            os.fsync(f.fileno())
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
 
     def _swap_version(self, version: int) -> None:
         tmp = os.path.join(self.root, f".VERSION.{uuid.uuid4().hex}.tmp")

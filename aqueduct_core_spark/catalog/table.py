@@ -1,16 +1,17 @@
 """Transcript table storage layer.
 
-Two interchangeable backends behind one interface:
+- :class:`ParquetTranscriptTable` — the table every apply, read and
+  maintenance path takes: plain Parquet files tracked by
+  :class:`SnapshotCatalog`, with atomic commits, snapshot isolation and
+  the exactly-once summary stamp.
+- :class:`IcebergTranscriptTable` — the statements the engine would run
+  against a real Iceberg table (``PARTITIONED BY (bucket(N, conv_id))``,
+  native ``MERGE INTO``).  It is not interchangeable: no apply path
+  accepts it.  It is exercised only by ``tools/iceberg_integration.py``
+  when the Iceberg runtime jar is on the classpath, and by tests that
+  parse its SQL.
 
-- :class:`IcebergTranscriptTable` — the production path: a real Iceberg
-  table (``PARTITIONED BY (bucket(N, conv_id))``) using native
-  ``MERGE INTO`` and snapshot-summary stamping.  Used when the Iceberg
-  runtime is on the classpath.
-- :class:`ParquetTranscriptTable` — the jar-less sandbox path: plain
-  Parquet files tracked by :class:`SnapshotCatalog`, giving the same
-  atomic-commit / snapshot-isolation / summary-stamp semantics.
-
-Layout (both): rows hash-bucketed by ``conv_id`` so all turns of a
+Layout: rows hash-bucketed by ``conv_id`` so all turns of a
 conversation co-locate and a MERGE touches only the buckets present in
 the incoming batch — the analog of the reference's cluster routing /
 partition pruning (``PostgresqlStorage.java:469-473``).
@@ -1090,11 +1091,11 @@ def iceberg_available(spark: SparkSession) -> bool:
 
 
 class IcebergTranscriptTable:
-    """Production backend: real Iceberg table + native MERGE INTO.
+    """A real Iceberg table + native MERGE INTO.
 
-    The apply pipeline prefers this backend when
-    :func:`iceberg_available` — the SQL here is what runs on the
-    1000-executor cluster.  Not exercised in the jar-less sandbox.
+    No apply path takes this class (see the module docstring);
+    ``tools/iceberg_integration.py`` drives it when
+    :func:`iceberg_available`.
     """
 
     def __init__(self, spark: SparkSession, identifier: str):

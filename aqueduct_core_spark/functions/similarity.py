@@ -1053,7 +1053,6 @@ def pq_sample_init(
     n_codes: int = PQ_K,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    seed: int = 13,
 ) -> list[list[list[int]]]:
     """Data-sample init: code k of subspace m = the QUANTIZED m-th
     subvector of the k-th smallest-id vector (deterministic, replayed
@@ -1064,8 +1063,7 @@ def pq_sample_init(
     and the quantization error stays huge; measured recall 0.49 → 0.87
     at equal budget vs random init on sf0.1, see BENCH.md).  A corpus
     with fewer than ``n_codes`` vectors cannot seed every code and
-    raises ``ValueError``.  ``seed`` is unused: the sample init draws
-    no random numbers."""
+    raises ``ValueError``."""
     if dim % n_sub:
         raise ValueError(f"dim {dim} not divisible into {n_sub} subspaces")
     d = dim // n_sub
@@ -1133,7 +1131,6 @@ def pq_train(
     iters: int = PQ_ITERS,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    seed: int = 13,
 ) -> list[list[list[int]]]:
     """Train all M sub-codebooks in ONE pass per iteration: a single
     Arrow-batched assignment, then one ``(m, code, sp) → (Σx_q, count)``
@@ -1148,7 +1145,7 @@ def pq_train(
     import math
 
     d = dim // n_sub
-    cbs = pq_sample_init(df, dim, n_sub, n_codes, vec_col, id_col, seed)
+    cbs = pq_sample_init(df, dim, n_sub, n_codes, vec_col, id_col)
     vq = F.transform(
         F.col(vec_col).cast("array<double>"),
         lambda x: F.floor(x * F.lit(1_000_000.0) + F.lit(0.5)).cast("long"),
@@ -1289,14 +1286,13 @@ def pq_search(
     iters: int = PQ_ITERS,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    seed: int = 13,
 ) -> DataFrame:
     """Convenience: train → encode → ADC+rerank in one call.  Amortized
     deployments train once, persist the codes table, and reuse it per
     query (the codes are the index)."""
     cbs = pq_train(
         df, len(query_vec), n_sub, n_codes, iters,
-        vec_col=vec_col, id_col=id_col, seed=seed,
+        vec_col=vec_col, id_col=id_col,
     )
     cd = pq_encode(df, cbs, vec_col, id_col)
     return pq_topk(cd, query_vec, cbs, df, k, rerank, vec_col, id_col)

@@ -77,6 +77,20 @@ def choose_block_bits(lo: int, hi: int, min_bits: int = 14,
     return bits
 
 
+def _pack(blocks, max_events: int, max_bytes: int) -> list[TriggerRange]:
+    """Greedily pack lsn-ordered ``(lo, hi, events, bytes)`` blocks into
+    trigger ranges honoring both budgets.  A block is the atomic unit:
+    one larger than a budget still becomes its own trigger."""
+    out: list[TriggerRange] = []
+    for lo, hi, n, b in blocks:
+        cur = out[-1] if out else None
+        if cur is None or cur.events + n > max_events or cur.bytes + b > max_bytes:
+            out.append(TriggerRange(lo, hi, n, b))
+        else:
+            cur.end_lsn, cur.events, cur.bytes = hi, cur.events + n, cur.bytes + b
+    return out
+
+
 def plan_triggers_from_files(
     file_index: list[tuple],
     max_events: int,
@@ -112,24 +126,16 @@ def plan_triggers_from_files(
             continue
         if start_lsn is not None and hi < start_lsn:
             continue
+        # clip to the window (keeps the order and disjointness of the
+        # kept files: both ends move monotonically)
+        lo = lo if start_lsn is None else max(lo, start_lsn)
+        hi = hi if end_lsn is None else min(hi, end_lsn)
         files.append((lo, hi, int(rows), int(nbytes)))
     files.sort()
     for (_, hi_a, _, _), (lo_b, _, _, _) in zip(files, files[1:]):
         if lo_b <= hi_a:
             return None  # overlapping lsn ranges: footer budgeting invalid
-    out: list[TriggerRange] = []
-    cur_start, cur_end, cur_n, cur_b = None, None, 0, 0
-    for lo, hi, n, b in files:
-        if cur_start is not None and (cur_n + n > max_events or cur_b + b > max_bytes):
-            out.append(TriggerRange(cur_start, cur_end, cur_n, cur_b))
-            cur_start, cur_n, cur_b = None, 0, 0
-        if cur_start is None:
-            cur_start = max(lo, start_lsn) if start_lsn is not None else lo
-        cur_end = min(hi, end_lsn) if end_lsn is not None else hi
-        cur_n, cur_b = cur_n + n, cur_b + b
-    if cur_start is not None:
-        out.append(TriggerRange(cur_start, cur_end, cur_n, cur_b))
-    return out
+    return _pack(files, max_events, max_bytes)
 
 
 def plan_triggers(
@@ -173,16 +179,7 @@ def plan_triggers(
         .orderBy("_blk")
         .collect()
     )
-    out: list[TriggerRange] = []
-    cur_start, cur_end, cur_n, cur_b = None, None, 0, 0
-    for r in stats:
-        n, b, lo, hi = int(r["n"]), int(r["b"]), int(r["lo"]), int(r["hi"])
-        if cur_start is not None and (cur_n + n > max_events or cur_b + b > max_bytes):
-            out.append(TriggerRange(cur_start, cur_end, cur_n, cur_b))
-            cur_start, cur_n, cur_b = None, 0, 0
-        if cur_start is None:
-            cur_start = lo
-        cur_end, cur_n, cur_b = hi, cur_n + n, cur_b + b
-    if cur_start is not None:
-        out.append(TriggerRange(cur_start, cur_end, cur_n, cur_b))
-    return out
+    return _pack(
+        ((int(r["lo"]), int(r["hi"]), int(r["n"]), int(r["b"])) for r in stats),
+        max_events, max_bytes,
+    )

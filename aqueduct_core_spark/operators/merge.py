@@ -64,21 +64,18 @@ def mor_prepare(
     table: ParquetTranscriptTable,
     batch: DataFrame,
     epoch: int,
-    cfg: EngineConfig,
 ) -> dict:
     """Phase A of an epoch: schema-align, LWW-resolve and WRITE the
     delta files — everything except the ordered commit.  Reads nothing
     from table state but one manifest's schema and bucket count (stable
     within a replay: every batch is a slice of one source DataFrame),
     so epoch N+1's phase A may run concurrently with epoch N's tail
-    (pipelined :func:`aqueduct_core_spark.streaming.pipeline.replay`).
+    (the epoch loop behind :func:`aqueduct_core_spark.streaming.pipeline.replay`).
     The bucket count the rows were hashed with is returned: the commit
     refuses a layout that changed underneath (a concurrent
     ``rebucket``).  The files it writes are invisible until
     :func:`apply_batch` commits them; on a crash or a refused commit
-    they are unreferenced orphans (``remove_orphan_files``).  ``cfg``
-    carries no phase-A knob; it is accepted for call symmetry with
-    :func:`apply_batch`."""
+    they are unreferenced orphans (``remove_orphan_files``)."""
     import time as _time
 
     t0 = _time.time()
@@ -200,7 +197,7 @@ def apply_batch(
                 "state": PIPE_UP_TO_DATE,
                 "added_columns": [],
             }
-        prewritten = mor_prepare(table, batch, epoch, cfg)
+        prewritten = mor_prepare(table, batch, epoch)
     return _apply_mor(
         table, epoch, cfg, prewritten, batch_max_lsn,
         extra_summary=extra_summary, publish=publish,
@@ -355,8 +352,8 @@ def _apply_mor(
         added_delta_buckets=prep["by_bucket"],
         added_offsets_files=[offsets_rel],
         summary_updates={
-            cfg.prop_epoch: int(epoch),
-            cfg.prop_max_lsn: int(batch_max_lsn),
+            "aqueduct.epoch": int(epoch),
+            "aqueduct.max-lsn": int(batch_max_lsn),
             "aqueduct.delta-epochs": delta_epochs,
             **({"aqueduct.added-columns": ",".join(added_cols)} if added_cols else {}),
             **(

@@ -14,10 +14,6 @@ registers (``/root/reference/pipe-http-server/.../PipeStatusController.java:16-1
   as JSON lines under ``<table root>/metrics/`` — driver-side, O(1) per
   batch, never a Spark job.  The exactly-once ``_offsets`` row rides in
   the data commit; this is the operational side channel.
-- :func:`attach_progress_listener` — a ``StreamingQueryListener``
-  recording Structured Streaming progress events (batch duration,
-  rows/s) to the same metrics directory; the listener is async, so the
-  recorder above is the deterministic source of truth in tests.
 """
 
 from __future__ import annotations
@@ -246,40 +242,6 @@ def streaming_sessions(
             "last_lsn",
         )
     )
-
-
-def attach_progress_listener(spark: SparkSession, out_path: str):
-    """Record Structured Streaming progress (async) as JSON lines —
-    batch duration, input rows, rows/s.  Returns the listener (pass to
-    ``spark.streams.removeListener`` when done)."""
-    from pyspark.sql.streaming import StreamingQueryListener
-
-    class _Listener(StreamingQueryListener):
-        def onQueryStarted(self, event):  # noqa: N802
-            pass
-
-        def onQueryProgress(self, event):  # noqa: N802
-            p = event.progress
-            line = {
-                "batch_id": p.batchId,
-                "num_input_rows": p.numInputRows,
-                "input_rows_per_sec": p.inputRowsPerSecond,
-                "duration_ms": p.durationMs.get("triggerExecution"),
-                "timestamp": p.timestamp,
-            }
-            os.makedirs(os.path.dirname(out_path), exist_ok=True)
-            with open(out_path, "a") as f:
-                f.write(json.dumps(line) + "\n")
-
-        def onQueryIdle(self, event):  # noqa: N802
-            pass
-
-        def onQueryTerminated(self, event):  # noqa: N802
-            pass
-
-    listener = _Listener()
-    spark.streams.addListener(listener)
-    return listener
 
 
 def epoch_lineage_audit(table_or_offsets) -> "DataFrame":

@@ -23,10 +23,15 @@ Spark re-expression of the reference's store-node sync loop
 
 from __future__ import annotations
 
+import time
+from collections import deque
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from aqueduct_core_spark.catalog.table import ParquetTranscriptTable
 from aqueduct_core_spark.config import EngineConfig
+from aqueduct_core_spark.operators import batching, merge
 from aqueduct_core_spark.operators.batching import plan_triggers
 from aqueduct_core_spark.operators.merge import apply_batch
 from aqueduct_core_spark.schema import CHANGES_SCHEMA
@@ -121,6 +126,93 @@ def _lsn_file_index(changes: DataFrame) -> list[tuple[str, int, int, int | None,
         return None
 
 
+def _plan(
+    changes: DataFrame,
+    cfg: EngineConfig,
+    start_lsn: int,
+    end_lsn: int | None = None,
+    lsn_bounds: tuple[int, int] | None = None,
+) -> tuple[list, DataFrame]:
+    """``(ranges, pending)``: the lsn-range triggers over the window
+    ``[start_lsn, end_lsn]`` of ``changes``, and that window.  Ranges
+    come from the footer index of the caller's bare scan when it has
+    one (zero Spark jobs, file-aligned epochs); otherwise, or when the
+    files overlap, from the scan-based :func:`plan_triggers` over the
+    window (``lsn_bounds`` skips its bounds job).  Each epoch's scan is
+    pruned by its literal lsn predicate (parquet pushdown)."""
+    # footer index BEFORE the window filters: they make the plan non-leaf
+    file_index = _lsn_file_index(changes)
+    pending = changes.where(F.col("lsn") >= start_lsn)
+    if end_lsn is not None:
+        pending = pending.where(F.col("lsn") <= end_lsn)
+    ranges = None
+    if file_index is not None:
+        ranges = batching.plan_triggers_from_files(
+            file_index,
+            max_events=cfg.max_events_per_trigger,
+            max_bytes=cfg.max_bytes_per_trigger,
+            start_lsn=start_lsn,
+            end_lsn=end_lsn,
+        )
+    if ranges is None:
+        ranges = plan_triggers(
+            pending,
+            max_events=cfg.max_events_per_trigger,
+            max_bytes=cfg.max_bytes_per_trigger,
+            lsn_bounds=lsn_bounds,
+        )
+    return ranges, pending
+
+
+def _apply_epochs(table: ParquetTranscriptTable, items, cfg: EngineConfig) -> list[dict]:
+    """The one epoch loop: apply an iterable of ``(batch, epoch, max-lsn
+    hint, extra summary)`` items, epochs ascending, and return their
+    metrics rows.
+
+    Phase A (:func:`~aqueduct_core_spark.operators.merge.mor_prepare`:
+    scan + argmax + delta write, reading nothing from table state) runs
+    up to :data:`PIPELINE_DEPTH` epochs ahead on pool threads; phase B
+    (footer bookkeeping + the atomic commit, through ``apply_batch``)
+    stays on this thread, strictly in epoch order.  An epoch at or
+    below the committed one is never prepared: it goes straight to
+    ``apply_batch``'s exactly-once guard, which returns the skip row or
+    raises ``EpochCollision``."""
+    committed = table.last_committed_epoch()
+    metrics: list[dict] = []
+    inflight: deque = deque()
+
+    def commit_oldest():
+        (_, epoch, hint, extra), fut = inflight.popleft()
+        prep = fut.result()
+        t0 = time.time()
+        m = apply_batch(table, None, epoch=epoch, cfg=cfg, batch_max_lsn=hint,
+                        prewritten=prep, extra_summary=extra)
+        m["epoch_sec"] = round(time.time() - t0 + prep["write_sec"], 3)
+        m["write_sec"] = prep["write_sec"]
+        metrics.append(m)
+
+    pool = ThreadPoolExecutor(max_workers=PIPELINE_DEPTH)
+    try:
+        for item in items:
+            batch, epoch, hint, extra = item
+            if epoch <= committed:
+                t0 = time.time()
+                m = apply_batch(table, batch, epoch=epoch, cfg=cfg,
+                                batch_max_lsn=hint, extra_summary=extra)
+                m["epoch_sec"] = round(time.time() - t0, 3)
+                metrics.append(m)
+                continue
+            while len(inflight) >= PIPELINE_DEPTH:
+                commit_oldest()
+            # merge.mor_prepare, looked up per call: a traced run wraps it
+            inflight.append((item, pool.submit(merge.mor_prepare, table, batch, epoch)))
+        while inflight:
+            commit_oldest()
+    finally:
+        pool.shutdown(wait=True, cancel_futures=True)
+    return metrics
+
+
 def replay(
     table: ParquetTranscriptTable,
     changes: DataFrame,
@@ -136,7 +228,8 @@ def replay(
     Each micro-batch reads only its lsn slice of the log through a
     literal ``lsn`` range predicate, which pushes into the parquet scan
     (row-group skipping).  Trigger ranges are planned from the
-    driver-side footer index when the log is a bare scan.
+    driver-side footer index when the log is a bare scan (:func:`_plan`)
+    and applied through the one epoch loop, :func:`_apply_epochs`.
     ``start_lsn``/``end_lsn`` bound the replay window (inclusive; pass
     the *bare* log plus these bounds rather than a pre-filtered
     DataFrame so manifest planning stays available).
@@ -151,108 +244,16 @@ def replay(
     cfg = cfg or EngineConfig()
     start_lsn = resume_lsn(table) if start_lsn is None else start_lsn
     epoch = table.last_committed_epoch() + 1 if start_epoch is None else start_epoch
-
-    # footer index over the caller's (unfiltered) scan, BEFORE the
-    # window filters are applied — they would make the plan non-leaf.
-    # It powers zero-job manifest trigger planning; each epoch's scan
-    # is pruned by its literal lsn predicate (parquet pushdown).
-    file_index = _lsn_file_index(changes)
-
-    pending = changes.where(F.col("lsn") >= start_lsn)
-    if end_lsn is not None:
-        pending = pending.where(F.col("lsn") <= end_lsn)
-
-    ranges = None
-    if file_index is not None:
-        # manifest-based planning: trigger ranges from footer stats
-        # alone — no Spark job, file-aligned epochs (None on overlap
-        # or missing stats → scan-based fallback below)
-        from aqueduct_core_spark.operators.batching import plan_triggers_from_files
-
-        ranges = plan_triggers_from_files(
-            file_index,
-            max_events=cfg.max_events_per_trigger,
-            max_bytes=cfg.max_bytes_per_trigger,
-            start_lsn=start_lsn,
-            end_lsn=end_lsn,
+    ranges, pending = _plan(changes, cfg, start_lsn, end_lsn, lsn_bounds)
+    return _apply_epochs(table, (
+        (
+            pending.where((F.col("lsn") >= r.start_lsn) & (F.col("lsn") <= r.end_lsn)),
+            epoch + i,
+            r.end_lsn,
+            None if source_id is None else {f"aqueduct.max-lsn-src-{source_id}": int(r.end_lsn)},
         )
-    if ranges is None:
-        ranges = plan_triggers(
-            pending,
-            max_events=cfg.max_events_per_trigger,
-            max_bytes=cfg.max_bytes_per_trigger,
-            overhead_per_msg=cfg.message_overhead_bytes,
-            lsn_bounds=lsn_bounds,
-        )
-    def _batch_for(r):
-        return pending.where(
-            (F.col("lsn") >= r.start_lsn) & (F.col("lsn") <= r.end_lsn)
-        )
-
-    import time as _time
-
-    def _extra(r):
-        if source_id is None:
-            return None
-        return {f"aqueduct.max-lsn-src-{source_id}": int(r.end_lsn)}
-
-    metrics = []
-    if len(ranges) > 1:
-        # Pipelined replay: phase A (plan + scan + argmax + delta
-        # write — reads nothing from table state) runs up to
-        # PIPELINE_DEPTH epochs ahead on pool threads; phase B (footer
-        # bookkeeping + the atomic commit) stays on this thread,
-        # strictly in epoch order.  Hides per-epoch driver latency and
-        # lets the next epoch's tasks fill the current epoch's
-        # straggler tail (FIFO scheduling keeps the older job's tasks
-        # at priority).
-        from collections import deque
-        from concurrent.futures import ThreadPoolExecutor
-
-        from aqueduct_core_spark.operators.merge import mor_prepare
-
-        pool = ThreadPoolExecutor(max_workers=PIPELINE_DEPTH)
-        futs: deque = deque()
-        try:
-            def _commit_oldest():
-                r, ep, fut = futs.popleft()
-                prew = fut.result()
-                t0 = _time.time()
-                m = apply_batch(
-                    table, None, epoch=ep, cfg=cfg,
-                    batch_max_lsn=r.end_lsn, prewritten=prew,
-                    extra_summary=_extra(r),
-                )
-                m["epoch_sec"] = round(_time.time() - t0 + prew["write_sec"], 3)
-                m["write_sec"] = prew["write_sec"]
-                m["pipelined"] = True
-                metrics.append(m)
-
-            for r in ranges:
-                while len(futs) >= PIPELINE_DEPTH:
-                    _commit_oldest()
-                batch = _batch_for(r)
-                futs.append(
-                    (r, epoch, pool.submit(mor_prepare, table, batch, epoch, cfg))
-                )
-                epoch += 1
-            while futs:
-                _commit_oldest()
-        finally:
-            pool.shutdown(wait=True, cancel_futures=True)
-        return metrics
-
-    for r in ranges:
-        batch = _batch_for(r)
-        # trigger planning already knows the batch's max lsn — no
-        # per-epoch max() job needed
-        t0 = _time.time()
-        m = apply_batch(table, batch, epoch=epoch, cfg=cfg, batch_max_lsn=r.end_lsn,
-                        extra_summary=_extra(r))
-        m["epoch_sec"] = round(_time.time() - t0, 3)
-        metrics.append(m)
-        epoch += 1
-    return metrics
+        for i, r in enumerate(ranges)
+    ), cfg)
 
 
 def resume_lsn_for_source(table: ParquetTranscriptTable, source_id: int | str) -> int:
@@ -349,25 +350,7 @@ def replay_demux(
         k: (F.expr(p) if isinstance(p, str) else p) for k, p in routes.items()
     }
 
-    file_index = _lsn_file_index(changes)
-    ranges = None
-    if file_index is not None:
-        from aqueduct_core_spark.operators.batching import plan_triggers_from_files
-
-        ranges = plan_triggers_from_files(
-            file_index,
-            max_events=cfg.max_events_per_trigger,
-            max_bytes=cfg.max_bytes_per_trigger,
-            start_lsn=0,
-        )
-    if ranges is None:
-        ranges = plan_triggers(
-            changes,
-            max_events=cfg.max_events_per_trigger,
-            max_bytes=cfg.max_bytes_per_trigger,
-            overhead_per_msg=cfg.message_overhead_bytes,
-        )
-
+    ranges, _ = _plan(changes, cfg, start_lsn=0)
     metrics: dict = {k: [] for k in tables}
     for i, r in enumerate(ranges):
         # Skip by LSN WATERMARK, not epoch index: the watermark is
@@ -522,7 +505,6 @@ def _foreach_batch_fn(
     table: ParquetTranscriptTable,
     cfg: EngineConfig,
     record_metrics: bool = False,
-    rollup=None,
     audits: dict | None = None,
     maintainers: list | None = None,
     history=None,
@@ -543,15 +525,11 @@ def _foreach_batch_fn(
                 )
         else:
             m = apply_batch(table, batch_df, epoch=batch_id, cfg=cfg)
-        if rollup is not None:
-            # continuous materialization: dirty-group refresh rides the
-            # same driver turn as the commit; a replayed (skipped) epoch
-            # leaves the table version unchanged, so refresh no-ops —
-            # the rollup stays exactly-once for free
-            m["rollup"] = rollup.refresh(table)
-        # generic continuous maintenance: anything with .refresh(table)
-        # (e.g. functions.dedup_index.DedupIndexMaintainer) rides the
-        # same driver turn; skipped epochs no-op for the same reason
+        # continuous maintenance: anything with .refresh(table) (a
+        # ConvRollup, functions.dedup_index.DedupIndexMaintainer) rides
+        # the same driver turn as the commit, in list order; a replayed
+        # (skipped) epoch leaves the table version unchanged, so every
+        # refresh no-ops — maintainers stay exactly-once for free
         for mt in maintainers or []:
             m[getattr(mt, "name", type(mt).__name__)] = mt.refresh(table)
         if history is not None:
@@ -569,7 +547,7 @@ def _foreach_batch_fn(
             # PreferencePairsView) refresh on the same driver turn; a
             # skipped/re-delivered epoch leaves the history's bucket
             # mapping unchanged, so the refresh no-ops — exactly-once
-            # for free, same induction as the rollup above
+            # for free, same induction as the maintainers above
             for hv in history_views or []:
                 m[getattr(hv, "name", type(hv).__name__)] = hv.refresh(history)
         return m
@@ -626,7 +604,6 @@ def start_stream(
     available_now: bool = False,
     record_metrics: bool = False,
     dedup_within: str | None = None,
-    rollup=None,
     audits: dict | None = None,
     maintainers: list | None = None,
     wire_format: str = "parquet",
@@ -640,10 +617,11 @@ def start_stream(
     appends per-batch telemetry (T9 health/lag monitoring) to
     ``<table root>/metrics/batches.jsonl``.  ``dedup_within`` (e.g.
     ``"10 minutes"``) inserts :func:`dedup_redeliveries` ahead of the
-    merge.  ``rollup`` (a :class:`~aqueduct_core_spark.operators.rollup.
-    ConvRollup`) keeps a downstream materialization continuously fresh:
-    each committed epoch triggers an incremental dirty-group refresh.
-    ``audits`` routes every epoch through write-audit-publish
+    merge.  ``maintainers``: objects with ``refresh(table)`` (e.g. a
+    :class:`~aqueduct_core_spark.operators.rollup.ConvRollup`) refreshed
+    in list order after each commit, keeping downstream
+    materializations continuously fresh.  ``audits`` routes every
+    epoch through write-audit-publish
     (:func:`aqueduct_core_spark.operators.merge.apply_audited`): readers
     never see an unaudited state, and a failing audit raises
     :class:`AuditFailed` to stop the query BEFORE the checkpoint
@@ -674,7 +652,7 @@ def start_stream(
             # dedupes re-delivered dead letters on (epoch, raw) anyway)
             stream = dedup_redeliveries(stream, dedup_within)
 
-        inner = _foreach_batch_fn(table, cfg, record_metrics, rollup=rollup,
+        inner = _foreach_batch_fn(table, cfg, record_metrics,
                                   audits=audits, maintainers=maintainers,
                                   history=history,
                                   history_views=history_views)
@@ -704,7 +682,7 @@ def start_stream(
         stream = reader.parquet(changes_dir)
         if dedup_within:
             stream = dedup_redeliveries(stream, dedup_within)
-        batch_fn = _foreach_batch_fn(table, cfg, record_metrics, rollup=rollup,
+        batch_fn = _foreach_batch_fn(table, cfg, record_metrics,
                                      audits=audits, maintainers=maintainers,
                                      history=history,
                                      history_views=history_views)
@@ -733,7 +711,6 @@ def run_available_now(
     timeout_s: int = 3600,
     record_metrics: bool = False,
     dedup_within: str | None = None,
-    rollup=None,
     audits: dict | None = None,
     maintainers: list | None = None,
     wire_format: str = "parquet",
@@ -753,7 +730,6 @@ def run_available_now(
         available_now=True,
         record_metrics=record_metrics,
         dedup_within=dedup_within,
-        rollup=rollup,
         audits=audits,
         maintainers=maintainers,
         wire_format=wire_format,
@@ -868,22 +844,21 @@ def bootstrap_from_state(
     ``state`` is transcript-shaped rows carrying their winning source
     ``lsn`` (the shape ``read_internal`` returns, with ``_lsn`` or
     ``lsn``).  Each row becomes an ``'I'`` change event at its original
-    lsn and the whole snapshot applies as epoch 0; the exactly-once
+    lsn and the whole snapshot applies as one epoch: this is
+    :func:`bootstrap_chunked` with ``n_chunks=1``.  The exactly-once
     watermark lands at ``as_of_lsn`` (default: the snapshot's max row
     lsn), so :func:`resume_lsn` hands the subsequent tail its correct
     start.  The tail may OVERLAP the snapshot arbitrarily: LWW by lsn
     makes re-delivered rows idempotent, so "snapshot at X, tail from
     X - δ" converges to the same state as a full replay — no
     coordination between the snapshotter and the log reader needed.
+    Returns the epoch's metrics row plus ``bootstrap_as_of_lsn``; on a
+    table whose bootstrap already completed nothing is applied and the
+    row holds only ``bootstrap_as_of_lsn``.
     """
-    cfg = cfg or EngineConfig()
-    as_events = _state_as_events(state)
-    if as_of_lsn is None:
-        as_of_lsn = _state_max_lsn(as_events)
-    from aqueduct_core_spark.operators.merge import apply_batch
-
-    m = apply_batch(table, as_events, epoch=0, cfg=cfg, batch_max_lsn=as_of_lsn)
-    m["bootstrap_as_of_lsn"] = int(as_of_lsn)
+    out = bootstrap_chunked(table, state, cfg, n_chunks=1, as_of_lsn=as_of_lsn)
+    m = out["metrics"][0] if out["metrics"] else {}
+    m["bootstrap_as_of_lsn"] = out["as_of_lsn"]
     return m
 
 
@@ -950,7 +925,10 @@ def bootstrap_chunked(
     load is split into deterministic key-hash chunks, each applied and
     committed as its own epoch, so a crash loses at most one chunk of
     work and a multi-day 100 TB initial load survives restarts.  The
-    one-shot :func:`bootstrap_from_state` is the n_chunks=1 projection.
+    one-shot :func:`bootstrap_from_state` is this with ``n_chunks=1``.
+    Chunks are applied through the one epoch loop,
+    :func:`_apply_epochs`, so chunk i+1's delta write overlaps chunk
+    i's commit.
 
     Each chunk's commit atomically records the NEXT chunk index
     (``aqueduct.bootstrap-next-chunk``), the pinned chunk count and the
@@ -974,8 +952,6 @@ def bootstrap_chunked(
     chunks still commit (progress must advance through them).  Returns
     ``{chunks_applied, next_chunk, complete, as_of_lsn, metrics}``.
     """
-    from aqueduct_core_spark.operators.merge import apply_batch
-
     cfg = cfg or EngineConfig()
     if n_chunks < 1:
         raise ValueError("n_chunks must be >= 1")
@@ -1006,28 +982,29 @@ def bootstrap_chunked(
 
     chunk_col = F.pmod(F.hash(F.col("conv_id")), F.lit(int(n_chunks)))
     end = n_chunks if max_chunks is None else min(n_chunks, next_chunk + int(max_chunks))
-    metrics = []
-    for i in range(next_chunk, end):
-        last = i == n_chunks - 1
-        # intermediate hint = current watermark: forces a commit even
-        # for an empty chunk (progress key must advance) without
-        # claiming log coverage the bootstrap doesn't have yet; the
-        # LAST chunk stamps the snapshot's as_of exactly
-        hint = as_of if last else table.last_committed_lsn()
-        m = apply_batch(
-            table,
+    # intermediate hint = the watermark before this call: forces a
+    # commit even for an empty chunk (progress key must advance)
+    # without claiming log coverage the bootstrap doesn't have yet (the
+    # commit takes the max with the head's watermark); the LAST chunk
+    # stamps the snapshot's as_of exactly
+    watermark = table.last_committed_lsn()
+    epoch = table.last_committed_epoch() + 1
+    chunks = range(next_chunk, end)
+    metrics = _apply_epochs(table, (
+        (
             as_events.where(chunk_col == F.lit(i)),
-            epoch=table.last_committed_epoch() + 1,
-            cfg=cfg,
-            batch_max_lsn=hint,
-            extra_summary={
+            epoch + k,
+            as_of if i == n_chunks - 1 else watermark,
+            {
                 _BOOT_CHUNKS_KEY: int(n_chunks),
                 _BOOT_NEXT_KEY: int(i + 1),
                 _BOOT_AS_OF_KEY: int(as_of),
             },
         )
+        for k, i in enumerate(chunks)
+    ), cfg)
+    for i, m in zip(chunks, metrics):
         m["bootstrap_chunk"] = i
-        metrics.append(m)
     done = end >= n_chunks
     return {
         "chunks_applied": end - next_chunk,

@@ -1,7 +1,7 @@
 """CAS meta protocol shared by the satellite surfaces (SCD2 history,
 ConvView rollups, DedupIndex): single-winner publication, loud loser,
-crash roll-forward — the same guarantee the table catalog's O_EXCL
-manifest claims give the transcript table itself."""
+crash roll-forward — the same guarantee the table catalog's link-claimed
+manifests give the transcript table itself."""
 
 import json
 import os
@@ -254,3 +254,23 @@ def test_cleanup_publishes_floor_so_freed_slots_conflict(vm):
     with pytest.raises(MetaCommitConflict):
         vm.commit(stale, base_version=0)  # would re-link freed v1
     assert vm.read()["epoch"] == 3
+
+
+def test_failed_manifest_write_claims_no_version(tmp_path):
+    """The table catalog's manifest claim is content-atomic: a commit
+    whose manifest cannot be serialized raises and leaves no torn
+    ``v{N}.json``, so the next commit, liveness scans and staged-version
+    discovery all still work."""
+    from aqueduct_core_spark.catalog.snapshot import SnapshotCatalog
+
+    cat = SnapshotCatalog(str(tmp_path / "t"))
+    base = cat.create([])
+    with pytest.raises(TypeError):
+        cat.commit(base, summary_updates={"bad": object()})
+    assert cat.history() == [0]
+    assert cat.staged_version() is None
+    assert cat.referenced_files() == set()
+    snap = cat.commit(base, added_offsets_files=["o.parquet"])
+    assert cat.current_version() == 1 and snap["offsets_files"] == ["o.parquet"]
+    assert cat.expire_snapshots(keep_last=1) == []
+    assert sorted(os.listdir(cat._snap_dir)) == ["v1.json"]

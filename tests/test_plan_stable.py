@@ -3,6 +3,8 @@ scan, zero-job manifest trigger planning, replay windows, and
 literal ``lsn``-range epoch slices (which push into the parquet scan).
 """
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -32,9 +34,9 @@ def test_file_index_refuses_non_leaf_plans(spark, log_dir):
 
 
 def test_replay_state_identical_both_modes(spark, log_dir, tmp_path):
-    """End-to-end: a pipelined multi-epoch replay and a replay applied
-    one epoch per call (the sequential apply path, as a tailing replica
-    runs it) produce the same final table state as the pandas oracle."""
+    """End-to-end: a multi-epoch replay and a replay applied one epoch
+    per call (as a tailing replica runs it) produce the same final
+    table state as the pandas oracle."""
     log = spark.read.schema(CHANGES_SCHEMA).parquet(log_dir)
     pdf = log.toPandas()
     expected = expected_state_pdf(pdf)
@@ -56,7 +58,6 @@ def test_replay_state_identical_both_modes(spark, log_dir, tmp_path):
     t = ParquetTranscriptTable.create(spark, str(tmp_path / "pipelined"), num_buckets=4)
     metrics = replay(t, log, cfg, start_epoch=0, start_lsn=0)
     assert len(metrics) > 3  # genuinely multi-epoch
-    assert all(m.get("pipelined") for m in metrics)
     check(t)
 
     one = EngineConfig(
@@ -65,7 +66,7 @@ def test_replay_state_identical_both_modes(spark, log_dir, tmp_path):
     t = ParquetTranscriptTable.create(spark, str(tmp_path / "per-call"), num_buckets=4)
     for m in metrics:
         (got,) = replay(t, log, one, end_lsn=m["last_lsn"])
-        assert not got.get("pipelined") and got["last_lsn"] == m["last_lsn"]
+        assert got["last_lsn"] == m["last_lsn"]
     check(t)
 
 
@@ -151,3 +152,56 @@ def test_replay_window_end_lsn(spark, log_dir, tmp_path):
     got = t.read_internal().orderBy("conv_id", "turn_idx").toPandas()
     assert len(got) == len(expected)
     assert (got["_lsn"].to_numpy() == expected["_lsn"].to_numpy()).all()
+
+
+def _delta_files(root):
+    return sorted(
+        os.path.join(d, f)
+        for d, _, fs in os.walk(os.path.join(root, "delta"))
+        for f in fs
+    )
+
+
+def test_committed_replay_rerun_prepares_nothing(spark, log_dir, tmp_path):
+    """Rerunning a committed multi-epoch replay from epoch 0 / lsn 0
+    skips every epoch through the exactly-once guard without preparing
+    it: no commit and no delta file written (a prepared-then-skipped
+    epoch would leave its deltas behind as orphans)."""
+    log = spark.read.schema(CHANGES_SCHEMA).parquet(log_dir)
+    cfg = EngineConfig(
+        num_buckets=4, max_events_per_trigger=600, max_bytes_per_trigger=1 << 30
+    )
+    t = ParquetTranscriptTable.create(spark, str(tmp_path / "t"), num_buckets=4)
+    first = replay(t, log, cfg, start_epoch=0, start_lsn=0)
+    assert len(first) > 3
+    v, files = t.catalog.current_version(), _delta_files(t.root)
+
+    again = replay(t, log, cfg, start_epoch=0, start_lsn=0)
+    assert [m["state"] for m in again] == ["SKIPPED_DUPLICATE_EPOCH"] * len(first)
+    assert t.catalog.current_version() == v
+    assert _delta_files(t.root) == files
+
+
+def test_committed_epoch_with_new_lsns_raises_collision(spark, log_dir, tmp_path):
+    """A committed epoch number whose slice carries lsns past the
+    watermark is not a re-delivery: the replay raises EpochCollision
+    and commits and writes nothing, not even for the later epochs of
+    the same call."""
+    from aqueduct_core_spark.operators.merge import EpochCollision
+
+    log = spark.read.schema(CHANGES_SCHEMA).parquet(log_dir)
+    cfg = EngineConfig(
+        num_buckets=4, max_events_per_trigger=600, max_bytes_per_trigger=1 << 30
+    )
+    t = ParquetTranscriptTable.create(spark, str(tmp_path / "t"), num_buckets=4)
+    first = replay(t, log, cfg, start_epoch=0, start_lsn=0)
+    head = first[0]["last_lsn"]
+    t = ParquetTranscriptTable.create(spark, str(tmp_path / "head"), num_buckets=4)
+    (m,) = replay(t, log, cfg, start_epoch=0, start_lsn=0, end_lsn=head)
+    assert m["epoch"] == 0
+    v, files = t.catalog.current_version(), _delta_files(t.root)
+
+    with pytest.raises(EpochCollision, match="NOT a re-delivery"):
+        replay(t, log, cfg, start_epoch=0, start_lsn=head + 1)
+    assert t.catalog.current_version() == v
+    assert _delta_files(t.root) == files

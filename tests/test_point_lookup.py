@@ -285,7 +285,7 @@ def test_epoch_commit_refuses_deltas_hashed_before_rebucket(spark, tmp_path):
     replay(table, log, cfg, end_lsn=half)
     epoch = table.last_committed_epoch() + 1
 
-    prep = mor_prepare(table, log.where(F.col("lsn") > half), epoch, cfg)
+    prep = mor_prepare(table, log.where(F.col("lsn") > half), epoch)
     rebucket(table, 8)
     after_rebucket = state_digest(table.read_internal())
     with pytest.raises(CommitConflict):

@@ -133,7 +133,7 @@ def test_streaming_rollup_stays_fresh(spark, tmp_path):
 
     run_available_now(
         spark, table, changes_dir, str(tmp_path / "ckpt"), cfg,
-        max_files_per_trigger=2, rollup=rollup,
+        max_files_per_trigger=2, maintainers=[rollup],
     )
     assert table.catalog.current_version() >= 2  # multiple epochs ran
     assert rollup.last_table_version() == table.catalog.current_version()
@@ -142,7 +142,7 @@ def test_streaming_rollup_stays_fresh(spark, tmp_path):
     v = rollup.last_table_version()
     run_available_now(
         spark, table, changes_dir, str(tmp_path / "ckpt2"), cfg,
-        max_files_per_trigger=2, rollup=rollup,
+        max_files_per_trigger=2, maintainers=[rollup],
     )
     assert rollup.last_table_version() == v  # skipped epochs -> noop refreshes
     _assert_rollup_equal(rollup, table)

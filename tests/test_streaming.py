@@ -353,10 +353,9 @@ def test_full_topology_every_hook_at_once(spark, tmp_path):
         wire_format="json-envelope",
         quarantine_dir=qdir,
         record_metrics=True,
-        rollup=rollup,
         history=hist,
         history_views=[pv],
-        maintainers=[DedupIndexMaintainer(ix, cur)],
+        maintainers=[rollup, DedupIndexMaintainer(ix, cur)],
     )
     run_available_now(spark, table, str(src), str(tmp_path / "ck"), cfg, **kwargs)
 

@@ -3,7 +3,7 @@
 WAP: stage an epoch's commit unpublished, audit the staged state, then
 publish (atomic pointer swap) or abandon (manifest removed, data files
 orphaned).  The Iceberg-WAP analog of the reference's pre-publish
-validation, layered on the snapshot catalog's O_EXCL manifest claim.
+validation, layered on the snapshot catalog's manifest claim.
 """
 
 import pytest
