@@ -180,13 +180,8 @@ class SnapshotCatalog:
         always carries its verb."""
         sid = snap["summary"].get("aqueduct.stage-id", f"v{snap['snapshot_id']}")
         path = os.path.join(self._snap_dir, f".decide-{sid}")
-        tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(verb)
-            f.flush()
-            os.fsync(f.fileno())
         try:
-            os.link(tmp, path)
+            _claim(path, lambda f: f.write(verb))
             return verb
         except FileExistsError:
             with open(path) as f:
@@ -198,8 +193,6 @@ class SnapshotCatalog:
                     "decision claim; manual repair required"
                 ) from None
             return winner
-        finally:
-            os.remove(tmp)
 
     # -- write-audit-publish --------------------------------------------
     def staged_version(self) -> int | None:
@@ -272,9 +265,10 @@ class SnapshotCatalog:
         """Create an immutable named ref to a snapshot version (Iceberg
         tag analog — e.g. pin the exact table state a training run
         read).  Tagged versions are retained by ``expire_snapshots``
-        regardless of ``keep_last``.  Names are claimed with O_EXCL:
-        re-tagging an existing name raises (immutability), racing
-        taggers get one winner."""
+        regardless of ``keep_last``.  Names are claimed whole (see
+        :func:`_claim`): re-tagging an existing name raises
+        (immutability), racing taggers get one winner, and a failed
+        write leaves no ref."""
         import re
 
         if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9._-]*", name):
@@ -282,15 +276,11 @@ class SnapshotCatalog:
         version = self.current_version() if version is None else int(version)
         self.load(version)  # must exist
         os.makedirs(self._refs_dir(), exist_ok=True)
-        path = os.path.join(self._refs_dir(), f"{name}.json")
+        ref = {"name": name, "version": version, "created": utcnow_iso()}
         try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            _claim(os.path.join(self._refs_dir(), f"{name}.json"), lambda f: json.dump(ref, f))
         except FileExistsError as e:
             raise CommitConflict(f"tag {name!r} already exists") from e
-        with os.fdopen(fd, "w") as f:
-            json.dump({"name": name, "version": version, "created": utcnow_iso()}, f)
-            f.flush()
-            os.fsync(f.fileno())
         return version
 
     def delete_tag(self, name: str) -> int:
@@ -369,24 +359,14 @@ class SnapshotCatalog:
 
     # -- internals -----------------------------------------------------
     def _write_manifest(self, snap: dict) -> None:
-        """Claim ``v{N}.json`` with the whole manifest.  The manifest is
-        written and fsync'd under a temp name, then linked onto the
-        claim name; the link fails when the name exists (optimistic
-        concurrency control).  So a claim is never torn: a dump that
-        fails midway claims nothing."""
+        """Claim ``v{N}.json`` with the whole manifest (:func:`_claim`);
+        an existing name is a lost race (optimistic concurrency
+        control)."""
         path = os.path.join(self._snap_dir, f"v{snap['snapshot_id']}.json")
-        tmp = os.path.join(self._snap_dir, f".v{snap['snapshot_id']}.{uuid.uuid4().hex}.tmp")
         try:
-            with open(tmp, "w") as f:
-                json.dump(snap, f)
-                f.flush()
-                os.fsync(f.fileno())
-            os.link(tmp, path)
+            _claim(path, lambda f: json.dump(snap, f))
         except FileExistsError as e:
             raise CommitConflict(f"snapshot v{snap['snapshot_id']} already exists") from e
-        finally:
-            if os.path.exists(tmp):
-                os.remove(tmp)
 
     def _swap_version(self, version: int) -> None:
         tmp = os.path.join(self.root, f".VERSION.{uuid.uuid4().hex}.tmp")
@@ -440,6 +420,25 @@ class SnapshotCatalog:
                 except FileNotFoundError:
                     pass
         return orphans
+
+
+def _claim(path: str, write) -> None:
+    """Create ``path`` whole or not at all: ``write(f)`` fills a temp
+    file beside it, which is fsync'd and then hard-linked onto
+    ``path``.  The link raises ``FileExistsError`` when ``path`` exists,
+    so racing claimers get one winner; a ``write`` that fails midway
+    claims nothing, and the temp file is always removed."""
+    d, name = os.path.split(path)
+    tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex}.tmp")
+    try:
+        with open(tmp, "w") as f:
+            write(f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.link(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
 
 
 def utcnow_iso() -> str:

@@ -27,9 +27,8 @@ Design:
   **0.95×** raw parquet bytes on the f32 sf0.1 corpus at dim=64 — the
   index is smaller than the table it indexes; membership alone is
   ~0.29× and dim-independent).
-  The probe DISTINCTs the pruned candidate ids and joins them to the
-  vector store for the exact rerank; at cluster scale the store is
-  bucketed by id so that join shuffles only the narrow candidate side.
+  The probe broadcasts the pruned candidate ids into a left-semi join
+  with the vector store for the exact rerank, so nothing is shuffled.
 - Retraction: tombstone files ``(id, v)`` kill membership AND vector
   rows with ``row.v <= tomb.v`` — re-adding a removed vector (stamped
   with a later version) survives, so remove→re-add round-trips to the
@@ -52,6 +51,7 @@ from aqueduct_core_spark.catalog.meta import VersionedMeta
 from aqueduct_core_spark.functions.similarity import (
     FOREST_PROBES,
     _forest_assign_udf,
+    _probe_predicate,
     cosine_sim,
     forest_probe_cells,
     round6,
@@ -374,8 +374,8 @@ class ForestIndex:
     ) -> DataFrame:
         """Probe the persisted index: driver-side probe cells under the
         frozen codebooks → part-pruned explicit membership file list
-        (no listing jobs) → (tbl, cell) filter → DISTINCT candidate
-        ids → join to the (id, vec) store → exact cosine rerank.
+        (no listing jobs) → (tbl, cell) filter → broadcast left-semi
+        join of the (id, vec) store → exact cosine rerank.
         Result-identical to
         :func:`similarity.forest_topk` over a one-shot
         :func:`similarity.forest_index` built with the same codebooks."""
@@ -388,14 +388,7 @@ class ForestIndex:
         parts = {
             (t * kcells + c) % meta["num_parts"] for t, c in pairs
         }
-        by_tbl: dict[int, list[int]] = {}
-        for t, c in pairs:
-            by_tbl.setdefault(t, []).append(int(c))
-        pred = None
-        for t, cells in by_tbl.items():
-            h = (F.col("tbl") == t) & F.col("cell").isin(cells)
-            pred = h if pred is None else pred | h
-        cand_ids = self._read_parts(parts).where(pred).select("id").distinct()
+        cand_ids = self._read_parts(parts).where(_probe_predicate(pairs)).select("id")
         if rerank is not None:
             if not meta.get("pq_codebooks"):
                 raise ValueError(
@@ -406,7 +399,7 @@ class ForestIndex:
 
             cand_ids = (
                 self._read_codes()
-                .join(cand_ids, on="id")
+                .join(F.broadcast(cand_ids), on="id", how="left_semi")
                 .select(
                     "id",
                     pq_adc_score(
@@ -417,7 +410,7 @@ class ForestIndex:
                 .limit(int(rerank))
                 .select("id")
             )
-        cand = cand_ids.join(self._read_vecs(), on="id")
+        cand = self._read_vecs().join(F.broadcast(cand_ids), on="id", how="left_semi")
         sim = round6(cosine_sim("vec", list(query_vec), dim=len(query_vec)))
         return (
             cand.select(F.col("id").alias("vec_id"), sim.alias("sim"))

@@ -706,10 +706,10 @@ def decontaminate_embeddings(
 # membership itself ~0.1× and dim-independent, so the ratio falls
 # toward 1 as dim grows).  A
 # query prunes membership to 2·T cell-partitions by literal IN —
-# partition pruning, no scan of the other ~78% of ids — DISTINCTs the
-# candidate ids (narrow shuffle), and joins them to the id-bucketed
-# vector store, so vector bytes move exactly once for the ~25% that
-# matched.  Training reads a bounded sample (a quantizer needs ~10³·K
+# partition pruning, no scan of the other ~78% of ids — broadcasts the
+# matched ids into a left-semi join with the id-bucketed vector store,
+# so neither side is shuffled and only the ~25% of vectors that matched
+# reach the rerank.  Training reads a bounded sample (a quantizer needs ~10³·K
 # vectors, not the corpus), assignment is one Arrow-batched map pass
 # (no shuffle), and the training aggregation shuffles at most
 # n_tables × n_cells × dim narrow rows.
@@ -875,8 +875,8 @@ def forest_index(
     amplified vector storage T=18× — three ints per membership row is
     ~1.06× total with the single vector store).  At scale: write once,
     clustered by (tbl, cell); a probe partition-prunes to 2·T cells,
-    takes DISTINCT candidate ids, and reranks by joining those ids back
-    to the (id, vec) store (:func:`forest_topk` ``vectors=``)."""
+    broadcasts the matched ids, and reranks the (id, vec) store rows
+    they semi-join (:func:`forest_topk` ``vectors=``)."""
     assign = _forest_assign_udf(codebooks)
     return df.select(
         F.col(id_col).alias("id"),
@@ -939,6 +939,22 @@ def forest_probe_cells(
     return [(t, cell) for _, t, cell in scored[:n_cells]]
 
 
+def _probe_predicate(pairs: list[tuple[int, int]]) -> Column:
+    """Membership rows of the probed ``(tbl, cell)`` pairs: one literal
+    ``tbl = t AND cell IN (...)`` term per table, so a (tbl,
+    cell)-clustered membership table prunes.  Callers keep the matched
+    ids un-deduplicated (an id matches in up to one cell per table) and
+    broadcast them into a left-semi join, which needs no shuffle."""
+    by_tbl: dict[int, list[int]] = {}
+    for t, c in pairs:
+        by_tbl.setdefault(t, []).append(int(c))
+    pred = None
+    for t, cells in by_tbl.items():
+        h = (F.col("tbl") == t) & F.col("cell").isin(cells)
+        pred = h if pred is None else (pred | h)
+    return pred
+
+
 def forest_topk(
     index: DataFrame,
     query_vec: list[float],
@@ -949,17 +965,17 @@ def forest_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Union the probed cells across tables, DISTINCT the candidate
-    ids, join them back to the ``vectors`` (id, vec) store, exact
-    cosine rerank (the established round6 + sequential-fold
-    convention).  The probe budget is ``n_probes × n_tables`` cells
-    chosen GLOBALLY (:func:`forest_probe_cells` — best-bin-first, the
-    measured dominant strategy at equal scan cost).  The cell filter is
-    a literal predicate — partition pruning on a (tbl, cell)-clustered
-    membership table; only NARROW (id) rows ride the candidate shuffle,
-    and vector bytes move once, for the ~25% of ids that matched.  At
-    100 TB the vector store is bucketed by id so this join shuffles
-    only the candidate side."""
+    """Union the probed cells across tables, semi-join the matched
+    ids against the ``vectors`` (id, vec) store, exact cosine rerank
+    (the established round6 + sequential-fold convention).  The probe
+    budget is ``n_probes × n_tables`` cells chosen GLOBALLY
+    (:func:`forest_probe_cells` — best-bin-first, the measured dominant
+    strategy at equal scan cost).  The cell filter is a literal
+    predicate — partition pruning on a (tbl, cell)-clustered membership
+    table.  The matched ids are broadcast un-deduplicated
+    (at most one row per probed table per vector) into a left-semi
+    join, so neither the membership scan nor the vector store is
+    shuffled."""
     if vectors is None:  # legacy wide index: (id, vec, tbl, cell)
         if "vec" not in index.columns:
             raise ValueError("forest_topk needs vectors= for a narrow index")
@@ -969,17 +985,10 @@ def forest_topk(
             F.col(id_col).cast("long").alias("id"),
             F.col(vec_col).cast("array<double>").alias("vec"),
         )
-    pairs = forest_probe_cells(
-        query_vec, codebooks, n_cells=n_probes * len(codebooks)
+    pred = _probe_predicate(
+        forest_probe_cells(query_vec, codebooks, n_cells=n_probes * len(codebooks))
     )
-    by_tbl: dict[int, list[int]] = {}
-    for t, c in pairs:
-        by_tbl.setdefault(t, []).append(int(c))
-    pred = None
-    for t, cells in by_tbl.items():
-        h = (F.col("tbl") == t) & F.col("cell").isin(cells)
-        pred = h if pred is None else (pred | h)
-    cand = index.where(pred).select("id").distinct().join(vecs, on="id")
+    cand = vecs.join(F.broadcast(index.where(pred).select("id")), on="id", how="left_semi")
     sim = round6(cosine_sim("vec", list(query_vec), dim=len(query_vec)))
     return (
         cand.select(F.col("id").alias("vec_id"), sim.alias("sim"))
@@ -1333,25 +1342,17 @@ def ivfpq_topk(
     With ``rerank`` ≥ the candidate count this is tuple-identical to
     :func:`forest_topk` (pytest-asserted).
 
-    The candidate join BROADCASTS the distinct candidate ids, so the
-    codes table is scanned in place and never shuffled.  That assumes
-    the id set fits a broadcast: about 0.22·N ids at 8 B each, i.e.
-    ~1.8 MB per 10⁶ vectors.  Without the hint Spark plans a sort-merge
-    join that hash-shuffles the whole codes table on id.
+    The candidate join BROADCASTS the matched membership ids into a
+    left-semi join, so neither the membership scan nor the codes table
+    is shuffled.  That assumes the ids fit a broadcast: at most one row
+    per probed table per vector, 8 B each.  Without the hint Spark plans
+    a sort-merge join that hash-shuffles the whole codes table on id.
     """
-    pairs = forest_probe_cells(
-        query_vec, forest_cbs, n_cells=n_probes * len(forest_cbs)
+    pred = _probe_predicate(
+        forest_probe_cells(query_vec, forest_cbs, n_cells=n_probes * len(forest_cbs))
     )
-    by_tbl: dict[int, list[int]] = {}
-    for t, c in pairs:
-        by_tbl.setdefault(t, []).append(int(c))
-    pred = None
-    for t, cells in by_tbl.items():
-        h = (F.col("tbl") == t) & F.col("cell").isin(cells)
-        pred = h if pred is None else (pred | h)
-    cand_ids = index.where(pred).select("id").distinct()
     cand = (
-        codes.join(F.broadcast(cand_ids), on="id")
+        codes.join(F.broadcast(index.where(pred).select("id")), on="id", how="left_semi")
         .select("id", pq_adc_score(query_vec, pq_cbs).alias("adc"))
         .orderBy(F.col("adc").desc(), F.col("id"))
         .limit(int(rerank))

@@ -81,7 +81,8 @@ def apply_with_quarantine(
     cfg=None,
     quarantine_dir: str | None = None,
 ) -> dict:
-    """Dead-letter apply: quarantine invalid rows, MERGE the rest.
+    """Dead-letter apply: quarantine invalid rows, commit the rest
+    through the ingest loop (``streaming.pipeline._apply_epochs``).
 
     The quarantine write happens BEFORE the merge commit: on a crash
     between them the epoch is replayed, the merge skips idempotently
@@ -97,7 +98,7 @@ def apply_with_quarantine(
     side) — a file-stream micro-batch would otherwise re-scan and
     re-parse its source once per action on the hot path.
     """
-    from aqueduct_core_spark.operators.merge import apply_batch
+    from aqueduct_core_spark.streaming.pipeline import _apply_epochs
 
     stamped_all = with_invalid_reason(batch)
     if quarantine_dir is not None:
@@ -114,7 +115,7 @@ def apply_with_quarantine(
             n_bad = invalid.count()
             if n_bad:
                 invalid.write.mode("append").parquet(quarantine_dir)
-        m = apply_batch(table, valid, epoch=epoch, cfg=cfg)
+        m = _apply_epochs(table, [(valid, epoch, None, None)], cfg)[0]
     finally:
         if quarantine_dir is not None:
             stamped_all.unpersist()

@@ -114,11 +114,11 @@ def fleet_status(tables: dict, changes_df=None, up_to_date_lag: int = 0) -> dict
 
 
 class BatchMetricsRecorder:
-    """Per-batch telemetry hook for the apply loop.
+    """Per-batch telemetry hook for the streaming path.
 
-    Wraps :func:`aqueduct_core_spark.operators.merge.apply_batch`
-    results with wall-time and throughput and appends one JSON line per
-    batch to ``<table root>/metrics/batches.jsonl``.
+    Wraps the ``foreachBatch`` callback (one epoch of the ingest loop,
+    hooks included) with wall-time and throughput and appends one JSON
+    line per batch to ``<table root>/metrics/batches.jsonl``.
     """
 
     def __init__(self, table):

@@ -7,15 +7,21 @@ Spark re-expression of the reference's store-node sync loop
 
 - **Structured Streaming path** (:func:`start_stream` /
   :func:`run_available_now`): ``readStream`` file source over the log
-  directory → ``foreachBatch(apply)``.  The checkpoint gives monotone
-  batch ids; re-delivered batches after a crash hit the snapshot
-  epoch-stamp guard and skip idempotently (T5/T6).  Trigger pacing
-  (``processingTime`` / ``availableNow``) replaces the reference's
-  Retry-After long-poll pacing (``PostgresqlStorage.java:203-225``).
+  directory → ``foreachBatch``, each trigger one epoch.  The checkpoint
+  gives monotone batch ids; re-delivered batches after a crash hit the
+  snapshot epoch-stamp guard and skip idempotently (T5/T6).  Trigger
+  pacing (``processingTime`` / ``availableNow``) replaces the
+  reference's Retry-After long-poll pacing
+  (``PostgresqlStorage.java:203-225``).
 - **Batch replay path** (:func:`replay`): plan lsn-range triggers with
   the byte/row budgets (W1 analog) and apply them in order.  Used for
   bootstrap (full replay from lsn 0 — reference BootstrapType.java:3-10)
   and benchmarking.
+- **One ingest loop** (:func:`_apply_epochs`): both paths, the demux
+  fan-outs, the bootstraps and the quarantine's valid side commit
+  every epoch through it — one transaction per epoch, like the
+  reference's one write per page — and the post-commit work (WAP
+  audits, maintainers, SCD2 history and its views) runs there too.
 - **Recovery**: :func:`resume_lsn` reads the last committed lsn from
   the table's snapshot summary — restart replays from there
   (reference LOCAL_LATEST_OFFSET register, OffsetName.java:4).
@@ -26,6 +32,7 @@ from __future__ import annotations
 import time
 from collections import deque
 from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -33,7 +40,7 @@ from aqueduct_core_spark.catalog.table import ParquetTranscriptTable
 from aqueduct_core_spark.config import EngineConfig
 from aqueduct_core_spark.operators import batching, merge
 from aqueduct_core_spark.operators.batching import plan_triggers
-from aqueduct_core_spark.operators.merge import apply_batch
+from aqueduct_core_spark.operators.merge import apply_audited, apply_batch
 from aqueduct_core_spark.schema import CHANGES_SCHEMA
 
 
@@ -55,6 +62,16 @@ class IncompleteBootstrap(RuntimeError):
     chunks committed so far, so tailing the log from it would skip
     events for every conversation in the chunks not yet applied.
     Finish (or restart) the bootstrap before tailing."""
+
+
+class AuditFailed(RuntimeError):
+    """An epoch's write-audit-publish audits failed: the stage was
+    abandoned and ingest must STOP — no later epoch commits, since it
+    would move the watermark past the abandoned events.  On a stream,
+    failing the trigger keeps the source checkpoint from advancing past
+    the batch (a restart re-delivers the same batch_id with the same
+    data, so nothing is lost; swallowing the failure would silently
+    drop the epoch)."""
 
 
 def resume_lsn(table: ParquetTranscriptTable) -> int:
@@ -164,48 +181,89 @@ def _plan(
     return ranges, pending
 
 
-def _apply_epochs(table: ParquetTranscriptTable, items, cfg: EngineConfig) -> list[dict]:
+def _apply_epochs(
+    table: ParquetTranscriptTable,
+    items,
+    cfg: EngineConfig,
+    *,
+    audits: dict | None = None,
+    maintainers=(),
+    history=None,
+    history_views=(),
+) -> list[dict]:
     """The one epoch loop: apply an iterable of ``(batch, epoch, max-lsn
     hint, extra summary)`` items, epochs ascending, and return their
-    metrics rows.
+    metrics rows.  Every ingest path commits through here: replay,
+    bootstrap, each ``foreachBatch`` trigger, each demux route and the
+    valid side of a quarantined batch.
 
     Phase A (:func:`~aqueduct_core_spark.operators.merge.mor_prepare`:
     scan + argmax + delta write, reading nothing from table state) runs
-    up to :data:`PIPELINE_DEPTH` epochs ahead on pool threads; phase B
-    (footer bookkeeping + the atomic commit, through ``apply_batch``)
-    stays on this thread, strictly in epoch order.  An epoch at or
-    below the committed one is never prepared: it goes straight to
-    ``apply_batch``'s exactly-once guard, which returns the skip row or
-    raises ``EpochCollision``."""
+    up to :data:`PIPELINE_DEPTH` epochs ahead on pool threads for a
+    PLANNED item (it has a hint and an epoch above the committed one);
+    phase B (footer bookkeeping + the atomic commit, through
+    ``apply_batch``) stays on this thread, strictly in epoch order.
+    Every other item applies inline once the items before it have
+    committed: a streaming trigger (hint None) keeps ``apply_batch``'s
+    one-job idle probe, and an epoch at or below the committed one goes
+    straight to the exactly-once guard, which returns the skip row or
+    raises ``EpochCollision``.
+
+    ``audits`` commits every item through write-audit-publish
+    (:func:`~aqueduct_core_spark.operators.merge.apply_audited`, never
+    prepared ahead); a failed audit raises :class:`AuditFailed` and no
+    later item commits (a later epoch would move the watermark past the
+    abandoned events).  After each row, in item order and skipped
+    epochs included, each of ``maintainers`` refreshes from the table
+    (``ConvRollup``, ``DedupIndexMaintainer``: a skipped epoch leaves
+    the version unchanged, so the refresh no-ops), then ``history``
+    folds the RAW batch (intra-epoch versions included; its own epoch
+    guard skips re-deliveries; it REQUIRES lsn-ordered items and fails
+    loudly with ``OutOfOrderBatch`` otherwise) and each of
+    ``history_views`` refreshes from it."""
+    commit = partial(apply_audited, audits=audits) if audits else apply_batch
     committed = table.last_committed_epoch()
     metrics: list[dict] = []
     inflight: deque = deque()
 
     def commit_oldest():
-        (_, epoch, hint, extra), fut = inflight.popleft()
-        prep = fut.result()
+        (batch, epoch, hint, extra), fut = inflight.popleft()
+        prep = fut and fut.result()
         t0 = time.time()
-        m = apply_batch(table, None, epoch=epoch, cfg=cfg, batch_max_lsn=hint,
-                        prewritten=prep, extra_summary=extra)
-        m["epoch_sec"] = round(time.time() - t0 + prep["write_sec"], 3)
-        m["write_sec"] = prep["write_sec"]
+        if prep:
+            m = apply_batch(table, batch, epoch=epoch, cfg=cfg, batch_max_lsn=hint,
+                            prewritten=prep, extra_summary=extra)
+            m["write_sec"] = prep["write_sec"]
+        else:
+            m = commit(table, batch, epoch=epoch, cfg=cfg, batch_max_lsn=hint,
+                       extra_summary=extra)
+        m["epoch_sec"] = round(time.time() - t0 + m.get("write_sec", 0), 3)
+        if m.get("audit_failures"):
+            raise AuditFailed(
+                f"epoch {epoch} failed audits {m['audit_failures']}; "
+                "stage abandoned, watermark not advanced"
+            )
+        for mt in maintainers:
+            m[getattr(mt, "name", type(mt).__name__)] = mt.refresh(table)
+        if history is not None:
+            m["scd2_history"] = history.apply(batch, epoch=epoch)
+            for hv in history_views:
+                m[getattr(hv, "name", type(hv).__name__)] = hv.refresh(history)
         metrics.append(m)
 
     pool = ThreadPoolExecutor(max_workers=PIPELINE_DEPTH)
     try:
         for item in items:
-            batch, epoch, hint, extra = item
-            if epoch <= committed:
-                t0 = time.time()
-                m = apply_batch(table, batch, epoch=epoch, cfg=cfg,
-                                batch_max_lsn=hint, extra_summary=extra)
-                m["epoch_sec"] = round(time.time() - t0, 3)
-                metrics.append(m)
-                continue
-            while len(inflight) >= PIPELINE_DEPTH:
+            batch, epoch, hint, _ = item
+            ahead = not audits and hint is not None and epoch > committed
+            while len(inflight) >= (PIPELINE_DEPTH if ahead else 1):
                 commit_oldest()
             # merge.mor_prepare, looked up per call: a traced run wraps it
-            inflight.append((item, pool.submit(merge.mor_prepare, table, batch, epoch)))
+            inflight.append(
+                (item, pool.submit(merge.mor_prepare, table, batch, epoch) if ahead else None)
+            )
+            if not ahead:
+                commit_oldest()
         while inflight:
             commit_oldest()
     finally:
@@ -342,13 +400,7 @@ def replay_demux(
     Returns ``{table_key: [per-epoch metrics, ...]}``.
     """
     cfg = cfg or EngineConfig()
-    if set(tables) != set(routes):
-        raise ValueError(
-            f"tables/routes key mismatch: {sorted(set(tables) ^ set(routes))}"
-        )
-    preds = {
-        k: (F.expr(p) if isinstance(p, str) else p) for k, p in routes.items()
-    }
+    preds = _route_preds(tables, routes)
 
     ranges, _ = _plan(changes, cfg, start_lsn=0)
     metrics: dict = {k: [] for k in tables}
@@ -360,35 +412,56 @@ def replay_demux(
         # footer-index planning is).  A partially-covered range re-reads
         # events at-or-below the watermark, which LWW makes a no-op;
         # skipping unseen events is the failure this guards against.
-        todo = sorted(
-            k for k in tables if tables[k].last_committed_lsn() < r.end_lsn
+        # The epoch must exceed the table's committed stamp for the
+        # exactly-once guard; it equals the global index i except after
+        # a numbering shift, where it keeps advancing.
+        rows = _demux_slice(
+            tables, preds,
+            sorted(k for k in tables if tables[k].last_committed_lsn() < r.end_lsn),
+            changes.where((F.col("lsn") >= r.start_lsn) & (F.col("lsn") <= r.end_lsn)),
+            cfg,
+            epoch_of=lambda k: max(i, tables[k].last_committed_epoch() + 1),
+            hint_of=lambda _: r.end_lsn,
         )
-        if not todo:
-            continue
-        batch = changes.where(
-            (F.col("lsn") >= r.start_lsn) & (F.col("lsn") <= r.end_lsn)
-        )
-        cached = len(todo) > 1
-        if cached:
-            batch = batch.persist()
-        try:
-            for k in todo:
-                # epoch must exceed the table's committed stamp for the
-                # exactly-once guard; equals the global index i except
-                # after a numbering shift, where it keeps advancing
-                m = apply_batch(
-                    tables[k],
-                    batch.where(preds[k]),
-                    epoch=max(i, tables[k].last_committed_epoch() + 1),
-                    cfg=cfg,
-                    batch_max_lsn=r.end_lsn,
-                )
-                m["route"] = k
-                metrics[k].append(m)
-        finally:
-            if cached:
-                batch.unpersist()
+        for k, m in rows.items():
+            m["route"] = k
+            metrics[k].append(m)
     return metrics
+
+
+def _route_preds(tables: dict, routes: dict) -> dict:
+    """Each route's predicate as a Column (SQL strings parsed); the
+    route keys must be exactly the table keys."""
+    if set(tables) != set(routes):
+        raise ValueError(
+            f"tables/routes key mismatch: {sorted(set(tables) ^ set(routes))}"
+        )
+    return {k: (F.expr(p) if isinstance(p, str) else p) for k, p in routes.items()}
+
+
+def _demux_slice(tables, preds, todo, batch, cfg, epoch_of, hint_of) -> dict:
+    """Apply one log slice to each route in ``todo`` (sorted keys), one
+    one-item :func:`_apply_epochs` call per route.  Each route commits
+    its own ``epoch_of(key)`` stamp and the SLICE's ``hint_of(slice)``
+    max lsn, not its subset's: a replica whose route saw nothing in the
+    slice has still consumed the pipe through it (lag 0 in
+    ``fleet_status``, and a resume skips the range).  The slice is
+    persisted while more than one route reads it, so N route applies
+    scan it once.  Returns ``{key: metrics row}``."""
+    if not todo:
+        return {}
+    cached = len(todo) > 1
+    if cached:
+        batch = batch.persist()
+    try:
+        hint = hint_of(batch)
+        return {
+            k: _apply_epochs(tables[k], [(batch.where(preds[k]), epoch_of(k), hint, None)], cfg)[0]
+            for k in todo
+        }
+    finally:
+        if cached:
+            batch.unpersist()
 
 
 def start_stream_demux(
@@ -419,50 +492,21 @@ def start_stream_demux(
     for its table set — don't mix tables across checkpoints.
     """
     cfg = cfg or EngineConfig()
-    if set(tables) != set(routes):
-        raise ValueError(
-            f"tables/routes key mismatch: {sorted(set(tables) ^ set(routes))}"
-        )
-    preds = {k: (F.expr(p) if isinstance(p, str) else p) for k, p in routes.items()}
-
-    reader = spark.readStream.schema(CHANGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(changes_dir)
+    preds = _route_preds(tables, routes)
 
     def fn(batch_df: DataFrame, batch_id: int):
-        todo = sorted(k for k in tables if tables[k].last_committed_epoch() < batch_id)
-        if not todo:
-            return
-        cached = len(todo) > 1
-        b = batch_df.persist() if cached else batch_df
-        try:
-            # every route commits the BATCH's max lsn, not its own
-            # subset's — a replica whose route saw nothing in this
-            # trigger has still consumed the pipe through it (lag 0 in
-            # fleet_status, and batch-replay resume skips the range)
-            mx = b.agg(F.max("lsn")).collect()[0][0]
-            hint = int(mx) if mx is not None else None
-            for k in todo:
-                apply_batch(
-                    tables[k],
-                    b.where(preds[k]),
-                    epoch=batch_id,
-                    cfg=cfg,
-                    batch_max_lsn=hint,
-                )
-        finally:
-            if cached:
-                b.unpersist()
+        _demux_slice(
+            tables, preds,
+            sorted(k for k in tables if tables[k].last_committed_epoch() < batch_id),
+            batch_df, cfg,
+            epoch_of=lambda k: batch_id,
+            hint_of=lambda b: b.agg(F.max("lsn")).first()[0],
+        )
 
-    writer = stream.writeStream.foreachBatch(fn).option(
-        "checkpointLocation", checkpoint_dir
+    return _start(
+        _file_stream(spark, changes_dir, max_files_per_trigger),
+        fn, checkpoint_dir, processing_time, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def run_available_now_demux(
@@ -476,7 +520,7 @@ def run_available_now_demux(
     timeout_s: int = 3600,
 ) -> None:
     """Drain the log once through the streaming demux, then stop."""
-    q = start_stream_demux(
+    _drain(start_stream_demux(
         spark,
         tables,
         changes_dir,
@@ -485,78 +529,65 @@ def run_available_now_demux(
         cfg,
         max_files_per_trigger=max_files_per_trigger,
         available_now=True,
-    )
-    try:
-        q.awaitTermination(timeout_s)
-    finally:
-        if q.isActive:
-            q.stop()
+    ), timeout_s)
 
 
-class AuditFailed(RuntimeError):
-    """A streaming epoch's write-audit-publish audits failed: the stage
-    was abandoned and the query must STOP (failing the trigger keeps
-    the source checkpoint from advancing past the batch — a restart
-    re-delivers the same batch_id with the same data, so nothing is
-    lost; swallowing the failure would silently drop the epoch)."""
+def _foreach_batch_fn(table: ParquetTranscriptTable, cfg: EngineConfig,
+                      record_metrics: bool = False, **hooks):
+    """The ``foreachBatch`` callback: each trigger is a one-item
+    :func:`_apply_epochs` call (``hooks`` are its keyword arguments) at
+    ``epoch=batch_id`` with no hint, so an idle trigger commits nothing
+    and a re-delivered batch id hits the exactly-once guard.
+    ``record_metrics`` wraps it in a
+    :class:`~aqueduct_core_spark.streaming.monitor.BatchMetricsRecorder`."""
 
-
-def _foreach_batch_fn(
-    table: ParquetTranscriptTable,
-    cfg: EngineConfig,
-    record_metrics: bool = False,
-    audits: dict | None = None,
-    maintainers: list | None = None,
-    history=None,
-    history_views: list | None = None,
-):
     def fn(batch_df: DataFrame, batch_id: int):
-        if audits:
-            from aqueduct_core_spark.operators.merge import apply_audited
-
-            m = apply_audited(table, batch_df, epoch=batch_id, audits=audits, cfg=cfg)
-            # unpublished + named failures = a failed audit; an empty/
-            # no-effect batch also returns published=False but with no
-            # failures (nothing was staged) and must not kill the query
-            if m.get("audit_failures"):
-                raise AuditFailed(
-                    f"epoch {batch_id} failed audits {m['audit_failures']}; "
-                    "stage abandoned, checkpoint not advanced"
-                )
-        else:
-            m = apply_batch(table, batch_df, epoch=batch_id, cfg=cfg)
-        # continuous maintenance: anything with .refresh(table) (a
-        # ConvRollup, functions.dedup_index.DedupIndexMaintainer) rides
-        # the same driver turn as the commit, in list order; a replayed
-        # (skipped) epoch leaves the table version unchanged, so every
-        # refresh no-ops — maintainers stay exactly-once for free
-        for mt in maintainers or []:
-            m[getattr(mt, "name", type(mt).__name__)] = mt.refresh(table)
-        if history is not None:
-            # continuous SCD2 audit history: unlike the state-derived
-            # maintainers above it folds the RAW batch (intra-epoch
-            # versions included); its own epoch guard skips re-delivered
-            # batch ids, so it inherits exactly-once the same way.
-            # REQUIRES an lsn-ordered source (the binlog/WAL-tail shape:
-            # files arrive in offset order) — the LWW merge above is
-            # order-insensitive, interval history is not, and an
-            # out-of-order batch fails the query loudly (OutOfOrderBatch)
-            # rather than corrupting intervals
-            m["scd2_history"] = history.apply(batch_df, epoch=batch_id)
-            # views derived from the history (e.g. functions.examples.
-            # PreferencePairsView) refresh on the same driver turn; a
-            # skipped/re-delivered epoch leaves the history's bucket
-            # mapping unchanged, so the refresh no-ops — exactly-once
-            # for free, same induction as the maintainers above
-            for hv in history_views or []:
-                m[getattr(hv, "name", type(hv).__name__)] = hv.refresh(history)
-        return m
+        return _apply_epochs(table, [(batch_df, batch_id, None, None)], cfg, **hooks)[0]
 
     if record_metrics:
         from aqueduct_core_spark.streaming.monitor import BatchMetricsRecorder
 
         return BatchMetricsRecorder(table).wrap(fn)
     return fn
+
+
+def _file_stream(spark: SparkSession, changes_dir: str, max_files_per_trigger: int | None,
+                 text: bool = False) -> DataFrame:
+    """The file-source tail of ``changes_dir``: parquet change files, or
+    raw lines when ``text``.  ``maxFilesPerTrigger`` is the backpressure
+    knob (the row/byte-budget analog at file granularity)."""
+    reader = spark.readStream if text else spark.readStream.schema(CHANGES_SCHEMA)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.text(changes_dir) if text else reader.parquet(changes_dir)
+
+
+def _start(stream: DataFrame, batch_fn, checkpoint_dir: str,
+           processing_time: str | None, available_now: bool):
+    """Start ``foreachBatch(batch_fn)`` over ``stream``, checkpointed in
+    ``checkpoint_dir`` and paced by ``availableNow`` or
+    ``processingTime`` (default: the next trigger as soon as the last
+    one finishes)."""
+    writer = (
+        stream.writeStream.foreachBatch(batch_fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif processing_time:
+        writer = writer.trigger(processingTime=processing_time)
+    return writer.start()
+
+
+def _drain(q, timeout_s: int) -> None:
+    """Wait for an ``availableNow`` query to drain, then stop it if it
+    is still running (timeout or error)."""
+    try:
+        q.awaitTermination(timeout_s)
+    finally:
+        if q.isActive:
+            q.stop()
 
 
 def dedup_redeliveries(stream: DataFrame, within: str) -> DataFrame:
@@ -617,10 +648,14 @@ def start_stream(
     appends per-batch telemetry (T9 health/lag monitoring) to
     ``<table root>/metrics/batches.jsonl``.  ``dedup_within`` (e.g.
     ``"10 minutes"``) inserts :func:`dedup_redeliveries` ahead of the
-    merge.  ``maintainers``: objects with ``refresh(table)`` (e.g. a
-    :class:`~aqueduct_core_spark.operators.rollup.ConvRollup`) refreshed
+    merge.  Each trigger is one epoch of the ingest loop,
+    :func:`_apply_epochs`, which also runs the post-commit hooks:
+    ``maintainers`` (objects with ``refresh(table)``, e.g. a
+    :class:`~aqueduct_core_spark.operators.rollup.ConvRollup`) refresh
     in list order after each commit, keeping downstream
-    materializations continuously fresh.  ``audits`` routes every
+    materializations continuously fresh; ``history`` (an
+    ``Scd2History``) folds each raw batch, given an lsn-ordered source,
+    and ``history_views`` refresh from it.  ``audits`` routes every
     epoch through write-audit-publish
     (:func:`aqueduct_core_spark.operators.merge.apply_audited`): readers
     never see an unaudited state, and a failing audit raises
@@ -636,28 +671,20 @@ def start_stream(
     ``(epoch, raw)`` dedup on read, same DLQ contract as row-level
     validation — while clean rows proceed to the exactly-once merge."""
     cfg = cfg or EngineConfig()
-    if wire_format == "json-envelope":
-        from aqueduct_core_spark.sources.envelope import (
-            REASON_COLUMN,
-            parse_envelopes,
-        )
+    if wire_format not in ("parquet", "json-envelope"):
+        raise ValueError(f"unknown wire_format {wire_format!r}")
+    envelope = wire_format == "json-envelope"
+    stream = _file_stream(spark, changes_dir, max_files_per_trigger, text=envelope)
+    batch_fn = _foreach_batch_fn(table, cfg, record_metrics, audits=audits,
+                                 maintainers=maintainers or (), history=history,
+                                 history_views=history_views or ())
+    if envelope:
+        from aqueduct_core_spark.sources.envelope import REASON_COLUMN, parse_envelopes
 
-        reader = spark.readStream
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        stream = parse_envelopes(reader.text(changes_dir))
-        if dedup_within:
-            # NULL-ts rows (dead letters, conv tombstones) bypass the
-            # stateful dedup inside the helper (the quarantine reader
-            # dedupes re-delivered dead letters on (epoch, raw) anyway)
-            stream = dedup_redeliveries(stream, dedup_within)
+        stream = parse_envelopes(stream)
+        inner = batch_fn
 
-        inner = _foreach_batch_fn(table, cfg, record_metrics,
-                                  audits=audits, maintainers=maintainers,
-                                  history=history,
-                                  history_views=history_views)
-
-        def fn(stamped: DataFrame, batch_id: int):
+        def batch_fn(stamped: DataFrame, batch_id: int):
             ok = stamped.where(F.col(REASON_COLUMN).isNull()).drop(
                 "_raw", REASON_COLUMN
             )
@@ -674,31 +701,12 @@ def start_stream(
                     bad.write.mode("append").parquet(quarantine_dir)
             return inner(ok, batch_id)
 
-        batch_fn = fn
-    elif wire_format == "parquet":
-        reader = spark.readStream.schema(CHANGES_SCHEMA)
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        stream = reader.parquet(changes_dir)
-        if dedup_within:
-            stream = dedup_redeliveries(stream, dedup_within)
-        batch_fn = _foreach_batch_fn(table, cfg, record_metrics,
-                                     audits=audits, maintainers=maintainers,
-                                     history=history,
-                                     history_views=history_views)
-    else:
-        raise ValueError(f"unknown wire_format {wire_format!r}")
-
-    writer = (
-        stream.writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    if dedup_within:
+        # NULL-ts rows (dead letters, conv tombstones) bypass the
+        # stateful dedup inside the helper (the quarantine reader
+        # dedupes re-delivered dead letters on (epoch, raw) anyway)
+        stream = dedup_redeliveries(stream, dedup_within)
+    return _start(stream, batch_fn, checkpoint_dir, processing_time, available_now)
 
 
 def run_available_now(
@@ -720,7 +728,7 @@ def run_available_now(
 ) -> None:
     """Drain everything currently in the log, then stop (the
     bootstrap / catch-up mode; reference BootstrapType PIPE replay)."""
-    q = start_stream(
+    _drain(start_stream(
         spark,
         table,
         changes_dir,
@@ -736,12 +744,7 @@ def run_available_now(
         quarantine_dir=quarantine_dir,
         history=history,
         history_views=history_views,
-    )
-    try:
-        q.awaitTermination(timeout_s)
-    finally:
-        if q.isActive:
-            q.stop()
+    ), timeout_s)
 
 
 def tail_loop(

@@ -274,3 +274,26 @@ def test_failed_manifest_write_claims_no_version(tmp_path):
     assert cat.current_version() == 1 and snap["offsets_files"] == ["o.parquet"]
     assert cat.expire_snapshots(keep_last=1) == []
     assert sorted(os.listdir(cat._snap_dir)) == ["v1.json"]
+
+
+def test_failed_tag_write_leaves_no_ref(tmp_path, monkeypatch):
+    """A tag whose ref write fails midway claims nothing: no torn
+    ``refs/<name>.json`` is left, ``tags()`` still reads, and the name
+    can be tagged afterwards."""
+    from aqueduct_core_spark.catalog import snapshot
+
+    cat = snapshot.SnapshotCatalog(str(tmp_path / "t"))
+    cat.create([])
+
+    def torn_dump(obj, f, *a, **k):
+        f.write('{"name": ')
+        raise OSError("disk full")
+
+    with monkeypatch.context() as m:
+        m.setattr(snapshot.json, "dump", torn_dump)
+        with pytest.raises(OSError, match="disk full"):
+            cat.tag("run-1")
+    assert cat.tags() == {}
+    assert cat.tag("run-1") == 0
+    assert cat.tags() == {"run-1": 0}
+    assert os.listdir(cat._refs_dir()) == ["run-1.json"]

@@ -1,10 +1,14 @@
 """Replay epoch planning: the driver-side footer index over a bare log
 scan, zero-job manifest trigger planning, replay windows, and
-literal ``lsn``-range epoch slices (which push into the parquet scan).
+literal ``lsn``-range epoch slices (which push into the parquet scan);
+and the contract of the one ingest loop, ``_apply_epochs``, that every
+apply path commits through.
 """
 
+import ast
 import os
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,7 +16,14 @@ from aqueduct_core_spark.catalog.table import ParquetTranscriptTable
 from aqueduct_core_spark.config import EngineConfig
 from aqueduct_core_spark.generator import generate_changes_pdf, expected_state_pdf
 from aqueduct_core_spark.schema import CHANGES_SCHEMA
-from aqueduct_core_spark.streaming.pipeline import _lsn_file_index, replay
+from aqueduct_core_spark.streaming.pipeline import (
+    AuditFailed,
+    _apply_epochs,
+    _lsn_file_index,
+    _plan,
+    replay,
+    run_available_now,
+)
 
 
 @pytest.fixture(scope="module")
@@ -205,3 +216,125 @@ def test_committed_epoch_with_new_lsns_raises_collision(spark, log_dir, tmp_path
         replay(t, log, cfg, start_epoch=0, start_lsn=head + 1)
     assert t.catalog.current_version() == v
     assert _delta_files(t.root) == files
+
+
+def _loop_items(log, cfg, n=None):
+    """Replay-shaped loop items over the first ``n`` trigger ranges."""
+    ranges, pending = _plan(log, cfg, start_lsn=0)
+    return ranges[:n], [
+        (pending.where(F.col("lsn").between(r.start_lsn, r.end_lsn)), i, r.end_lsn, None)
+        for i, r in enumerate(ranges[:n])
+    ]
+
+
+def test_loop_failed_audit_stops_later_items(spark, log_dir, tmp_path):
+    """An audited loop whose audit fails on item 2 raises AuditFailed
+    before item 3 commits: the head stays at item 1's epoch and
+    watermark with no staged version left, and rerunning the items
+    with passing audits skips item 1 and converges to the plain
+    replay of the same window."""
+    from aqueduct_core_spark.schema import LSN_COLUMN
+    from aqueduct_core_spark.verify import states_equal
+
+    log = spark.read.schema(CHANGES_SCHEMA).parquet(log_dir)
+    cfg = EngineConfig(num_buckets=4, max_events_per_trigger=600, max_bytes_per_trigger=1 << 30)
+    ranges, items = _loop_items(log, cfg, n=3)
+    assert len(items) == 3
+    t = ParquetTranscriptTable.create(spark, str(tmp_path / "t"), num_buckets=4)
+    first_only = {
+        "first_range": lambda st: st.agg(F.max(LSN_COLUMN)).first()[0] <= ranges[0].end_lsn
+    }
+    with pytest.raises(AuditFailed, match="epoch 1 failed audits"):
+        _apply_epochs(t, items, cfg, audits=first_only)
+    assert t.last_committed_epoch() == 0
+    assert t.last_committed_lsn() == ranges[0].end_lsn
+    assert t.catalog.staged_version() is None
+
+    rows = _apply_epochs(t, items, cfg, audits={"ok": lambda st: True})
+    assert rows[0]["state"] == "SKIPPED_DUPLICATE_EPOCH"
+    assert [m.get("published") for m in rows[1:]] == [True, True]
+    plain = ParquetTranscriptTable.create(spark, str(tmp_path / "plain"), num_buckets=4)
+    replay(plain, log, cfg, start_epoch=0, start_lsn=0, end_lsn=ranges[2].end_lsn)
+    assert t.last_committed_lsn() == plain.last_committed_lsn()
+    assert states_equal(t.read_internal(), plain.read_internal())
+
+
+def test_loop_maintainer_matches_stream_rollup(spark, log_dir, tmp_path):
+    """A rollup maintained by a multi-item loop call equals the one the
+    streaming drain maintains over the same log."""
+    from aqueduct_core_spark.operators.rollup import ConvRollup
+
+    cfg = EngineConfig(num_buckets=4, mor_fold_every=10**9, max_events_per_trigger=600,
+                       max_bytes_per_trigger=1 << 30)
+    streamed = ParquetTranscriptTable.create(spark, str(tmp_path / "s"), num_buckets=4)
+    stream_rollup = ConvRollup.create(spark, str(tmp_path / "sr"), num_buckets=8)
+    run_available_now(spark, streamed, log_dir, str(tmp_path / "ckpt"), cfg,
+                      max_files_per_trigger=2, maintainers=[stream_rollup])
+
+    log = spark.read.schema(CHANGES_SCHEMA).parquet(log_dir)
+    _, items = _loop_items(log, cfg)
+    assert len(items) > 1
+    t = ParquetTranscriptTable.create(spark, str(tmp_path / "t"), num_buckets=4)
+    rollup = ConvRollup.create(spark, str(tmp_path / "r"), num_buckets=8)
+    rows = _apply_epochs(t, items, cfg, maintainers=[rollup])
+    assert all("ConvRollup" in m for m in rows)
+    assert rollup.last_table_version() == t.catalog.current_version()
+
+    def frame(r):
+        df = r.read().toPandas()
+        return df[sorted(df.columns)].sort_values("conv_id").reset_index(drop=True)
+
+    pd.testing.assert_frame_equal(frame(rollup), frame(stream_rollup))
+
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_APPLY_FNS = ("apply_batch", "apply_audited")
+#: the only (file, enclosing function) allowed to reach an apply function
+_APPLY_SITES = {
+    ("aqueduct_core_spark/streaming/pipeline.py", "_apply_epochs"),
+    ("aqueduct_core_spark/operators/merge.py", "apply_audited"),  # its own apply_batch
+}
+
+
+def _apply_references(path):
+    """``(outer function, name)`` of every call of, or reference to, an
+    apply function in the module at ``path`` (definitions excluded)."""
+    found = []
+
+    def visit(node, outer):
+        for child in ast.iter_child_nodes(node):
+            scope = outer
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                scope = outer or child.name
+            name = (child.id if isinstance(child, ast.Name)
+                    else child.attr if isinstance(child, ast.Attribute) else None)
+            if name in _APPLY_FNS:
+                found.append((outer, name))
+            visit(child, scope)
+
+    with open(path) as f:
+        visit(ast.parse(f.read(), path), None)
+    return found
+
+
+def test_one_ingest_loop_guard():
+    """Outside tests, ``apply_batch`` and ``apply_audited`` are reached
+    only from the one ingest loop, ``streaming.pipeline._apply_epochs``
+    (plus ``apply_audited``'s own call to ``apply_batch``): every other
+    path commits epochs through the loop."""
+    paths = [os.path.join(_REPO, f) for f in ("__spark_entry__.py", "bench.py")]
+    for top in ("aqueduct_core_spark", "bench", "tools"):
+        for d, _, fs in os.walk(os.path.join(_REPO, top)):
+            paths += [os.path.join(d, f) for f in fs if f.endswith(".py")]
+    stray, seen = [], set()
+    for p in paths:
+        rel = os.path.relpath(p, _REPO)
+        for outer, name in _apply_references(p):
+            seen.add((rel, outer))
+            allowed = (rel, outer) in _APPLY_SITES and not (
+                outer == "apply_audited" and name == "apply_audited"
+            )
+            if not allowed:
+                stray.append((rel, outer, name))
+    assert not stray, stray
+    assert seen == _APPLY_SITES

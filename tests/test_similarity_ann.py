@@ -527,15 +527,36 @@ def _ops_above_leaf(plan, column):
     return None
 
 
-def test_ivfpq_codes_scan_is_not_shuffled(spark, embs):
+def _initial_plan(df):
+    plan = df._jdf.queryExecution().executedPlan()
+    return plan.initialPlan() if plan.nodeName() == "AdaptiveSparkPlan" else plan
+
+
+def _assert_membership_broadcast_unshuffled(df):
+    """The membership scan (the leaf with ``cell``) reaches its first
+    join through no shuffle ``Exchange`` (a ``BroadcastExchange`` is the
+    broadcast itself), and that join is a broadcast hash join."""
+    plan = _initial_plan(df)
+    path = _ops_above_leaf(plan, "cell")
+    assert path is not None, plan.toString()
+    join = next(i for i, op in enumerate(path) if op.endswith("Join"))
+    assert path[join] == "BroadcastHashJoin", path
+    assert "Exchange" not in path[:join], path
+
+
+def test_ivfpq_codes_scan_is_not_shuffled(spark, embs, tmp_path):
     """The candidate join broadcasts the candidate ids, so nothing
     between the codes scan and the ADC cut moves the codes table: in
     the plan before execution no Exchange sits above the codes scan
     below the TakeOrderedAndProject, and the join is a broadcast hash
     join.  (Without the hint the initial plan is a sort-merge join that
-    hash-shuffles the whole codes scan on id.)"""
+    hash-shuffles the whole codes scan on id.)  The membership scans of
+    all three probes (``forest_topk``, ``ivfpq_topk``,
+    ``ForestIndex.topk``) reach their candidate join unshuffled too:
+    the matched ids are broadcast as they are, not deduplicated first."""
+    from aqueduct_core_spark.functions.ann_index import ForestIndex
     from aqueduct_core_spark.functions.similarity import (
-        forest_index, forest_train, ivfpq_topk, pq_encode, pq_train,
+        forest_index, forest_topk, forest_train, ivfpq_topk, pq_encode, pq_train,
     )
 
     q = list(embs.where("vec_id = 0").first()["embedding"])
@@ -544,15 +565,18 @@ def test_ivfpq_codes_scan_is_not_shuffled(spark, embs):
     pcbs = pq_train(embs, dim=32)
     codes = pq_encode(embs, pcbs).localCheckpoint()
     df = ivfpq_topk(idx, codes, q, fcbs, pcbs, embs, k=20, rerank=64)
-    plan = df._jdf.queryExecution().executedPlan()
-    if plan.nodeName() == "AdaptiveSparkPlan":
-        plan = plan.initialPlan()
+    plan = _initial_plan(df)
     path = _ops_above_leaf(plan, "codes")
     assert path is not None, plan.toString()
     cut = path.index("TakeOrderedAndProject")
     below_cut = path[:cut]
     assert not [op for op in below_cut if "Exchange" in op], path
     assert "BroadcastHashJoin" in below_cut, path
+
+    ix = ForestIndex.create(spark, str(tmp_path / "ix"), fcbs, num_parts=8)
+    ix.add(embs)
+    for probe in (df, forest_topk(idx, q, fcbs, k=20, vectors=embs), ix.topk(q, k=20)):
+        _assert_membership_broadcast_unshuffled(probe)
 
 
 def test_ivfpq_tight_rerank_recall_and_determinism(spark, embs):
