@@ -31,15 +31,17 @@ from aqueduct_core_spark.schema import (
     KEY_COLUMNS,
     LSN_COLUMN,
     OFFSETS_SCHEMA,
+    OP_DELETE,
     TRANSCRIPTS_INTERNAL_SCHEMA,
+    sql_ident,
 )
 
 BUCKET_COLUMN = "_bucket"
 
 
-def bucket_expr(num_buckets: int, col: str = "conv_id"):
+def bucket_sql(num_buckets: int, col: str = "conv_id") -> str:
     """Stable hash bucket of the conversation key (Iceberg
-    ``bucket(N, conv_id)`` analog).
+    ``bucket(N, conv_id)`` analog), as SQL text.
 
     Deliberately ``pmod(hash(col), N)`` — Spark's murmur3 with the
     engine-wide seed 42 — because that is *exactly* the partition-index
@@ -50,8 +52,18 @@ def bucket_expr(num_buckets: int, col: str = "conv_id"):
     collision skew (hashing the 32 bucket *values* into 32 partitions,
     as a ``repartition(N, col("_bucket"))`` would, leaves ~1/e of the
     partitions empty and piles 2-3 buckets on others — measured as a
-    3.2× max-vs-mean task-time tail in the delta-write stage)."""
-    return F.pmod(F.hash(F.col(col)), F.lit(num_buckets)).cast("int")
+    3.2× max-vs-mean task-time tail in the delta-write stage).  The
+    same formula makes a frame that is already hash-partitioned on
+    ``(conv_id, N)`` satisfy the writers' ``repartition`` as is: Spark
+    drops a user repartition whose partitioning its child already has,
+    so an epoch or fold that groups on that one exchange writes without
+    a second one."""
+    return f"CAST(pmod(hash({sql_ident(col)}), {int(num_buckets)}) AS INT)"
+
+
+def bucket_expr(num_buckets: int, col: str = "conv_id"):
+    """:func:`bucket_sql` as a Column."""
+    return F.expr(bucket_sql(num_buckets, col))
 
 
 def _mmh3_mix_k1(k1: int) -> int:
@@ -336,13 +348,14 @@ class ParquetTranscriptTable:
                 cols.append(F.col(c))
         return df.select(*cols)
 
-    def to_physical(self, batch: DataFrame, snap: dict | None = None) -> DataFrame:
-        """logical → physical for an incoming change batch, under
-        ``snap``'s mapping (default: the current snapshot).  Columns not
-        known logically pass through (schema evolution adds them) —
-        except a name that collides with a RETIRED physical (renamed
-        away or dropped), which fails loud: silently merging new data
-        into an old column's files would resurrect it."""
+    def physical_names(self, columns: list[str], snap: dict | None = None) -> list[str]:
+        """logical → physical names for an incoming change batch's
+        columns, under ``snap``'s mapping (default: the current
+        snapshot).  Columns not known logically pass through (schema
+        evolution adds them) — except a name that collides with a
+        RETIRED physical (renamed away or dropped), which fails loud:
+        silently merging new data into an old column's files would
+        resurrect it."""
         snap = snap or self.catalog.current()
         mapping = self.column_mapping(snap)
         # a physical payload name is writable under its own name only
@@ -353,11 +366,10 @@ class ParquetTranscriptTable:
             fd["name"] for fd in snap["schema"]
             if fd["name"] not in (*KEY_COLUMNS, LSN_COLUMN)
         } - identity
-        cols = []
-        for c in batch.columns:
+        out = []
+        for c in columns:
             if c in mapping:
-                p = mapping[c]
-                cols.append(F.col(c).alias(p) if p != c else F.col(c))
+                out.append(mapping[c])
             elif c in retired:
                 from aqueduct_core_spark.operators.evolve import (
                     IncompatibleSchemaChange,
@@ -369,18 +381,19 @@ class ParquetTranscriptTable:
                     "merge new data into its old files — pick another name"
                 )
             else:
-                cols.append(F.col(c))
-        return batch.select(*cols)
+                out.append(c)
+        return out
 
     # -- read ----------------------------------------------------------
-    def _base_df(self, snap: dict, wanted: set | None, schema: T.StructType) -> DataFrame:
-        files = []
-        for b, fl in snap["files"].items():
-            if wanted is None or b in wanted:
-                files.extend(os.path.join(self.root, p) for p in fl)
-        if not files:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(*files)
+    def _listed(self, by_bucket: dict, wanted: set | None) -> list[str]:
+        """Absolute paths of a manifest's bucket → files map, pruned to
+        the ``wanted`` buckets."""
+        return [
+            os.path.join(self.root, p)
+            for b, fl in by_bucket.items()
+            if wanted is None or b in wanted
+            for p in fl
+        ]
 
     def delta_read_schema(self, schema: T.StructType) -> T.StructType:
         """Schema of MOR delta files: resolved keys with the winning
@@ -431,56 +444,65 @@ class ParquetTranscriptTable:
         snap = self.catalog.current() if version is None else self.catalog.load(version)
         wanted = None if buckets is None else {str(int(b)) for b in buckets}
         schema = schema or self.schema(snap)  # pinned version ⇒ ITS schema
-        base = self._base_df(snap, wanted, schema)
-
-        delta_files = []
-        for b, fl in snap.get("delta_files", {}).items():
-            if wanted is None or b in wanted:
-                delta_files.extend(os.path.join(self.root, p) for p in fl)
+        base_files = self._listed(snap["files"], wanted)
+        base = self.spark.read.schema(schema).parquet(*base_files) if base_files else None
+        delta_files = self._listed(snap.get("delta_files", {}), wanted)
         if not delta_files:
-            return base
+            return self.spark.createDataFrame([], schema) if base is None else base
 
-        payload_cols = [
-            f.name for f in schema.fields if f.name not in ("conv_id", "turn_idx", LSN_COLUMN)
+        payload = [
+            sql_ident(f.name)
+            for f in schema.fields
+            if f.name not in ("conv_id", "turn_idx", LSN_COLUMN)
         ]
         d = self.spark.read.schema(self.delta_read_schema(schema)).parquet(*delta_files)
-
-        turn_d = d.where(F.col("_tkey") >= 0).select(
-            F.col("conv_id"),
-            F.col("_tkey").cast("int").alias("turn_idx"),
-            *[F.col(f"w.{c}").alias(c) for c in payload_cols],
-            F.col("w.op").alias("_op"),
-            F.col("w.lsn").alias(LSN_COLUMN),
-        )
-        base_e = base.select(
-            "conv_id", "turn_idx", *payload_cols, F.lit("U").alias("_op"), LSN_COLUMN
-        )
-        unioned = base_e.unionByName(turn_d)
-        fields = [LSN_COLUMN, "_op"] + payload_cols
-        winner = F.max(F.struct(*[F.col(c) for c in fields])).alias("w")
-        resolved = (
-            unioned.groupBy("conv_id", "turn_idx")
-            .agg(winner)
-            .select(
-                "conv_id",
-                "turn_idx",
-                *[F.col(f"w.{c}").alias(c) for c in payload_cols],
-                F.col("w._op").alias("_op"),
-                F.col(f"w.{LSN_COLUMN}").alias(LSN_COLUMN),
+        # One statement, grouped on ONE exchange: the union is
+        # hash-partitioned on conv_id into the manifest's bucket count
+        # (partition index == bucket, see bucket_sql), the per-key
+        # argmax and the per-conversation delete watermark (a window on
+        # the same partitioning) both run on it, and a fold writing the
+        # result needs no second shuffle.  Delta conversation rows
+        # (_tkey = -1) ride along only to carry their _dlsn.
+        lsn = sql_ident(LSN_COLUMN)
+        out_cols = ", ".join(
+            {"conv_id": "conv_id", "turn_idx": "_tkey AS turn_idx"}.get(
+                f.name, f"w.{sql_ident(f.name)} AS {sql_ident(f.name)}"
             )
+            for f in schema.fields
         )
-        conv_del = (
-            d.where((F.col("_tkey") == -1) & F.col("_dlsn").isNotNull())
-            .groupBy("conv_id")
-            .agg(F.max("_dlsn").alias("_cdl"))
+        base_cols = "".join(f", {c}" for c in payload)
+        delta_cols = "".join(f", w.{c} AS {c}" for c in payload)
+        base_rows = (
+            f"SELECT conv_id, turn_idx AS _tkey, {lsn}, 'U' AS _op{base_cols}, "
+            "CAST(NULL AS BIGINT) AS _dl FROM {base} UNION ALL"
+            if base is not None
+            else ""
         )
-        out = (
-            resolved.where(F.col("_op") != "D")
-            .join(F.broadcast(conv_del), on="conv_id", how="left")
-            .where(F.col("_cdl").isNull() | (F.col(LSN_COLUMN) > F.col("_cdl")))
-            .drop("_cdl", "_op")
+        return d.sparkSession.sql(
+            f"""
+            SELECT {out_cols}
+            FROM (
+              SELECT conv_id, _tkey, w, max(_dl) OVER (PARTITION BY conv_id) AS _cdl
+              FROM (
+                SELECT conv_id, _tkey, max(struct({lsn}, _op{base_cols})) AS w,
+                       max(_dl) AS _dl
+                FROM (
+                  SELECT /*+ REPARTITION({_bucket_count(snap)}, conv_id) */ * FROM (
+                    {base_rows}
+                    SELECT conv_id, _tkey, w.lsn AS {lsn}, w.op AS _op{delta_cols},
+                           _dlsn AS _dl
+                    FROM {{d}}
+                  )
+                )
+                GROUP BY conv_id, _tkey
+              )
+            )
+            WHERE _tkey >= 0 AND w._op <> '{OP_DELETE}'
+              AND (_cdl IS NULL OR w.{lsn} > _cdl)
+            """,
+            base=base,
+            d=d,
         )
-        return out.select(*[f.name for f in schema.fields])
 
     def _reduced_schema(
         self, snap: dict, columns: list[str]
@@ -880,7 +902,7 @@ class ParquetTranscriptTable:
             F.col("_dlsn").alias(LSN_COLUMN),
         )
         # feed columns under the TARGET version's logical names, so a
-        # replica applying the feed round-trips through to_physical
+        # replica applying the feed round-trips through physical_names
         return self._map_payload(turns.unionByName(convs), snap_b)
 
     def read_offsets(self) -> DataFrame:
@@ -925,10 +947,13 @@ class ParquetTranscriptTable:
             # (and the driver's footer-stat reads) must not grow with
             # core count, and the layout stays byte-comparable across
             # cluster sizes.  Keyed on conv_id, not the bucket column:
-            # partition index == bucket value (see bucket_expr), so the
+            # partition index == bucket value (see bucket_sql), so the
             # partitions are collision-free and the leading-bucket sort
             # below already satisfies the dynamic-partition write's
-            # required ordering (no second planner-inserted sort).
+            # required ordering (no second planner-inserted sort).  A
+            # frame already partitioned this way (a fold's resolve,
+            # read_internal) keeps its partitioning: Spark drops the
+            # redundant repartition.
             df.repartition(num_buckets or self.num_buckets, F.col("conv_id"))
             .sortWithinPartitions(
                 BUCKET_COLUMN, *(sort_cols or ["conv_id", "turn_idx", "ts"])
@@ -960,7 +985,8 @@ class ParquetTranscriptTable:
         (
             # one file per (bucket, isturn) at any parallelism — see
             # write_bucket_data (conv_id key ⇒ partition index ==
-            # bucket value, collision-free)
+            # bucket value, collision-free); a no-op on mor_prepare's
+            # frame, which its argmax already grouped on this exchange
             staged_df.repartition(self.num_buckets, F.col("conv_id"))
             .write.options(**self._write_options())
             .partitionBy(BUCKET_COLUMN, "_isturn")

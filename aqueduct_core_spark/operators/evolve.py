@@ -21,7 +21,7 @@ evolution is explicit:
   promotion, SPARK-40876), so no rewrite happens;
 - a batch carrying a **narrower** type than the table (e.g. an
   epoch-0 int segment replayed after the column went long) is upcast
-  in :func:`align_batch` — lossless by the same rule.
+  in :func:`align_exprs` — lossless by the same rule.
 
 Key columns (``conv_id``, ``turn_idx``) and anything else —
 narrowings, string↔numeric, drops — raise
@@ -32,10 +32,9 @@ never applied silently.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-from aqueduct_core_spark.schema import KEY_COLUMNS, LSN_COLUMN
+from aqueduct_core_spark.schema import KEY_COLUMNS, LSN_COLUMN, sql_ident
 
 #: change-log columns that are engine metadata, not payload
 _NON_PAYLOAD = {
@@ -120,13 +119,15 @@ def drop_column(table, name: str) -> dict:
     )
 
 
-def batch_payload_fields(batch: DataFrame) -> list[T.StructField]:
-    """Payload fields of an incoming change batch, key columns first."""
-    return [f for f in batch.schema.fields if f.name not in _NON_PAYLOAD]
+def batch_payload_fields(batch) -> list[T.StructField]:
+    """Payload fields of an incoming change batch (a DataFrame, or its
+    ``StructType``), key columns first."""
+    schema = batch if isinstance(batch, T.StructType) else batch.schema
+    return [f for f in schema.fields if f.name not in _NON_PAYLOAD]
 
 
 def evolve_table_fields(
-    table_fields: list[T.StructField], batch: DataFrame
+    table_fields: list[T.StructField], batch
 ) -> tuple[list[T.StructField], list[str], list[str]]:
     """Return (new table field list, added column names, widened
     column names).
@@ -135,7 +136,7 @@ def evolve_table_fields(
     before ``_lsn``; a known payload column arriving with a wider type
     widens the table field in place; a known column arriving with a
     *narrower* type keeps the table's type (the batch is upcast in
-    :func:`align_batch`).  Everything else raises.
+    :func:`align_exprs`).  Everything else raises.
     """
     by_name = {f.name: f for f in table_fields}
     added: list[str] = []
@@ -157,7 +158,7 @@ def evolve_table_fields(
                 ]
                 widened.append(f.name)
             elif widens(f.dataType, cur):
-                pass  # batch narrower than table: align_batch upcasts
+                pass  # batch narrower than table: align_exprs upcasts
             else:
                 raise IncompatibleSchemaChange(
                     f"column {f.name}: {cur} -> {f.dataType}"
@@ -169,24 +170,30 @@ def evolve_table_fields(
     return out, added, widened
 
 
-def align_batch(batch: DataFrame, table_fields: list[T.StructField]) -> DataFrame:
-    """Null-fill table columns the batch doesn't carry (e.g. replaying
-    an epoch-0 segment after evolution), upcast batch columns the
-    table holds wider (lossless — :func:`evolve_table_fields` already
-    vetoed anything else), and order columns canonically.  Engine
-    metadata columns pass through untouched."""
+def align_exprs(
+    batch_fields: list[T.StructField],
+    table_fields: list[T.StructField],
+    sources: list[str] | None = None,
+) -> list[str]:
+    """SQL select list that aligns a batch to ``table_fields``: upcast
+    batch columns the table holds wider (lossless —
+    :func:`evolve_table_fields` already vetoed anything else),
+    null-fill table columns the batch doesn't carry (e.g. replaying an
+    epoch-0 segment after evolution) and append them in table order.
+    Engine metadata columns pass through untouched.  ``sources`` names
+    the column each batch field is read from, when that differs from
+    the field's (physical) name — the logical name before a rename."""
     types = {f.name: f.dataType for f in table_fields}
-    batch_types = {f.name: f.dataType for f in batch.schema.fields}
-    have = set(batch.columns)
-    cols = []
-    for c in batch.columns:
-        want = types.get(c)
-        if want is not None and batch_types[c] != want:
-            cols.append(F.col(c).cast(want).alias(c))
-        else:
-            cols.append(F.col(c))
+    have = {f.name for f in batch_fields}
+    out = []
+    for i, f in enumerate(batch_fields):
+        src = sql_ident(sources[i] if sources else f.name)
+        want = types.get(f.name)
+        if want is not None and f.dataType != want:
+            src = f"CAST({src} AS {want.simpleString()})"
+        out.append(f"{src} AS {sql_ident(f.name)}")
     for f in table_fields:
         if f.name == LSN_COLUMN or f.name in have or f.name in KEY_COLUMNS:
             continue
-        cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return batch.select(*cols)
+        out.append(f"CAST(NULL AS {f.dataType.simpleString()}) AS {sql_ident(f.name)}")
+    return out

@@ -11,20 +11,29 @@ Reference semantics being re-expressed:
 - tombstone = ``data IS NULL`` → here explicit ``op = 'D'``
   (``SQLiteQueries.java:54-55``).
 
-Spark-first design: the argmax is a **hash aggregation on
-``max(struct(lsn, …))``**, not a window — partial (map-side) combine
-makes it skew-resilient (a hot conversation's events collapse to one
-row per key on the map side before the shuffle), and there is no
-per-partition sort.  Tie-breaking is deterministic because ``lsn`` is
-unique; the struct comparison falls back to ``ts`` then ``op`` if a
-malformed log ever duplicated an lsn.
+Spark-first design: the argmax is an **aggregation on
+``max(struct(lsn, …))``**, not a window.  Over a raw log the partial
+(map-side) combine makes it skew-resilient: a hot conversation's
+events collapse to one row per key before the shuffle.  In the apply
+path (:func:`aqueduct_core_spark.operators.merge.mor_prepare`) the
+input is already hash-partitioned on ``conv_id`` into the table's
+bucket count — the one exchange the delta write needs anyway — so the
+aggregate plans no exchange of its own and its partial combine runs
+AFTER the bucket exchange: raw events cross the shuffle, and the epoch
+saves a whole shuffle stage.  That wins where per-stage fixed costs
+dominate (perfbench's 7k–29k-event epochs: +28% to +40% ingest) and
+loses ~8% on one 5.1M-event epoch, where data volume dominates and the
+combine would have collapsed each key's ~4 events before the shuffle
+(BENCH.md, round 6).  Tie-breaking is deterministic because
+``lsn`` is unique; the struct comparison falls back to ``ts`` then
+``op`` if a malformed log ever duplicated an lsn.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from aqueduct_core_spark.schema import KEY_COLUMNS, LSN_COLUMN, OP_DELETE
+from aqueduct_core_spark.schema import KEY_COLUMNS, LSN_COLUMN, OP_DELETE, sql_ident
 
 
 def split_hierarchy(changes: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -80,21 +89,25 @@ def unified_argmax(changes: DataFrame, payload_cols: list[str]) -> DataFrame:
     - ``_dlsn``: max lsn of a conversation-level delete (non-null only
       on ``_tkey = -1`` rows) — the hierarchical delete watermark
 
-    This is THE heavy scan of the apply path: one shuffle, with
-    map-side partial combine collapsing each key's events before any
-    bytes move.  Everything downstream (winners, watermarks, lineage,
-    batch max-lsn) derives from this small result, so the 10^10-event
-    batch is read exactly once.
+    This is THE heavy scan of the apply path, one aggregate statement
+    run on ``changes``' own session.  It groups on ``changes``'
+    partitioning when that already clusters ``conv_id`` (the apply
+    path's bucket exchange: the partial combine then runs after that
+    exchange, in the same stage as the final one); otherwise it plans
+    one shuffle of its own, with map-side partial combine collapsing
+    each key's events before any bytes move.  Everything downstream
+    (winners, watermarks, lineage, batch max-lsn) derives from this
+    small result, so the 10^10-event batch is read exactly once.
     """
     fields = ["lsn", "op"] + [c for c in payload_cols if c not in ("lsn", "op")]
-    tkey = F.coalesce(F.col("turn_idx"), F.lit(-1)).alias("_tkey")
-    winner = F.max(F.struct(*[F.col(c) for c in fields])).alias("w")
-    dmax = F.max(
-        F.when(
-            (F.col("op") == OP_DELETE) & F.col("turn_idx").isNull(), F.col("lsn")
-        )
-    ).alias("_dlsn")
-    return changes.groupBy("conv_id", tkey).agg(winner, dmax)
+    winner = ", ".join(sql_ident(c) for c in fields)
+    return changes.sparkSession.sql(
+        "SELECT conv_id, coalesce(turn_idx, -1) AS _tkey, "
+        f"max(struct({winner})) AS w, "
+        f"max(CASE WHEN op = '{OP_DELETE}' AND turn_idx IS NULL THEN lsn END) AS _dlsn "
+        "FROM {changes} GROUP BY conv_id, coalesce(turn_idx, -1)",
+        changes=changes,
+    )
 
 
 def staged_conv_del(staged: DataFrame) -> DataFrame:

@@ -8,12 +8,21 @@ messages + offsets + pipe state, rollback on failure,
 which appends each batch and compacts on a schedule
 (``CompactionTask.java:40-47``):
 
-1. additive schema evolution (align batch ↔ table schema);
-2. LWW resolution (one hash argmax + tombstones + conversation-level
-   deletes) → exactly one row per key (Iceberg MERGE cardinality rule);
-3. fast-append: the resolved keys are written as delta files
-   partitioned by hash bucket — no join against table state, so epoch
-   cost is proportional to the batch; reads resolve base ∪ deltas and
+1. align: additive schema evolution and logical → physical names are
+   decided on the driver from schemas alone; ONE SQL select then
+   renames, upcasts and null-fills the batch and hash-partitions it on
+   ``conv_id`` into the manifest's bucket count (the bucket exchange —
+   partition index == bucket, see ``bucket_sql``);
+2. LWW resolution: :func:`aqueduct_core_spark.operators.lww.unified_argmax`
+   (one aggregate statement: argmax + tombstones + conversation-level
+   delete watermark) groups on that exchange → exactly one row per key
+   (Iceberg MERGE cardinality rule);
+3. fast-append: a last select adds the ``_bucket``/``_isturn`` file
+   split and the keys are written as delta files; the frame is already
+   partitioned as the writer's ``repartition`` asks, so Spark drops it
+   — one shuffle and two Spark jobs per epoch.  No join against table
+   state, so epoch cost is proportional to the batch; reads resolve
+   base ∪ deltas and
    :func:`aqueduct_core_spark.operators.compact.fold_deltas` folds the
    deltas into the base on a schedule;
 4. exactly-once: the epoch/max-lsn stamp and the ``_offsets`` metrics
@@ -29,13 +38,14 @@ import datetime as _dt
 import json
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import types as T
 
 from aqueduct_core_spark.catalog.snapshot import CommitConflict
 from aqueduct_core_spark.catalog.table import (
     BUCKET_COLUMN,
     ParquetTranscriptTable,
     _bucket_count,
-    bucket_expr,
+    bucket_sql,
 )
 from aqueduct_core_spark.config import EngineConfig
 from aqueduct_core_spark.operators import evolve, lww
@@ -81,18 +91,33 @@ def mor_prepare(
     t0 = _time.time()
     snap = table.catalog.current()
     num_buckets = _bucket_count(snap)
-    batch = table.to_physical(batch, snap)  # logical → physical column names
+    fields = batch.schema.fields
+    physical = table.physical_names([f.name for f in fields], snap)
+    batch_fields = [
+        T.StructField(p, f.dataType, f.nullable) for p, f in zip(physical, fields)
+    ]
     new_fields, added_cols, widened_cols = evolve.evolve_table_fields(
-        table.schema(snap).fields, batch
+        table.schema(snap).fields, T.StructType(batch_fields)
     )
-    batch = evolve.align_batch(batch, new_fields)
     payload_cols = [
         f.name for f in new_fields if f.name not in (*KEY_COLUMNS, LSN_COLUMN)
     ]
-    staged_df = (
-        lww.unified_argmax(batch, payload_cols)
-        .withColumn(BUCKET_COLUMN, bucket_expr(num_buckets))
-        .withColumn("_isturn", (F.col("_tkey") >= 0).cast("int"))
+    # one statement per step, each on the batch's own session (a
+    # foreachBatch frame lives in a cloned session whose temp views the
+    # table's session cannot see); the bucket exchange comes first, so
+    # the argmax groups on it and the delta write adds no second one
+    select = ", ".join(
+        evolve.align_exprs(batch_fields, new_fields, [f.name for f in fields])
+    )
+    aligned = batch.sparkSession.sql(
+        f"SELECT /*+ REPARTITION({num_buckets}, conv_id) */ {select} FROM {{batch}}",
+        batch=batch,
+    )
+    resolved = lww.unified_argmax(aligned, payload_cols)
+    staged_df = resolved.sparkSession.sql(
+        f"SELECT *, {bucket_sql(num_buckets)} AS {BUCKET_COLUMN}, "
+        "CAST(_tkey >= 0 AS INT) AS _isturn FROM {resolved}",
+        resolved=resolved,
     )
     by_bucket, out_dir = table.write_delta_data(staged_df, f"epoch-{epoch}")
     return {

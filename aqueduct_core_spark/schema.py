@@ -115,3 +115,12 @@ OFFSETS_SCHEMA = T.StructType(
 PIPE_UP_TO_DATE = "UP_TO_DATE"
 PIPE_OUT_OF_DATE = "OUT_OF_DATE"
 PIPE_UNKNOWN = "UNKNOWN"
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a quoted Spark SQL identifier, for statements run as
+    ``df.sparkSession.sql(text, df=df)``: backticks double inside the
+    quotes, and braces double because that call ``str.format``\\s the
+    text to substitute its DataFrame arguments."""
+    q = "`" + name.replace("`", "``") + "`"
+    return q.replace("{", "{{").replace("}", "}}")

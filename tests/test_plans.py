@@ -464,3 +464,72 @@ def test_bm25_no_text_shuffle_and_take_ordered(spark):
     # one single-partition exchange for the stats row; no hash shuffle
     assert plan.count("Exchange hashpartitioning") == 0, plan
     assert "BroadcastExchange" in plan or "BroadcastNestedLoopJoin" in plan, plan
+
+
+def _written_plans(monkeypatch):
+    """Executed plans of every frame written through
+    ``DataFrameWriter.parquet`` while the caller runs."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans = []
+    real = DataFrameWriter.parquet
+
+    def capture(self, *args, **kwargs):
+        plans.append(_plan(self._df))
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    return plans
+
+
+def _hash_exchanges(plan: str) -> list[str]:
+    return [
+        seg.split(")")[0]
+        for seg in plan.split("Exchange hashpartitioning(")[1:]
+    ]
+
+
+@pytest.fixture()
+def epoch_plans(spark, log_path, tmp_path, monkeypatch):
+    """(table, delta-write plans of two epochs, fold write plan)."""
+    from aqueduct_core_spark.catalog.table import ParquetTranscriptTable
+    from aqueduct_core_spark.config import EngineConfig
+    from aqueduct_core_spark.operators.compact import fold_deltas
+    from aqueduct_core_spark.operators.merge import apply_batch
+
+    table = ParquetTranscriptTable.create(spark, str(tmp_path / "t"), num_buckets=8)
+    cfg = EngineConfig(num_buckets=8, mor_fold_every=0)
+    log = spark.read.parquet(log_path)
+    hi = log.agg(F.max("lsn")).collect()[0][0]
+    plans = _written_plans(monkeypatch)
+    for e, (lo, up) in enumerate([(0, hi // 2), (hi // 2 + 1, hi)]):
+        batch = log.where((F.col("lsn") >= lo) & (F.col("lsn") <= up))
+        apply_batch(table, batch, epoch=e, cfg=cfg, batch_max_lsn=up)
+    epochs = list(plans)
+    fold_deltas(table)
+    return table, epochs, plans[len(epochs):]
+
+
+def test_epoch_write_plan_one_bucket_exchange(epoch_plans):
+    """The epoch's delta write shuffles once: the bucket exchange on
+    conv_id into the table's bucket count, which the argmax groups on
+    and the writer's repartition reuses."""
+    _, epochs, _ = epoch_plans
+    assert len(epochs) == 2
+    for plan in epochs:
+        ex = _hash_exchanges(plan)
+        assert len(ex) == 1, plan
+        keys, n = ex[0].rsplit(",", 1)
+        assert keys.startswith("conv_id#") and "," not in keys, plan
+        assert n.strip() == "8", plan
+
+
+def test_fold_write_plan_one_bucket_exchange(epoch_plans):
+    """The fold's resolve (argmax + delete watermark) and its bucket
+    write share one exchange — never a (conv_id, turn_idx) shuffle."""
+    _, _, fold = epoch_plans
+    assert len(fold) == 1
+    ex = _hash_exchanges(fold[0])
+    assert len(ex) == 1, fold[0]
+    assert "turn_idx" not in ex[0] and "_tkey" not in ex[0], fold[0]
+    assert ex[0].startswith("conv_id#") and ex[0].rsplit(",", 1)[1].strip() == "8"
