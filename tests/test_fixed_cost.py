@@ -7,6 +7,9 @@
 - An epoch's statements run on its batch's own session, so a frame
   built in a cloned session (every ``foreachBatch`` frame is one)
   applies the same as a frame built in the table's session.
+- A replay epoch whose lsn range is whole log files reads exactly
+  those files with no lsn predicate, so every such epoch plans the
+  same generated code.
 """
 
 from __future__ import annotations
@@ -110,3 +113,45 @@ def test_cloned_session_batch_applies_the_same(spark, log_path, tmp_path):
     _apply_all(cloned, spark.newSession().read.parquet(log_path))
     assert cloned.last_committed_epoch() == here.last_committed_epoch() == 2
     assert state_digest(cloned.read_internal()) == state_digest(here.read_internal())
+
+
+def test_whole_file_epochs_read_their_files_without_a_predicate(spark, tmp_path):
+    """Footer-planned epochs over whole files are bare scans of just
+    their files (no ``Filter``, whose lsn literals would compile a new
+    whole-stage class per epoch) and hold exactly the rows the range
+    predicate selects; a file whose footer counts a null lsn keeps the
+    predicate."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from aqueduct_core_spark.streaming.pipeline import _epoch_slices
+
+    d = tmp_path / "log"
+    d.mkdir()
+    for i in range(3):
+        pq.write_table(
+            pa.table({
+                "lsn": pa.array(range(10 * i, 10 * i + 10), pa.int64()),
+                "v": pa.array([i] * 10, pa.int64()),
+            }),
+            str(d / f"part-{i}.parquet"),
+        )
+    pq.write_table(
+        pa.table({"lsn": pa.array([30, None, 39], pa.int64()), "v": pa.array([3] * 3, pa.int64())}),
+        str(d / "part-3.parquet"),
+    )
+    log = spark.read.parquet(str(d))
+    cfg = EngineConfig(max_events_per_trigger=10, max_bytes_per_trigger=1 << 30)
+    ranges, batch_of = _epoch_slices(log, cfg, start_lsn=0)
+    batches = [batch_of(r) for r in ranges]
+    assert [(r.start_lsn, r.end_lsn) for r in ranges] == [(0, 9), (10, 19), (20, 29), (30, 39)]
+    for r, b in zip(ranges, batches):
+        want = log.where((F.col("lsn") >= r.start_lsn) & (F.col("lsn") <= r.end_lsn))
+        assert sorted(b.collect()) == sorted(want.collect())
+    plans = [b._jdf.queryExecution().optimizedPlan().toString() for b in batches]
+    assert ["Filter" in p for p in plans] == [False, False, False, True]
+    assert [len(b.inputFiles()) for b in batches[:3]] == [1, 1, 1]
+    # a window edge inside a file keeps the predicate
+    ranges, batch_of = _epoch_slices(log, cfg, start_lsn=5, end_lsn=24)
+    plans = [batch_of(r)._jdf.queryExecution().optimizedPlan().toString() for r in ranges]
+    assert ["Filter" in p for p in plans] == [True, False, True]

@@ -462,3 +462,27 @@ def test_direct_read_sees_renamed_columns_logically(spark, tmp_path):
         assert _normalize(direct) == _normalize(via), cols
     with pytest.raises(KeyError):
         table.read_conversation_direct("c1", columns=["text"])
+
+
+def test_decoded_file_cache_evicts_least_recent(tmp_path):
+    """The point reads' decoded-file cache keeps its Arrow bytes under
+    its bound, evicting the least recently used file first."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from aqueduct_core_spark.catalog.table import _DecodedFiles
+
+    paths = []
+    for i in range(3):
+        p = str(tmp_path / f"f{i}.parquet")
+        pq.write_table(pa.table({"conv_id": [f"c{i}-{j}" for j in range(100)]}), p)
+        paths.append(p)
+    one = pq.ParquetFile(paths[0]).read().nbytes
+    cache = _DecodedFiles(max_bytes=2 * one)
+    a = cache.get(paths[0])
+    cache.get(paths[1])
+    assert cache.get(paths[0]) is a  # a hit, and now the most recent
+    cache.get(paths[2])
+    assert list(cache._tables) == [paths[0], paths[2]]
+    assert cache._bytes <= 2 * one
+    assert cache.get(paths[1]).equals(pq.ParquetFile(paths[1]).read())
