@@ -97,7 +97,6 @@ class SnapshotCatalog:
         clear_delta_buckets: list[str] | None = None,
         publish: bool = True,
         column_mapping: dict[str, str] | None = None,
-        dropped_columns: list[str] | None = None,
     ) -> dict:
         """Produce snapshot N+1 from ``base``.
 
@@ -148,15 +147,12 @@ class SnapshotCatalog:
             + list(added_offsets_files or []),
             "summary": {**base["summary"], **(summary_updates or {})},
         }
-        # rename/drop metadata (logical name mapping — Iceberg's
-        # field-id indirection expressed over Parquet): carried forward
-        # unless this commit changes it
+        # rename metadata (logical name mapping — Iceberg's field-id
+        # indirection expressed over Parquet): carried forward unless
+        # this commit changes it
         cm = column_mapping if column_mapping is not None else base.get("column_mapping")
-        dc = dropped_columns if dropped_columns is not None else base.get("dropped_columns")
         if cm is not None:
             snap["column_mapping"] = cm
-        if dc is not None:
-            snap["dropped_columns"] = dc
         if not publish:
             # per-stage identity: the publish/abandon decision claims an
             # O_EXCL file named by this id, so exactly one of a racing
@@ -350,9 +346,8 @@ class SnapshotCatalog:
                 "aqueduct.rollback-to": to_version,
             },
         }
-        for k in ("column_mapping", "dropped_columns"):
-            if k in tgt:
-                snap[k] = tgt[k]
+        if "column_mapping" in tgt:
+            snap["column_mapping"] = tgt["column_mapping"]
         self._write_manifest(snap)
         self._swap_version(snap["snapshot_id"])
         return snap

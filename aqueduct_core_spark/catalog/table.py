@@ -1,15 +1,11 @@
 """Transcript table storage layer.
 
-- :class:`ParquetTranscriptTable` — the table every apply, read and
-  maintenance path takes: plain Parquet files tracked by
-  :class:`SnapshotCatalog`, with atomic commits, snapshot isolation and
-  the exactly-once summary stamp.
-- :class:`IcebergTranscriptTable` — the statements the engine would run
-  against a real Iceberg table (``PARTITIONED BY (bucket(N, conv_id))``,
-  native ``MERGE INTO``).  It is not interchangeable: no apply path
-  accepts it.  It is exercised only by ``tools/iceberg_integration.py``
-  when the Iceberg runtime jar is on the classpath, and by tests that
-  parse its SQL.
+:class:`ParquetTranscriptTable` is the table every apply, read and
+maintenance path takes: plain Parquet files tracked by
+:class:`SnapshotCatalog`, with atomic commits, snapshot isolation and
+the exactly-once summary stamp.  There is no second backend: an Iceberg
+table would be built against the merge-on-read commit once an Iceberg
+runtime jar ships with the repository.
 
 Layout: rows hash-bucketed by ``conv_id`` so all turns of a
 conversation co-locate and a MERGE touches only the buckets present in
@@ -327,38 +323,34 @@ class ParquetTranscriptTable:
         snap = snap or self.catalog.current()
         return T.StructType.fromJson({"type": "struct", "fields": snap["schema"]})
 
-    def payload_columns(self) -> list[str]:
-        return [f.name for f in self.schema().fields if f.name != LSN_COLUMN]
-
-    # -- logical column mapping (rename/drop without rewrite) ------------
+    # -- logical column mapping (rename without rewrite) -----------------
     #
     # Physical column names are write-once: data files keep the name a
-    # column was born with, forever.  Renames and drops are pure
-    # metadata — a {logical: physical} mapping plus a dropped-physicals
-    # list in the snapshot manifest (Iceberg's field-id indirection,
-    # expressed over plain Parquet).  Internals (LWW, folds, compaction,
-    # consistency sums) run entirely on physical names; the mapping is
-    # applied only at the public boundaries: reads map physical →
-    # logical, incoming batches map logical → physical.
+    # column was born with, forever.  A rename is pure metadata — a
+    # {logical: physical} mapping in the snapshot manifest (Iceberg's
+    # field-id indirection, expressed over plain Parquet).  Internals
+    # (LWW, folds, compaction, consistency sums) run entirely on
+    # physical names; the mapping is applied only at the public
+    # boundaries: reads map physical → logical, incoming batches map
+    # logical → physical.
 
     def column_mapping(self, snap: dict | None = None) -> dict[str, str]:
         """Visible payload columns as {logical: physical} — identity for
-        never-renamed columns, dropped physicals absent.  Key columns
-        and the internal lsn are not mapped (never renameable)."""
+        never-renamed columns.  Key columns and the internal lsn are not
+        mapped (never renameable)."""
         snap = snap or self.catalog.current()
         stored = snap.get("column_mapping", {})  # logical -> physical, renames only
-        dropped = set(snap.get("dropped_columns", []))
         by_physical = {v: k for k, v in stored.items()}
         out: dict[str, str] = {}
         for fd in snap["schema"]:
             p = fd["name"]
-            if p in (*KEY_COLUMNS, LSN_COLUMN) or p in dropped:
+            if p in (*KEY_COLUMNS, LSN_COLUMN):
                 continue
             out[by_physical.get(p, p)] = p
         return out
 
     def logical_schema(self) -> T.StructType:
-        """The public (post-rename, post-drop) payload schema."""
+        """The public (post-rename) payload schema."""
         snap = self.catalog.current()
         mapping = self.column_mapping(snap)
         by_physical = {v: k for k, v in mapping.items()}
@@ -375,37 +367,29 @@ class ParquetTranscriptTable:
         return T.StructType(fields)
 
     def _map_payload(self, df: DataFrame, snap: dict) -> DataFrame:
-        """physical → logical at a read boundary: rename visible payload
-        columns, hide dropped ones; key/extra columns pass through."""
-        mapping = self.column_mapping(snap)
-        by_physical = {v: k for k, v in mapping.items()}
-        payload_physicals = {
-            fd["name"] for fd in snap["schema"]
-            if fd["name"] not in (*KEY_COLUMNS, LSN_COLUMN)
-        }
-        cols = []
-        for c in df.columns:
-            if c in payload_physicals:
-                if c in by_physical:
-                    cols.append(F.col(c).alias(by_physical[c]))
-                # else: dropped — hidden
-            else:
-                cols.append(F.col(c))
-        return df.select(*cols)
+        """physical → logical at a read boundary: rename payload
+        columns; key/extra columns pass through."""
+        by_physical = {v: k for k, v in self.column_mapping(snap).items()}
+        return df.select(
+            *[
+                F.col(c).alias(by_physical[c]) if c in by_physical else F.col(c)
+                for c in df.columns
+            ]
+        )
 
     def physical_names(self, columns: list[str], snap: dict | None = None) -> list[str]:
         """logical → physical names for an incoming change batch's
         columns, under ``snap``'s mapping (default: the current
         snapshot).  Columns not known logically pass through (schema
         evolution adds them) — except a name that collides with a
-        RETIRED physical (renamed away or dropped), which fails loud:
+        RETIRED physical (renamed away), which fails loud:
         silently merging new data into an old column's files would
         resurrect it."""
         snap = snap or self.catalog.current()
         mapping = self.column_mapping(snap)
         # a physical payload name is writable under its own name only
-        # while it is ALSO the logical name (identity); anything else —
-        # dropped, or renamed away — is retired
+        # while it is ALSO the logical name (identity); a name renamed
+        # away is retired
         identity = {k for k, v in mapping.items() if k == v}
         retired = {
             fd["name"] for fd in snap["schema"]
@@ -421,8 +405,8 @@ class ParquetTranscriptTable:
                 )
 
                 raise IncompatibleSchemaChange(
-                    f"column name {c!r} was previously used by a renamed or "
-                    "dropped column; reusing a retired physical name would "
+                    f"column name {c!r} was previously used by a renamed "
+                    "column; reusing a retired physical name would "
                     "merge new data into its old files — pick another name"
                 )
             else:
@@ -580,11 +564,11 @@ class ParquetTranscriptTable:
 
     def read(self, columns: list[str] | None = None) -> DataFrame:
         """Public table state (internal lsn column hidden; renamed
-        columns read back under their logical names, dropped columns
-        hidden — both metadata-only).  ``columns`` prunes the read to
-        the named payload columns — the prune pushes through the MOR
-        delta-resolve into the parquet scan, so a 2-of-6-column read
-        scans 2 columns (plus keys/lsn), not 6."""
+        columns read back under their logical names — metadata-only).
+        ``columns`` prunes the read to the named payload columns — the
+        prune pushes through the MOR delta-resolve into the parquet
+        scan, so a 2-of-6-column read scans 2 columns (plus keys/lsn),
+        not 6."""
         v = self.catalog.current_version()
         snap = self.catalog.load(v)
         schema = None if columns is None else self._reduced_schema(snap, columns)
@@ -1171,122 +1155,3 @@ class ParquetTranscriptTable:
                 os.remove(p)
                 n += 1
         return n
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    """True when the Iceberg Spark runtime is on the classpath."""
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:
-        return False
-
-
-class IcebergTranscriptTable:
-    """A real Iceberg table + native MERGE INTO.
-
-    No apply path takes this class (see the module docstring);
-    ``tools/iceberg_integration.py`` drives it when
-    :func:`iceberg_available`.
-    """
-
-    def __init__(self, spark: SparkSession, identifier: str):
-        self.spark = spark
-        self.identifier = identifier
-
-    @classmethod
-    def create(
-        cls, spark: SparkSession, identifier: str, num_buckets: int = 32
-    ) -> "IcebergTranscriptTable":
-        spark.sql(
-            f"""
-            CREATE TABLE IF NOT EXISTS {identifier} (
-              conv_id STRING NOT NULL,
-              turn_idx INT NOT NULL,
-              role STRING, text STRING, tool STRING, ts TIMESTAMP,
-              {LSN_COLUMN} BIGINT NOT NULL
-            ) USING iceberg
-            PARTITIONED BY (bucket({num_buckets}, conv_id))
-            TBLPROPERTIES (
-              'write.distribution-mode' = 'hash',
-              'write.merge.mode' = 'merge-on-read',
-              'format-version' = '2'
-            )
-            """
-        )
-        return cls(spark, identifier)
-
-    def read(self) -> DataFrame:
-        return self.spark.table(self.identifier).drop(LSN_COLUMN)
-
-    def read_internal(self, buckets=None) -> DataFrame:
-        return self.spark.table(self.identifier)
-
-    def merge_sql(
-        self, payload_cols: tuple[str, ...] = ("role", "text", "tool", "ts")
-    ) -> str:
-        """The key-level upsert MERGE (statement text exposed so the
-        jar-less sandbox can at least parse-validate what will run on
-        the cluster).  ``payload_cols`` narrows the column set for
-        pre-evolution epochs (e.g. before ``tool`` exists) — the same
-        statement shape, fewer SET/INSERT columns."""
-        sets = ", ".join(f"t.{c} = s.{c}" for c in payload_cols)
-        cols = ", ".join(payload_cols)
-        vals = ", ".join(f"s.{c}" for c in payload_cols)
-        return f"""
-            MERGE INTO {self.identifier} t
-            USING _aq_src s
-            ON t.conv_id = s.conv_id AND t.turn_idx = s.turn_idx
-            WHEN MATCHED AND s.op = 'D' AND s.{LSN_COLUMN} >= t.{LSN_COLUMN} THEN DELETE
-            WHEN MATCHED AND s.op <> 'D' AND s.{LSN_COLUMN} >= t.{LSN_COLUMN} THEN
-              UPDATE SET {sets}, t.{LSN_COLUMN} = s.{LSN_COLUMN}
-            WHEN NOT MATCHED AND s.op <> 'D' THEN
-              INSERT (conv_id, turn_idx, {cols}, {LSN_COLUMN})
-              VALUES (s.conv_id, s.turn_idx, {vals}, s.{LSN_COLUMN})
-            """
-
-    def evolve_sql(
-        self, added: list[tuple[str, str]], widened: list[tuple[str, str]]
-    ) -> list[str]:
-        """Schema-evolution DDL for the evolutions
-        :mod:`aqueduct_core_spark.operators.evolve` computes —
-        ``added``/``widened`` are (column, spark-sql type) pairs.  Both
-        are metadata-only in Iceberg (spec §Schema Evolution: add
-        column, and the int→long / float→double / decimal-precision
-        widenings)."""
-        stmts = []
-        if added:
-            cols = ", ".join(f"{c} {t}" for c, t in added)
-            stmts.append(f"ALTER TABLE {self.identifier} ADD COLUMNS ({cols})")
-        for c, t in widened:
-            stmts.append(f"ALTER TABLE {self.identifier} ALTER COLUMN {c} TYPE {t}")
-        return stmts
-
-    def conv_delete_merge_sql(self) -> str:
-        """Conversation-level deletes against pre-existing state.
-        Equi-ON + MATCHED-AND guard (not a non-equi ON): every engine
-        plans the equi-join, and a non-equi MERGE ON is rejected or
-        mis-planned by several Iceberg/Spark version combinations.
-        One source row fanning out to many target rows is legal — the
-        MERGE cardinality rule only forbids the reverse."""
-        return f"""
-            MERGE INTO {self.identifier} t
-            USING _aq_conv_del d
-            ON t.conv_id = d.conv_id
-            WHEN MATCHED AND t.{LSN_COLUMN} <= d.conv_del_lsn THEN DELETE
-            """
-
-    def merge_resolved(
-        self,
-        winners: DataFrame,
-        conv_del: DataFrame,
-        payload_cols: tuple[str, ...] = ("role", "text", "tool", "ts"),
-    ) -> None:
-        """Native MERGE INTO: one row per key guaranteed by the LWW
-        resolve step (Iceberg cardinality requirement)."""
-        winners.createOrReplaceTempView("_aq_src")
-        conv_del.createOrReplaceTempView("_aq_conv_del")
-        self.spark.sql(self.merge_sql(payload_cols))
-        self.spark.sql(self.conv_delete_merge_sql())

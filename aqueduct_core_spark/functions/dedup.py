@@ -456,52 +456,6 @@ def duplicate_spans(
     )
 
 
-def strip_duplicate_spans(
-    df: DataFrame,
-    spans: DataFrame | None = None,
-    k: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_method: str = "xxhash64",
-    max_occ: int | None = None,
-) -> DataFrame:
-    """Remove each document's duplicate spans (keeping the corpus'
-    canonical copy untouched): tokens covered by any
-    :func:`duplicate_spans` interval are dropped and the remainder
-    re-joined.  ``spans`` defaults to computing them from ``df``; pass
-    a precomputed frame to reuse one detection across consumers.
-    Output: input columns with ``text_col`` replaced by the cleaned
-    text (normalized tokenization — the same canonical form every
-    downstream dedup/quality op consumes) plus ``dup_tokens``.
-    """
-    if spans is None:
-        spans = duplicate_spans(df, k, text_col, id_col, hash_method, max_occ)
-    toks = _norm_tokens(F.col(text_col))
-    joined = df.join(
-        spans.select(
-            F.col(id_col), F.col("spans").alias("_spans"), F.col("dup_tokens")
-        ),
-        id_col,
-        "left",
-    )
-    sp = F.coalesce(F.col("_spans"), F.array().cast("array<struct<s:int,e:int>>"))
-    kept = F.filter(
-        F.transform(toks, lambda t, i: F.struct(t.alias("t"), i.alias("i"))),
-        lambda x: ~F.exists(
-            sp, lambda s: (x["i"] >= s["s"]) & (x["i"] < s["e"])
-        ),
-    )
-    return joined.select(
-        *[
-            F.array_join(F.transform(kept, lambda x: x["t"]), " ").alias(c)
-            if c == text_col
-            else F.col(c)
-            for c in df.columns
-        ],
-        F.coalesce(F.col("dup_tokens"), F.lit(0)).alias("dup_tokens"),
-    )
-
-
 def spread_small_input(df: DataFrame, min_partitions: int | None) -> DataFrame:
     """Round-robin the input across ``min_partitions`` when its scan has
     fewer splits — the map side of shingle/hash pipelines is the

@@ -388,26 +388,6 @@ def media_feature_summary(media: DataFrame, dim: int = 16) -> DataFrame:
     )
 
 
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: explode each video into the frame
-    timestamps a decoder would extract — pure column math (sequence +
-    explode), no decode.  The decode itself would be a second
-    mapInPandas over (media_id, frame_ts) with the payload joined in."""
-    return (
-        media.where(F.col("kind") == "video")
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.coalesce(F.col("meta.duration_ms"), F.lit(0)),
-                    F.lit(every_ms),
-                )
-            ).alias("frame_ts_ms"),
-        )
-    )
-
-
 RESIZE_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),

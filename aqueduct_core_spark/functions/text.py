@@ -208,20 +208,6 @@ def gopher_quality_filter(
     return out.withColumn("keep", keep)
 
 
-def with_text_stats(df: DataFrame, col: str = "text") -> DataFrame:
-    """All stats in one projection — a single pass over the scan."""
-    c = F.col(col)
-    return df.select(
-        "*",
-        token_count(c).alias("n_tokens"),
-        alpha_ratio(c).alias("alpha_ratio"),
-        stopword_ratio(c).alias("stopword_ratio"),
-        quality_score(c).alias("quality"),
-        detect_lang(c).alias("lang_pred"),
-        fingerprint(c).alias("fp"),
-    )
-
-
 def word_ngrams(col: Column, n: int = 2) -> Column:
     """All word n-grams of normalized text, in order, WITH repeats
     (array<string>; docs with fewer than ``n`` words → empty array).

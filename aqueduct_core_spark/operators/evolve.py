@@ -94,31 +94,6 @@ def rename_column(table, old: str, new: str) -> dict:
     )
 
 
-def drop_column(table, name: str) -> dict:
-    """Drop a payload column — metadata-only (Iceberg ``ALTER TABLE …
-    DROP COLUMN``): the physical column stays in existing files but is
-    hidden from every read and retired from every write; its storage is
-    reclaimed incrementally as folds/compactions rewrite buckets.  The
-    retired physical name cannot be reused by a later batch
-    (fail-loud in ``to_physical`` — reuse would resurrect old data)."""
-    mapping = table.column_mapping()
-    if name in KEY_COLUMNS or name == LSN_COLUMN:
-        raise IncompatibleSchemaChange(f"key/internal column {name!r} is not droppable")
-    if name not in mapping:
-        raise IncompatibleSchemaChange(f"unknown column {name!r}; visible: {sorted(mapping)}")
-    base = table.catalog.current()
-    stored = dict(base.get("column_mapping", {}))
-    stored.pop(name, None)
-    dropped = list(base.get("dropped_columns", []))
-    dropped.append(mapping[name])
-    return table.catalog.commit(
-        base,
-        column_mapping=stored,
-        dropped_columns=dropped,
-        summary_updates={"aqueduct.drop-column": name},
-    )
-
-
 def batch_payload_fields(batch) -> list[T.StructField]:
     """Payload fields of an incoming change batch (a DataFrame, or its
     ``StructType``), key columns first."""

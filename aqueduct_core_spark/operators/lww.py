@@ -161,27 +161,6 @@ def resolve_batch(
     return staged_winners(staged, payload_cols), staged_conv_del(staged)
 
 
-def lww_dedup_window(turn_events: DataFrame) -> DataFrame:
-    """Window-function formulation of the same kernel (reference J2/W2):
-    ``row_number() OVER (PARTITION BY key ORDER BY lsn DESC) = 1``.
-
-    Kept as a secondary implementation for parity testing and for
-    callers that need *all* columns of the winning row untouched.  The
-    aggregate formulation is preferred at scale (no sort, partial
-    combine).
-    """
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(*KEY_COLUMNS).orderBy(
-        F.col("lsn").desc(), F.col("ts").desc()
-    )
-    return (
-        turn_events.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
 def partial_merged_state(
     changes: DataFrame, payload_cols: list[str] | None = None
 ) -> DataFrame:

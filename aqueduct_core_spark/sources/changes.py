@@ -16,7 +16,6 @@ Filter inventory (SURVEY §2.2):
   (PostgresqlStorage.java:469-473)
 - F4 projection    — fixed column select (column pruning)
 - F5 tombstone     — ``op = 'D'``
-- F7 event-time threshold — ``ts <= t``
 - O1/O2 total-order sort + limit (PostgresqlStorage.java:444-445)
 """
 
@@ -73,11 +72,6 @@ def routing_filter(
 def tombstones(df: DataFrame) -> DataFrame:
     """F5."""
     return df.where(F.col("op") == OP_DELETE)
-
-
-def until_event_time(df: DataFrame, threshold) -> DataFrame:
-    """F7: ``created_utc <= ?`` analog (SQLiteQueries.java:52, 67)."""
-    return df.where(F.col("ts") <= F.lit(threshold))
 
 
 def page(

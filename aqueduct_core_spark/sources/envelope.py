@@ -220,12 +220,3 @@ def split_envelopes(
     )
     return ok, bad
 
-
-def read_envelope_quarantine(spark, quarantine_dir: str) -> DataFrame:
-    """Deduplicated view of the streaming envelope DLQ sidecar
-    (``wire_format="json-envelope"`` + ``quarantine_dir``): the sidecar
-    is at-least-once (a crash-replayed epoch re-appends its dead
-    letters under the same epoch), so readers collapse on
-    ``(epoch, raw)`` — same contract as
-    :func:`aqueduct_core_spark.operators.validate.read_quarantine`."""
-    return spark.read.parquet(quarantine_dir).dropDuplicates(["epoch", "raw"])

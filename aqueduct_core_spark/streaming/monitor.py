@@ -199,51 +199,6 @@ def streaming_throughput(
     )
 
 
-def streaming_sessions(
-    spark: SparkSession,
-    changes_dir: str,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-):
-    """Streaming session windows: the streaming twin of
-    :func:`aqueduct_core_spark.operators.temporal.sessionize`, built on
-    Spark's native ``session_window`` — per-conversation sessions close
-    when no event arrives within ``gap`` (event time); the watermark
-    bounds how long an open session waits for late data before it is
-    finalized and emitted (append mode).  State per key is one open
-    session — bounded regardless of stream length.  Returns the
-    unstarted streaming DataFrame; attach a ``writeStream`` sink.
-
-    Semantics note vs the batch ``sessionize``: ``session_window``
-    closes a session ``gap`` after the LAST event (identical split
-    rule), but the boundary is exclusive-at-gap (an event exactly
-    ``gap`` later starts a new session) where the batch twin keeps it —
-    the watermark/finalization contract forces the closed-open interval.
-    The equivalence of session COUNTS under strict inequality inputs is
-    tested in ``tests/test_streaming.py``.
-    """
-    from aqueduct_core_spark.schema import CHANGES_SCHEMA
-
-    stream = spark.readStream.schema(CHANGES_SCHEMA).parquet(changes_dir)
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap), F.col("conv_id"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("lsn").alias("first_lsn"),
-            F.max("lsn").alias("last_lsn"),
-        )
-        .select(
-            "conv_id",
-            F.col("session_window.start").alias("start_ts"),
-            F.col("session_window.end").alias("end_ts"),
-            "n_events",
-            "first_lsn",
-            "last_lsn",
-        )
-    )
-
-
 def epoch_lineage_audit(table_or_offsets) -> "DataFrame":
     """Audit the exactly-once bookkeeping itself: violations over the
     ``_offsets`` table's epoch sequence and per-bucket lineage.

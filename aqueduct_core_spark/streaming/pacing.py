@@ -9,13 +9,13 @@ and an empty read answers with the configured default so idle
 consumers back off (``PipeReadController.java:89-121``; client parse
 ``HttpPipeClient.java:49-81``).
 
-Spark re-expression: the same arithmetic drives a Structured Streaming
-``processingTime`` trigger interval — one stream stands in for the
-consumer fleet, so ``node_count`` becomes the number of concurrent
-streams sharing the source and ``pool_size`` the source's tolerated
-concurrent readers.  Pure driver-side math; deterministic jitter from a
-caller-supplied value (no wall-clock randomness — replays stay
-reproducible).
+Spark re-expression: the same arithmetic paces
+:func:`aqueduct_core_spark.streaming.pipeline.tail_loop` — one loop
+stands in for the consumer fleet, so ``node_count`` becomes the number
+of concurrent loops sharing the source and ``pool_size`` the source's
+tolerated concurrent readers.  Pure driver-side math; deterministic
+jitter from a caller-supplied value (no wall-clock randomness — replays
+stay reproducible).
 """
 
 from __future__ import annotations
@@ -52,23 +52,3 @@ def retry_after_ms(
     base *= 1.0 + JITTER_FRACTION * max(-1.0, min(1.0, jitter_unit))
     return int(min(max(math.ceil(base), floor_ms), cap_ms))
 
-
-def processing_time_trigger(
-    query_time_ms: float,
-    node_count: int = 1,
-    pool_size: int = 1,
-    floor_ms: int = 100,
-    cap_ms: int = DEFAULT_CAP_MS,
-    jitter_unit: float = 0.0,
-) -> str:
-    """The Structured Streaming ``processingTime`` string for the
-    computed pacing — feed to
-    :func:`aqueduct_core_spark.streaming.pipeline.start_stream`.
-    Pass each consumer's deterministic ``jitter_unit`` (as for
-    :func:`retry_after_ms`): without it, N concurrent streams sharing
-    a source compute IDENTICAL intervals and poll in lockstep — the
-    thundering herd the ±10% jitter exists to spread."""
-    ms = retry_after_ms(
-        query_time_ms, node_count, pool_size, floor_ms, cap_ms, jitter_unit
-    )
-    return f"{ms} milliseconds"

@@ -9,10 +9,9 @@ Spark re-expression of the reference's store-node sync loop
   :func:`run_available_now`): ``readStream`` file source over the log
   directory → ``foreachBatch``, each trigger one epoch.  The checkpoint
   gives monotone batch ids; re-delivered batches after a crash hit the
-  snapshot epoch-stamp guard and skip idempotently (T5/T6).  Trigger
-  pacing (``processingTime`` / ``availableNow``) replaces the
-  reference's Retry-After long-poll pacing
-  (``PostgresqlStorage.java:203-225``).
+  snapshot epoch-stamp guard and skip idempotently (T5/T6).
+  :func:`tail_loop` paces repeated ``availableNow`` drains with the
+  reference's Retry-After formula (``PostgresqlStorage.java:203-225``).
 - **Batch replay path** (:func:`replay`): plan lsn-range triggers with
   the byte/row budgets (W1 analog) and apply them in order.  Used for
   bootstrap (full replay from lsn 0 — reference BootstrapType.java:3-10)
@@ -581,29 +580,6 @@ def start_stream_demux(
     )
 
 
-def run_available_now_demux(
-    spark: SparkSession,
-    tables: dict,
-    changes_dir: str,
-    checkpoint_dir: str,
-    routes: dict,
-    cfg: EngineConfig | None = None,
-    max_files_per_trigger: int | None = None,
-    timeout_s: int = 3600,
-) -> None:
-    """Drain the log once through the streaming demux, then stop."""
-    _drain(start_stream_demux(
-        spark,
-        tables,
-        changes_dir,
-        checkpoint_dir,
-        routes,
-        cfg,
-        max_files_per_trigger=max_files_per_trigger,
-        available_now=True,
-    ), timeout_s)
-
-
 def _foreach_batch_fn(table: ParquetTranscriptTable, cfg: EngineConfig,
                       record_metrics: bool = False, **hooks):
     """The ``foreachBatch`` callback: each trigger is a one-item
@@ -677,7 +653,7 @@ def dedup_redeliveries(stream: DataFrame, within: str) -> DataFrame:
     once the watermark passes its event time + ``within``, so state
     size is bounded by the re-delivery horizon, not the stream length.
     NULL-``ts`` rows (conversation-level tombstones) BYPASS the
-    stateful dedup and pass straight through: coalescing them to the
+    watermark dedup and pass straight through: coalescing them to the
     trigger wall-clock — the obvious move — would jump the stream
     watermark to ``now − within`` during a historical catch-up, after
     which every genuinely-old event is dropped as late (silent data
@@ -739,9 +715,10 @@ def start_stream(
     (:mod:`aqueduct_core_spark.sources.envelope`), the shape a Kafka /
     wal2json tail delivers.  Envelope-level dead letters (corrupt JSON,
     unknown op, missing lsn) are appended per-epoch to
-    ``quarantine_dir`` with the raw wire bytes — at-least-once with
-    ``(epoch, raw)`` dedup on read, same DLQ contract as row-level
-    validation — while clean rows proceed to the exactly-once merge."""
+    ``quarantine_dir`` with the raw wire bytes — at-least-once (a
+    crash-replayed epoch re-appends its dead letters, so readers
+    collapse on ``(epoch, raw)``) — while clean rows proceed to the
+    exactly-once merge."""
     cfg = cfg or EngineConfig()
     if wire_format not in ("parquet", "json-envelope"):
         raise ValueError(f"unknown wire_format {wire_format!r}")
@@ -775,8 +752,8 @@ def start_stream(
 
     if dedup_within:
         # NULL-ts rows (dead letters, conv tombstones) bypass the
-        # stateful dedup inside the helper (the quarantine reader
-        # dedupes re-delivered dead letters on (epoch, raw) anyway)
+        # watermark dedup inside the helper (a dead letter re-delivered
+        # into the sidecar collapses on (epoch, raw) at read time)
         stream = dedup_redeliveries(stream, dedup_within)
     return _start(stream, batch_fn, checkpoint_dir, processing_time, available_now)
 

@@ -1,10 +1,14 @@
-"""Driver-contract registry parity: every query has an oracle.
+"""Registry checks that need no Spark session.
 
-``tools/check_contract.py`` grades a query without an oracle by row
-count alone, so a registry that drops an oracle but keeps its query
-would pass silently.  This check needs no Spark session.
+- Driver-contract parity: every query has an oracle.
+  ``tools/check_contract.py`` grades a query without an oracle by row
+  count alone, so a registry that drops an oracle but keeps its query
+  would pass silently.
+- No test-only public surface: every public engine definition has a
+  non-test caller or an allowlisted reason to stay.
 """
 
+import ast
 import sys
 from pathlib import Path
 
@@ -21,3 +25,150 @@ def test_queries_and_oracles_have_the_same_keys():
         "oracles_without_query": sorted(os_ - qs),
     }
     assert len(qs) == 89
+
+
+# ---------------------------------------------------------------------------
+# No test-only public surface
+# ---------------------------------------------------------------------------
+
+_REPO = Path(__file__).resolve().parents[1]
+
+#: public engine definitions that no non-test code calls, each with the
+#: reason it stays; everything else public must have a non-test caller
+_TEST_ONLY_ALLOWED = {
+    # test oracles
+    "forest_probes": "driver-side probe oracle the ANN probe tests compare against",
+    "consistency_sum_pdf": "pandas offset-consistency oracle of the replay tests",
+    "states_equal": "anti-join state equality the verification tests assert with",
+    # serving and read API
+    "ParquetTranscriptTable.read_conversations": "serving multi-get over a set of conversations",
+    "ParquetTranscriptTable.logical_schema": "public post-rename schema of the serving API",
+    "ParquetTranscriptTable.read_as_of": "time-travel read at a version or tag",
+    "read_log": "public reader of a change-log directory",
+    "with_event_size": "public X6 event-size column helper",
+    "with_normalized_text": "public text-normalization column helper",
+    # pacing: the paper's retryAfterMs consumer loop
+    "tail_loop": "the paper's Retry-After paced consumer loop, the only pacing loop",
+    # media kernels waiting for their driver rows
+    "resize_images": "media kernel pending its media_resize driver row",
+    "resample_audio": "media kernel pending its media_resample driver row",
+    # ingest topologies and bootstrap
+    "start_stream_demux": "streaming demux: one log tail fanned out to routed replicas",
+    "replay_multi_source": "several ordered logs ingested into one table",
+    "bootstrap": "full reset to an empty table (reference deleteAll bootstrap)",
+    "bootstrap_from_state": "initial load from a consistent state snapshot",
+    "apply_with_quarantine": "dead-letter apply of row-level validation",
+    "read_quarantine": "deduplicated view of the row-level dead letters",
+    # monitoring
+    "fleet_status": "lag roll-up across a demux fleet",
+    "streaming_throughput": "streaming twin of the windowed throughput query",
+    # change feed re-publication
+    "FeedCursor": "at-least-once cursor over a table's change feed",
+    "FeedPublisher": "exactly-once re-publication of the change feed as envelopes",
+    "FeedPublisher.wire_glob": "stream-source path of the published feed",
+    "DedupIndexMaintainer": "keeps a DedupIndex fresh from the streaming apply loop",
+    # maintenance and compliance
+    "export_snapshot": "backup of one pinned snapshot",
+    "restore_snapshot": "restore of a backup with its exactly-once watermark",
+    "SnapshotCatalog.delete_tag": "releases a tag so compliance purges can expire it",
+    "purge_expired": "TTL purge (F6 phase 2)",
+    "rewrite_zorder": "Z-order clustered rewrite",
+    "rebucket": "bucket-count evolution in one atomic commit",
+    "maintain": "one-call maintenance policy loop",
+    "redact_log": "redaction of the change log itself",
+    "erase_everywhere": "one-call erasure across every registered surface",
+    "diff_replica": "anti-entropy divergence locator",
+    "repair_replica": "anti-entropy bucket repair",
+    "ConvView.last_table_version": "the table version a conversation view last refreshed from",
+    "ConvView.expire": "orphan cleanup of a conversation view",
+    "Scd2History.expire": "orphan cleanup of the SCD2 history",
+    "Scd2History.prune_closed_before": "SCD2 audit retention",
+    "PreferencePairsView.expire": "orphan cleanup of the preference-pairs view",
+}
+
+
+def _non_test_sources() -> list[Path]:
+    paths = [_REPO / "__spark_entry__.py", _REPO / "bench.py"]
+    for top in ("aqueduct_core_spark", "bench", "tools", "perfbench"):
+        paths += sorted((_REPO / top).rglob("*.py"))
+    return paths
+
+
+def _public_surface_and_references():
+    """(public defs of the engine as ``(qualname, path)`` pairs, names each
+    non-test scope references as ``{name: {(path, scope)}}``).  A
+    reference is a ``Name``, an ``Attribute``, an imported name or a
+    string constant that is an identifier (perfbench names what it
+    wraps by string); a scope is a module-level def, a class method
+    (``Class.method``), a class body or the module itself."""
+    defs: list[tuple[str, Path]] = []
+    refs: dict[str, set] = {}
+
+    def note(node, path, scope):
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                names = [n.id]
+            elif isinstance(n, ast.Attribute):
+                names = [n.attr]
+            elif isinstance(n, ast.ImportFrom):
+                names = [a.name for a in n.names]
+            elif isinstance(n, ast.Constant) and isinstance(n.value, str) \
+                    and n.value.isidentifier():
+                names = [n.value]
+            else:
+                continue
+            for name in names:
+                refs.setdefault(name, set()).add((path, scope))
+
+    for path in _non_test_sources():
+        engine = path.is_relative_to(_REPO / "aqueduct_core_spark")
+        for node in ast.parse(path.read_text(), str(path)).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                if engine and not node.name.startswith("_"):
+                    defs.append((node.name, path))
+                note(node, path, node.name)
+            elif isinstance(node, ast.ClassDef):
+                public = engine and not node.name.startswith("_")
+                if public:
+                    defs.append((node.name, path))
+                for d in (*node.decorator_list, *node.bases):
+                    note(d, path, None)
+                for b in node.body:
+                    if isinstance(b, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                        q = f"{node.name}.{b.name}"
+                        if public and not b.name.startswith("_"):
+                            defs.append((q, path))
+                        note(b, path, q)
+                    else:
+                        note(b, path, node.name)
+            else:
+                note(node, path, None)
+    return defs, refs
+
+
+def _referenced(qualname: str, path: Path, refs: dict) -> bool:
+    """True when a scope other than the definition's own body names it
+    (for a class: other than its own body and methods)."""
+    name = qualname.rsplit(".", 1)[-1]
+    for p, scope in refs.get(name, ()):
+        own = scope == qualname or (
+            "." not in qualname and scope is not None
+            and scope.split(".", 1)[0] == qualname
+        )
+        if p != path or not own:
+            return True
+    return False
+
+
+def test_no_test_only_public_surface():
+    """Every public module-level def and class method of the engine is
+    referenced from non-test code (another engine body,
+    ``__spark_entry__.py``, ``bench.py``, ``bench/``, ``tools/`` or
+    ``perfbench/``) or sits in ``_TEST_ONLY_ALLOWED`` with its reason.
+    The allowlist holds no stale entry: a name that gains a caller or
+    goes away leaves it."""
+    defs, refs = _public_surface_and_references()
+    test_only = {q for q, p in defs if not _referenced(q, p, refs)}
+    assert all(r.strip() for r in _TEST_ONLY_ALLOWED.values())
+    assert sorted(test_only - set(_TEST_ONLY_ALLOWED)) == []
+    assert sorted(set(_TEST_ONLY_ALLOWED) - test_only) == []

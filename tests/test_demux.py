@@ -16,7 +16,11 @@ from aqueduct_core_spark.catalog.table import ParquetTranscriptTable
 from aqueduct_core_spark.config import EngineConfig
 from aqueduct_core_spark.generator import generate_changes
 from aqueduct_core_spark.schema import LSN_COLUMN
-from aqueduct_core_spark.streaming.pipeline import replay, replay_demux
+from aqueduct_core_spark.streaming.pipeline import (
+    replay,
+    replay_demux,
+    start_stream_demux,
+)
 
 
 def _cfg():
@@ -31,6 +35,20 @@ def log(spark, tmp_path_factory):
     p = str(tmp_path_factory.mktemp("demux") / "changes")
     generate_changes(spark, n_convs=60, seed=7).write.parquet(p)
     return spark.read.parquet(p)
+
+
+def _drain_demux(spark, tables, src, ckpt, routes, cfg):
+    """Drain the log once through the streaming demux (``availableNow``),
+    then stop the query."""
+    q = start_stream_demux(
+        spark, tables, src, ckpt, routes, cfg,
+        max_files_per_trigger=3, available_now=True,
+    )
+    try:
+        q.awaitTermination(600)
+    finally:
+        if q.isActive:
+            q.stop()
 
 
 def _state(table):
@@ -122,8 +140,6 @@ def test_streaming_demux_available_now(spark, log, tmp_path):
     """One stream, N tables: availableNow drain converges each replica
     to its routed slice; a re-drain with a FRESH checkpoint re-delivers
     every batch id and every table skips idempotently."""
-    from aqueduct_core_spark.streaming.pipeline import run_available_now_demux
-
     src = str(tmp_path / "src")
     log.write.parquet(src)
     tables = {
@@ -132,10 +148,7 @@ def test_streaming_demux_available_now(spark, log, tmp_path):
     }
     routes = {r: (F.col("cluster_id") % 2 == r) for r in (0, 1)}
     cfg = EngineConfig(num_buckets=4, mor_fold_every=10**9)
-    run_available_now_demux(
-        spark, tables, src, str(tmp_path / "ckpt"), routes, cfg,
-        max_files_per_trigger=3,
-    )
+    _drain_demux(spark, tables, src, str(tmp_path / "ckpt"), routes, cfg)
 
     single = ParquetTranscriptTable.create(spark, str(tmp_path / "one"), num_buckets=4)
     replay(single, log, cfg, start_epoch=0, start_lsn=0)
@@ -144,10 +157,7 @@ def test_streaming_demux_available_now(spark, log, tmp_path):
     assert _state(single).exceptAll(union).count() == 0
 
     versions = {r: t.catalog.current_version() for r, t in tables.items()}
-    run_available_now_demux(
-        spark, tables, src, str(tmp_path / "ckpt2"), routes, cfg,
-        max_files_per_trigger=3,
-    )
+    _drain_demux(spark, tables, src, str(tmp_path / "ckpt2"), routes, cfg)
     for r, t in tables.items():
         assert t.catalog.current_version() == versions[r]
 
@@ -183,7 +193,6 @@ def test_streaming_demux_watermarks_cover_filtered_ranges(spark, log, tmp_path):
     replica reports lag 0 even when the tail of the log carried no
     events for its route."""
     from aqueduct_core_spark.streaming.monitor import fleet_status
-    from aqueduct_core_spark.streaming.pipeline import run_available_now_demux
 
     src = str(tmp_path / "src")
     log.write.parquet(src)
@@ -193,10 +202,7 @@ def test_streaming_demux_watermarks_cover_filtered_ranges(spark, log, tmp_path):
     }
     routes = {r: (F.col("cluster_id") % 2 == r) for r in (0, 1)}
     cfg = EngineConfig(num_buckets=4, mor_fold_every=10**9)
-    run_available_now_demux(
-        spark, tables, src, str(tmp_path / "wk"), routes, cfg,
-        max_files_per_trigger=3,
-    )
+    _drain_demux(spark, tables, src, str(tmp_path / "wk"), routes, cfg)
     st = fleet_status(tables, log)
     assert st["all_up_to_date"], st
     assert st["max_lag_lsn"] == 0

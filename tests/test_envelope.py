@@ -179,16 +179,3 @@ def test_envelope_wire_format_end_to_end(spark, tmp_path):
         quarantine_dir=qdir,
     )
     assert table.catalog.current_version() == v0
-
-
-def test_envelope_quarantine_reader_dedupes_redeliveries(spark, tmp_path):
-    """A crash-replayed epoch re-appends its dead letters; the reader
-    collapses (epoch, raw) duplicates."""
-    from aqueduct_core_spark.sources.envelope import read_envelope_quarantine
-
-    qdir = str(tmp_path / "dlq")
-    rows = [("{oops", "not_json", 0), ("{oops", "not_json", 0), ("{bad", "not_json", 1)]
-    spark.createDataFrame(rows, "raw string, reason string, epoch long") \
-        .write.mode("append").parquet(qdir)
-    out = read_envelope_quarantine(spark, qdir)
-    assert out.count() == 2

@@ -206,17 +206,3 @@ def test_key_column_widening_rejected():
 
     with pytest.raises(IncompatibleSchemaChange):
         evolve_table_fields(table_fields, FakeBatch())
-
-
-def test_iceberg_evolve_sql_parses(spark):
-    from aqueduct_core_spark.catalog.table import IcebergTranscriptTable
-
-    t = IcebergTranscriptTable(spark, "cat.db.transcripts")
-    parser = spark._jsparkSession.sessionState().sqlParser()
-    stmts = t.evolve_sql(
-        added=[("model_name", "string"), ("token_count", "int")],
-        widened=[("token_count", "bigint")],
-    )
-    assert len(stmts) == 2
-    for sql in stmts:
-        parser.parsePlan(sql)  # raises ParseException on bad syntax

@@ -239,7 +239,6 @@ def test_near_dup_pairs(spark):
 def test_media_features(spark):
     from aqueduct_core_spark.functions.multimodal import (
         extract_features,
-        frame_sample_plan,
         synthetic_media,
     )
 
@@ -253,10 +252,6 @@ def test_media_features(spark):
     # deterministic: same payload hash → same fake feature
     feats2 = {r["media_id"]: r["feature"] for r in extract_features(media, dim=8).collect()}
     assert feats2[3] == by_id[3]["feature"]
-
-    plan = frame_sample_plan(media, every_ms=1000)
-    r = plan.groupBy("media_id").count().collect()
-    assert all(row["count"] >= 3 for row in r)
 
 
 def test_events_cdc_mapping_matches_duckdb(spark):
@@ -662,12 +657,9 @@ def test_dedup_keep_best(spark):
 
 def test_duplicate_spans_cross_doc_and_strip(spark):
     """Span-level exact-substring dedup: the shared paragraph is kept
-    at its first-(doc_id,pos) occurrence and removed everywhere else;
-    merged intervals are maximal; non-dup docs pass through clean."""
-    from aqueduct_core_spark.functions.dedup import (
-        duplicate_spans,
-        strip_duplicate_spans,
-    )
+    at its first-(doc_id,pos) occurrence and marked everywhere else;
+    merged intervals are maximal; non-dup docs carry no span."""
+    from aqueduct_core_spark.functions.dedup import duplicate_spans
 
     para = "the quick brown fox jumps over the lazy dog again and again tonight"
     docs = spark.createDataFrame(
@@ -691,16 +683,6 @@ def test_duplicate_spans_cross_doc_and_strip(spark):
         assert sp[2]["dup_tokens"] == 13
         # doc 4: BOTH copies are duplicates of doc 1's canonical
         assert sp[4]["n_spans"] == 2 and sp[4]["dup_tokens"] == 26
-
-    out = {
-        r["doc_id"]: r
-        for r in strip_duplicate_spans(docs, k=5).collect()
-    }
-    assert out[1]["text"].count("quick brown fox") == 1  # canonical kept
-    assert "quick" not in out[2]["text"]
-    assert out[2]["text"].startswith("one two three four five six seven")
-    assert out[3]["dup_tokens"] == 0 and "unique" in out[3]["text"]
-    assert out[4]["text"] == "first copy then filler words and then once more"
 
 
 def test_duplicate_spans_within_doc_keeps_first(spark):

@@ -109,6 +109,24 @@ def test_merge_prunes_buckets(spark, tmp_table_dir, changes_pdf):
     assert touched == [str(bucket_of("conv-00000003", 8))]
 
 
+def window_winners(turn_events):
+    """The window-function formulation of the LWW kernel (reference
+    J2/W2): ``row_number() OVER (PARTITION BY key ORDER BY lsn DESC) =
+    1`` — the reference the engine's aggregate argmax is checked
+    against."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("conv_id", "turn_idx").orderBy(
+        F.col("lsn").desc(), F.col("ts").desc()
+    )
+    return (
+        turn_events.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
 def test_window_vs_agg_lww_parity(spark, changes_pdf):
     from aqueduct_core_spark.operators import lww
 
@@ -116,7 +134,7 @@ def test_window_vs_agg_lww_parity(spark, changes_pdf):
     turns, _ = lww.split_hierarchy(df)
     payload = ["role", "text", "tool", "ts"]
     a = lww.argmax_winners(turns, payload).select("conv_id", "turn_idx", LSN_COLUMN)
-    b = lww.lww_dedup_window(turns).select("conv_id", "turn_idx", "lsn")
+    b = window_winners(turns).select("conv_id", "turn_idx", "lsn")
     assert a.count() == b.count()
     assert a.join(b, (a.conv_id == b.conv_id) & (a.turn_idx == b.turn_idx) & (a[LSN_COLUMN] == b.lsn)).count() == a.count()
 

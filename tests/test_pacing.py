@@ -2,7 +2,6 @@
 
 from aqueduct_core_spark.streaming.pacing import (
     DEFAULT_CAP_MS,
-    processing_time_trigger,
     retry_after_ms,
 )
 
@@ -31,6 +30,3 @@ def test_jitter_deterministic_and_bounded():
 def test_degenerate_inputs():
     assert retry_after_ms(0, node_count=10, pool_size=0) == 100
 
-
-def test_trigger_string():
-    assert processing_time_trigger(100, 3000, 24) == "12500 milliseconds"

@@ -1,4 +1,4 @@
-"""Column rename/drop without rewrite: logical name mapping over
+"""Column rename without rewrite: logical name mapping over
 write-once physical columns (Iceberg field-id indirection analog)."""
 
 import pytest
@@ -9,7 +9,6 @@ from aqueduct_core_spark.config import EngineConfig
 from aqueduct_core_spark.generator import generate_changes_pdf
 from aqueduct_core_spark.operators.evolve import (
     IncompatibleSchemaChange,
-    drop_column,
     rename_column,
 )
 from aqueduct_core_spark.operators.merge import apply_batch
@@ -74,29 +73,10 @@ def test_time_travel_sees_historical_names(spark, tmp_table_dir):
     assert "role" in old.columns and "speaker" not in old.columns
 
 
-def test_drop_hides_and_blocks_reuse(spark, tmp_table_dir):
-    table, rest = _seeded(spark, tmp_table_dir)
-    v_before = table.catalog.current_version()
-    drop_column(table, "tool")
-
-    assert "tool" not in table.read().columns
-    # time travel still shows it
-    assert "tool" in table.read_as_of(v_before).columns
-    # re-ingesting the retired name would resurrect old data: refuse
-    with pytest.raises(IncompatibleSchemaChange, match="retired"):
-        apply_batch(table, to_spark(spark, rest), epoch=1, cfg=CFG)
-    # without the column the batch applies fine
-    m = apply_batch(table, to_spark(spark, rest).drop("tool"), epoch=1, cfg=CFG)
-    assert m["applied"] > 0
-    assert "tool" not in table.read().columns
-
-
 def test_key_columns_never_renameable_or_droppable(spark, tmp_table_dir):
     table, _ = _seeded(spark, tmp_table_dir)
     with pytest.raises(IncompatibleSchemaChange):
         rename_column(table, "conv_id", "conversation")
-    with pytest.raises(IncompatibleSchemaChange):
-        drop_column(table, "turn_idx")
     with pytest.raises(IncompatibleSchemaChange):
         rename_column(table, "role", "text")  # collision with visible column
 

@@ -310,30 +310,6 @@ def test_crash_orphans_invisible_and_removable(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Iceberg backend: statements must at least parse
-# ---------------------------------------------------------------------------
-
-def test_iceberg_merge_sql_parses(spark):
-    from aqueduct_core_spark.catalog.table import IcebergTranscriptTable
-
-    t = IcebergTranscriptTable(spark, "cat.db.transcripts")
-    parser = spark._jsparkSession.sessionState().sqlParser()
-    for sql in (
-        t.merge_sql(),
-        # the pre-evolution narrowing tools/iceberg_integration.py uses
-        t.merge_sql(payload_cols=("role", "text", "ts")),
-        t.conv_delete_merge_sql(),
-        *t.evolve_sql(added=[("tool", "string")], widened=[("turn_idx", "bigint")]),
-    ):
-        parser.parsePlan(sql)  # raises ParseException on bad syntax
-    assert "s.tool" not in t.merge_sql(payload_cols=("role", "text", "ts"))
-    # the conv-delete MERGE must be an equi-ON (portability guard)
-    assert "ON t.conv_id = d.conv_id\n" in t.conv_delete_merge_sql().replace(
-        "            ", ""
-    )
-
-
-# ---------------------------------------------------------------------------
 # Bucket routing must ride Spark's own partitioner (no second shuffle,
 # no collision skew): partition index == bucket value
 # ---------------------------------------------------------------------------

@@ -146,57 +146,6 @@ def test_tail_loop_pacing_adapts(spark, tmp_path):
     assert consistency_sum(full) == table_consistency_sum(table.read_internal())
 
 
-def test_streaming_sessions_match_batch_sessionize(spark, tmp_path):
-    """Native session_window (streaming) agrees with the batch
-    sessionize twin on session count, membership, and lsn ranges when
-    no gap is exactly at the boundary (where the two contracts
-    deliberately differ — see streaming_sessions docstring)."""
-    import datetime as dt
-
-    from aqueduct_core_spark.operators.temporal import sessionize
-    from aqueduct_core_spark.streaming.monitor import streaming_sessions
-
-    t0 = dt.datetime(2026, 1, 1, 9, 0, 0)
-    mk = lambda conv, minute, lsn: (
-        lsn, "U", conv, 0, "user", "x", None,
-        t0 + dt.timedelta(minutes=minute), 100, 0, None,
-    )
-    rows = [
-        mk("c1", 0, 1), mk("c1", 10, 2),   # session 1
-        mk("c1", 55, 3),                    # 45 min gap -> session 2
-        mk("c2", 5, 4),
-    ]
-    from aqueduct_core_spark.schema import CHANGES_SCHEMA
-
-    log_dir = str(tmp_path / "slog")
-    spark.createDataFrame(rows, CHANGES_SCHEMA).write.parquet(log_dir)
-
-    q = (
-        streaming_sessions(spark, log_dir, gap="30 minutes", watermark="1 hour")
-        .writeStream.format("memory")
-        .queryName("sess")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.conv_id, r.first_lsn): (r.n_events, r.last_lsn)
-        for r in spark.table("sess").collect()
-    }
-    exp = {
-        (r.conv_id, r.first_lsn): (r.n_events, r.last_lsn)
-        for r in sessionize(
-            spark.read.parquet(log_dir), gap_minutes=30
-        ).collect()
-    }
-    assert got == exp == {
-        ("c1", 1): (2, 2),
-        ("c1", 3): (1, 3),
-        ("c2", 4): (1, 4),
-    }
-
-
 def test_dedup_redeliveries_across_batches(spark, tmp_path, log_dir):
     """At-least-once transport: the same log file delivered twice, in
     different micro-batches (maxFilesPerTrigger=1).  The
