@@ -36,6 +36,20 @@ from aqueduct_core_spark.schema import (
 
 BUCKET_COLUMN = "_bucket"
 
+#: summary flag of a table that has committed an epoch without a
+#: planned lsn bound or with lsns at or below its watermark: later
+#: epochs may carry older events, so a rewrite of its live rows keeps
+#: the tombstones and delete watermarks they hide
+KEEP_TOMBSTONES = "aqueduct.keep-tombstones"
+#: the label of the delta files those tombstones are carried in, and
+#: the relative path every such file starts with
+TOMBSTONE_LABEL = "tombstones"
+TOMBSTONE_PREFIX = os.path.join("delta", f"{TOMBSTONE_LABEL}-")
+
+#: adaptive bloom-filter candidates per column: sizes halve from the
+#: 1 MiB maximum, so 11 candidates reach down to 1 KiB
+BLOOM_CANDIDATES = 11
+
 
 def bucket_sql(num_buckets: int, col: str = "conv_id") -> str:
     """Stable hash bucket of the conversation key (Iceberg
@@ -257,11 +271,12 @@ class ParquetTranscriptTable:
         only where rows are conv-sorted — true for folded base files but
         NOT for MOR delta files, whose rows within a (bucket, isturn)
         file arrive in batch order; there the bloom filter is what lets
-        a 1-key read skip every row group the key isn't in.  parquet-mr
-        is adaptive about it: a chunk that stays fully
-        dictionary-encoded gets no bloom (the dictionary page already
-        serves as an exact membership filter), so small tables pay
-        nothing."""
+        a 1-key read skip every row group the key isn't in.  Each
+        filter is sized to its chunk's distinct keys at a 1%
+        false-positive rate, from a 1 KiB floor to a 1 MiB ceiling
+        (:meth:`_write_options`), and a chunk that stays fully
+        dictionary-encoded gets none (the dictionary page already
+        serves as an exact membership filter)."""
         t = cls(spark, root)
         t.catalog.create(
             schema_fields=schema.jsonValue()["fields"],
@@ -304,12 +319,20 @@ class ParquetTranscriptTable:
     def _write_options(self) -> dict[str, str]:
         """Per-table parquet writer options shared by every data path
         (epoch deltas, folds, rewrites, rebuckets): codec + bloom
-        filters, adaptively sized (parquet-mr shrinks the filter to the
-        chunk's observed NDV instead of the 1M-NDV default — measured
-        2× smaller at 300k keys, zero for dictionary-encoded chunks)."""
+        filters, adaptively sized.  parquet-mr's adaptive writer keeps
+        ``candidates.number`` filters, halving down from the 1 MiB
+        ``parquet.bloom.filter.max.bytes``, and writes the smallest one
+        that holds the chunk's distinct values at a 1% false-positive
+        rate; its default of 5 candidates puts the floor at 64 KiB,
+        which is most of a small delta file.  Eleven candidates put the
+        floor at 1 KiB (a file of ~100 keys writes ~1 KiB) and keep the
+        1 MiB ceiling.  parquet-mr reads the count per column only
+        (``#<col>``); the bare key is ignored.  A chunk that stays
+        dictionary-encoded still gets no filter."""
         opts: dict[str, str] = {"compression": self.codec}
         for c in self.bloom_columns:
             opts[f"parquet.bloom.filter.enabled#{c}"] = "true"
+            opts[f"parquet.bloom.filter.candidates.number#{c}"] = str(BLOOM_CANDIDATES)
         if self.bloom_columns:
             opts["parquet.bloom.filter.adaptive.enabled"] = "true"
         return opts
@@ -472,7 +495,17 @@ class ParquetTranscriptTable:
         """
         snap = self.catalog.current() if version is None else self.catalog.load(version)
         wanted = None if buckets is None else {str(int(b)) for b in buckets}
-        schema = schema or self.schema(snap)  # pinned version ⇒ ITS schema
+        return self._resolve(snap, wanted, schema or self.schema(snap))  # pinned ⇒ ITS schema
+
+    def _resolve(
+        self, snap: dict, wanted: set | None, schema: T.StructType, tombstones: bool = False
+    ) -> DataFrame:
+        """:meth:`read_internal` of the manifest ``snap`` pruned to the
+        ``wanted`` buckets — or, with ``tombstones``, what the live rows
+        hide: the winning turn tombstones no delete watermark covers and
+        each conversation's delete watermark, as delta rows (the
+        :meth:`delta_read_schema` shape plus ``_bucket``/``_isturn``)
+        that :meth:`write_delta_data` writes."""
         base_files = self._listed(snap["files"], wanted)
         base = self.spark.read.schema(schema).parquet(*base_files) if base_files else None
         delta_files = self._listed(snap.get("delta_files", {}), wanted)
@@ -493,12 +526,25 @@ class ParquetTranscriptTable:
         # result needs no second shuffle.  Delta conversation rows
         # (_tkey = -1) ride along only to carry their _dlsn.
         lsn = sql_ident(LSN_COLUMN)
-        out_cols = ", ".join(
-            {"conv_id": "conv_id", "turn_idx": "_tkey AS turn_idx"}.get(
-                f.name, f"w.{sql_ident(f.name)} AS {sql_ident(f.name)}"
+        if tombstones:
+            w = ", ".join([f"w.{lsn} AS lsn", "w._op AS op", *(f"w.{c} AS {c}" for c in payload)])
+            out_cols = (
+                f"conv_id, _tkey, struct({w}) AS w, _dl AS _dlsn, "
+                f"{bucket_sql(_bucket_count(snap))} AS {BUCKET_COLUMN}, "
+                "CAST(_tkey >= 0 AS INT) AS _isturn"
             )
-            for f in schema.fields
-        )
+            keep = (
+                f"(_tkey = -1 AND _dl IS NOT NULL) OR (_tkey >= 0 AND w._op = '{OP_DELETE}' "
+                f"AND (_cdl IS NULL OR w.{lsn} > _cdl))"
+            )
+        else:
+            out_cols = ", ".join(
+                {"conv_id": "conv_id", "turn_idx": "_tkey AS turn_idx"}.get(
+                    f.name, f"w.{sql_ident(f.name)} AS {sql_ident(f.name)}"
+                )
+                for f in schema.fields
+            )
+            keep = f"_tkey >= 0 AND w._op <> '{OP_DELETE}' AND (_cdl IS NULL OR w.{lsn} > _cdl)"
         base_cols = "".join(f", {c}" for c in payload)
         delta_cols = "".join(f", w.{c} AS {c}" for c in payload)
         base_rows = (
@@ -511,7 +557,7 @@ class ParquetTranscriptTable:
             f"""
             SELECT {out_cols}
             FROM (
-              SELECT conv_id, _tkey, w, max(_dl) OVER (PARTITION BY conv_id) AS _cdl
+              SELECT conv_id, _tkey, w, _dl, max(_dl) OVER (PARTITION BY conv_id) AS _cdl
               FROM (
                 SELECT conv_id, _tkey, max(struct({lsn}, _op{base_cols})) AS w,
                        max(_dl) AS _dl
@@ -526,8 +572,7 @@ class ParquetTranscriptTable:
                 GROUP BY conv_id, _tkey
               )
             )
-            WHERE _tkey >= 0 AND w._op <> '{OP_DELETE}'
-              AND (_cdl IS NULL OR w.{lsn} > _cdl)
+            WHERE {keep}
             """,
             base=base,
             d=d,
@@ -859,7 +904,10 @@ class ParquetTranscriptTable:
         commit id) as long as every delta it folded was already visible
         at ``v_from``: a caught-up consumer keeps tailing across
         scheduled folds instead of being forced into a full resync
-        every ``mor_fold_every`` epochs.  It still raises for (a) a
+        every ``mor_fold_every`` epochs.  The tombstone deltas a fold
+        carries forward (:func:`~aqueduct_core_spark.operators.compact.fold_deltas`)
+        are no new changes: the walk does not emit them and lets a later
+        fold consume them.  It still raises for (a) a
         fold that consumed deltas this consumer never saw (it lagged
         past retention), (b) any UNstamped base rewrite — erase/redact/
         rebucket/rollback change history in ways no delta expresses —
@@ -886,11 +934,14 @@ class ParquetTranscriptTable:
             prev_d = {f for fl in prev.get("delta_files", {}).values() for f in fl}
             cur_d = {f for fl in cur.get("delta_files", {}).values() for f in fl}
             removed = prev_d - cur_d
+            is_fold = cur["summary"].get("aqueduct.fold-snapshot") == cur["snapshot_id"]
+            if is_fold:
+                # a fold's own deltas carry tombstones of rows it folded
+                # (fold_deltas): delivered already, never new changes
+                carried = cur_d - prev_d
+                a_deltas = a_deltas | carried
+                prev_d |= carried
             if cur.get("files") != prev.get("files"):
-                is_fold = (
-                    cur["summary"].get("aqueduct.fold-snapshot")
-                    == cur["snapshot_id"]
-                )
                 if not is_fold or not removed <= a_deltas:
                     raise ValueError(
                         "changes_between requires a delta-expressible "
@@ -1060,6 +1111,23 @@ class ParquetTranscriptTable:
                 )
         return by_bucket, out_dir
 
+    def _carry_tombstones(self, snap: dict, buckets=None) -> dict[str, list[str]]:
+        """Write the tombstones of ``snap``'s ``buckets`` (all when None)
+        that a rewrite of their live rows drops — winning turn deletes
+        and conversation delete watermarks — as delta files under
+        :data:`TOMBSTONE_PREFIX`; returns bucket → relative paths for the
+        rewrite's commit.  Only a table flagged :data:`KEEP_TOMBSTONES`
+        needs them (a later epoch may carry events older than a delete
+        it has applied); any other table gets ``{}``, so an in-order
+        replay's rewrites are unchanged."""
+        if not snap["summary"].get(KEEP_TOMBSTONES):
+            return {}
+        wanted = None if buckets is None else {str(int(b)) for b in buckets}
+        if not self._listed(snap.get("delta_files", {}), wanted):
+            return {}
+        rows = self._resolve(snap, wanted, self.schema(snap), tombstones=True)
+        return self.write_delta_data(rows, TOMBSTONE_LABEL)[0]
+
     def write_offsets_row(self, row: dict, label: str) -> str:
         """Tiny single-row offsets file written driver-side (pyarrow) —
         it rides in the same manifest commit as the data files, which is
@@ -1098,7 +1166,7 @@ class ParquetTranscriptTable:
 
         Expects the delta dir laid out as
         ``_bucket=N/_isturn={0,1}/*.parquet``.  Returns ``{bucket:
-        {turn_keys, min_lsn, max_lsn, any_max_lsn}}``.
+        {turn_keys, min_lsn, max_lsn, any_min_lsn, any_max_lsn}}``.
         """
         import pyarrow.parquet as pq
 
@@ -1113,6 +1181,7 @@ class ParquetTranscriptTable:
                     "turn_keys": 0,
                     "min_lsn": None,
                     "max_lsn": None,
+                    "any_min_lsn": None,
                     "any_max_lsn": None,
                 },
             )
@@ -1142,6 +1211,9 @@ class ParquetTranscriptTable:
                             s["turn_keys"] += n
                             s["min_lsn"] = lo if s["min_lsn"] is None else min(s["min_lsn"], lo)
                             s["max_lsn"] = hi if s["max_lsn"] is None else max(s["max_lsn"], hi)
+                        s["any_min_lsn"] = (
+                            lo if s["any_min_lsn"] is None else min(s["any_min_lsn"], lo)
+                        )
                         s["any_max_lsn"] = (
                             hi if s["any_max_lsn"] is None else max(s["any_max_lsn"], hi)
                         )

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from aqueduct_core_spark.catalog.table import (
     BUCKET_COLUMN,
+    TOMBSTONE_PREFIX,
     ParquetTranscriptTable,
     bucket_expr,
 )
@@ -208,7 +209,16 @@ def fold_deltas(
     "don't truncate past the slowest consumer group" rule.  A dead
     consumer blocks folds forever by design: remove it from the list
     (and ``reset()`` it) to release retention, exactly like deleting a
-    consumer group."""
+    consumer group.
+
+    The base files hold live rows only.  On a table whose epochs may
+    arrive out of lsn order (summary flag ``KEEP_TOMBSTONES``, see
+    ``ParquetTranscriptTable._carry_tombstones``) the fold also writes
+    the folded buckets' tombstones and delete watermarks as one
+    tombstone delta per bucket, so an older event applied after the
+    fold still loses to them; the next fold of the bucket carries them
+    forward again, and a bucket whose only deltas are carried
+    tombstones is not folded."""
     snap = table.catalog.current()
     if consumers:
         cur = table.catalog.current_version()
@@ -216,7 +226,8 @@ def fold_deltas(
         if lagging:
             return {"folded": False, "blocked_by": len(lagging)}
     delta_buckets = sorted(
-        int(b) for b, fl in snap.get("delta_files", {}).items() if fl
+        int(b) for b, fl in snap.get("delta_files", {}).items()
+        if any(not f.startswith(TOMBSTONE_PREFIX) for f in fl)
     )
     if not delta_buckets:
         return {"folded": False}
@@ -231,6 +242,7 @@ def fold_deltas(
         snap,
         replaced_buckets=replaced,
         clear_delta_buckets=[str(b) for b in delta_buckets],
+        added_delta_buckets=table._carry_tombstones(snap, delta_buckets),
         # content-preserving marker, stamped with THIS commit's id
         # (summaries carry forward, so the id is what scopes it):
         # changes_between may cross this commit when the folded deltas
@@ -264,8 +276,10 @@ def rewrite_data_files(
     snap = table.catalog.commit(
         base,
         full_files=new_files,
-        # the rewrite output is fully resolved — MOR deltas are folded in
+        # the rewrite output is fully resolved — MOR deltas are folded
+        # in, but for carried tombstones (see fold_deltas)
         clear_deltas=True,
+        added_delta_buckets=table._carry_tombstones(base),
         summary_updates={
             "aqueduct.last-rewrite-snapshot": True,
             "aqueduct.delta-epochs": 0,
@@ -353,6 +367,7 @@ def rewrite_zorder(
         base,
         full_files=new_files,
         clear_deltas=True,
+        added_delta_buckets=table._carry_tombstones(base),
         summary_updates={
             "aqueduct.zorder": f"conv_id,{time_col}",
             "aqueduct.delta-epochs": 0,

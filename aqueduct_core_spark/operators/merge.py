@@ -43,6 +43,7 @@ from pyspark.sql import types as T
 from aqueduct_core_spark.catalog.snapshot import CommitConflict
 from aqueduct_core_spark.catalog.table import (
     BUCKET_COLUMN,
+    KEEP_TOMBSTONES,
     ParquetTranscriptTable,
     _bucket_count,
     bucket_sql,
@@ -353,9 +354,18 @@ def _apply_mor(
         if s["turn_keys"] > 0
     }
     applied = sum(v["keys"] for v in lineage.values())
+    # an epoch without a planned lsn bound (a stream trigger, a direct
+    # call) or with an event at or below the watermark may be followed
+    # by older events: from then on the table's rewrites keep the
+    # tombstones that must beat them (fold_deltas)
+    watermark = int(base["summary"].get("aqueduct.max-lsn", -1))
+    unordered = batch_max_hint is None or any(
+        s["any_min_lsn"] is not None and s["any_min_lsn"] <= watermark
+        for s in summary.values()
+    )
     batch_max_lsn = max(
         [
-            int(base["summary"].get("aqueduct.max-lsn", -1)),
+            watermark,
             int(batch_max_hint if batch_max_hint is not None else -1),
         ]
         + [int(s["any_max_lsn"]) for s in summary.values() if s["any_max_lsn"] is not None]
@@ -380,6 +390,7 @@ def _apply_mor(
             "aqueduct.epoch": int(epoch),
             "aqueduct.max-lsn": int(batch_max_lsn),
             "aqueduct.delta-epochs": delta_epochs,
+            **({KEEP_TOMBSTONES: True} if unordered else {}),
             **({"aqueduct.added-columns": ",".join(added_cols)} if added_cols else {}),
             **(
                 {"aqueduct.widened-columns": ",".join(widened_cols)}

@@ -116,9 +116,6 @@ class Scd2History:
     def last_epoch(self) -> int:
         return int(self._meta()["epoch"])
 
-    def last_lsn(self) -> int:
-        return int(self._meta()["last_lsn"])
-
     def read(self) -> DataFrame:
         meta = self._meta()
         paths = [

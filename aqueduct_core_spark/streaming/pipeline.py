@@ -44,15 +44,17 @@ from aqueduct_core_spark.operators.merge import apply_audited, apply_batch
 from aqueduct_core_spark.schema import CHANGES_SCHEMA
 
 
-#: replay epochs in flight at once.  An epoch's delta WRITE reads
-#: nothing from the table — only its COMMIT must be ordered — so epoch
-#: N+1's plan/scan/aggregate/write runs while epoch N finishes, hiding
-#: the per-epoch serial driver work (Catalyst planning + job
-#: submission, ~0.3-0.7 s/epoch measured) and letting N+1's tasks fill
+#: replay epochs prepared at once.  An epoch's delta WRITE reads
+#: nothing from the table — only its COMMIT must be ordered — so the
+#: next epochs' plan/scan/aggregate/write run while epoch N commits,
+#: hiding the per-epoch serial driver work (Catalyst planning + job
+#: submission, ~0.3-0.7 s/epoch measured) and letting their tasks fill
 #: N's straggler-tail cores (FIFO scheduling keeps N's tasks at
-#: priority).  Commits are awaited strictly in epoch order on the
-#: driver thread, so exactly-once bookkeeping and fold cadence are
-#: unchanged.
+#: priority).  Epoch N commits once N+1 and N+2 are submitted, so a
+#: fold due with N overlaps two prepares; a crash then leaves at most
+#: 3 epochs' uncommitted deltas as orphans.  Commits are awaited
+#: strictly in epoch order on the driver thread, so exactly-once
+#: bookkeeping and fold cadence are unchanged.
 PIPELINE_DEPTH = 2
 
 
@@ -268,10 +270,12 @@ def _apply_epochs(
 
     Phase A (:func:`~aqueduct_core_spark.operators.merge.mor_prepare`:
     scan + argmax + delta write, reading nothing from table state) runs
-    up to :data:`PIPELINE_DEPTH` epochs ahead on pool threads for a
-    PLANNED item (it has a hint and an epoch above the committed one);
-    phase B (footer bookkeeping + the atomic commit, through
-    ``apply_batch``) stays on this thread, strictly in epoch order.
+    on :data:`PIPELINE_DEPTH` pool threads for a PLANNED item (it has a
+    hint and an epoch above the committed one), submitted before the
+    oldest epoch commits, so the commit (and any fold due with it)
+    overlaps up to :data:`PIPELINE_DEPTH` prepares; phase B (footer
+    bookkeeping + the atomic commit, through ``apply_batch``) stays on
+    this thread, strictly in epoch order.
     Every other item applies inline once the items before it have
     committed: a streaming trigger (hint None) keeps ``apply_batch``'s
     one-job idle probe, and an epoch at or below the committed one goes
@@ -324,14 +328,15 @@ def _apply_epochs(
     try:
         for item in items:
             batch, epoch, hint, _ = item
-            ahead = not audits and hint is not None and epoch > committed
-            while len(inflight) >= (PIPELINE_DEPTH if ahead else 1):
-                commit_oldest()
-            # merge.mor_prepare, looked up per call: a traced run wraps it
-            inflight.append(
-                (item, pool.submit(merge.mor_prepare, table, batch, epoch) if ahead else None)
-            )
-            if not ahead:
+            if not audits and hint is not None and epoch > committed:
+                # merge.mor_prepare, looked up per call: a traced run wraps it
+                inflight.append((item, pool.submit(merge.mor_prepare, table, batch, epoch)))
+                while len(inflight) > PIPELINE_DEPTH:
+                    commit_oldest()
+            else:
+                while inflight:
+                    commit_oldest()
+                inflight.append((item, None))
                 commit_oldest()
         while inflight:
             commit_oldest()

@@ -10,10 +10,13 @@ in the key's bucket.  The split-block bloom filter gives those scans a
 row-group-level membership test (reference serving reads are
 single-key indexed lookups, ``SQLiteQueries.java:51-55``).
 
-parquet-mr is adaptive: a chunk that stays fully dictionary-encoded
-gets NO bloom filter (the dictionary page is already an exact filter),
-so these assertions need enough distinct keys to overflow the 1 MiB
-dictionary-page budget — and the small-table test asserts the skip.
+Sizing: parquet-mr's adaptive writer picks the smallest of the table's
+candidate sizes that holds the chunk's distinct keys at a 1% false
+positive rate — 1 KiB at the floor, 1 MiB at the ceiling — so a delta
+file of ~100 keys carries ~1 KiB of filter and a file of tens of
+thousands of keys a filter of tens of KiB or more.  A chunk that stays
+fully dictionary-encoded gets NO bloom filter (the dictionary page is
+already an exact filter); the small-table test asserts the skip.
 """
 
 import glob
@@ -77,6 +80,29 @@ def bloom_offsets_by_column(spark, path: str) -> dict[str, list[int]]:
         rd.close()
 
 
+def bloom_lengths(spark, path: str) -> list[int]:
+    """Per-row-group ``conv_id`` bloom filter length in bytes (-1 =
+    none), from ``ColumnChunkMetaData.getBloomFilterLength()``."""
+    jvm = spark._jvm
+    rd = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            jvm.org.apache.hadoop.fs.Path(path), spark._jsc.hadoopConfiguration()
+        )
+    )
+    try:
+        out = []
+        blocks = rd.getFooter().getBlocks()
+        for bi in range(blocks.size()):
+            cols = blocks.get(bi).getColumns()
+            for ci in range(cols.size()):
+                c = cols.get(ci)
+                if str(c.getPath()).strip("[]") == "conv_id":
+                    out.append(int(c.getBloomFilterLength()))
+        return out
+    finally:
+        rd.close()
+
+
 def parquet_files(root: str, sub: str) -> list[str]:
     return glob.glob(os.path.join(root, sub, "**", "*.parquet"), recursive=True)
 
@@ -125,6 +151,23 @@ def test_delta_and_base_files_carry_conv_bloom(spark, tmp_table_dir):
     assert table.read_conversation("conversation-absent").count() == 0
 
 
+def test_small_delta_file_bloom_fits_its_keys(spark, tmp_table_dir):
+    """A plain-encoded delta file of ≤200 distinct keys carries a bloom
+    filter sized to them (≤2 KiB), not the 64 KiB floor of parquet-mr's
+    default five candidates — and the filter still answers lookups."""
+    cfg = EngineConfig(num_buckets=1, mor_fold_every=0)
+    table = ParquetTranscriptTable.create(spark, tmp_table_dir, num_buckets=1)
+    # 150 distinct ~60-byte keys, one turn each: the dictionary saves
+    # nothing, so the writer falls back to plain pages + bloom filter
+    apply_batch(table, synth_changes(spark, n=150), epoch=0, cfg=cfg)
+    lengths = [n for f in parquet_files(tmp_table_dir, "delta") for n in bloom_lengths(spark, f)]
+    assert lengths and all(0 < n <= 2048 for n in lengths), lengths
+    key = "conversation-" + "f" * 40 + "-00000077"
+    got = table.read_conversation(key).collect()
+    assert len(got) == 1 and got[0]["text"] == "text-00000077"
+    assert table.read_conversation("conversation-absent").count() == 0
+
+
 def test_dictionary_encoded_small_table_skips_bloom(spark, tmp_table_dir):
     """Adaptive behavior: a small table's conv chunk stays
     dictionary-encoded, and parquet-mr correctly writes NO bloom filter
@@ -150,3 +193,5 @@ def test_bloom_columns_property_roundtrip(spark, tmp_table_dir):
     assert opts["parquet.bloom.filter.enabled#conv_id"] == "true"
     assert opts["parquet.bloom.filter.enabled#role"] == "true"
     assert opts["parquet.bloom.filter.adaptive.enabled"] == "true"
+    assert opts["parquet.bloom.filter.candidates.number#conv_id"] == "11"
+    assert opts["parquet.bloom.filter.candidates.number#role"] == "11"

@@ -81,6 +81,11 @@ _TEST_ONLY_ALLOWED = {
     "repair_replica": "anti-entropy bucket repair",
     "ConvView.last_table_version": "the table version a conversation view last refreshed from",
     "ConvView.expire": "orphan cleanup of a conversation view",
+    "ParquetTranscriptTable.snapshots": "snapshot-history metadata table (Iceberg .snapshots)",
+    "ParquetTranscriptTable.tag": "named snapshot ref a training run pins for read_as_of",
+    "ForestIndex.codebooks": "frozen codebooks of a persisted index, to build a compatible one",
+    "Scd2History.last_epoch": "epoch watermark of the SCD2 history's re-delivery guard",
+    "Scd2History.redact": "in-place redaction of superseded history text",
     "Scd2History.expire": "orphan cleanup of the SCD2 history",
     "Scd2History.prune_closed_before": "SCD2 audit retention",
     "PreferencePairsView.expire": "orphan cleanup of the preference-pairs view",
@@ -95,34 +100,63 @@ def _non_test_sources() -> list[Path]:
 
 
 def _public_surface_and_references():
-    """(public defs of the engine as ``(qualname, path)`` pairs, names each
-    non-test scope references as ``{name: {(path, scope)}}``).  A
-    reference is a ``Name``, an ``Attribute``, an imported name or a
-    string constant that is an identifier (perfbench names what it
-    wraps by string); a scope is a module-level def, a class method
-    (``Class.method``), a class body or the module itself."""
+    """(public defs of the engine as ``(qualname, path)`` pairs, the
+    references each non-test scope makes as ``{key: {(path, scope)}}``).
+
+    A module-level name is referenced by a ``Name``, an imported name, a
+    string constant that is an identifier (perfbench names what it wraps
+    by string) or an attribute (``module.name``): key ``name``.  A
+    method is referenced only by an attribute: ``self.m`` / ``cls.m``
+    inside class ``C``, or ``C.m`` on a class name, resolves to ``C.m``
+    and the same name on ``C``'s known base classes (keys ``C.m``);
+    any other receiver is unknown and keys ``.m``, matching a method of
+    that name on every class.  A bare name or a string such as a dict
+    key never counts for a method.  A scope is a module-level def, a
+    class method (``Class.method``), a class body or the module
+    itself."""
     defs: list[tuple[str, Path]] = []
     refs: dict[str, set] = {}
+    trees = [(path, ast.parse(path.read_text(), str(path))) for path in _non_test_sources()]
+    bases = {
+        node.name: [b.id for b in node.bases if isinstance(b, ast.Name)]
+        for _, tree in trees
+        for node in tree.body
+        if isinstance(node, ast.ClassDef)
+    }
 
-    def note(node, path, scope):
+    def lineage(cls):
+        out, todo = [], [cls]
+        while todo:
+            c = todo.pop()
+            if c in bases and c not in out:
+                out.append(c)
+                todo += bases[c]
+        return out
+
+    def note(node, path, scope, cls=None):
         for n in ast.walk(node):
             if isinstance(n, ast.Name):
-                names = [n.id]
+                keys = [n.id]
             elif isinstance(n, ast.Attribute):
-                names = [n.attr]
+                recv = n.value.id if isinstance(n.value, ast.Name) else None
+                owner = cls if recv in ("self", "cls") and cls else recv
+                keys = [n.attr] + (
+                    [f"{c}.{n.attr}" for c in lineage(owner)] if owner in bases
+                    else [f".{n.attr}"]
+                )
             elif isinstance(n, ast.ImportFrom):
-                names = [a.name for a in n.names]
+                keys = [a.name for a in n.names]
             elif isinstance(n, ast.Constant) and isinstance(n.value, str) \
                     and n.value.isidentifier():
-                names = [n.value]
+                keys = [n.value]
             else:
                 continue
-            for name in names:
-                refs.setdefault(name, set()).add((path, scope))
+            for key in keys:
+                refs.setdefault(key, set()).add((path, scope))
 
-    for path in _non_test_sources():
+    for path, tree in trees:
         engine = path.is_relative_to(_REPO / "aqueduct_core_spark")
-        for node in ast.parse(path.read_text(), str(path)).body:
+        for node in tree.body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 if engine and not node.name.startswith("_"):
                     defs.append((node.name, path))
@@ -138,9 +172,9 @@ def _public_surface_and_references():
                         q = f"{node.name}.{b.name}"
                         if public and not b.name.startswith("_"):
                             defs.append((q, path))
-                        note(b, path, q)
+                        note(b, path, q, node.name)
                     else:
-                        note(b, path, node.name)
+                        note(b, path, node.name, node.name)
             else:
                 note(node, path, None)
     return defs, refs
@@ -149,14 +183,15 @@ def _public_surface_and_references():
 def _referenced(qualname: str, path: Path, refs: dict) -> bool:
     """True when a scope other than the definition's own body names it
     (for a class: other than its own body and methods)."""
-    name = qualname.rsplit(".", 1)[-1]
-    for p, scope in refs.get(name, ()):
-        own = scope == qualname or (
-            "." not in qualname and scope is not None
-            and scope.split(".", 1)[0] == qualname
-        )
-        if p != path or not own:
-            return True
+    keys = (qualname, "." + qualname.rsplit(".", 1)[-1]) if "." in qualname else (qualname,)
+    for key in keys:
+        for p, scope in refs.get(key, ()):
+            own = scope == qualname or (
+                "." not in qualname and scope is not None
+                and scope.split(".", 1)[0] == qualname
+            )
+            if p != path or not own:
+                return True
     return False
 
 

@@ -19,6 +19,15 @@ def to_spark(spark, pdf):
     return spark.createDataFrame(pdf, schema=CHANGES_SCHEMA)
 
 
+def only_carried_tombstones(snap) -> bool:
+    """Every live delta file is a fold's carried tombstones: a table
+    applied without planned lsn bounds keeps its tombstones across a
+    fold (``fold_deltas``)."""
+    from aqueduct_core_spark.catalog.table import TOMBSTONE_PREFIX
+
+    return all(f.startswith(TOMBSTONE_PREFIX) for fl in snap["delta_files"].values() for f in fl)
+
+
 def final_state_pdf(table):
     out = table.read_internal().toPandas()
     return out.sort_values(["conv_id", "turn_idx", "ts"], ignore_index=True)
@@ -95,7 +104,7 @@ def test_merge_prunes_buckets(spark, tmp_table_dir, changes_pdf):
     apply_batch(table, to_spark(spark, changes_pdf), epoch=0, cfg=cfg)
     assert fold_deltas(table)["folded"]
     snap0 = table.catalog.current()
-    assert not any(snap0["delta_files"].values())
+    assert only_carried_tombstones(snap0)
 
     one_conv = changes_pdf[changes_pdf["conv_id"] == "conv-00000003"].copy()
     one_conv["lsn"] = one_conv["lsn"] + 10_000_000
@@ -105,7 +114,10 @@ def test_merge_prunes_buckets(spark, tmp_table_dir, changes_pdf):
     snap1 = table.catalog.current()
 
     assert snap1["files"] == snap0["files"]  # no base file rewritten
-    touched = [b for b, fl in snap1["delta_files"].items() if fl]
+    touched = [
+        b for b, fl in snap1["delta_files"].items()
+        if set(fl) - set(snap0["delta_files"].get(b, []))
+    ]
     assert touched == [str(bucket_of("conv-00000003", 8))]
 
 
@@ -183,5 +195,70 @@ def test_mor_fold(spark, tmp_table_dir, changes_pdf):
     m1 = apply_batch(table, df.where(F.col("lsn") > cut), epoch=1, cfg=cfg)
     assert m1.get("folded")
     snap = table.catalog.current()
-    assert not any(snap["delta_files"].values()) and any(snap["files"].values())
+    assert only_carried_tombstones(snap) and any(snap["files"].values())
     assert_state_equal(final_state_pdf(table), expected_state_pdf(changes_pdf))
+
+
+def _events(spark, rows):
+    """Change events from ``(lsn, op, conv_id, turn_idx)`` tuples."""
+    import datetime as dt
+
+    ts = dt.datetime(2024, 1, 1)
+    return spark.createDataFrame(
+        [(lsn, op, c, t, "user", None if op == "D" else f"text-{lsn}", None, ts, 64, 0, None)
+         for lsn, op, c, t in rows],
+        schema=CHANGES_SCHEMA,
+    )
+
+
+@pytest.mark.parametrize("fold", [False, True])
+def test_fold_keeps_tombstones_for_older_epochs(spark, tmp_path, fold):
+    """Table state does not depend on epoch order across a fold: epoch 0
+    deletes turn (c1, 0) at lsn 20 and conversation c2 at lsn 21, and
+    epoch 1 then carries their OLDER inserts (lsn 10, 11) — with or
+    without a fold between them, neither insert is visible.  The fold's
+    carried tombstones are no new changes to the table's change feed,
+    before or after they are folded again."""
+    from aqueduct_core_spark.operators.compact import fold_deltas
+
+    cfg = EngineConfig(num_buckets=2, mor_fold_every=0)
+    table = ParquetTranscriptTable.create(spark, str(tmp_path / "t"), num_buckets=2)
+    apply_batch(table, _events(spark, [(20, "D", "c1", 0), (21, "D", "c2", None),
+                                       (22, "I", "c3", 0)]), epoch=0, cfg=cfg)
+    v0 = table.catalog.current_version()
+    if fold:
+        assert fold_deltas(table)["folded"]
+    apply_batch(table, _events(spark, [(10, "I", "c1", 0), (11, "I", "c2", 0)]),
+                epoch=1, cfg=cfg)
+    got = table.read_internal().select("conv_id", "turn_idx", LSN_COLUMN).collect()
+    assert sorted(map(tuple, got)) == [("c3", 0, 22)]
+    for c in ("c1", "c2"):
+        assert table.read_conversation_direct(c).empty
+
+    feed = sorted(
+        (r["conv_id"], r["turn_idx"], r["op"], r[LSN_COLUMN])
+        for r in table.changes_between(v0).collect()
+    )
+    assert feed == [("c1", 0, "I", 10), ("c2", 0, "I", 11)]
+    assert fold_deltas(table)["folded"]
+    assert sorted(map(tuple, table.read_internal()
+                      .select("conv_id", "turn_idx", LSN_COLUMN).collect())) == [("c3", 0, 22)]
+    assert table.changes_between(table.catalog.current_version() - 1).count() == 0
+
+
+def test_in_order_replay_fold_writes_no_tombstones(spark, tmp_path):
+    """A planned, lsn-ascending replay never sets the flag, so its folds
+    rewrite live rows only and leave no delta file behind."""
+    from aqueduct_core_spark.catalog.table import KEEP_TOMBSTONES
+    from aqueduct_core_spark.operators.compact import fold_deltas
+    from aqueduct_core_spark.streaming.pipeline import replay
+
+    pdf = generate_changes_pdf(n_convs=40, seed=5)
+    assert (pdf["op"] == "D").any()
+    cfg = EngineConfig(num_buckets=4, mor_fold_every=2, max_events_per_trigger=200)
+    table = ParquetTranscriptTable.create(spark, str(tmp_path / "t"), num_buckets=4)
+    replay(table, to_spark(spark, pdf), cfg)
+    assert KEEP_TOMBSTONES not in table.catalog.current()["summary"]
+    fold_deltas(table)
+    assert not any(table.catalog.current()["delta_files"].values())
+    assert_state_equal(final_state_pdf(table), expected_state_pdf(pdf))

@@ -287,6 +287,47 @@ def test_loop_maintainer_matches_stream_rollup(spark, log_dir, tmp_path):
     pd.testing.assert_frame_equal(frame(rollup), frame(stream_rollup))
 
 
+def test_loop_fold_overlaps_next_prepares(spark, log_dir, tmp_path, monkeypatch):
+    """A fold due with epoch 0 runs while the prepares of epochs 1 AND 2
+    are under way: the loop submits the next planned item before it
+    commits the oldest, so epoch 2's prepare starts before epoch 0's
+    slowed fold returns."""
+    import threading
+    import time
+
+    from aqueduct_core_spark.operators import compact, merge
+
+    events: dict = {}
+    lock = threading.Lock()
+    real_prepare, real_fold = merge.mor_prepare, compact.fold_deltas
+
+    def prepare(table, batch, epoch):
+        with lock:
+            events.setdefault(("prepare", epoch), time.monotonic())
+        return real_prepare(table, batch, epoch)
+
+    def slow_fold(table, *a, **kw):
+        first = "fold_end" not in events
+        if first:
+            time.sleep(3)
+        out = real_fold(table, *a, **kw)
+        if first:
+            events["fold_end"] = time.monotonic()
+        return out
+
+    monkeypatch.setattr(merge, "mor_prepare", prepare)
+    monkeypatch.setattr(compact, "fold_deltas", slow_fold)
+    log = spark.read.schema(CHANGES_SCHEMA).parquet(log_dir)
+    cfg = EngineConfig(num_buckets=4, mor_fold_every=1, max_events_per_trigger=600,
+                       max_bytes_per_trigger=1 << 30)
+    _, items = _loop_items(log, cfg, n=4)
+    assert len(items) == 4
+    t = ParquetTranscriptTable.create(spark, str(tmp_path / "t"), num_buckets=4)
+    rows = _apply_epochs(t, items, cfg)
+    assert [m["epoch"] for m in rows] == [0, 1, 2, 3] and rows[0].get("folded")
+    assert events[("prepare", 2)] < events["fold_end"]
+
+
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _APPLY_FNS = ("apply_batch", "apply_audited")
 #: the only (file, enclosing function) allowed to reach an apply function

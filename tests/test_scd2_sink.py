@@ -45,7 +45,7 @@ def test_segmented_apply_equals_batch_operator(spark, log, tmp_path):
         assert m["mode"] in ("applied", "empty")
 
     _assert_same(h.read(), scd2_history(log))
-    assert h.last_lsn() == mx
+    assert h._meta()["last_lsn"] == mx
 
 
 def test_redelivered_epoch_skips_and_state_unchanged(spark, log, tmp_path):
@@ -76,7 +76,7 @@ def test_empty_batch_advances_epoch_only(spark, log, tmp_path):
     h = Scd2History.create(spark, str(tmp_path / "h"), num_buckets=4)
     m = h.apply(log.where(F.lit(False)), epoch=0)
     assert m["mode"] == "empty"
-    assert h.last_epoch() == 0 and h.last_lsn() == -1
+    assert h.last_epoch() == 0 and h._meta()["last_lsn"] == -1
     assert h.read().count() == 0
 
 
@@ -215,7 +215,7 @@ def test_prune_epoch_counter_is_independent_of_apply(spark, log, tmp_path):
     m = h.apply(log.where(F.col("lsn") > half), epoch=1)
     assert m["mode"] == "applied"
     _assert_same(h.read(), scd2_history(log))
-    assert h.last_lsn() == mx
+    assert h._meta()["last_lsn"] == mx
     # generations from both namespaces expire once unreferenced
     h.prune_closed_before(0, epoch=10_001)
     gone = h.expire()

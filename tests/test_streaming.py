@@ -327,7 +327,7 @@ def test_full_topology_every_hook_at_once(spark, tmp_path):
             "end_reason", "is_current", "row_op", "text"]
     ha, hb = hist.read().select(cols), scd2_history(log).select(cols)
     assert ha.exceptAll(hb).count() == 0 and hb.exceptAll(ha).count() == 0
-    assert hist.last_lsn() == mx
+    assert hist._meta()["last_lsn"] == mx
 
     # the preference-pair view followed the history per batch
     pa, pb = pv.read(), preference_pairs(log)
@@ -353,7 +353,7 @@ def test_full_topology_every_hook_at_once(spark, tmp_path):
     run_available_now(spark, table, str(src), str(tmp_path / "ck2"), cfg, **kwargs)
     assert table.catalog.current_version() == v0
     assert rollup.last_table_version() == r0
-    assert hist.read().count() == h0 and hist.last_lsn() == mx
+    assert hist.read().count() == h0 and hist._meta()["last_lsn"] == mx
     assert pv._meta()["epoch"] == p0
     assert cur.version == c0
 
