@@ -86,27 +86,23 @@ class SnapshotCatalog:
     def commit(
         self,
         base: dict,
-        replaced_buckets: dict[str, list[str]] | None = None,
         added_offsets_files: list[str] | None = None,
         replace_offsets_files: list[str] | None = None,
         summary_updates: dict | None = None,
         schema_fields: list[dict] | None = None,
         full_files: dict[str, list[str]] | None = None,
         added_delta_buckets: dict[str, list[str]] | None = None,
-        clear_deltas: bool = False,
         clear_delta_buckets: list[str] | None = None,
         publish: bool = True,
         column_mapping: dict[str, str] | None = None,
     ) -> dict:
         """Produce snapshot N+1 from ``base``.
 
-        ``replaced_buckets`` swaps the file list of only the touched
-        buckets (MERGE / compaction); ``full_files`` replaces the whole
-        layout (bootstrap / full rewrite); ``added_delta_buckets``
+        ``full_files`` replaces the whole base layout (a bucket rewrite
+        passes its post-rewrite file map); ``added_delta_buckets``
         appends merge-on-read delta files (fast-append commit, Iceberg
-        MOR analog); ``clear_deltas`` drops all deltas (full rewrite);
-        ``clear_delta_buckets`` drops only the named buckets' deltas
-        (incremental fold — Iceberg's per-partition
+        MOR analog); ``clear_delta_buckets`` drops the named buckets'
+        deltas (a rewrite folds them — Iceberg's per-partition
         ``rewrite_data_files``); ``replace_offsets_files`` swaps the
         whole offsets-log file list (offsets compaction — the metrics
         log is itself log-structured and must not grow one file per
@@ -124,11 +120,7 @@ class SnapshotCatalog:
         left by a crash is discovered with :meth:`staged_version`.
         """
         files = dict(base["files"]) if full_files is None else dict(full_files)
-        if replaced_buckets:
-            files.update(replaced_buckets)
-        deltas = {} if clear_deltas else {
-            k: list(v) for k, v in base.get("delta_files", {}).items()
-        }
+        deltas = {k: list(v) for k, v in base.get("delta_files", {}).items()}
         for b in clear_delta_buckets or ():
             deltas.pop(str(b), None)
         for b, fl in (added_delta_buckets or {}).items():

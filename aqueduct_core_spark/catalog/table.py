@@ -504,19 +504,18 @@ class ParquetTranscriptTable:
         ``wanted`` buckets — or, with ``tombstones``, what the live rows
         hide: the winning turn tombstones no delete watermark covers and
         each conversation's delete watermark, as delta rows (the
-        :meth:`delta_read_schema` shape plus ``_bucket``/``_isturn``)
-        that :meth:`write_delta_data` writes."""
+        :meth:`delta_read_schema` shape plus ``_isturn``) whose payload
+        is NULL."""
         base_files = self._listed(snap["files"], wanted)
         base = self.spark.read.schema(schema).parquet(*base_files) if base_files else None
         delta_files = self._listed(snap.get("delta_files", {}), wanted)
         if not delta_files:
             return self.spark.createDataFrame([], schema) if base is None else base
 
-        payload = [
-            sql_ident(f.name)
-            for f in schema.fields
-            if f.name not in ("conv_id", "turn_idx", LSN_COLUMN)
+        payload_fields = [
+            f for f in schema.fields if f.name not in ("conv_id", "turn_idx", LSN_COLUMN)
         ]
+        payload = [sql_ident(f.name) for f in payload_fields]
         d = self.spark.read.schema(self.delta_read_schema(schema)).parquet(*delta_files)
         # One statement, grouped on ONE exchange: the union is
         # hash-partitioned on conv_id into the manifest's bucket count
@@ -527,10 +526,8 @@ class ParquetTranscriptTable:
         # (_tkey = -1) ride along only to carry their _dlsn.
         lsn = sql_ident(LSN_COLUMN)
         if tombstones:
-            w = ", ".join([f"w.{lsn} AS lsn", "w._op AS op", *(f"w.{c} AS {c}" for c in payload)])
             out_cols = (
-                f"conv_id, _tkey, struct({w}) AS w, _dl AS _dlsn, "
-                f"{bucket_sql(_bucket_count(snap))} AS {BUCKET_COLUMN}, "
+                f"conv_id, _tkey, w.{lsn} AS lsn, w._op AS op, _dl AS _dlsn, "
                 "CAST(_tkey >= 0 AS INT) AS _isturn"
             )
             keep = (
@@ -553,7 +550,7 @@ class ParquetTranscriptTable:
             if base is not None
             else ""
         )
-        return d.sparkSession.sql(
+        out = d.sparkSession.sql(
             f"""
             SELECT {out_cols}
             FROM (
@@ -576,6 +573,12 @@ class ParquetTranscriptTable:
             """,
             base=base,
             d=d,
+        )
+        if not tombstones:
+            return out
+        nulls = [F.lit(None).cast(f.dataType).alias(f.name) for f in payload_fields]
+        return out.select(
+            "conv_id", "_tkey", F.struct("lsn", "op", *nulls).alias("w"), "_dlsn", "_isturn"
         )
 
     def _reduced_schema(
@@ -905,9 +908,9 @@ class ParquetTranscriptTable:
         at ``v_from``: a caught-up consumer keeps tailing across
         scheduled folds instead of being forced into a full resync
         every ``mor_fold_every`` epochs.  The tombstone deltas a fold
-        carries forward (:func:`~aqueduct_core_spark.operators.compact.fold_deltas`)
-        are no new changes: the walk does not emit them and lets a later
-        fold consume them.  It still raises for (a) a
+        carries forward (:meth:`rewrite_buckets`) are no new changes:
+        the walk does not emit them and lets a later fold consume them.
+        It still raises for (a) a
         fold that consumed deltas this consumer never saw (it lagged
         past retention), (b) any UNstamped base rewrite — erase/redact/
         rebucket/rollback change history in ways no delta expresses —
@@ -937,7 +940,7 @@ class ParquetTranscriptTable:
             is_fold = cur["summary"].get("aqueduct.fold-snapshot") == cur["snapshot_id"]
             if is_fold:
                 # a fold's own deltas carry tombstones of rows it folded
-                # (fold_deltas): delivered already, never new changes
+                # (rewrite_buckets): delivered already, never new changes
                 carried = cur_d - prev_d
                 a_deltas = a_deltas | carried
                 prev_d |= carried
@@ -1077,12 +1080,14 @@ class ParquetTranscriptTable:
             ]
         return out
 
-    def write_delta_data(self, staged_df: DataFrame, label: str) -> tuple[dict[str, list[str]], str]:
+    def write_delta_data(
+        self, staged_df: DataFrame, label: str, num_buckets: int | None = None
+    ) -> tuple[dict[str, list[str]], str]:
         """MOR fast-append: write the resolved-keys frame (unified-argmax
         shape + ``_bucket``/``_isturn``) as delta files; returns
         (bucket → relative paths, absolute staging dir for footer
         stats).  Files go live only when the manifest commit references
-        them."""
+        them.  ``num_buckets`` as in :meth:`write_bucket_data`."""
         rel = os.path.join("delta", f"{label}-{uuid.uuid4().hex[:8]}")
         out_dir = os.path.join(self.root, rel)
         (
@@ -1090,7 +1095,7 @@ class ParquetTranscriptTable:
             # write_bucket_data (conv_id key ⇒ partition index ==
             # bucket value, collision-free); a no-op on mor_prepare's
             # frame, which its argmax already grouped on this exchange
-            staged_df.repartition(self.num_buckets, F.col("conv_id"))
+            staged_df.repartition(num_buckets or self.num_buckets, F.col("conv_id"))
             .write.options(**self._write_options())
             .partitionBy(BUCKET_COLUMN, "_isturn")
             .parquet(out_dir)
@@ -1111,22 +1116,96 @@ class ParquetTranscriptTable:
                 )
         return by_bucket, out_dir
 
-    def _carry_tombstones(self, snap: dict, buckets=None) -> dict[str, list[str]]:
-        """Write the tombstones of ``snap``'s ``buckets`` (all when None)
-        that a rewrite of their live rows drops — winning turn deletes
-        and conversation delete watermarks — as delta files under
-        :data:`TOMBSTONE_PREFIX`; returns bucket → relative paths for the
-        rewrite's commit.  Only a table flagged :data:`KEEP_TOMBSTONES`
-        needs them (a later epoch may carry events older than a delete
-        it has applied); any other table gets ``{}``, so an in-order
-        replay's rewrites are unchanged."""
-        if not snap["summary"].get(KEEP_TOMBSTONES):
-            return {}
+    def rewrite_buckets(
+        self,
+        label: str,
+        buckets=None,
+        transform=None,
+        source: "ParquetTranscriptTable | None" = None,
+        num_buckets: int | None = None,
+        sort_cols: list | None = None,
+        extra_options: dict[str, str] | None = None,
+        summary_updates: dict | None = None,
+    ) -> dict | None:
+        """Rewrite buckets from their resolved rows in one commit: the
+        write path of every bucket rewriter (fold, small-file and
+        Z-order rewrites, rebucket, erase, redact, repair).
+
+        Everything is pinned to one read of the current manifest:
+        ``buckets`` (None = all; a callable is given the manifest, so a
+        list derived from the layout matches the rows read; an empty
+        list rewrites nothing and returns None), their resolved rows —
+        read from ``source``'s current snapshot when given (a repair),
+        else from this one — mapped by ``transform``, written by
+        :meth:`write_bucket_data` (``label``, ``sort_cols``,
+        ``extra_options``) hashed into ``num_buckets`` (default: the
+        current count), and the commit: the full post-rewrite file map,
+        the rewritten buckets' deltas dropped, ``summary_updates``
+        added.  A writer landing after the read makes the commit raise
+        ``CommitConflict`` instead of being dropped.  Returns
+        ``{snapshot_id, buckets, files}``.
+
+        Base files hold live rows only.  When this table or ``source``
+        is flagged :data:`KEEP_TOMBSTONES` (a later epoch may carry
+        events older than a delete it has applied), the rewritten
+        buckets' winning turn deletes and conversation delete
+        watermarks in the snapshot read are also written, hashed into
+        the output bucket count and with every payload column NULL, as
+        delta files under :data:`TOMBSTONE_PREFIX`, and the flag is
+        kept: an older event applied later still loses to them, the
+        next rewrite of the bucket carries them again, and no payload of
+        a hidden row survives a rewrite.  ``changes_between`` never
+        re-emits them.  A rewrite that only re-lays rows out (no
+        ``transform`` or ``source``, same bucket count) is stamped
+        ``aqueduct.fold-snapshot`` with its own commit id, so a feed
+        consumer that saw every folded delta may cross it."""
+        snap = self.catalog.current()
+        src = source or self
+        src_snap = snap if source is None else source.catalog.current()
+        if callable(buckets):
+            buckets = buckets(snap)
+        if buckets is not None and not buckets:
+            return None
+        n_out = int(num_buckets or _bucket_count(snap))
         wanted = None if buckets is None else {str(int(b)) for b in buckets}
-        if not self._listed(snap.get("delta_files", {}), wanted):
-            return {}
-        rows = self._resolve(snap, wanted, self.schema(snap), tombstones=True)
-        return self.write_delta_data(rows, TOMBSTONE_LABEL)[0]
+        rows = src.read_internal(buckets, version=src_snap["snapshot_id"])
+        if transform is not None:
+            rows = transform(rows)
+        files = self.write_bucket_data(
+            rows.withColumn(BUCKET_COLUMN, bucket_expr(n_out)),
+            label=label,
+            num_buckets=n_out,
+            sort_cols=sort_cols,
+            extra_options=extra_options,
+        )
+        stamps = dict(summary_updates or {})
+        carried: dict[str, list[str]] = {}
+        if snap["summary"].get(KEEP_TOMBSTONES) or src_snap["summary"].get(KEEP_TOMBSTONES):
+            stamps[KEEP_TOMBSTONES] = True
+            if src._listed(src_snap.get("delta_files", {}), wanted):
+                tombs = src._resolve(src_snap, wanted, src.schema(src_snap), tombstones=True)
+                carried = self.write_delta_data(
+                    tombs.withColumn(BUCKET_COLUMN, bucket_expr(n_out)),
+                    TOMBSTONE_LABEL,
+                    num_buckets=n_out,
+                )[0]
+        if transform is None and source is None and n_out == _bucket_count(snap):
+            stamps["aqueduct.fold-snapshot"] = snap["snapshot_id"] + 1
+        if buckets is None:
+            full, cleared = {}, list(snap.get("delta_files", {}))
+            buckets = sorted({int(b) for b in (*snap["files"], *cleared)})
+        else:
+            # a bucket left empty must still drop its old files
+            full = {**snap["files"], **{str(int(b)): [] for b in buckets}}
+            cleared = sorted(wanted)
+        out = self.catalog.commit(
+            snap,
+            full_files={**full, **files},
+            clear_delta_buckets=cleared,
+            added_delta_buckets=carried,
+            summary_updates=stamps,
+        )
+        return {"snapshot_id": out["snapshot_id"], "buckets": buckets, "files": files}
 
     def write_offsets_row(self, row: dict, label: str) -> str:
         """Tiny single-row offsets file written driver-side (pyarrow) —

@@ -22,8 +22,7 @@ and *what* at 100 TB cost:
    never shuffles — only (key, hash, lsn).
 4. :func:`repair_replica` — bucket-granular repair: the diverging
    buckets are rewritten from the primary's resolved state in one
-   atomic snapshot commit (same ``replaced_buckets`` +
-   ``clear_delta_buckets`` shape as ``fold_deltas``), leaving every
+   atomic snapshot commit, leaving every
    verified bucket's files untouched.  Content-level only: the
    replica's feed cursor / epoch watermark is intentionally NOT
    changed — anti-entropy fixes state, the feed keeps its position.
@@ -169,9 +168,9 @@ def repair_replica(
     buckets: list[int] | None = None,
 ) -> dict:
     """Rewrite the replica's diverging buckets from the primary's
-    resolved state — ONE atomic snapshot commit replacing exactly those
-    buckets' base files and clearing their deltas (``fold_deltas``'
-    commit shape); verified buckets' files are untouched, so repair
+    resolved state — ONE atomic snapshot commit
+    (:meth:`ParquetTranscriptTable.rewrite_buckets` with the primary as
+    ``source``); verified buckets' files are untouched, so repair
     cost is proportional to the damage, not the table.
 
     Content-level by design: the replica's epoch/lsn watermark and
@@ -183,16 +182,10 @@ def repair_replica(
         buckets = diverging_buckets(primary, replica)
     if not buckets:
         return {"repaired": False, "buckets": []}
-    snap = replica.catalog.current()
-    resolved = primary.read_internal(buckets).withColumn(
-        BUCKET_COLUMN, bucket_expr(replica.num_buckets)
-    )
-    new_files = replica.write_bucket_data(resolved, label="repair")
-    replaced = {str(b): new_files.get(str(b), []) for b in buckets}
-    out = replica.catalog.commit(
-        snap,
-        replaced_buckets=replaced,
-        clear_delta_buckets=[str(b) for b in buckets],
+    out = replica.rewrite_buckets(
+        "repair",
+        buckets=buckets,
+        source=primary,
         summary_updates={"aqueduct.repaired-buckets": len(buckets)},
     )
     return {

@@ -22,13 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from aqueduct_core_spark.catalog.table import (
-    BUCKET_COLUMN,
-    TOMBSTONE_PREFIX,
-    ParquetTranscriptTable,
-    bucket_expr,
-)
-from aqueduct_core_spark.schema import KEY_COLUMNS, OP_DELETE
+from aqueduct_core_spark.catalog.table import TOMBSTONE_PREFIX, ParquetTranscriptTable
+from aqueduct_core_spark.schema import OP_DELETE
 
 
 def compact_log(
@@ -211,52 +206,28 @@ def fold_deltas(
     (and ``reset()`` it) to release retention, exactly like deleting a
     consumer group.
 
-    The base files hold live rows only.  On a table whose epochs may
-    arrive out of lsn order (summary flag ``KEEP_TOMBSTONES``, see
-    ``ParquetTranscriptTable._carry_tombstones``) the fold also writes
-    the folded buckets' tombstones and delete watermarks as one
-    tombstone delta per bucket, so an older event applied after the
-    fold still loses to them; the next fold of the bucket carries them
-    forward again, and a bucket whose only deltas are carried
-    tombstones is not folded."""
-    snap = table.catalog.current()
+    Bucket rewrites, tombstones and the feed stamp:
+    :meth:`ParquetTranscriptTable.rewrite_buckets`; a bucket whose only
+    deltas are carried tombstones is not folded."""
     if consumers:
         cur = table.catalog.current_version()
         lagging = [c for c in consumers if _consumer_position(c) < cur]
         if lagging:
             return {"folded": False, "blocked_by": len(lagging)}
-    delta_buckets = sorted(
-        int(b) for b, fl in snap.get("delta_files", {}).items()
-        if any(not f.startswith(TOMBSTONE_PREFIX) for f in fl)
+    out = table.rewrite_buckets(
+        "fold",
+        buckets=lambda snap: sorted(
+            int(b) for b, fl in snap.get("delta_files", {}).items()
+            if any(not f.startswith(TOMBSTONE_PREFIX) for f in fl)
+        ),
+        summary_updates={"aqueduct.delta-epochs": 0},
     )
-    if not delta_buckets:
+    if out is None:
         return {"folded": False}
-    resolved = table.read_internal(delta_buckets).withColumn(
-        BUCKET_COLUMN, bucket_expr(table.num_buckets)
-    )
-    new_files = table.write_bucket_data(resolved, label="fold")
-    # a bucket whose resolved state is empty (everything deleted) must
-    # still drop its stale base files
-    replaced = {str(b): new_files.get(str(b), []) for b in delta_buckets}
-    out = table.catalog.commit(
-        snap,
-        replaced_buckets=replaced,
-        clear_delta_buckets=[str(b) for b in delta_buckets],
-        added_delta_buckets=table._carry_tombstones(snap, delta_buckets),
-        # content-preserving marker, stamped with THIS commit's id
-        # (summaries carry forward, so the id is what scopes it):
-        # changes_between may cross this commit when the folded deltas
-        # were already delivered — erase/redact/rollback never stamp it
-        # and stay feed-breaking by design
-        summary_updates={
-            "aqueduct.delta-epochs": 0,
-            "aqueduct.fold-snapshot": snap["snapshot_id"] + 1,
-        },
-    )
     return {
         "folded": True,
         "snapshot_id": out["snapshot_id"],
-        "buckets": len(delta_buckets),
+        "buckets": len(out["buckets"]),
     }
 
 
@@ -270,23 +241,14 @@ def rewrite_data_files(
     rewrite READ: an epoch landing mid-rewrite raises
     ``CommitConflict`` instead of being silently dropped by the
     full-layout replace (retry after the writer settles)."""
-    base = table.catalog.current()
-    df = table.read_internal().withColumn(BUCKET_COLUMN, bucket_expr(table.num_buckets))
-    new_files = table.write_bucket_data(df, label="rewrite")
-    snap = table.catalog.commit(
-        base,
-        full_files=new_files,
-        # the rewrite output is fully resolved — MOR deltas are folded
-        # in, but for carried tombstones (see fold_deltas)
-        clear_deltas=True,
-        added_delta_buckets=table._carry_tombstones(base),
+    out = table.rewrite_buckets(
+        "rewrite",
         summary_updates={
             "aqueduct.last-rewrite-snapshot": True,
             "aqueduct.delta-epochs": 0,
-            "aqueduct.fold-snapshot": base["snapshot_id"] + 1,
         },
     )
-    return {"snapshot_id": snap["snapshot_id"], "buckets": len(new_files)}
+    return {"snapshot_id": out["snapshot_id"], "buckets": len(out["files"])}
 
 
 def zorder_code(key_col, time_col, bits: int = 16):
@@ -337,11 +299,7 @@ def rewrite_zorder(
     ``row_group_bytes`` optionally shrinks ``parquet.block.size`` —
     pruning granularity is the row group, so at 100 TB you want multiple
     row groups per bucket file."""
-    base = table.catalog.current()
-    df = table.read_internal().withColumn(
-        BUCKET_COLUMN, bucket_expr(table.num_buckets)
-    )
-    lo, hi = df.select(
+    lo, hi = table.read_internal().select(
         F.min(time_col).cast("long"), F.max(time_col).cast("long")
     ).first()
     if lo is None or hi is None:
@@ -357,27 +315,19 @@ def rewrite_zorder(
     )
     # the sort key is an inline expression — no helper column reaches
     # the written schema
-    new_files = table.write_bucket_data(
-        df,
-        label="zorder",
+    out = table.rewrite_buckets(
+        "zorder",
         sort_cols=[zorder_code(F.col("conv_id"), tnorm, bits)],
         extra_options=opts,
-    )
-    snap = table.catalog.commit(
-        base,
-        full_files=new_files,
-        clear_deltas=True,
-        added_delta_buckets=table._carry_tombstones(base),
         summary_updates={
             "aqueduct.zorder": f"conv_id,{time_col}",
             "aqueduct.delta-epochs": 0,
-            "aqueduct.fold-snapshot": base["snapshot_id"] + 1,
         },
     )
     return {
         "rewritten": True,
-        "snapshot_id": snap["snapshot_id"],
-        "buckets": len(new_files),
+        "snapshot_id": out["snapshot_id"],
+        "buckets": len(out["files"]),
     }
 
 
@@ -406,20 +356,12 @@ def rebucket(table: ParquetTranscriptTable, new_num_buckets: int) -> dict:
     new_num_buckets = int(new_num_buckets)
     if new_num_buckets < 1:
         raise ValueError("new_num_buckets must be >= 1")
-    base = table.catalog.current()
-    old = int(base["summary"]["aqueduct.num-buckets"])
+    old = table.num_buckets
     if new_num_buckets == old:
         return {"rebucketed": False, "num_buckets": old}
-    df = table.read_internal().withColumn(
-        BUCKET_COLUMN, bucket_expr(new_num_buckets)
-    )
-    new_files = table.write_bucket_data(
-        df, label=f"rebucket{new_num_buckets}", num_buckets=new_num_buckets
-    )
-    snap = table.catalog.commit(
-        base,
-        full_files=new_files,
-        clear_deltas=True,
+    out = table.rewrite_buckets(
+        f"rebucket{new_num_buckets}",
+        num_buckets=new_num_buckets,
         summary_updates={
             "aqueduct.num-buckets": new_num_buckets,
             "aqueduct.rebucketed-from": old,
@@ -428,7 +370,7 @@ def rebucket(table: ParquetTranscriptTable, new_num_buckets: int) -> dict:
     )
     return {
         "rebucketed": True,
-        "snapshot_id": snap["snapshot_id"],
+        "snapshot_id": out["snapshot_id"],
         "num_buckets": new_num_buckets,
         "previous": old,
     }

@@ -11,14 +11,14 @@ replay them back from.  This module provides both for each surface the
 engine owns:
 
 - :func:`erase_conversations` / :func:`redact_conversations` — the
-  transcript TABLE: a bucket-pruned rewrite of exactly the buckets that
-  can hold the keys (driver-side ``bucket_of`` mirror of the layout
-  hash; redaction of the whole table reads every bucket, there is no
-  smaller correct read), dropping or transforming the keys' rows in the
-  resolved slice and clearing those buckets' MOR deltas in the SAME
-  atomic snapshot commit (a delta file may carry the affected text, so
-  folding the bucket is what physically evicts it from the live file
-  set).  The exactly-once epoch/lsn watermark is intentionally
+  transcript TABLE: a bucket-pruned rewrite
+  (:meth:`~aqueduct_core_spark.catalog.table.ParquetTranscriptTable.rewrite_buckets`)
+  of exactly the buckets that can hold the keys (driver-side
+  ``bucket_of`` mirror of the layout hash; redaction of the whole table
+  reads every bucket, there is no smaller correct read), dropping or
+  transforming the keys' rows in the resolved slice.  The same commit
+  drops those buckets' MOR deltas, which may carry the affected text.
+  The exactly-once epoch/lsn watermark is intentionally
   untouched: these ops rewrite history, they do not ban the future — a
   *new* event for the key (lsn above the watermark) ingests normally.
 - :func:`erase_from_log` / :func:`redact_log` — the change LOG: without
@@ -77,12 +77,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from aqueduct_core_spark.catalog.table import (
-    BUCKET_COLUMN,
-    ParquetTranscriptTable,
-    bucket_expr,
-    bucket_of,
-)
+from aqueduct_core_spark.catalog.table import ParquetTranscriptTable, _bucket_count, bucket_of
 from aqueduct_core_spark.operators.compact import expire_snapshots
 
 
@@ -121,30 +116,30 @@ def _keys_digest(conv_ids: list[str]) -> str:
     return f"sha256:{h.hexdigest()}:{len(set(conv_ids))}"
 
 
+def _buckets_of(conv_ids: list[str]):
+    """The buckets the keys hash to, as a function of the manifest a
+    rewrite pins: the bucket count is that manifest's, read once."""
+
+    def buckets(snap: dict) -> list[int]:
+        n = _bucket_count(snap)
+        return sorted({bucket_of(c, n) for c in conv_ids})
+
+    return buckets
+
+
 def erase_conversations(
     table: ParquetTranscriptTable, conv_ids: list[str], purge: bool = False
 ) -> dict:
     """Erase whole conversations from the transcript table in one
     atomic, bucket-pruned commit.  Returns a report; see module
     docstring for the retention/feed consequences and ``purge``."""
-    spark = table.spark
-    keys = _keys_df(spark, conv_ids)
-    snap = table.catalog.current()
-    buckets = sorted({bucket_of(c, table.num_buckets) for c in conv_ids})
-    kept = (
-        table.read_internal(buckets)
-        .join(F.broadcast(keys), "conv_id", "left_anti")
-        .withColumn(BUCKET_COLUMN, bucket_expr(table.num_buckets))
-    )
-    new_files = table.write_bucket_data(kept, label="erase")
-    # a bucket left empty must still drop its old files
-    replaced = {str(b): new_files.get(str(b), []) for b in buckets}
-    out = table.catalog.commit(
-        snap,
-        replaced_buckets=replaced,
-        clear_delta_buckets=[str(b) for b in buckets],
+    keys = _keys_df(table.spark, conv_ids)
+    out = table.rewrite_buckets(
+        "erase",
+        buckets=_buckets_of(conv_ids),
+        transform=lambda df: df.join(F.broadcast(keys), "conv_id", "left_anti"),
         summary_updates={
-            "aqueduct.last-erase-keys": len(conv_ids),
+            "aqueduct.last-erase-keys": len(set(conv_ids)),
             # audit stamp: PROOF an erasure of exactly this key set
             # landed in this commit, without the stamp itself retaining
             # the identifiers it erased (a GDPR audit presents the key
@@ -154,8 +149,8 @@ def erase_conversations(
     )
     report = {
         "snapshot_id": out["snapshot_id"],
-        "keys": len(conv_ids),
-        "buckets": len(buckets),
+        "keys": len(set(conv_ids)),
+        "buckets": len(out["buckets"]),
         "purged_files": 0,
     }
     if purge:
@@ -193,47 +188,29 @@ def redact_conversations(
     exactly the redacted rows as ``changed``.  Same retention/feed
     consequences as :func:`erase_conversations`; ``purge=True``
     completes physical deletion of the unredacted bytes."""
-    spark = table.spark
-    snap = table.catalog.current()
+    redact = F.regexp_replace("text", pattern, replacement)
     if conv_ids is None:
-        buckets = sorted(
-            {int(b) for b in snap["files"]}
-            | {int(b) for b in snap.get("delta_files", {})}
-        )
-        resolved = table.read_internal(buckets)
-        redacted = resolved.withColumn(
-            "text", F.regexp_replace("text", pattern, replacement)
-        )
+        buckets, transform = None, lambda df: df.withColumn("text", redact)
     else:
-        keys = _keys_df(spark, conv_ids)
-        buckets = sorted({bucket_of(c, table.num_buckets) for c in conv_ids})
-        resolved = table.read_internal(buckets)
-        flagged = resolved.join(
-            F.broadcast(keys.withColumn("_redact", F.lit(True))),
-            "conv_id",
-            "left",
-        )
-        redacted = flagged.withColumn(
-            "text",
-            F.when(
-                F.col("_redact"),
-                F.regexp_replace("text", pattern, replacement),
-            ).otherwise(F.col("text")),
-        ).drop("_redact")
-    new_files = table.write_bucket_data(
-        redacted.withColumn(BUCKET_COLUMN, bucket_expr(table.num_buckets)),
-        label="redact",
-    )
-    replaced = {str(b): new_files.get(str(b), []) for b in buckets}
-    out = table.catalog.commit(
-        snap,
-        replaced_buckets=replaced,
-        clear_delta_buckets=[str(b) for b in buckets],
-        summary_updates={"aqueduct.last-redact-keys": len(conv_ids or [])},
+        flags = _keys_df(table.spark, conv_ids).withColumn("_redact", F.lit(True))
+        buckets = _buckets_of(conv_ids)
+
+        def transform(df: DataFrame) -> DataFrame:
+            return (
+                df.join(F.broadcast(flags), "conv_id", "left")
+                .withColumn("text", F.when(F.col("_redact"), redact).otherwise(F.col("text")))
+                .drop("_redact")
+            )
+
+    out = table.rewrite_buckets(
+        "redact",
+        buckets=buckets,
+        transform=transform,
+        summary_updates={"aqueduct.last-redact-keys": len(set(conv_ids or []))},
     )
     report = {
         "snapshot_id": out["snapshot_id"],
-        "buckets": len(buckets),
+        "buckets": len(out["buckets"]),
         "purged_files": 0,
     }
     if purge:
@@ -444,7 +421,7 @@ def erase_everywhere(
         # every per-surface op fails loud on an empty request; the sweep
         # must too, not return a success-shaped empty report
         raise ValueError("erase_everywhere: empty key list")
-    report: dict = {"keys": len(conv_ids), "tables": [], "logs": [],
+    report: dict = {"keys": len(set(conv_ids)), "tables": [], "logs": [],
                     "histories": [], "views": [], "indexes": []}
     for t in tables:
         report["tables"].append(erase_conversations(t, conv_ids, purge=purge))

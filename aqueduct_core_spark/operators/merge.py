@@ -357,7 +357,7 @@ def _apply_mor(
     # an epoch without a planned lsn bound (a stream trigger, a direct
     # call) or with an event at or below the watermark may be followed
     # by older events: from then on the table's rewrites keep the
-    # tombstones that must beat them (fold_deltas)
+    # tombstones that must beat them (rewrite_buckets)
     watermark = int(base["summary"].get("aqueduct.max-lsn", -1))
     unordered = batch_max_hint is None or any(
         s["any_min_lsn"] is not None and s["any_min_lsn"] <= watermark

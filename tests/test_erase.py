@@ -93,7 +93,7 @@ def test_erase_purge_physically_removes_text(spark, applied_table):
     assert table.read().count() > 0
 
 
-def test_erase_conflicts_with_racing_epoch(spark, applied_table):
+def test_erase_conflicts_with_racing_epoch(spark, applied_table, monkeypatch):
     """The erase commit is pinned to the snapshot it read — a writer
     landing mid-erase must surface as CommitConflict, never be
     silently dropped by the bucket replace."""
@@ -101,21 +101,21 @@ def test_erase_conflicts_with_racing_epoch(spark, applied_table):
 
     table, log = applied_table
     keys = _pick_keys(table)
-    snap = table.catalog.current()
-    # another writer lands first
-    replay(table, generate_changes(spark, n_convs=10, seed=77)
-           .withColumn("lsn", F.col("lsn") + F.lit(10_000_000)),
-           EngineConfig(num_buckets=8))
-    kept = (
-        table.read_internal()
-        .join(F.broadcast(spark.createDataFrame([(k,) for k in keys], "conv_id string")),
-              "conv_id", "left_anti")
-    )
-    from aqueduct_core_spark.catalog.table import BUCKET_COLUMN, bucket_expr
-    files = table.write_bucket_data(
-        kept.withColumn(BUCKET_COLUMN, bucket_expr(table.num_buckets)), label="erase")
+    write = ParquetTranscriptTable.write_bucket_data
+
+    def write_then_race(self, *args, **kwargs):
+        out = write(self, *args, **kwargs)
+        # another writer lands between the erase's write and its commit
+        monkeypatch.setattr(ParquetTranscriptTable, "write_bucket_data", write)
+        replay(table, generate_changes(spark, n_convs=10, seed=77)
+               .withColumn("lsn", F.col("lsn") + F.lit(10_000_000)),
+               EngineConfig(num_buckets=8))
+        return out
+
+    monkeypatch.setattr(ParquetTranscriptTable, "write_bucket_data", write_then_race)
     with pytest.raises(CommitConflict):
-        table.catalog.commit(snap, replaced_buckets=files)
+        erase_conversations(table, keys)
+    assert table.read().where(F.col("conv_id").isin(keys)).count() > 0
 
 
 def test_erase_from_log_prevents_resurrection(spark, tmp_path):
@@ -378,10 +378,17 @@ def test_duplicate_keys_do_not_fan_out(spark, tmp_path):
     dups = [key, key, key]
 
     n_table = table.read().count()
-    redact_conversations(table, r"[0-9]+", "<num>", conv_ids=dups)
+    out = redact_conversations(table, r"[0-9]+", "<num>", conv_ids=dups)
     assert table.read().count() == n_table
     assert (table.read().groupBy("conv_id", "turn_idx").count()
             .where("count > 1").count()) == 0
+    summary = table.catalog.load(out["snapshot_id"])["summary"]
+    assert summary["aqueduct.last-redact-keys"] == 1
+    # erase counts the keys its audit digest covers
+    out = erase_conversations(table, dups)
+    summary = table.catalog.load(out["snapshot_id"])["summary"]
+    assert out["keys"] == summary["aqueduct.last-erase-keys"] == 1
+    assert summary["aqueduct.last-erase-audit"].endswith(":1")
 
     n_log = spark.read.parquet(log_dir).count()
     redact_log(spark, log_dir, r"[0-9]+", "<num>", conv_ids=dups)

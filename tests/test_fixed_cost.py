@@ -155,3 +155,25 @@ def test_whole_file_epochs_read_their_files_without_a_predicate(spark, tmp_path)
     ranges, batch_of = _epoch_slices(log, cfg, start_lsn=5, end_lsn=24)
     plans = [batch_of(r)._jdf.queryExecution().optimizedPlan().toString() for r in ranges]
     assert ["Filter" in p for p in plans] == [True, False, True]
+
+
+def test_erase_reads_the_manifest_a_constant_number_of_times(spark, tmp_path, monkeypatch):
+    """An erase derives its buckets from the manifest its rewrite pins:
+    the bucket count is read once, not once per key."""
+    from aqueduct_core_spark.catalog.snapshot import SnapshotCatalog
+    from aqueduct_core_spark.operators.erase import erase_conversations
+
+    table = ParquetTranscriptTable.create(spark, str(tmp_path / "t"), num_buckets=8)
+    load, loads = SnapshotCatalog.load, []
+
+    def counted(self, version):
+        loads.append(version)
+        return load(self, version)
+
+    monkeypatch.setattr(SnapshotCatalog, "load", counted)
+    counts = []
+    for n in (10, 1000):
+        loads.clear()
+        erase_conversations(table, [f"k{i}" for i in range(n)])
+        counts.append(len(loads))
+    assert counts[0] == counts[1] < 20, counts

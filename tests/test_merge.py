@@ -3,6 +3,8 @@ the independent pandas oracle (FIXTURES.md §4; mirrors the reference's
 replay-to-final-state specs SQLiteStorageIntegrationSpec.groovy:696-907).
 """
 
+import os
+
 import pandas as pd
 import pytest
 
@@ -199,47 +201,101 @@ def test_mor_fold(spark, tmp_table_dir, changes_pdf):
     assert_state_equal(final_state_pdf(table), expected_state_pdf(changes_pdf))
 
 
-def _events(spark, rows):
-    """Change events from ``(lsn, op, conv_id, turn_idx)`` tuples."""
+def _events(spark, rows, d_text=False):
+    """Change events from ``(lsn, op, conv_id, turn_idx)`` tuples; a
+    ``D`` carries text only with ``d_text``."""
     import datetime as dt
 
     ts = dt.datetime(2024, 1, 1)
     return spark.createDataFrame(
-        [(lsn, op, c, t, "user", None if op == "D" else f"text-{lsn}", None, ts, 64, 0, None)
+        [(lsn, op, c, t, "user", None if op == "D" and not d_text else f"text-{lsn}",
+          None, ts, 64, 0, None)
          for lsn, op, c, t in rows],
         schema=CHANGES_SCHEMA,
     )
 
 
-@pytest.mark.parametrize("fold", [False, True])
-def test_fold_keeps_tombstones_for_older_epochs(spark, tmp_path, fold):
-    """Table state does not depend on epoch order across a fold: epoch 0
-    deletes turn (c1, 0) at lsn 20 and conversation c2 at lsn 21, and
-    epoch 1 then carries their OLDER inserts (lsn 10, 11) — with or
-    without a fold between them, neither insert is visible.  The fold's
-    carried tombstones are no new changes to the table's change feed,
-    before or after they are folded again."""
+def _rewrite(table, rewriter, primary):
+    """Run one bucket rewriter on ``table``; the feed-crossable ones
+    return True."""
+    from aqueduct_core_spark.catalog.table import bucket_of
+    from aqueduct_core_spark.operators import antientropy, compact, erase
+
+    if rewriter == "erase_conversations":
+        # a key the table never held, in c1's bucket: only the rewrite
+        # of that bucket touches c1
+        other = next(k for k in (f"x{i}" for i in range(100))
+                     if bucket_of(k, 2) == bucket_of("c1", 2))
+        erase.erase_conversations(table, [other])
+    elif rewriter == "redact_conversations":
+        erase.redact_conversations(table, "text", "TEXT")
+    elif rewriter == "repair_replica":
+        antientropy.repair_replica(table, primary, buckets=[0, 1])
+    elif rewriter == "rebucket":
+        compact.rebucket(table, 4)
+    else:
+        assert getattr(compact, rewriter)(table)
+        return True
+    return False
+
+
+@pytest.mark.parametrize("rewriter,d_text", [
+    (None, False),
+    ("fold_deltas", False),
+    ("rewrite_data_files", False),
+    ("rewrite_zorder", False),
+    ("rebucket", False),
+    ("erase_conversations", False),
+    ("redact_conversations", False),
+    ("redact_conversations", True),
+    ("repair_replica", False),
+])
+def test_fold_keeps_tombstones_for_older_epochs(spark, tmp_path, rewriter, d_text):
+    """Table state does not depend on epoch order across any bucket
+    rewrite: epoch 0 deletes turn (c1, 0) at lsn 20 and conversation c2
+    at lsn 21, and epoch 1 then carries their OLDER inserts (lsn 10,
+    11) — with or without a rewrite between them, neither insert is
+    visible.  The carried tombstones hold no payload, even of a ``D``
+    that carried text, and are no new changes to the table's change
+    feed, before or after they are folded again."""
+    import pyarrow.parquet as pq
+
+    from aqueduct_core_spark.catalog.table import TOMBSTONE_PREFIX
     from aqueduct_core_spark.operators.compact import fold_deltas
 
     cfg = EngineConfig(num_buckets=2, mor_fold_every=0)
+    epoch0 = _events(spark, [(20, "D", "c1", 0), (21, "D", "c2", None),
+                             (22, "I", "c3", 0)], d_text)
     table = ParquetTranscriptTable.create(spark, str(tmp_path / "t"), num_buckets=2)
-    apply_batch(table, _events(spark, [(20, "D", "c1", 0), (21, "D", "c2", None),
-                                       (22, "I", "c3", 0)]), epoch=0, cfg=cfg)
+    apply_batch(table, epoch0, epoch=0, cfg=cfg)
+    primary = None
+    if rewriter == "repair_replica":
+        primary = ParquetTranscriptTable.create(spark, str(tmp_path / "p"), num_buckets=2)
+        apply_batch(primary, epoch0, epoch=0, cfg=cfg)
     v0 = table.catalog.current_version()
-    if fold:
-        assert fold_deltas(table)["folded"]
+    feed_crossable = rewriter is None or _rewrite(table, rewriter, primary)
+    tombs = [os.path.join(table.root, f) for fl in table.catalog.current()["delta_files"].values()
+             for f in fl if f.startswith(TOMBSTONE_PREFIX)]
     apply_batch(table, _events(spark, [(10, "I", "c1", 0), (11, "I", "c2", 0)]),
                 epoch=1, cfg=cfg)
     got = table.read_internal().select("conv_id", "turn_idx", LSN_COLUMN).collect()
     assert sorted(map(tuple, got)) == [("c3", 0, 22)]
     for c in ("c1", "c2"):
         assert table.read_conversation_direct(c).empty
+    assert bool(tombs) == (rewriter is not None)
+    for path in tombs if d_text else ():
+        w = pq.read_table(path).column("w").combine_chunks()
+        payload = [f.name for f in w.type if f.name not in ("lsn", "op")]
+        assert "text" in payload
+        for name in payload:
+            assert w.field(name).null_count == len(w), (path, name)
 
-    feed = sorted(
-        (r["conv_id"], r["turn_idx"], r["op"], r[LSN_COLUMN])
-        for r in table.changes_between(v0).collect()
-    )
-    assert feed == [("c1", 0, "I", 10), ("c2", 0, "I", 11)]
+    if feed_crossable:
+        feed = sorted(
+            (r["conv_id"], r["turn_idx"], r["op"], r[LSN_COLUMN])
+            for r in table.changes_between(v0).collect()
+        )
+        assert feed == [("c1", 0, "I", 10), ("c2", 0, "I", 11)]
     assert fold_deltas(table)["folded"]
     assert sorted(map(tuple, table.read_internal()
                       .select("conv_id", "turn_idx", LSN_COLUMN).collect())) == [("c3", 0, 22)]

@@ -329,33 +329,47 @@ def test_loop_fold_overlaps_next_prepares(spark, log_dir, tmp_path, monkeypatch)
 
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_APPLY_FNS = ("apply_batch", "apply_audited")
-#: the only (file, enclosing function) allowed to reach an apply function
-_APPLY_SITES = {
-    ("aqueduct_core_spark/streaming/pipeline.py", "_apply_epochs"),
-    ("aqueduct_core_spark/operators/merge.py", "apply_audited"),  # its own apply_batch
-}
 
 
-def _apply_references(path):
-    """``(outer function, name)`` of every call of, or reference to, an
-    apply function in the module at ``path`` (definitions excluded)."""
+def _references(path, names):
+    """``(enclosing function, name)`` of every call of, or reference to,
+    one of ``names`` in the module at ``path`` (definitions excluded).
+    The enclosing function is the outermost one, qualified by its class
+    (``Class.method``)."""
     found = []
 
-    def visit(node, outer):
+    def visit(node, outer, in_fn):
         for child in ast.iter_child_nodes(node):
-            scope = outer
-            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                scope = outer or child.name
+            scope, fn = outer, in_fn
+            if not in_fn and isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                scope = f"{outer}.{child.name}" if outer else child.name
+                fn = not isinstance(child, ast.ClassDef)
             name = (child.id if isinstance(child, ast.Name)
                     else child.attr if isinstance(child, ast.Attribute) else None)
-            if name in _APPLY_FNS:
+            if name in names:
                 found.append((outer, name))
-            visit(child, scope)
+            visit(child, scope, fn)
 
     with open(path) as f:
-        visit(ast.parse(f.read(), path), None)
+        visit(ast.parse(f.read(), path), None, False)
     return found
+
+
+def _assert_only_reached_from(names, sites):
+    """Outside tests, ``names`` are referenced exactly at ``sites``:
+    ``(file, enclosing function, name)`` triples."""
+    paths = [os.path.join(_REPO, f) for f in ("__spark_entry__.py", "bench.py")]
+    for top in ("aqueduct_core_spark", "bench", "tools"):
+        for d, _, fs in os.walk(os.path.join(_REPO, top)):
+            paths += [os.path.join(d, f) for f in fs if f.endswith(".py")]
+    seen = {
+        (os.path.relpath(p, _REPO), outer, name)
+        for p in paths
+        for outer, name in _references(p, names)
+    }
+    assert seen == sites, (seen - sites, sites - seen)
 
 
 def test_one_ingest_loop_guard():
@@ -363,19 +377,19 @@ def test_one_ingest_loop_guard():
     only from the one ingest loop, ``streaming.pipeline._apply_epochs``
     (plus ``apply_audited``'s own call to ``apply_batch``): every other
     path commits epochs through the loop."""
-    paths = [os.path.join(_REPO, f) for f in ("__spark_entry__.py", "bench.py")]
-    for top in ("aqueduct_core_spark", "bench", "tools"):
-        for d, _, fs in os.walk(os.path.join(_REPO, top)):
-            paths += [os.path.join(d, f) for f in fs if f.endswith(".py")]
-    stray, seen = [], set()
-    for p in paths:
-        rel = os.path.relpath(p, _REPO)
-        for outer, name in _apply_references(p):
-            seen.add((rel, outer))
-            allowed = (rel, outer) in _APPLY_SITES and not (
-                outer == "apply_audited" and name == "apply_audited"
-            )
-            if not allowed:
-                stray.append((rel, outer, name))
-    assert not stray, stray
-    assert seen == _APPLY_SITES
+    loop = ("aqueduct_core_spark/streaming/pipeline.py", "_apply_epochs")
+    _assert_only_reached_from(("apply_batch", "apply_audited"), {
+        (*loop, "apply_batch"),
+        (*loop, "apply_audited"),
+        ("aqueduct_core_spark/operators/merge.py", "apply_audited", "apply_batch"),
+    })
+
+
+def test_one_bucket_write_guard():
+    """Outside tests, ``write_bucket_data`` is reached only from
+    ``ParquetTranscriptTable.rewrite_buckets``: every bucket rewriter
+    reads, writes, carries tombstones and commits through it."""
+    _assert_only_reached_from(("write_bucket_data",), {
+        ("aqueduct_core_spark/catalog/table.py", "ParquetTranscriptTable.rewrite_buckets",
+         "write_bucket_data"),
+    })
